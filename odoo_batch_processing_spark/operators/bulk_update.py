@@ -24,17 +24,21 @@ single-partition sort — the default ordinal everywhere is
 :func:`distributed_ordinal` (range-partition → local row_number →
 broadcast n_parts-row offsets), and ordered top-N plans
 TakeOrderedAndProject (per-partition top-n, only n·n_parts rows move).
-The global-window :func:`with_ordinal` survives as the explicit
-``page_scale=True`` parity form, mirroring the reference's
-one-visible-page scope (user.js:432-452). Where positional semantics
-aren't actually required, callers should still join/update on real
-keys instead.
+The global-window :func:`with_ordinal` remains for inputs known to fit
+one task: the small values side of the zip-join. Where positional
+semantics aren't actually required, callers should still join/update
+on real keys instead.
+
+The batch run (:func:`bulk_update_run`) and the streaming run
+(``streaming.throttle.ThrottledBulkUpdate``) share three policies,
+each written once here: the guard flags pinned before the update
+(:func:`pin_guards`), the run accounting (:func:`tally`) and the
+outcome rule (:func:`run_outcome`).
 """
 
 from __future__ import annotations
 
 import logging
-import os
 import re
 import threading
 from collections.abc import Sequence
@@ -45,6 +49,9 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 from odoo_batch_processing_spark.sources.loader import load_table
 
 ORD_COL = "row_ord"
+#: the row guard as pinned by :func:`pin_guards` before an update
+VISIBLE_COL = "__visible"
+APPLIED_COL = "__applied"
 
 #: distributed_ordinal's boundary-sketch memo: (semanticHash(analyzed
 #: plan), bucket_cols, n_parts) → collected boundary sample.
@@ -195,10 +202,10 @@ def distributed_ordinal(
     Callers whose natural key is not unique MUST append tiebreaker
     columns — enough payload columns to make the full tuple unique —
     and mirror the same tiebreakers in any cross-engine oracle. Pass
-    ``validate_unique=True`` (or set ``SPARK_GRAFT_VALIDATE_ORDINAL=1``)
-    to fail loudly on duplicate keys — validation rides the ordinal's
-    own window (a ``lag`` adjacency check: duplicate keys are adjacent
-    in the bucket sort and always co-bucket) and is enforced per row
+    ``validate_unique=True`` to fail loudly on duplicate keys —
+    validation rides the ordinal's own window (a ``lag`` adjacency
+    check: duplicate keys are adjacent in the bucket sort and always
+    co-bucket) and is enforced per row
     on the ordinal expression itself, so it costs no extra scan, no
     extra shuffle, and no hash distinct, and raises
     ``SparkRuntimeException`` ("order key ... is not unique") from
@@ -230,7 +237,6 @@ def distributed_ordinal(
     spark = df.sparkSession
     if n_parts is None:
         n_parts = spark.sparkContext.defaultParallelism
-    validate = validate_unique or os.environ.get("SPARK_GRAFT_VALIDATE_ORDINAL") == "1"
     bucket_cols = list(bucket_cols) if bucket_cols is not None else list(order_cols)
     if list(order_cols)[: len(bucket_cols)] != bucket_cols:
         raise ValueError(
@@ -321,7 +327,7 @@ def distributed_ordinal(
         bucket = F.lit(0)
     tagged = df.withColumn("__bkt", bucket)
     w_local = Window.partitionBy("__bkt").orderBy(*cols)
-    if validate:
+    if validate_unique:
         # duplicate full keys are ADJACENT in the window's sort (and
         # always co-bucket, since the bucket id is a deterministic
         # function of a key prefix), so a lag() equality over the SAME
@@ -359,7 +365,7 @@ def distributed_ordinal(
         # column lineitem traversal. Per-row when() costs one branch
         # per row; the raise fires the moment any duplicate key's
         # ordinal is computed.
-        if not validate:
+        if not validate_unique:
             return ord_expr
         return F.when(
             F.col("__dup") == 1,
@@ -397,7 +403,7 @@ def distributed_ordinal(
     # bigint, not int: past 2^31-1 rows an int ordinal wraps — and this
     # function exists precisely for scales where that happens (the
     # global-window with_ordinal inherits row_number's int type and its
-    # limit, one more reason it is the page-scale form)
+    # limit, one more reason it is kept to small inputs)
     return (
         local.join(offsets, "__bkt")
         .withColumn(
@@ -454,8 +460,45 @@ def row_counts(df: DataFrame, visible: Column) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# R7 + R11/R12 — broadcast constant update with editability guards
-# (user.js:488-489 apply; user.js:477-480, 558-570 guards)
+# R11/R12 — the row guard (user.js:434 visibility; 477-480, 558-570 editability)
+# ---------------------------------------------------------------------------
+def row_guard(
+    visible: Column | None = None,
+    editable: Column | None = None,
+    readonly: Column | None = None,
+) -> Column:
+    """True where the reference's loop writes the row: visible, editable
+    and not read-only. An omitted flag does not guard. A NULL flag
+    counts as False, so a row of unknown visibility or editability is
+    not written, and a NULL read-only flag does not block the write."""
+    false = F.lit(False)
+    pred = F.lit(True)
+    if visible is not None:
+        pred = pred & F.coalesce(visible, false)
+    if editable is not None:
+        pred = pred & F.coalesce(editable, false)
+    if readonly is not None:
+        pred = pred & ~F.coalesce(readonly, false)
+    return pred
+
+
+def pin_guards(
+    df: DataFrame,
+    visible: Column | None = None,
+    editable: Column | None = None,
+    readonly: Column | None = None,
+) -> DataFrame:
+    """Evaluate the row guard on the PRE-update rows and keep it as two
+    columns: :data:`VISIBLE_COL` and :data:`APPLIED_COL` (the full
+    :func:`row_guard`). Re-evaluating the guard after the rewrite would
+    be wrong whenever a flag references the updated column."""
+    return df.withColumns(
+        {VISIBLE_COL: row_guard(visible), APPLIED_COL: row_guard(visible, editable, readonly)}
+    )
+
+
+# ---------------------------------------------------------------------------
+# R7 — broadcast constant update (user.js:488-489)
 # ---------------------------------------------------------------------------
 def broadcast_update(
     df: DataFrame,
@@ -465,22 +508,17 @@ def broadcast_update(
     editable: Column | None = None,
     readonly: Column | None = None,
 ) -> DataFrame:
-    """Set ``column`` to one constant for every visible, editable,
-    non-readonly row; leave every other row's value untouched.
+    """Set ``column`` to one constant on every row :func:`row_guard`
+    passes; leave every other row's value untouched.
 
     The reference *skips* guarded rows (continue, user.js:477-480); the
     functional rewrite keeps them with the old value — same final table.
     """
-    pred = F.lit(True)
-    if visible is not None:
-        pred = pred & visible
-    if editable is not None:
-        pred = pred & editable
-    if readonly is not None:
-        pred = pred & ~readonly
     old = F.col(column)
     new = F.lit(value).cast(df.schema[column].dataType)
-    return df.withColumn(column, F.when(pred, new).otherwise(old))
+    return df.withColumn(
+        column, F.when(row_guard(visible, editable, readonly), new).otherwise(old)
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -514,7 +552,6 @@ def zip_join_update(
     visible: Column | None = None,
     apply_when: Column | None = None,
     broadcast_values: bool = False,
-    page_scale: bool = False,
     validate_unique: bool = False,
     bucket_cols: Sequence[str] | None = None,
 ) -> DataFrame:
@@ -544,14 +581,12 @@ def zip_join_update(
     them), so the operator is row-preserving standalone. A NULL
     ``visible`` is treated as not-visible (kept, untouched).
 
-    100 TB note: both ordinals default to :func:`distributed_ordinal`
+    100 TB note: the rows side always takes :func:`distributed_ordinal`
     (range-partitioned local sorts + an n_parts-row broadcast offset
     table — no single-partition sort node anywhere on the data path);
-    the ordinal equi-join then shuffles normally. ``page_scale=True``
-    switches back to the global-window :func:`with_ordinal`, which
-    mirrors the reference's one-visible-page semantic (user.js:432-452)
-    and plans fewer stages on tiny inputs, but funnels the whole table
-    through one sort partition — never use it on an SF-scaling input.
+    the ordinal equi-join then shuffles normally. Only a values side
+    small enough to broadcast takes the global-window
+    :func:`with_ordinal`.
 
     ``bucket_cols``: forwarded to :func:`distributed_ordinal` for the
     ROWS side (values side keys are caller-declared and usually cheap)
@@ -566,25 +601,16 @@ def zip_join_update(
     exactly where it is visible: at the values-exhaustion boundary,
     one tie sibling gets a new value and the other retains its old one
     (user.js:451's min-length truncation). ``validate_unique=True``
-    enforces this with one aggregate per side (distributed path only).
+    enforces this on both sides, inside each ordinal's own window.
     """
     zip_ord = "__zip_ord"  # private: must not collide with caller columns
-    if page_scale:
-        # the global window has the identical tie under-specification
-        # as the distributed path (one partition's stable sort order
-        # just hides it) — share the same fail-loud guard (ADVICE r5
-        # #1: before round 6 this path silently ignored the flag)
-        def ordinal(d, oc, c, bc=None):
-            v = validate_unique or os.environ.get("SPARK_GRAFT_VALIDATE_ORDINAL") == "1"
-            return with_ordinal(d, oc, c, validate_unique=v)
-    else:
-        def ordinal(d, oc, c, bc=None):
-            return distributed_ordinal(
-                d, oc, c, validate_unique=validate_unique, bucket_cols=bc
-            )
     vis = None if visible is None else F.coalesce(visible, F.lit(False))
-    rows = ordinal(
-        df if vis is None else df.filter(vis), order_cols, zip_ord, bucket_cols
+    rows = distributed_ordinal(
+        df if vis is None else df.filter(vis),
+        order_cols,
+        zip_ord,
+        validate_unique=validate_unique,
+        bucket_cols=bucket_cols,
     )
     vals_src = values.select(
         *values_order_cols, F.col(values_col).alias("__new_value")
@@ -611,12 +637,8 @@ def zip_join_update(
             exc_info=True,
         )
         vals_small = False
-    if broadcast_values or vals_small:
-        vals = with_ordinal(
-            vals_src, values_order_cols, zip_ord, validate_unique=validate_unique
-        )
-    else:
-        vals = ordinal(vals_src, values_order_cols, zip_ord)
+    ordinal = with_ordinal if broadcast_values or vals_small else distributed_ordinal
+    vals = ordinal(vals_src, values_order_cols, zip_ord, validate_unique=validate_unique)
     vals = vals.select(zip_ord, "__new_value")
     if broadcast_values:
         vals = F.broadcast(vals)
@@ -636,21 +658,17 @@ def zip_join_update(
 # ---------------------------------------------------------------------------
 # R10 — limit: first N rows in table order (user.js:451, 454)
 # ---------------------------------------------------------------------------
-def limit_ordered(
-    df: DataFrame, n: int, order_cols: Sequence[str], page_scale: bool = False
-) -> DataFrame:
+def limit_ordered(df: DataFrame, n: int, order_cols: Sequence[str]) -> DataFrame:
     """Ordered top-N with the row's global ordinal attached. Bare
     .limit(n) is order-nondeterministic in a distributed plan; the
     reference's N is positional (user.js:451), so rank first.
 
-    Scale shape (default): ``orderBy(...).limit(n)`` — Spark plans
+    Scale shape: ``orderBy(...).limit(n)`` — Spark plans
     TakeOrderedAndProject, i.e. each partition keeps its local top-n
     and only n·n_parts candidate rows ever move; NO full-table shuffle
     or single-partition sort of the input. The ordinal is then attached
     to the n surviving rows via :func:`distributed_ordinal`, so the
-    whole plan is bounded by n, not by table size. ``page_scale=True``
-    keeps the round-1 global-window form (rank everything, then
-    filter ≤ n) for parity comparison.
+    whole plan is bounded by n, not by table size.
 
     tie-order: invariant AS USED in the registry (r10_limit outputs
     only order-key columns + ordinal, so tied rows — including ties
@@ -659,8 +677,6 @@ def limit_ordered(
     unique ``order_cols`` (tiebreakers), or both the boundary cut and
     the ordinal assignment become layout-dependent.
     """
-    if page_scale:
-        return with_ordinal(df, order_cols).filter(F.col(ORD_COL) <= n)
     top = df.orderBy(*[F.col(c) for c in order_cols]).limit(n)
     # bounded_rows=n: the survivors of TakeOrderedAndProject are at
     # most n rows, so the ordinal skips its boundary-sketch job and
@@ -706,6 +722,24 @@ def outcome_counts(df: DataFrame, ok: Column, group_cols: Sequence[str] = ()) ->
     return df.groupBy(*group_cols).agg(*agg) if group_cols else df.agg(*agg)
 
 
+def tally(updated: DataFrame, reached: Column | None = None) -> tuple[int, int, int, int]:
+    """One aggregate over a :func:`pin_guards`-pinned, updated frame:
+    ``(all_rows, visible_rows, success_count, skipped_count)``.
+
+    Success and skip count only the visible rows the loop reached; a
+    skip is a guarded row (the reference's ``continue``, user.js:477-480,
+    which increments neither counter). A constant update reaches every
+    visible row. A value list reaches the first min(len(values),
+    visible rows) (user.js:451); the caller marks those with
+    ``reached``."""
+    vis, ok = F.col(VISIBLE_COL), F.col(APPLIED_COL)
+    seen = vis if reached is None else vis & reached
+    row = updated.agg(
+        F.count(F.lit(1)), F.count_if(vis), F.count_if(seen & ok), F.count_if(seen & ~ok)
+    ).head()
+    return tuple(int(v) for v in row)
+
+
 # ---------------------------------------------------------------------------
 # R16 — 4-way outcome classification (user.js:502-513)
 # ---------------------------------------------------------------------------
@@ -718,6 +752,19 @@ def classify_outcome(success_count: Column, error_count: Column, cancelled: Colu
         .when((success_count > 0) & (error_count > 0), F.lit("warning"))
         .otherwise(F.lit("error"))
     )
+
+
+def run_outcome(success_count: int, error_count: int, cancelled: bool = False) -> str:
+    """The run's outcome on driver-side counts: the same CASE as
+    :func:`classify_outcome`, plus 'nothing-updated' when nothing was
+    applied and nothing failed (the reference's warning toast)."""
+    if cancelled:
+        return "cancelled"
+    if success_count == 0 and error_count == 0:
+        return "nothing-updated"
+    if error_count == 0:
+        return "success"
+    return "warning" if success_count > 0 else "error"
 
 
 # ---------------------------------------------------------------------------
@@ -764,84 +811,58 @@ def bulk_update_run(
     spark: SparkSession | None = None,
 ) -> BulkUpdateResult:
     """EP1 end-to-end: one value (R7) or a value list (R9) applied to
-    the visible rows of ``df``, guard semantics as the reference, with
-    the run accounting computed in the same pass (single cache, two
-    actions: the counts and the caller's eventual write).
+    the visible rows of ``df``, guard semantics as the reference. The
+    update is persisted once; the run accounting and the caller's
+    eventual write both read it.
 
-    Accounting matches user.js:443-513: guarded rows are *skipped*
-    (neither success nor error — the loop `continue`s past them), and a
-    run that applied nothing reports the 'nothing-updated' outcome
-    (the reference's warning toast when no row accepted the value).
-
-    The visibility/guard flags are evaluated on the PRE-update rows
-    and materialized as columns before the rewrite, so predicates that
-    reference the updated column itself cannot corrupt the counts.
+    Accounting matches user.js:443-513 (see :func:`tally`): guarded
+    rows are *skipped*, and success + skipped is the number of visible
+    rows the loop reached. A run that applied nothing reports
+    'nothing-updated' (see :func:`run_outcome`).
     """
-    # NULL-valued predicates are treated as False everywhere (a row
-    # whose visibility is unknown is not visible) — without this, list
-    # mode would DROP such rows: they fail both filter(visible) and
-    # filter(~visible).
-    visible = F.coalesce(visible, F.lit(False))
-    applied = visible & F.coalesce(editable, F.lit(False)) & ~F.coalesce(readonly, F.lit(False))
-    # flags pinned pre-update: post-update re-evaluation would be wrong
-    # whenever `visible`/`readonly` mention `column`
-    base = df.withColumn("__visible", visible).withColumn("__applied", applied)
-
-    counts = base.agg(
-        F.count(F.lit(1)).alias("all"),
-        F.sum(F.col("__visible").cast("int")).alias("vis"),
-    ).head()
-    all_rows, visible_rows = int(counts["all"]), int(counts["vis"] or 0)
-
+    base = pin_guards(df, visible, editable, readonly)
+    applied = F.col(APPLIED_COL)
+    scratch, reached = "__zip_value", None
     if isinstance(value, list):
         if spark is None:
             raise ValueError("value-list mode needs the SparkSession to build the value relation")
         vals = spark.createDataFrame(
             [(i + 1, v) for i, v in enumerate(value)], "ord bigint, v string"
         )
-        # guard at ASSIGNMENT (apply_when): a readonly/non-editable row
+        # zip into a scratch column that starts NULL: afterwards it is
+        # set exactly on the visible rows that received a value. The
+        # guard applies at assignment, so a readonly/non-editable row
         # keeps its old value but still consumes its positional value,
-        # matching the reference's `continue` (user.js:477-480) where
-        # the loop index advances past skipped rows. zip_join_update
-        # retains the non-visible rows itself.
-        updated = zip_join_update(
-            base,
+        # matching the reference's `continue` (user.js:477-480).
+        # zip_join_update retains the non-visible rows itself.
+        zipped = zip_join_update(
+            base.withColumn(scratch, F.lit(None).cast("string")),
             order_cols,
-            column,
+            scratch,
             vals,
             ["ord"],
             "v",
-            visible=F.col("__visible"),
-            apply_when=F.col("__applied"),
+            visible=F.col(VISIBLE_COL),
             broadcast_values=True,  # dialog-pasted lists are small
         )
+        reached = F.col(scratch).isNotNull()
+        old = F.col(column)
+        new = F.coalesce(F.col(scratch).cast(df.schema[column].dataType), old)
+        updated = zipped.withColumn(column, F.when(applied, new).otherwise(old))
     else:
-        updated = broadcast_update(base, column, value, visible=F.col("__applied"))
+        updated = broadcast_update(base, column, value, visible=applied)
 
-    # one materialization: the accounting aggregate and the caller's
-    # eventual write both read the persisted update, not two plan runs
     updated = updated.persist()
-    oc = outcome_counts(updated.filter(F.col("__visible")), F.col("__applied")).head()
-    # sums are NULL over an empty visible set → 0
-    success, skipped = int(oc["success_count"] or 0), int(oc["error_count"] or 0)
+    all_rows, visible_rows, success, skipped = tally(updated, reached)
     error = 0  # per-row rewrite cannot fail; sink failures raise instead
-    # R16's CASE on driver-side scalars is plain Python — no job
-    if success == 0 and error == 0:
-        outcome = "nothing-updated"
-    elif error == 0:
-        outcome = "success"
-    elif success > 0:
-        outcome = "warning"
-    else:
-        outcome = "error"
     return BulkUpdateResult(
-        updated.drop("__visible", "__applied"),
+        updated.drop(VISIBLE_COL, APPLIED_COL, scratch),
         all_rows,
         visible_rows,
         success,
         skipped,
         error,
-        outcome,
+        run_outcome(success, error),
     )
 
 
@@ -919,25 +940,20 @@ def _q_r08_multiline_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # (l_orderkey, l_linenumber) is NOT unique in the driver fixture (~76%
-# distinct at every sf) — round 4's core r09 diverged from its oracle on
-# local[32] because tied rows' ordinal order is partition-layout-
-# dependent and the tie becomes value-visible at the values-exhaustion
+# distinct at every sf): tied rows' ordinal order is partition-layout-
+# dependent, and the tie becomes value-visible at the values-exhaustion
 # boundary. Full rows ARE unique (verified in DuckDB at sf0.001/0.01/0.1),
 # so the deterministic total order is the declared key plus every
 # remaining payload column as tiebreakers, mirrored verbatim in the
-# oracle's ROW_NUMBER() ORDER BY. Round 6 measured the verdict's
-# alternative — ONE md5 full-row-hash tiebreaker column
-# (profile.portable_row_hash_hex, hex strings order identically in
-# Spark and DuckDB) — and kept the raw columns for the CORE query: the
-# md5 evaluation in the scan-side project costs more than the wider
-# sort key saves (~1 s at sf0.1/local[32], measured at every
-# optimization stage), because with bucket_cols the sort runs
-# post-shuffle at full parallelism while md5 runs at scan parallelism.
-# The hash-key form stays oracle-covered as ext `r09_zip_join_hashkey`.
-# End state after the round-6 ordinal work (deterministic boundaries,
-# memoized sketch, collapsed validation window, pruned offsets
-# branch): full r09 min ≈ 1.2 s at sf0.1 on a quiet host — the r4
-# level, now with an honest total order and a fail-loud guard.
+# oracle's ROW_NUMBER() ORDER BY. The alternative, ONE md5 full-row-hash
+# tiebreaker column (profile.portable_row_hash_hex; hex strings order
+# identically in Spark and DuckDB), costs more in the scan-side project
+# than the wider sort key saves (~1 s at sf0.1/local[32]), because with
+# bucket_cols the sort runs post-shuffle at full parallelism while md5
+# runs at scan parallelism. The hash-key form stays oracle-covered as
+# ext `r09_zip_join_hashkey`. The rows side always takes
+# distributed_ordinal; a values side under the broadcast threshold
+# takes with_ordinal (see zip_join_update).
 R09_ROW_COLS = (
     "l_orderkey",
     "l_partkey",
@@ -990,17 +1006,14 @@ def _r09_tb_sql() -> str:
 
 
 def _q_r09_zip_join_update(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Core r09 — since round 4 this certifies the SCALE-SAFE form:
-    zip_join_update defaults to distributed_ordinal on both sides, so
-    the driver's CORRECTNESS row covers the plan with no
-    single-partition sort (the page-scale global-window variant is the
-    ext-tier ``r09_zip_join_page``, same oracle). Since round 5 the
-    ordinal key carries full-row tiebreakers (R09_ORDER_COLS) and
-    ``validate_unique=True`` so a non-unique key fails loudly instead
-    of silently permuting ties; since round 6 the ordinal buckets on
-    the cheap natural-key prefix (R09_BUCKET_COLS) with deterministic
-    driver-computed boundaries, and validation rides the ordinal's own
-    window (lag adjacency) instead of a separate scan."""
+    """Core r09, the scale-safe form: the rows side takes
+    distributed_ordinal, so the plan has no single-partition sort over
+    lineitem. The ordinal key carries full-row tiebreakers
+    (R09_ORDER_COLS) and ``validate_unique=True``, so a non-unique key
+    fails loudly instead of silently permuting ties. The ordinal
+    buckets on the cheap natural-key prefix (R09_BUCKET_COLS) with
+    deterministic driver-computed boundaries, and validation rides the
+    ordinal's own window (lag adjacency) instead of a separate scan."""
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part")
     updated = zip_join_update(
@@ -1043,34 +1056,6 @@ def _q_r09_zip_join_hashkey(spark: SparkSession, sf_dir: str) -> DataFrame:
         broadcast_values=False,
         validate_unique=True,
         bucket_cols=R09_BUCKET_COLS,
-    )
-    return updated.select("l_orderkey", "l_linenumber", "l_returnflag")
-
-
-def _q_r09_zip_join_page(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """r09's page-scale parity form (``page_scale=True``): global-window
-    ordinals, mirroring the reference's one-visible-page loop
-    (user.js:432-452). Bit-identical to the core r09 (same oracle) —
-    kept ext-tier so both physical ordinal strategies stay under
-    oracle coverage after round 4 swapped the core onto
-    distributed_ordinal. Same full-row tiebreaker key as the core
-    (R09_ORDER_COLS) — the global window has the identical tie
-    under-specification, it just hid it behind one partition's stable
-    sort order. validate_unique=True here too: since round 6 the
-    page-scale path shares the uniqueness guard (ADVICE r5 #1)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    part = load_table(spark, sf_dir, "part")
-    updated = zip_join_update(
-        li,
-        R09_ORDER_COLS,
-        "l_returnflag",
-        part,
-        ["p_partkey"],
-        "p_name",
-        visible=F.col("l_linestatus") == "O",
-        broadcast_values=False,
-        page_scale=True,
-        validate_unique=True,
     )
     return updated.select("l_orderkey", "l_linenumber", "l_returnflag")
 
@@ -1177,7 +1162,6 @@ QUERIES_EXT = {
     # covered by x5's tokenization and r09's ordered zip; the slot went
     # to x3_incremental_neardup
     "r08_multiline_parse": _q_r08_multiline_parse,
-    "r09_zip_join_page": _q_r09_zip_join_page,
     "r01_scan_ordinal": _q_r01_scan_ordinal,
     "r03_projection": _q_r03_projection,
     "r05_readonly_any": _q_r05_readonly_any,
@@ -1197,9 +1181,11 @@ ORACLES = {
                COALESCE(bool_or(o_orderpriority = '1-URGENT'), FALSE) AS any_readonly
         FROM orders
     """,
+    # row_guard counts a NULL flag as False
     "r07_broadcast_update": """
         SELECT o_orderkey,
-               CASE WHEN o_orderstatus = 'O' AND NOT (o_orderpriority = '1-URGENT')
+               CASE WHEN COALESCE(o_orderstatus = 'O', FALSE)
+                         AND NOT COALESCE(o_orderpriority = '1-URGENT', FALSE)
                     THEN '9-BULK-SET' ELSE o_orderpriority END AS o_orderpriority
         FROM orders
     """,
@@ -1307,11 +1293,6 @@ ORACLES_EXT = {
         FROM lineitem GROUP BY l_returnflag
     """,
 }
-
-# identical output contract to the core r09 — only the physical
-# ordinal strategy differs (core = distributed_ordinal since round 4;
-# this ext entry keeps the page-scale global-window form oracle-checked)
-ORACLES_EXT["r09_zip_join_page"] = ORACLES["r09_zip_join_update"]
 
 QUERIES_EXT["r09_zip_join_hashkey"] = _q_r09_zip_join_hashkey
 # the md5 tiebreaker in the ORDER BY is generated from the SAME

@@ -16,8 +16,9 @@ committed (§1.3). The Spark-native restatement:
   by completed batches survives a stop (the reference's
   half-complete-on-cancel semantics, which batch Spark cannot and
   should not reproduce — SURVEY.md §7.4);
-* accounting → per-batch success/error aggregates accumulated
-  driver-side in ``foreachBatch`` (R15), final outcome CASE (R16).
+* accounting → the batch run's guard, count and outcome rules
+  (``bulk_update.pin_guards``, ``tally``, ``run_outcome``): one
+  aggregate per micro-batch, summed driver-side in ``foreachBatch``.
 """
 
 from __future__ import annotations
@@ -28,7 +29,14 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from odoo_batch_processing_spark.operators.bulk_update import broadcast_update, classify_outcome
+from odoo_batch_processing_spark.operators.bulk_update import (
+    APPLIED_COL,
+    VISIBLE_COL,
+    broadcast_update,
+    pin_guards,
+    run_outcome,
+    tally,
+)
 
 
 @dataclass
@@ -45,9 +53,10 @@ class ThrottledBulkUpdate:
     trigger_ms: int = 400  # the reference's default waitTime (user.js:230)
 
     success_count: int = 0
-    #: guarded rows (readonly / non-editable) stepped over — the
-    #: reference's `continue` (user.js:477-480) increments NEITHER
+    #: visible guarded rows (readonly / non-editable) stepped over —
+    #: the reference's `continue` (user.js:477-480) increments NEITHER
     #: success nor error for these; same split as BulkUpdateResult.
+    #: Hidden rows count in neither.
     skipped_count: int = 0
     #: attempted updates that failed; 0 on the built-in functional
     #: paths (sink failures surface as exceptions, not counts).
@@ -57,32 +66,20 @@ class ThrottledBulkUpdate:
     _query: StreamingQuery | None = None
 
     def _apply_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        applied = F.lit(True)
-        for guard in (self.visible, self.editable):
-            if guard is not None:
-                applied = applied & guard
-        if self.readonly is not None:
-            applied = applied & ~self.readonly
-        # pin the flag on the PRE-update rows: evaluating `applied`
-        # after the rewrite is wrong whenever a guard references the
-        # updated column (e.g. readonly on the column being set)
         updated = broadcast_update(
-            batch_df.withColumn("__applied", applied),
+            pin_guards(batch_df, self.visible, self.editable, self.readonly),
             self.column,
             self.value,
-            visible=F.col("__applied"),
+            visible=F.col(APPLIED_COL),
         )
         # one pass: write the batch AND count outcomes (R15)
         updated.persist()
         try:
-            updated.drop("__applied").write.mode("append").parquet(self.out_dir)
-            counts = updated.agg(
-                F.sum(F.col("__applied").cast("int")).alias("ok"),
-                F.sum((~F.col("__applied")).cast("int")).alias("skip"),
-            ).head()
+            updated.drop(VISIBLE_COL, APPLIED_COL).write.mode("append").parquet(self.out_dir)
+            _, _, success, skipped = tally(updated)
             with self._lock:
-                self.success_count += int(counts["ok"] or 0)
-                self.skipped_count += int(counts["skip"] or 0)
+                self.success_count += success
+                self.skipped_count += skipped
         finally:
             updated.unpersist()
 
@@ -107,17 +104,5 @@ class ThrottledBulkUpdate:
 
     @property
     def outcome(self) -> str:
-        """R16's 4-way CASE over (cancelled, success, error)."""
-        from pyspark.sql import SparkSession
-
-        spark = SparkSession.getActiveSession()
-        row = (
-            spark.range(1)
-            .select(
-                classify_outcome(
-                    F.lit(self.success_count), F.lit(self.error_count), F.lit(self.cancelled)
-                ).alias("o")
-            )
-            .head()
-        )
-        return row["o"]
+        """R16: the batch run's outcome rule, on the accumulated counts."""
+        return run_outcome(self.success_count, self.error_count, self.cancelled)

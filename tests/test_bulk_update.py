@@ -259,6 +259,36 @@ def test_bulk_update_run_multivalue(spark, listview):
     assert res.updated.count() == 200  # hidden rows retained
     changed = res.updated.filter(F.col("name").isin(values)).count()
     assert 0 < changed <= 3
+    assert res.success_count == changed
+    assert res.success_count + res.skipped_count == len(values)
+
+
+def test_bulk_update_run_short_list_counts_reached_rows_only(spark):
+    """A list shorter than the visible rows reaches only the first
+    len(values) visible rows (user.js:451): guarded rows past that
+    point are neither successes nor skips."""
+    from odoo_batch_processing_spark.operators.bulk_update import bulk_update_run
+
+    # 12 rows, row_ord 1..12: even rows hidden, every third row readonly
+    rows = [
+        (i, i % 2 == 1, True, i % 3 == 0, f"old{i}") for i in range(1, 13)
+    ]
+    df = spark.createDataFrame(
+        rows, "row_ord bigint, visible boolean, editable boolean, readonly boolean, name string"
+    )
+    res = bulk_update_run(
+        df, "name", ["A", "B", "C"],
+        order_cols=["row_ord"],
+        visible=F.col("visible"), editable=F.col("editable"), readonly=F.col("readonly"),
+        spark=spark,
+    )
+    got = {r["row_ord"]: r["name"] for r in res.updated.collect()}
+    # visible rows 1, 3, 5 receive A, B, C; row 3 is readonly
+    assert got == {i: {1: "A", 5: "C"}.get(i, f"old{i}") for i in range(1, 13)}
+    assert res.all_rows == 12 and res.visible_rows == 6
+    assert (res.success_count, res.skipped_count) == (2, 1)
+    assert res.success_count + res.skipped_count == min(3, res.visible_rows)
+    assert res.outcome == "success"
 
 
 def test_distributed_ordinal_matches_global_window(spark):
@@ -340,8 +370,10 @@ def test_ordinal_tiebreaker_agreement_on_duplicate_keys(spark):
     # scan — so it surfaces as a SparkRuntimeException from
     # raise_error when the ordinal is computed, not a driver-side
     # ValueError at plan time)
-    with _pytest.raises(Exception, match="not unique"):
-        distributed_ordinal(df, ["k"], validate_unique=True).select("row_ord").collect()
+    # with_ordinal's guard covers the small-values side of the zip
+    for ordinal in (distributed_ordinal, with_ordinal):
+        with _pytest.raises(Exception, match="not unique"):
+            ordinal(df, ["k"], validate_unique=True).select("row_ord").collect()
 
     # (b) with the tiebreaker, all three engines agree row-for-row
     keys = ["k", "tb"]
@@ -378,36 +410,6 @@ def test_validate_unique_accepts_null_keys(spark):
         distributed_ordinal(dup, ["k"], validate_unique=True).select(
             "row_ord"
         ).collect()
-
-
-def test_page_scale_zip_join_shares_uniqueness_guard(spark):
-    """ADVICE r5 #1: page_scale=True must not silently bypass
-    validate_unique — both ordinal strategies share the fail-loud
-    guard, so a duplicate key raises on the page path exactly as it
-    does on the distributed path."""
-    import pandas as pd
-    import pytest as _pytest
-
-    from odoo_batch_processing_spark.operators.bulk_update import zip_join_update
-
-    rows = spark.createDataFrame(
-        pd.DataFrame({"k": [1, 1, 2], "v": ["a", "b", "c"]})
-    )
-    vals = spark.createDataFrame(pd.DataFrame({"i": [1, 2], "nv": ["X", "Y"]}))
-    with _pytest.raises(Exception, match="not unique"):
-        zip_join_update(
-            rows, ["k"], "v", vals, ["i"], "nv",
-            page_scale=True, validate_unique=True,
-        ).collect()
-    # unique key passes on the same path
-    ok = spark.createDataFrame(pd.DataFrame({"k": [1, 2, 3], "v": ["a", "b", "c"]}))
-    out = zip_join_update(
-        ok, ["k"], "v", vals, ["i"], "nv",
-        page_scale=True, validate_unique=True,
-    )
-    assert sorted((r["k"], r["v"]) for r in out.collect()) == [
-        (1, "X"), (2, "Y"), (3, "c")
-    ]
 
 
 def test_r09_row_hash_matches_duckdb_fragment(spark):

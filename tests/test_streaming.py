@@ -63,6 +63,79 @@ def test_r19_cancel_keeps_committed_batches(spark, tmp_path):
     assert committed.filter(F.col("event_type") != "bulk").count() == 0
 
 
+LISTVIEW_DDL = "row_ord bigint, visible boolean, editable boolean, readonly boolean, name string"
+
+
+def _throttled_vs_batch(spark, tmp_path, rows):
+    """Run ThrottledBulkUpdate to exhaustion over ``rows`` and the batch
+    bulk_update_run over the same rows; return the stream run, its
+    committed names and the batch result."""
+    from odoo_batch_processing_spark.operators.bulk_update import bulk_update_run
+    from odoo_batch_processing_spark.streaming.sources import change_source
+    from odoo_batch_processing_spark.streaming.throttle import ThrottledBulkUpdate
+
+    src, out = str(tmp_path / "src"), str(tmp_path / "out")
+    df = spark.createDataFrame(rows, LISTVIEW_DDL)
+    df.coalesce(1).write.parquet(src)
+    guards = dict(
+        visible=F.col("visible"), editable=F.col("editable"), readonly=F.col("readonly")
+    )
+    run = ThrottledBulkUpdate(
+        column="name", value="X", out_dir=out, checkpoint_dir=str(tmp_path / "ckpt"), **guards
+    )
+    run.start(change_source(spark, src, schema=df.schema), available_now=True).awaitTermination()
+    committed = {r["row_ord"]: r["name"] for r in spark.read.parquet(out).collect()}
+    batch = bulk_update_run(df, "name", "X", order_cols=["row_ord"], spark=spark, **guards)
+    return run, committed, batch
+
+
+def test_throttled_update_skips_count_visible_guarded_rows_only(spark, tmp_path):
+    """Hidden rows are neither successes nor skips, in the stream as in
+    the batch run: skipped counts only visible guarded rows."""
+    rows = [
+        (1, True, True, False, "a"),    # applied
+        (2, True, True, True, "b"),     # visible, readonly: skipped
+        (3, True, False, False, "c"),   # visible, not editable: skipped
+        (4, False, True, False, "d"),   # hidden
+        (5, False, True, True, "e"),    # hidden and readonly
+        (6, True, True, False, "f"),    # applied
+    ]
+    run, committed, batch = _throttled_vs_batch(spark, tmp_path, rows)
+    assert committed == {1: "X", 2: "b", 3: "c", 4: "d", 5: "e", 6: "X"}
+    assert (run.success_count, run.skipped_count) == (2, 2)
+    assert (batch.success_count, batch.skipped_count) == (2, 2)
+    assert run.outcome == batch.outcome == "success"
+
+
+def test_throttled_update_null_guard_counts_as_false(spark, tmp_path):
+    """A NULL flag counts as False in the stream as in the batch run:
+    NULL visible hides the row, NULL editable guards it, NULL readonly
+    does not."""
+    rows = [
+        (1, None, True, False, "a"),    # NULL visible: hidden
+        (2, True, None, False, "b"),    # NULL editable: skipped
+        (3, True, True, None, "c"),     # NULL readonly: applied
+    ]
+    run, committed, batch = _throttled_vs_batch(spark, tmp_path, rows)
+    assert committed == {1: "a", 2: "b", 3: "X"}
+    assert {r["row_ord"]: r["name"] for r in batch.updated.collect()} == committed
+    assert (run.success_count, run.skipped_count) == (1, 1)
+    assert (batch.success_count, batch.skipped_count) == (1, 1)
+
+
+def test_throttled_update_nothing_applied_outcome(spark, tmp_path):
+    """A completed stream that applied nothing reports 'nothing-updated',
+    the same outcome as the batch run, not 'success'."""
+    rows = [
+        (1, False, True, False, "a"),   # hidden
+        (2, True, True, True, "b"),     # readonly
+    ]
+    run, committed, batch = _throttled_vs_batch(spark, tmp_path, rows)
+    assert committed == {1: "a", 2: "b"}
+    assert (run.success_count, run.skipped_count, run.cancelled) == (0, 1, False)
+    assert run.outcome == batch.outcome == "nothing-updated"
+
+
 def test_x7_watermark_drops_late_rows(spark, tmp_path):
     """Append-mode windowed agg: a row arriving after the watermark
     passed its window is discarded (the late-data policy)."""
