@@ -14,10 +14,14 @@ pure ``(DataFrame, params) → DataFrame`` transformation:
   ``when(pred, new).otherwise(old)`` column rewrite (R7/R11/R12) —
   no driver-side loop, no collect, fully whole-stage-codegen'd;
 * the value-list zip (user.js:484-486) → an ordinal equi-join (R9);
-* success/error tallies (user.js:443-444,493,497) → a single-pass
-  conditional aggregation (R15/R16), not accumulators, so the counts
-  are exact under task retries (Spark accumulators double-count on
-  retry — a deliberate departure documented here).
+* success/error tallies (user.js:443-444,493,497) → four conditional
+  counts (R15/R16, :func:`tally_columns`), not hand-rolled
+  accumulators, so they are exact under task retries (an accumulator
+  updated in a transformation double-counts on retry — a deliberate
+  departure documented here). The batch run aggregates them
+  (:func:`tally`); the stream observes them on its write, where they
+  run in the write's result stage, whose task updates Spark merges
+  once per partition.
 
 Scale notes: positional ops need a total order, but NOT a
 single-partition sort — the default ordinal everywhere is
@@ -32,8 +36,8 @@ on real keys instead.
 The batch run (:func:`bulk_update_run`) and the streaming run
 (``streaming.throttle.ThrottledBulkUpdate``) share three policies,
 each written once here: the guard flags pinned before the update
-(:func:`pin_guards`), the run accounting (:func:`tally`) and the
-outcome rule (:func:`run_outcome`).
+(:func:`pin_guards`), the run accounting (:func:`tally_columns`) and
+the outcome rule (:func:`run_outcome`).
 """
 
 from __future__ import annotations
@@ -46,6 +50,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
+from odoo_batch_processing_spark.session import materialize_once
 from odoo_batch_processing_spark.sources.loader import load_table
 
 ORD_COL = "row_ord"
@@ -722,21 +727,32 @@ def outcome_counts(df: DataFrame, ok: Column, group_cols: Sequence[str] = ()) ->
     return df.groupBy(*group_cols).agg(*agg) if group_cols else df.agg(*agg)
 
 
-def tally(updated: DataFrame, reached: Column | None = None) -> tuple[int, int, int, int]:
-    """One aggregate over a :func:`pin_guards`-pinned, updated frame:
-    ``(all_rows, visible_rows, success_count, skipped_count)``.
+def tally_columns(reached: Column | None = None) -> list[Column]:
+    """The run accounting as four aggregate Columns over a
+    :func:`pin_guards`-pinned, updated frame: ``all_rows``,
+    ``visible_rows``, ``success_count`` and ``skipped_count``.
 
     Success and skip count only the visible rows the loop reached; a
     skip is a guarded row (the reference's ``continue``, user.js:477-480,
     which increments neither counter). A constant update reaches every
     visible row. A value list reaches the first min(len(values),
     visible rows) (user.js:451); the caller marks those with
-    ``reached``."""
+    ``reached``. :func:`tally` aggregates them; the streaming run
+    observes them on its write."""
     vis, ok = F.col(VISIBLE_COL), F.col(APPLIED_COL)
     seen = vis if reached is None else vis & reached
-    row = updated.agg(
-        F.count(F.lit(1)), F.count_if(vis), F.count_if(seen & ok), F.count_if(seen & ~ok)
-    ).head()
+    return [
+        F.count(F.lit(1)).alias("all_rows"),
+        F.count_if(vis).alias("visible_rows"),
+        F.count_if(seen & ok).alias("success_count"),
+        F.count_if(seen & ~ok).alias("skipped_count"),
+    ]
+
+
+def tally(updated: DataFrame, reached: Column | None = None) -> tuple[int, int, int, int]:
+    """:func:`tally_columns` as one eager aggregate:
+    ``(all_rows, visible_rows, success_count, skipped_count)``."""
+    row = updated.agg(*tally_columns(reached)).head()
     return tuple(int(v) for v in row)
 
 
@@ -812,10 +828,12 @@ def bulk_update_run(
 ) -> BulkUpdateResult:
     """EP1 end-to-end: one value (R7) or a value list (R9) applied to
     the visible rows of ``df``, guard semantics as the reference. The
-    update is persisted once; the run accounting and the caller's
-    eventual write both read it.
+    update is pinned once with :func:`materialize_once`; the run
+    accounting and the caller's eventual write both read it, and
+    :func:`~odoo_batch_processing_spark.session.release_materialized`
+    unpins it.
 
-    Accounting matches user.js:443-513 (see :func:`tally`): guarded
+    Accounting matches user.js:443-513 (see :func:`tally_columns`): guarded
     rows are *skipped*, and success + skipped is the number of visible
     rows the loop reached. A run that applied nothing reports
     'nothing-updated' (see :func:`run_outcome`).
@@ -852,7 +870,7 @@ def bulk_update_run(
     else:
         updated = broadcast_update(base, column, value, visible=applied)
 
-    updated = updated.persist()
+    updated = materialize_once(updated)
     all_rows, visible_rows, success, skipped = tally(updated, reached)
     error = 0  # per-row rewrite cannot fail; sink failures raise instead
     return BulkUpdateResult(

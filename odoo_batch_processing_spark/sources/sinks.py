@@ -25,7 +25,7 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from odoo_batch_processing_spark.session import truncate_lineage
+from odoo_batch_processing_spark.session import materialized_scope, truncate_lineage
 
 _SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))), ".scratch")
 
@@ -164,7 +164,11 @@ def staged_once(name: str, src_path: str, build) -> str:
     # still eligible for the TTL sweep.
     tmp = tempfile.mkdtemp(prefix=f"stagetmp-{name}-", dir=_SCRATCH)
     try:
-        build(tmp)
+        # the build's pins are its own: released once it is written, so
+        # a session that built the artifact plans later queries exactly
+        # as one that found it already staged
+        with materialized_scope():
+            build(tmp)
         with open(os.path.join(tmp, "_STAGED"), "w"):
             pass
         if os.path.isdir(path):

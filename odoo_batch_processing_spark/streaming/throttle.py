@@ -17,8 +17,11 @@ committed (§1.3). The Spark-native restatement:
   half-complete-on-cancel semantics, which batch Spark cannot and
   should not reproduce — SURVEY.md §7.4);
 * accounting → the batch run's guard, count and outcome rules
-  (``bulk_update.pin_guards``, ``tally``, ``run_outcome``): one
-  aggregate per micro-batch, summed driver-side in ``foreachBatch``.
+  (``bulk_update.pin_guards``, ``tally_columns``, ``run_outcome``).
+  The counts are observed on the micro-batch's parquet write
+  (``DataFrame.observe``), so each micro-batch is one Spark job with
+  no cached copy, and they are summed driver-side in ``foreachBatch``
+  once the write has returned.
 """
 
 from __future__ import annotations
@@ -26,7 +29,7 @@ from __future__ import annotations
 import threading
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Observation, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from odoo_batch_processing_spark.operators.bulk_update import (
@@ -35,7 +38,7 @@ from odoo_batch_processing_spark.operators.bulk_update import (
     broadcast_update,
     pin_guards,
     run_outcome,
-    tally,
+    tally_columns,
 )
 
 
@@ -72,16 +75,16 @@ class ThrottledBulkUpdate:
             self.value,
             visible=F.col(APPLIED_COL),
         )
-        # one pass: write the batch AND count outcomes (R15)
-        updated.persist()
-        try:
-            updated.drop(VISIBLE_COL, APPLIED_COL).write.mode("append").parquet(self.out_dir)
-            _, _, success, skipped = tally(updated)
-            with self._lock:
-                self.success_count += success
-                self.skipped_count += skipped
-        finally:
-            updated.unpersist()
+        # one job: the write carries the outcome counts (R15)
+        counts = Observation()
+        observed = updated.observe(counts, *tally_columns())
+        observed.drop(VISIBLE_COL, APPLIED_COL).write.mode("append").parquet(self.out_dir)
+        # read only once the write has returned: `get` blocks until an
+        # action fills the observation, and a failed write raises above
+        row = counts.get
+        with self._lock:
+            self.success_count += row["success_count"]
+            self.skipped_count += row["skipped_count"]
 
     def start(self, stream_df: DataFrame, available_now: bool = False) -> StreamingQuery:
         writer = stream_df.writeStream.foreachBatch(self._apply_batch).option(

@@ -291,6 +291,30 @@ def test_bulk_update_run_short_list_counts_reached_rows_only(spark):
     assert res.outcome == "success"
 
 
+def test_bulk_update_run_pin_is_released(spark):
+    """The run pins its update in the session's registry, so
+    release_materialized() unpins it: after a list-mode and a
+    constant-mode run no cached block of either is left."""
+    from odoo_batch_processing_spark.operators.bulk_update import bulk_update_run
+    from odoo_batch_processing_spark.session import release_materialized
+
+    def pinned():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    df = spark.createDataFrame(
+        [(i, i % 2 == 1, True, i % 3 == 0, f"old{i}") for i in range(1, 13)],
+        "row_ord bigint, visible boolean, editable boolean, readonly boolean, name string",
+    )
+    guards = dict(visible=F.col("visible"), editable=F.col("editable"), readonly=F.col("readonly"))
+    release_materialized()
+    before = pinned()
+    for value in (["A", "B", "C"], "X"):
+        bulk_update_run(df, "name", value, order_cols=["row_ord"], spark=spark, **guards)
+    assert pinned() != before
+    release_materialized()
+    assert pinned() == before
+
+
 def test_distributed_ordinal_matches_global_window(spark):
     """distributed_ordinal must equal with_ordinal bit-for-bit on a
     UNIQUE key, and its DATA-side sort must be partition-local (the

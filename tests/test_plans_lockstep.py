@@ -47,3 +47,37 @@ def test_normalize_strips_volatile_ids_only():
     stale = "Condition : ((df#2248L >= 2) AND (df#2248L <= 250)) [plan_id=17]"
     assert normalize(a) == normalize(b)
     assert normalize(a) != normalize(stale)
+
+
+_STAGE_RENDER = """\
++- BroadcastQueryStage (30), Statistics(sizeInBytes=65.0 MiB, rowCount=2.70E+4)
+   +- BroadcastExchange (29)
+      +- * HashAggregate (26)
+{extra}         +- Scan parquet  (7)
+
+(7) Scan parquet
+Location: InMemoryFileIndex [file:{root}/.scratch/keyed-minhash-index-v3-58b008484fa9c814]
+
+(26) HashAggregate [codegen id : {c}]
+Input [2]: [shingle#9964, count#10104L]
+
+(30) BroadcastQueryStage
+Output [1]: [shingle#9964]
+Arguments: {s}
+
+(31) *({c}) Project
+"""
+
+
+def test_normalize_equates_stage_ids_and_checkout_path():
+    """Codegen ids, query-stage ids and the checkout's location vary
+    between renders of one plan (concurrently materialized sibling
+    stages swap ids; a clone lives elsewhere) and must compare equal;
+    one extra Exchange is a real plan change and must not."""
+    from tools.dump_plans import normalize
+
+    base = dict(c=3, s=6, root="/srv/a/repo", extra="")
+    swapped = dict(base, c=4, s=7, root="/home/b/clone")
+    exchange = dict(base, extra="         +- Exchange (27)\n")
+    assert normalize(_STAGE_RENDER.format(**base)) == normalize(_STAGE_RENDER.format(**swapped))
+    assert normalize(_STAGE_RENDER.format(**base)) != normalize(_STAGE_RENDER.format(**exchange))

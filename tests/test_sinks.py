@@ -227,6 +227,33 @@ def test_staged_once_builds_reuses_and_rebuilds_torn(tmp_path):
     assert p4 != p1 and len(calls) == 3
 
 
+def test_staged_once_releases_the_builds_pins(spark, tmp_path):
+    """The build's materialize_once pins end with the build, so a
+    session that built the artifact caches no more than one that found
+    it staged; a pin taken before the call stays."""
+    from pyspark import StorageLevel
+
+    from odoo_batch_processing_spark.session import materialize_once, release_materialized
+    from odoo_batch_processing_spark.sources.sinks import staged_once
+
+    src = tmp_path / "corpus.txt"
+    src.write_text("v1")
+    outer = materialize_once(spark.range(5).withColumn("outer", F.lit(1)))
+    pinned = []
+
+    def build(d):
+        inner = materialize_once(spark.range(7).withColumn("inner", F.lit(2)))
+        inner.write.mode("overwrite").parquet(d)
+        pinned.append(inner)
+
+    try:
+        staged_once("t-scoped", str(src), build)
+        assert pinned[0].storageLevel == StorageLevel.NONE
+        assert outer.storageLevel != StorageLevel.NONE
+    finally:
+        release_materialized()
+
+
 def test_staged_once_atomic_commit_never_merges(tmp_path, monkeypatch):
     """ADVICE r6 #1: the keyed path must only ever appear fully built.
     (a) A non-idempotent APPENDING builder rerun after a torn build

@@ -5,6 +5,8 @@ dropping (X7), and multi-batch progress tracking (R17)."""
 from __future__ import annotations
 
 import datetime as dt
+import os
+import threading
 import time
 
 import pytest
@@ -134,6 +136,98 @@ def test_throttled_update_nothing_applied_outcome(spark, tmp_path):
     assert committed == {1: "a", 2: "b"}
     assert (run.success_count, run.skipped_count, run.cancelled) == (0, 1, False)
     assert run.outcome == batch.outcome == "nothing-updated"
+
+
+def _pinned_rdds(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def _listview_run(spark, tmp_path, files):
+    """Drop each row list as one parquet file (oldest first) and run a
+    guarded ThrottledBulkUpdate over them to exhaustion, one file per
+    micro-batch; return the run and its finished query."""
+    from odoo_batch_processing_spark.streaming.sources import change_source
+    from odoo_batch_processing_spark.streaming.throttle import ThrottledBulkUpdate
+
+    src = str(tmp_path / "src")
+    for rows in files:
+        spark.createDataFrame(rows, LISTVIEW_DDL).coalesce(1).write.mode("append").parquet(src)
+        time.sleep(0.01)  # distinct mtimes: the file source takes oldest first
+    run = ThrottledBulkUpdate(
+        column="name", value="X", out_dir=str(tmp_path / "out"),
+        checkpoint_dir=str(tmp_path / "ckpt"), visible=F.col("visible"),
+        editable=F.col("editable"), readonly=F.col("readonly"),
+    )
+    stream = change_source(
+        spark, src, schema=spark.read.parquet(src).schema, max_files_per_trigger=1
+    )
+    q = run.start(stream, available_now=True)
+    assert q.awaitTermination(120), "the change-feed run did not finish"
+    assert q.exception() is None
+    return run, q
+
+
+def test_throttled_update_one_job_per_micro_batch(spark, tmp_path):
+    """Each micro-batch is one Spark job of one stage: the outcome
+    counts ride the parquet write, with no cached copy and no separate
+    count job. Counts are the hidden-row and NULL-guard cases' own."""
+    files = [
+        [(1, True, True, False, "a"), (2, True, True, True, "b")],   # applied, skipped
+        [(3, False, True, False, "c")],                              # hidden
+        [(4, None, True, False, "d"), (5, True, None, False, "e"),   # hidden, skipped,
+         (6, True, True, None, "f")],                                # applied
+    ]
+    pinned = _pinned_rdds(spark)
+    run, q = _listview_run(spark, tmp_path, files)
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = spark.sparkContext.statusTracker()
+    jobs = tracker.getJobIdsForGroup(str(q.runId))
+    batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
+    assert len(batches) == len(files)
+    assert len(jobs) == len(files)
+    assert all(len(tracker.getJobInfo(j).stageIds) == 1 for j in jobs)
+    assert _pinned_rdds(spark) == pinned
+    assert (run.success_count, run.skipped_count) == (2, 2)
+    committed = {r["row_ord"]: r["name"] for r in spark.read.parquet(str(tmp_path / "out")).collect()}
+    assert committed == {1: "X", 2: "b", 3: "c", 4: "d", 5: "e", 6: "X"}
+
+
+def test_throttled_update_empty_file_commits_zero_counts(spark, tmp_path):
+    """A zero-row file is a micro-batch like any other: its observed
+    counts are 0 and the batch commits instead of waiting forever."""
+    run, _ = _listview_run(spark, tmp_path, [[]])
+    assert os.path.exists(tmp_path / "ckpt" / "commits" / "0")
+    assert (run.success_count, run.skipped_count) == (0, 0)
+    assert run.outcome == "nothing-updated"
+
+
+def test_throttled_update_failed_write_raises_and_counts_nothing(spark, tmp_path):
+    """A sink write that fails raises out of the micro-batch, promptly,
+    and adds nothing to the counts: the observation is read only after
+    the write returns."""
+    from odoo_batch_processing_spark.streaming.throttle import ThrottledBulkUpdate
+
+    not_a_dir = tmp_path / "out"
+    not_a_dir.write_text("a regular file")
+    run = ThrottledBulkUpdate(
+        column="name", value="X", out_dir=str(not_a_dir),
+        checkpoint_dir=str(tmp_path / "ckpt"), visible=F.col("visible"),
+    )
+    batch = spark.createDataFrame([(1, True, True, False, "a")], LISTVIEW_DDL)
+    raised = []
+
+    def apply():
+        try:
+            run._apply_batch(batch, 0)
+        except Exception as e:  # the sink's error, surfaced by py4j
+            raised.append(e)
+
+    worker = threading.Thread(target=apply, daemon=True)
+    worker.start()
+    worker.join(120)
+    assert not worker.is_alive(), "_apply_batch hung after a failed write"
+    assert raised
+    assert (run.success_count, run.skipped_count) == (0, 0)
 
 
 def test_x7_watermark_drops_late_rows(spark, tmp_path):

@@ -7,7 +7,8 @@ behavior SCALE.md argues about.
 
 ``--check`` (VERDICT r8 item 1): re-render the same plans to a buffer
 and diff against the committed PLANS.md after normalizing volatile IDs
-(expression ``#NNNN``, ``plan_id=``), exiting 1 with the differing
+(expression ``#NNNN``, ``plan_id=``, codegen and query-stage ids) and
+the checkout's path, exiting 1 with the differing
 section names on mismatch. The hygiene suite runs this, so a
 plan-affecting commit that forgets the re-dump goes red instead of
 silently drifting (round 8's lockstep break: commit 66406af changed
@@ -109,7 +110,7 @@ PLANS_PATH = os.path.join(
 def render() -> str:
     """Render the PLANS.md content for the current HEAD (not normalized)."""
     from odoo_batch_processing_spark.registry import all_queries
-    from odoo_batch_processing_spark.session import get_spark
+    from odoo_batch_processing_spark.session import get_spark, release_materialized
 
     spark = get_spark("dump-plans", cpus=4)
     queries = all_queries(extended=True)
@@ -122,6 +123,11 @@ def render() -> str:
         "",
     ]
     for name in HEADLINERS:
+        # each plan as the query gets it run alone, the way the harnesses
+        # run it: no relation pinned by an earlier section, whose cache
+        # entries Catalyst would otherwise substitute into this plan
+        release_materialized()
+        spark.catalog.clearCache()
         df = queries[name](spark, SF_DIR)
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
@@ -156,6 +162,20 @@ def normalize(text: str) -> str:
     # the lake/src/ivm promotions put sink paths in pinned plans)
     text = re.sub(
         r"(\.scratch/(?!keyed-)[a-zA-Z0-9_.-]+-)[a-z0-9_]{8}\b", r"\1TMP", text
+    )
+    # where the checkout lives: .scratch sits inside it, so a clone
+    # elsewhere renders the same plans under another prefix
+    text = re.sub(r"file:[^\s\],]*/\.scratch/", "file:CHECKOUT/.scratch/", text)
+    # whole-stage codegen ids and adaptive query-stage ids number stages
+    # in the order they are planned and materialized; sibling stages
+    # that materialize concurrently (g_pagerank_simgraph's two broadcast
+    # stages over one cached relation) swap them between renders of the
+    # same plan. The tree's `*` markers and node ids still show the
+    # stage structure.
+    text = re.sub(r"codegen id : \d+", "codegen id : N", text)
+    text = re.sub(r"\*\(\d+\)", "*(N)", text)
+    text = re.sub(
+        r"(QueryStage\n(?:[^\n]+\n)*?Arguments: )\d+$", r"\1N", text, flags=re.M
     )
     return text
 
