@@ -153,7 +153,7 @@ def cpu_calibration(spark, sf_dir: str, reps: int) -> float:
     The boundary is self-described in the artifact
     (calibration_boundary) and the one sanctioned per-rep ↔ hoisted
     conversion is the round-10 same-host bridge measurement in
-    SCALE.md (tools/calibration_bridge.py).
+    SCALE.md (bridge = 1.4157, ``bench_compare --calibration-bridge``).
 
     Module-level (round 13) so tools that need the exact bench
     protocol (tools/x9_ab.py, tools/preflight_refs.py) share this

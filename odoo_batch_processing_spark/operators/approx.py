@@ -223,14 +223,9 @@ def _q_x8_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 QUERIES = {
-    # x8_approx_aggs strictly subsumes the exact twin since round 3:
-    # it emits the same exact measures PLUS the sketch-tolerance
-    # booleans, so the exact form moved to the extended tier to free a
-    # driver-window slot.
+    # x8_approx_aggs strictly subsumes the exact twin: it emits the
+    # same exact measures PLUS the sketch-tolerance booleans
     "x8_approx_aggs": _q_x8_approx_aggs,
-}
-
-QUERIES_EXT = {
     "x8_exact_aggs": _q_x8_exact_aggs,
     "x8_exact_distinct": _q_x8_exact_distinct,
     "x8_approx_distinct": _q_x8_approx_distinct,
@@ -250,9 +245,6 @@ ORACLES = {
                TRUE AS p90_ok
         FROM orders GROUP BY o_orderpriority
     """,
-}
-
-ORACLES_EXT = {
     "x8_exact_aggs": """
         SELECT o_orderpriority,
                COUNT(DISTINCT o_custkey) AS n_custs,
@@ -363,8 +355,8 @@ def _q_x8_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return heavy_hitters(tok, "token", k=32)
 
 
-QUERIES_EXT["x8_heavy_hitters"] = _q_x8_heavy_hitters
-ORACLES_EXT["x8_heavy_hitters"] = """
+QUERIES["x8_heavy_hitters"] = _q_x8_heavy_hitters
+ORACLES["x8_heavy_hitters"] = """
     WITH tok AS (
         SELECT unnest(list_filter(string_split(text, ' '), x -> trim(x) <> '')) AS token
         FROM documents
@@ -441,8 +433,8 @@ def _q_x8_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_EXT["x8_hll_merge"] = _q_x8_hll_merge
-ORACLES_EXT["x8_hll_merge"] = """
+QUERIES["x8_hll_merge"] = _q_x8_hll_merge
+ORACLES["x8_hll_merge"] = """
     WITH per AS (
         SELECT event_type, CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_exact
         FROM events GROUP BY event_type
@@ -455,15 +447,3 @@ ORACLES_EXT["x8_hll_merge"] = """
            n_global_exact, TRUE AS global_est_ok
     FROM per CROSS JOIN tot CROSS JOIN ex
 """
-
-
-# --- core-window rotation (round 14, VERDICT r13 #1) -------------------
-# The driver's independent DuckDB harness had audited the same core
-# window for several rounds; rotate long-stable representatives out to
-# the extended tier (still oracle-checked locally every round) and
-# promote their strongest extended-tier siblings into the driver-facing
-# core. Family coverage is preserved — see registry.py ROTATION_R14.
-QUERIES_EXT["x8_approx_aggs"] = QUERIES.pop("x8_approx_aggs")
-ORACLES_EXT["x8_approx_aggs"] = ORACLES.pop("x8_approx_aggs")
-QUERIES["x8_hll_merge"] = QUERIES_EXT.pop("x8_hll_merge")
-ORACLES["x8_hll_merge"] = ORACLES_EXT.pop("x8_hll_merge")

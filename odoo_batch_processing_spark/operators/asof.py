@@ -149,12 +149,3 @@ ORACLES = {
         GROUP BY purchase_id
     """,
 }
-
-
-# ROTATION_R16 (registry.py): the as-of join representative — driver-
-# stable since round 1 — rotates to extended; the family's core seat
-# moves to scd.py's point-in-time probe pit_tier_at_purchase, which is
-# the same as-of-join shape applied to the SCD2 history. The range
-# join keeps this module's other core slot.
-QUERIES_EXT = {"asof_last_purchase": QUERIES.pop("asof_last_purchase")}
-ORACLES_EXT = {"asof_last_purchase": ORACLES.pop("asof_last_purchase")}

@@ -1158,12 +1158,10 @@ def _q_r20_coalesce_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Core catalog (driver-checked): one entry per reference-op family —
-# r10 exercises R1's ordinal, r06 folds in R5's ANY probe, r13_r14
-# merges the two scalar rewrites, r16 includes R15's counts, r20 folds
-# in R3/R4's positional projection. The standalone micro-queries stay
-# registered in the extended catalog (oracle-checked locally via
-# tools/oracle_check --extended).
+# Merged rows fold in the reference ops they cover: r10 exercises R1's
+# ordinal, r06 folds in R5's ANY probe, r13_r14 merges the two scalar
+# rewrites, r16 includes R15's counts, r20 folds in R3/R4's positional
+# projection. The standalone micro-queries follow them.
 QUERIES = {
     "r02_visibility_filter": _q_r02_visibility_filter,
     "r06_counts": _q_r06_counts,
@@ -1173,12 +1171,6 @@ QUERIES = {
     "r13_r14_coerce_clamp": _q_r13_r14_coerce_clamp,
     "r16_outcome_classify": _q_r16_outcome_classify,
     "r20_coalesce_cascade": _q_r20_coalesce_cascade,
-}
-
-QUERIES_EXT = {
-    # demoted round 3 (VERDICT r2 #8): R8's parse semantics are already
-    # covered by x5's tokenization and r09's ordered zip; the slot went
-    # to x3_incremental_neardup
     "r08_multiline_parse": _q_r08_multiline_parse,
     "r01_scan_ordinal": _q_r01_scan_ordinal,
     "r03_projection": _q_r03_projection,
@@ -1267,9 +1259,6 @@ ORACLES = {
                         '<unresolved>') AS editor
         FROM customer
     """,
-}
-
-ORACLES_EXT = {
     "r08_multiline_parse": """
         SELECT doc_id,
                CAST(generate_subscripts(toks, 1) AS BIGINT) AS pos,
@@ -1312,11 +1301,11 @@ ORACLES_EXT = {
     """,
 }
 
-QUERIES_EXT["r09_zip_join_hashkey"] = _q_r09_zip_join_hashkey
+QUERIES["r09_zip_join_hashkey"] = _q_r09_zip_join_hashkey
 # the md5 tiebreaker in the ORDER BY is generated from the SAME
 # R09_ROW_COLS tuple as the Spark column (shared fragment pair in
 # profile.py), so query and oracle cannot drift
-ORACLES_EXT["r09_zip_join_hashkey"] = """
+ORACLES["r09_zip_join_hashkey"] = """
     WITH rows_ord AS (
         SELECT l_orderkey, l_linenumber, l_returnflag,
                ROW_NUMBER() OVER (ORDER BY
@@ -1334,16 +1323,3 @@ ORACLES_EXT["r09_zip_join_hashkey"] = """
     SELECT l_orderkey, l_linenumber, l_returnflag
     FROM lineitem WHERE NOT (l_linestatus = 'O')
 """.format(tb=_r09_tb_sql())
-
-
-# ROTATION_R17 (registry.py): three reference-semantics rows vacate
-# seats for the never-audited promotions — r06 (counting), r13/r14
-# (coercion/clamp) and r20 (coalesce cascade) have been driver-audited
-# every round since round 1 and stay under the local oracle + the R-row
-# parity tests; the family keeps five core rows (r02/r07/r09/r10/r16).
-QUERIES_EXT["r06_counts"] = QUERIES.pop("r06_counts")
-ORACLES_EXT["r06_counts"] = ORACLES.pop("r06_counts")
-QUERIES_EXT["r13_r14_coerce_clamp"] = QUERIES.pop("r13_r14_coerce_clamp")
-ORACLES_EXT["r13_r14_coerce_clamp"] = ORACLES.pop("r13_r14_coerce_clamp")
-QUERIES_EXT["r20_coalesce_cascade"] = QUERIES.pop("r20_coalesce_cascade")
-ORACLES_EXT["r20_coalesce_cascade"] = ORACLES.pop("r20_coalesce_cascade")

@@ -545,17 +545,14 @@ def _q_x9_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Core: the composed pipeline (one driver row exercising gates +
-# deterministic sampling + decontamination end-to-end) plus the two
-# shapes it does not fold in — shard packing and mixture sampling.
-# Extended: the single-op stages the pipeline composes.
+# The composed pipeline (gates + deterministic sampling +
+# decontamination end-to-end), the two shapes it does not fold in
+# (shard packing and mixture sampling), then the single-op stages the
+# pipeline composes.
 QUERIES = {
     "x9_curation_pipeline": _q_x9_curation_pipeline,
     "x9_pack_shards": _q_x9_pack_shards,
     "x9_source_mix": _q_x9_source_mix,
-}
-
-QUERIES_EXT = {
     "x9_pii_scrub": _q_x9_pii_scrub,
     "x9_quality_gates": _q_x9_quality_gates,
     "x9_decontaminate": _q_x9_decontaminate,
@@ -693,7 +690,7 @@ def _pipeline_oracle_sql(cap: int = DECONTAM_HOT_CAP) -> str:
           AND NOT EXISTS (SELECT 1 FROM contaminated c WHERE c.doc_id = d.doc_id)
     """
 
-ORACLES_EXT = {
+ORACLES = {
     "x9_pii_scrub": f"""
         SELECT doc_id,
                CAST(len(regexp_extract_all({_DIRTY}, '{EMAIL_PATTERN}')) AS BIGINT) AS n_emails,
@@ -767,10 +764,6 @@ ORACLES_EXT = {
     """,
 }
 
-# split the oracle dict along the same core/extended line as QUERIES
-ORACLES = {k: v for k, v in ORACLES_EXT.items() if k in QUERIES}
-ORACLES_EXT = {k: v for k, v in ORACLES_EXT.items() if k not in QUERIES}
-
 
 def observed(df, name: str, *metric_cols):
     """Attach runtime metrics to a relation with ``df.observe`` — the
@@ -837,8 +830,8 @@ def _q_x9_crypto_shred(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_EXT["x9_crypto_shred"] = _q_x9_crypto_shred
-ORACLES_EXT["x9_crypto_shred"] = f"""
+QUERIES["x9_crypto_shred"] = _q_x9_crypto_shred
+ORACLES["x9_crypto_shred"] = f"""
     SELECT doc_id, source,
            CASE WHEN source = '{_SHREDDED_SOURCE}' THEN NULL ELSE text END AS recovered,
            source <> '{_SHREDDED_SOURCE}' AS recoverable
@@ -890,8 +883,8 @@ def _q_x9_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_EXT["x9_weighted_sample"] = _q_x9_weighted_sample
-ORACLES_EXT["x9_weighted_sample"] = f"""
+QUERIES["x9_weighted_sample"] = _q_x9_weighted_sample
+ORACLES["x9_weighted_sample"] = f"""
     SELECT doc_id, source, inclusion_pct FROM (
         SELECT doc_id, source,
                CAST(least({WEIGHTED_MAX_PCT}, greatest({WEIGHTED_MIN_PCT},
@@ -944,14 +937,14 @@ def _q_x9_difficulty_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_EXT["x9_difficulty_deciles"] = _q_x9_difficulty_deciles
+QUERIES["x9_difficulty_deciles"] = _q_x9_difficulty_deciles
 # Built from text.py's SURPRISAL_SCORES_SQL, the same fragment the
 # x5_unigram_surprisal oracle certifies — NOT re-inlined — so a
 # tokenization or scoring change stays in lockstep with the base
 # oracle (ADVICE r04; graph.py's shared-fragment convention).
 from odoo_batch_processing_spark.operators.text import SURPRISAL_SCORES_SQL as _SURPRISAL
 
-ORACLES_EXT["x9_difficulty_deciles"] = f"""
+ORACLES["x9_difficulty_deciles"] = f"""
     SELECT s.doc_id, d.source, s.total_bits,
            CAST(ntile(10) OVER (
                PARTITION BY d.source
@@ -959,42 +952,3 @@ ORACLES_EXT["x9_difficulty_deciles"] = f"""
            ) AS INTEGER) AS difficulty_decile
     FROM {_SURPRISAL} s JOIN documents d ON d.doc_id = s.doc_id
 """
-
-
-# --- core-window rotation (round 14, VERDICT r13 #1) -------------------
-# The driver's independent DuckDB harness had audited the same core
-# window for several rounds; rotate long-stable representatives out to
-# the extended tier (still oracle-checked locally every round) and
-# promote their strongest extended-tier siblings into the driver-facing
-# core. Family coverage is preserved — see registry.py ROTATION_R14.
-QUERIES_EXT["x9_source_mix"] = QUERIES.pop("x9_source_mix")
-ORACLES_EXT["x9_source_mix"] = ORACLES.pop("x9_source_mix")
-QUERIES["x9_weighted_sample"] = QUERIES_EXT.pop("x9_weighted_sample")
-ORACLES["x9_weighted_sample"] = ORACLES_EXT.pop("x9_weighted_sample")
-
-# ROTATION_R15 (registry.py): per-group stratified sampling takes the
-# curation slot held by x9_pack_shards; the packer rotates to extended
-# (still under tools/x9_ab.py's dedicated A/B watch).
-QUERIES["x9_group_sample"] = QUERIES_EXT.pop("x9_group_sample")
-ORACLES["x9_group_sample"] = ORACLES_EXT.pop("x9_group_sample")
-QUERIES_EXT["x9_pack_shards"] = QUERIES.pop("x9_pack_shards")
-ORACLES_EXT["x9_pack_shards"] = ORACLES.pop("x9_pack_shards")
-
-# ROTATION_R16 (registry.py): difficulty deciles (surprisal-ranked
-# curriculum bucketing) take the curation slot held by the weighted
-# sampler since round 14; the sampler rotates to extended, still under
-# tests/test_retry_determinism.py's determinism harness.
-QUERIES["x9_difficulty_deciles"] = QUERIES_EXT.pop("x9_difficulty_deciles")
-ORACLES["x9_difficulty_deciles"] = ORACLES_EXT.pop("x9_difficulty_deciles")
-QUERIES_EXT["x9_weighted_sample"] = QUERIES.pop("x9_weighted_sample")
-ORACLES_EXT["x9_weighted_sample"] = ORACLES.pop("x9_weighted_sample")
-
-
-# ROTATION_R17 (registry.py): the crypto-shred (GDPR erasure via key
-# deletion) row gives the curation family's governance surface its
-# first external audit; the stratified group sampler rotates out after
-# two audited rounds, still under the determinism harness.
-QUERIES["x9_crypto_shred"] = QUERIES_EXT.pop("x9_crypto_shred")
-ORACLES["x9_crypto_shred"] = ORACLES_EXT.pop("x9_crypto_shred")
-QUERIES_EXT["x9_group_sample"] = QUERIES.pop("x9_group_sample")
-ORACLES_EXT["x9_group_sample"] = ORACLES.pop("x9_group_sample")

@@ -1407,12 +1407,9 @@ QUERIES = {
     "x3_minhash_lsh": _q_x3_minhash_lsh,
     "x3_simhash": _q_x3_simhash,
     "x3_embedding_neardup": _q_x3_embedding_neardup,
-    # core (round 3): the daily-ingest workhorse — new-batch probes
-    # against the persisted band index cost O(batch), not O(corpus)
+    # the daily-ingest workhorse: new-batch probes against the
+    # persisted band index cost O(batch), not O(corpus)
     "x3_incremental_neardup": _q_x3_incremental_neardup,
-}
-
-QUERIES_EXT = {
     "x2_dedup_fingerprint": _q_x2_dedup_fingerprint,
     "x2_distinct_pairs": _q_x2_distinct_pairs,
     "x3_minhash_indexed": _q_x3_minhash_indexed,
@@ -1551,12 +1548,10 @@ ORACLES["x3_simhash"] = f"""
     FROM cand WHERE bit_count(xor(sim_a, sim_b)) <= {HAMMING_MAX}
 """
 
-ORACLES_EXT: dict[str, str] = {}
-
 # DuckDB's levenshtein() is the same unrestricted edit distance as
 # Spark's; the length prefilter is a necessary condition of dist<=2,
 # so the plain-join oracle needs no twin of it.
-ORACLES_EXT["x3_fuzzy_join_parts"] = """
+ORACLES["x3_fuzzy_join_parts"] = """
     SELECT a.p_partkey AS id_a, b.p_partkey AS id_b,
            CAST(levenshtein(a.p_name, b.p_name) AS INTEGER) AS dist
     FROM part a JOIN part b
@@ -1584,7 +1579,7 @@ ORACLES["x3_embedding_neardup"] = f"""
     ) WHERE rn = 1
 """
 
-ORACLES_EXT["x3_incremental_embedding_neardup"] = f"""
+ORACLES["x3_incremental_embedding_neardup"] = f"""
     WITH v AS (
         SELECT vec_id, label,
                {_emb_subcell_sql()} AS subcell,
@@ -1647,17 +1642,15 @@ ORACLES["x3_neardup_survivors"] = f"""
     FROM reach GROUP BY src
 """
 
-ORACLES_EXT.update({k: v for k, v in ORACLES.items() if k in QUERIES_EXT})
-ORACLES = {k: v for k, v in ORACLES.items() if k not in QUERIES_EXT}
 # identical output contract to the in-memory signature pipeline — only
 # the physical access path (persisted band-partitioned index) differs
-ORACLES_EXT["x3_minhash_indexed"] = ORACLES["x3_minhash_lsh"]
+ORACLES["x3_minhash_indexed"] = ORACLES["x3_minhash_lsh"]
 # identical clustering — only the CC algorithm (large-star/small-star
 # vs one-hop min-label) differs
-ORACLES_EXT["x3_neardup_survivors_star"] = ORACLES["x3_neardup_survivors"]
+ORACLES["x3_neardup_survivors_star"] = ORACLES["x3_neardup_survivors"]
 # identical clustering again — the structure-adaptive dispatch picks
 # one of the two oracle-identical engines at runtime
-ORACLES_EXT["x3_neardup_survivors_auto"] = ORACLES["x3_neardup_survivors"]
+ORACLES["x3_neardup_survivors_auto"] = ORACLES["x3_neardup_survivors"]
 
 # candidate pairs restricted to those whose larger side is in the new
 # batch (the top doc_id decile), then exact-Jaccard verified — the SQL
@@ -1752,8 +1745,8 @@ def _q_x3_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ngram_containment_pairs(_doc_shingles(spark, sf_dir))
 
 
-QUERIES_EXT["x3_containment"] = _q_x3_containment
-ORACLES_EXT["x3_containment"] = f"""
+QUERIES["x3_containment"] = _q_x3_containment
+ORACLES["x3_containment"] = f"""
     WITH doc_sh AS ({_DOC_SH}),
     sh_capped AS ({_SH_CAPPED}),
     sizes AS (SELECT doc_id, COUNT(1) AS n_sh FROM doc_sh GROUP BY doc_id),
@@ -1771,40 +1764,3 @@ ORACLES_EXT["x3_containment"] = f"""
     WHERE CAST(n_inter AS DOUBLE) / sa.n_sh >= {CONTAINMENT_MIN}
        OR CAST(n_inter AS DOUBLE) / sb.n_sh >= {CONTAINMENT_MIN}
 """
-
-
-# --- core-window rotation (round 14, VERDICT r13 #1) -------------------
-# The driver's independent DuckDB harness had audited the same core
-# window for several rounds; rotate long-stable representatives out to
-# the extended tier (still oracle-checked locally every round) and
-# promote their strongest extended-tier siblings into the driver-facing
-# core. Family coverage is preserved — see registry.py ROTATION_R14.
-QUERIES_EXT["x3_ngram_jaccard"] = QUERIES.pop("x3_ngram_jaccard")
-ORACLES_EXT["x3_ngram_jaccard"] = ORACLES.pop("x3_ngram_jaccard")
-QUERIES["x3_containment"] = QUERIES_EXT.pop("x3_containment")
-ORACLES["x3_containment"] = ORACLES_EXT.pop("x3_containment")
-
-# ROTATION_R15 (registry.py): the standing-index candidate path —
-# whose hot-bucket cap is now the scan-local write-time bucket_n
-# filter — takes the LSH family's core slot so the external harness
-# audits the index build + read-back; the recompute form and simhash
-# (14 rounds driver-stable) rotate to the extended tier, still
-# oracle-checked locally every round.
-QUERIES["x3_minhash_indexed"] = QUERIES_EXT.pop("x3_minhash_indexed")
-ORACLES["x3_minhash_indexed"] = ORACLES_EXT.pop("x3_minhash_indexed")
-QUERIES_EXT["x3_minhash_lsh"] = QUERIES.pop("x3_minhash_lsh")
-ORACLES_EXT["x3_minhash_lsh"] = ORACLES.pop("x3_minhash_lsh")
-QUERIES_EXT["x3_simhash"] = QUERIES.pop("x3_simhash")
-ORACLES_EXT["x3_simhash"] = ORACLES.pop("x3_simhash")
-
-# ROTATION_R16 (registry.py): two dedup seats vacate — the batch
-# incremental near-dup hands its slot to the streaming twin
-# s_x3_stream_incremental_neardup (streaming/queries.py, the X3
-# family's first streaming driver row, SAME oracle), and exact dedup's
-# batch form steps out (the family stays driver-covered by the
-# watermark-bounded s_x2_stream_dedup_wm). Both stay oracle-checked
-# locally every round.
-QUERIES_EXT["x3_incremental_neardup"] = QUERIES.pop("x3_incremental_neardup")
-ORACLES_EXT["x3_incremental_neardup"] = ORACLES.pop("x3_incremental_neardup")
-QUERIES_EXT["x2_dedup_survivors"] = QUERIES.pop("x2_dedup_survivors")
-ORACLES_EXT["x2_dedup_survivors"] = ORACLES.pop("x2_dedup_survivors")

@@ -93,14 +93,16 @@ def pagerank(
         F.count(F.lit(1)).alias("n"),
     ).collect()[0]
     m, n = int(scalars["m"]), int(scalars["n"])
-    if edge_budget is not None:
-        if m * iters > edge_budget:
-            raise ValueError(
-                f"pagerank: |E|·iters = {m}·{iters} = {m * iters:,} exceeds "
-                f"edge_budget {edge_budget:,} — raise the budget, cut "
-                "iterations, or tighten the upstream edge cap "
-                "(text.POSTING_ABS_CAP for the shingle graph)"
-            )
+    if edge_budget is not None and m * iters > edge_budget:
+        # the caller gets no relation to release: drop both pins first
+        deg.unpersist()
+        edges.unpersist()
+        raise ValueError(
+            f"pagerank: |E|·iters = {m}·{iters} = {m * iters:,} exceeds "
+            f"edge_budget {edge_budget:,} — raise the budget, cut "
+            "iterations, or tighten the upstream edge cap "
+            "(text.POSTING_ABS_CAP for the shingle graph)"
+        )
     nodes = deg.select(F.col(src).alias("id"))
     if n == 0:
         # empty graph: 1/n below would divide by zero — return the
@@ -548,10 +550,7 @@ def _q_g_pagerank_simgraph(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-QUERIES_EXT = {
+QUERIES = {
     "g_pagerank_simgraph": _q_g_pagerank_simgraph,
     "g_triangle_counts": _q_g_triangle_counts,
     "g_doulion_triangles": _q_g_doulion_triangles,
@@ -601,7 +600,7 @@ _PAIRS_CTES = """
     )
 """.format(trigrams=_TRIGRAMS_SQL, toks=_TOKS, df_cap=GRAPH_DF_CAP_SQL)
 
-ORACLES_EXT = {
+ORACLES = {
     # x8 contract: exact global count + literal TRUE for the in-engine
     # tolerance boolean (the hash-sampled estimate is engine-side only)
     "g_doulion_triangles": f"""
@@ -679,34 +678,3 @@ ORACLES_EXT = {
     FROM r3 JOIN deg ON deg.id = r3.id
     """,
 }
-
-
-# --- core-window rotation (round 14, VERDICT r13 #1) -------------------
-# The driver's independent DuckDB harness had audited the same core
-# window for several rounds; rotate long-stable representatives out to
-# the extended tier (still oracle-checked locally every round) and
-# promote their strongest extended-tier siblings into the driver-facing
-# core. Family coverage is preserved — see registry.py ROTATION_R14.
-QUERIES["g_pagerank_simgraph"] = QUERIES_EXT.pop("g_pagerank_simgraph")
-ORACLES["g_pagerank_simgraph"] = ORACLES_EXT.pop("g_pagerank_simgraph")
-
-# ROTATION_R15 (registry.py): the exact triangle counter joins pagerank
-# in the core window (x3_simhash vacated a dedup-family slot), giving
-# the graph family a second externally-audited shape — a join-heavy
-# counting query next to the iterative fixpoint.
-QUERIES["g_triangle_counts"] = QUERIES_EXT.pop("g_triangle_counts")
-ORACLES["g_triangle_counts"] = ORACLES_EXT.pop("g_triangle_counts")
-
-# ROTATION_R16 (registry.py): the exact triangle counter (14.95 s =
-# 34% of the r15 batch headline, cost intrinsic to wedge volume even
-# after the halved-edge trim) rotates to extended, still oracle-checked
-# locally every round. Its seat goes to operators/ivm.py (a subsystem
-# with ZERO prior driver rows) rather than to g_doulion_triangles:
-# the DOULION catalog query embeds the exact pass for its est_ok
-# certification (measured ~1.35× the exact counter at sf0.1), so as a
-# CORE row it would re-introduce the very tax the estimator exists to
-# dodge. The graph family stays driver-covered by g_pagerank_simgraph;
-# the estimator's variance-bound contract stays certified in the
-# extended sweep every round.
-QUERIES_EXT["g_triangle_counts"] = QUERIES.pop("g_triangle_counts")
-ORACLES_EXT["g_triangle_counts"] = ORACLES.pop("g_triangle_counts")

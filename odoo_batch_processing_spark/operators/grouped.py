@@ -115,27 +115,9 @@ def _q_grouped_agg_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(mad_cents(F.col("cents")).alias("mad_cents"))
     )
 
-QUERIES = {"grouped_pandas_ranks": _q_grouped_pandas_ranks}
-
-QUERIES_EXT = {"grouped_agg_mad": _q_grouped_agg_mad}
-
-ORACLES_EXT = {
-    # same statistic via two nested medians; ints and exact halves are
-    # exactly representable, so interpolation matches numpy bit-for-bit
-    "grouped_agg_mad": """
-        WITH c AS (
-            SELECT o_orderpriority,
-                   CAST(round(o_totalprice * 100) AS BIGINT) AS cents
-            FROM orders
-        ), m AS (
-            SELECT o_orderpriority, quantile_cont(cents, 0.5) AS med
-            FROM c GROUP BY o_orderpriority
-        )
-        SELECT c.o_orderpriority,
-               quantile_cont(abs(c.cents - m.med), 0.5) AS mad_cents
-        FROM c JOIN m USING (o_orderpriority)
-        GROUP BY c.o_orderpriority
-    """,
+QUERIES = {
+    "grouped_pandas_ranks": _q_grouped_pandas_ranks,
+    "grouped_agg_mad": _q_grouped_agg_mad,
 }
 
 ORACLES = {
@@ -151,6 +133,22 @@ ORACLES = {
         FROM orders
         WINDOW w AS (PARTITION BY o_custkey ORDER BY o_totalprice, o_orderkey),
                g AS (PARTITION BY o_custkey)
+    """,
+    # same statistic via two nested medians; ints and exact halves are
+    # exactly representable, so interpolation matches numpy bit-for-bit
+    "grouped_agg_mad": """
+        WITH c AS (
+            SELECT o_orderpriority,
+                   CAST(round(o_totalprice * 100) AS BIGINT) AS cents
+            FROM orders
+        ), m AS (
+            SELECT o_orderpriority, quantile_cont(cents, 0.5) AS med
+            FROM c GROUP BY o_orderpriority
+        )
+        SELECT c.o_orderpriority,
+               quantile_cont(abs(c.cents - m.med), 0.5) AS mad_cents
+        FROM c JOIN m USING (o_orderpriority)
+        GROUP BY c.o_orderpriority
     """,
 }
 
@@ -208,8 +206,8 @@ def _q_grouped_cogroup_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_EXT["grouped_cogroup_enrich"] = _q_grouped_cogroup_enrich
-ORACLES_EXT["grouped_cogroup_enrich"] = """
+QUERIES["grouped_cogroup_enrich"] = _q_grouped_cogroup_enrich
+ORACLES["grouped_cogroup_enrich"] = """
     SELECT c.c_custkey AS user_id,
            COALESCE(e.n, 0) AS n_events,
            COALESCE(e.cents, 0) AS value_cents,

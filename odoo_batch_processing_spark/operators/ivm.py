@@ -87,9 +87,9 @@ def _q_ivm_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_EXT = {"ivm_refresh": _q_ivm_refresh}
+QUERIES = {"ivm_refresh": _q_ivm_refresh}
 
-ORACLES_EXT = {
+ORACLES = {
     "ivm_refresh": """
         SELECT event_type,
                COUNT(1) AS n,
@@ -98,15 +98,3 @@ ORACLES_EXT = {
         FROM events GROUP BY event_type
     """,
 }
-
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-# ROTATION_R16 (registry.py): the IVM subsystem's first driver row —
-# this module had ZERO external-harness coverage before this round
-# (the r15-manifest precedent: promote the never-audited subsystem).
-# It takes the seat g_triangle_counts vacated; see graph.py for why
-# the DOULION estimator did not (its catalog form embeds the exact
-# pass and would re-introduce the triangle tax).
-QUERIES["ivm_refresh"] = QUERIES_EXT.pop("ivm_refresh")
-ORACLES["ivm_refresh"] = ORACLES_EXT.pop("ivm_refresh")

@@ -127,16 +127,12 @@ def _q_x6_variant_shred(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Core: the grouped query (its grouping key IS a JSON extraction, so
-# it covers typed parse + aggregation in one). Extended: the per-row
-# extraction projection and the JSON-flavored null-safe equality
-# (null-safe-eq semantics are core-covered by plans.advanced
-# expr_breadth).
+# The grouped query (its grouping key IS a JSON extraction, so it
+# covers typed parse + aggregation in one), the per-row extraction
+# projection, the JSON-flavored null-safe equality and the VARIANT
+# shred.
 QUERIES = {
     "x6_json_grouped": _q_x6_json_grouped,
-}
-
-QUERIES_EXT = {
     "x6_json_extract": _q_x6_json_extract,
     "x6_null_safe_eq": _q_x6_null_safe_eq,
     "x6_variant_shred": _q_x6_variant_shred,
@@ -178,15 +174,3 @@ ORACLES = {
         FROM events
     """,
 }
-
-ORACLES_EXT = {k: v for k, v in ORACLES.items() if k in QUERIES_EXT}
-ORACLES = {k: v for k, v in ORACLES.items() if k not in QUERIES_EXT}
-
-# ROTATION_R15 (registry.py): the VARIANT shred (semi-structured
-# columnarization, Spark 4's open-format variant type) takes the
-# json-family core slot; the from_json grouped form rotates to
-# extended.
-QUERIES["x6_variant_shred"] = QUERIES_EXT.pop("x6_variant_shred")
-ORACLES["x6_variant_shred"] = ORACLES_EXT.pop("x6_variant_shred")
-QUERIES_EXT["x6_json_grouped"] = QUERIES.pop("x6_json_grouped")
-ORACLES_EXT["x6_json_grouped"] = ORACLES.pop("x6_json_grouped")

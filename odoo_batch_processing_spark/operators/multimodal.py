@@ -172,9 +172,6 @@ def _q_mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 QUERIES = {
     "mm_binary_meta": _q_mm_binary_meta,
     "mm_decode_features": _q_mm_decode_features,
-}
-
-QUERIES_EXT = {
     "mm_frame_sample": _q_mm_frame_sample,
 }
 
@@ -212,9 +209,6 @@ ORACLES = {
                             i -> hx[i] = '0123456789ABCDEF'[d]))), ',') AS hist_csv
         FROM h
     """,
-}
-
-ORACLES_EXT = {
     "mm_frame_sample": """
         SELECT doc_id,
                CAST(len(list_filter(range(0, CAST(ceil(octet_length(CAST(text AS BLOB)) / 64.0) AS INTEGER)),
@@ -371,7 +365,7 @@ def _q_mm_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mm_neardup_pairs(mm_stream_fingerprints(media))
 
 
-QUERIES_EXT["mm_neardup"] = _q_mm_neardup
+QUERIES["mm_neardup"] = _q_mm_neardup
 # the QUALIFY mirrors cap_hot_buckets exactly (drop every row of any
 # (modality, band, band_val) bucket holding more than the cap): the
 # drop is deterministic, so Spark and DuckDB agree even on a corpus
@@ -389,7 +383,7 @@ from odoo_batch_processing_spark.operators.dedup import (  # noqa: E402
     _SIMHASH_VOTES as _MM_VOTES,
 )
 
-ORACLES_EXT["mm_neardup"] = f"""
+ORACLES["mm_neardup"] = f"""
     WITH h AS (
         SELECT doc_id,
                ['image', 'audio', 'video'][CAST(doc_id % 3 AS INTEGER) + 1] AS modality,

@@ -53,10 +53,7 @@ def _q_profile_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     return profile(load_table(spark, sf_dir, "lineitem"), PROFILE_COLS)
 
 
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-QUERIES_EXT = {"profile_lineitem": _q_profile_lineitem}
+QUERIES = {"profile_lineitem": _q_profile_lineitem}
 
 
 def _col_profile_sql(c: str) -> str:
@@ -71,7 +68,7 @@ def _col_profile_sql(c: str) -> str:
     """
 
 
-ORACLES_EXT = {
+ORACLES = {
     "profile_lineitem": " UNION ALL ".join(_col_profile_sql(c) for c in PROFILE_COLS)
 }
 
@@ -161,8 +158,8 @@ def _q_profile_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     return table_checksum(docs, ("doc_id", "text"), ("source",))
 
 
-QUERIES_EXT["profile_checksum"] = _q_profile_checksum
-ORACLES_EXT["profile_checksum"] = """
+QUERIES["profile_checksum"] = _q_profile_checksum
+ORACLES["profile_checksum"] = """
     SELECT source,
            COUNT(1) AS n_rows,
            bit_xor(CAST(('0x' || substr(md5(
@@ -222,7 +219,7 @@ def _q_profile_checksum_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     return checksum_diff(docs, replica, ("doc_id", "text"), F.col("doc_id"))
 
 
-QUERIES_EXT["profile_checksum_diff"] = _q_profile_checksum_diff
+QUERIES["profile_checksum_diff"] = _q_profile_checksum_diff
 _CK = (
     "CAST(('0x' || substr(md5(COALESCE(CAST(doc_id AS VARCHAR), chr(0)) || '|' "
     "|| COALESCE(text, chr(0))), 1, 15)) AS BIGINT)"
@@ -231,7 +228,7 @@ _CK_T = (
     "CAST(('0x' || substr(md5(COALESCE(CAST(doc_id AS VARCHAR), chr(0)) || '|' "
     "|| COALESCE(CASE WHEN doc_id = 42 THEN 'TAMPERED' ELSE text END, chr(0))), 1, 15)) AS BIGINT)"
 )
-ORACLES_EXT["profile_checksum_diff"] = f"""
+ORACLES["profile_checksum_diff"] = f"""
     WITH a AS (
         SELECT doc_id % 16 AS bucket, COUNT(1) AS n_rows_a, bit_xor({_CK}) AS checksum_a
         FROM documents GROUP BY 1
@@ -320,8 +317,8 @@ def _q_profile_table_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     return table_diff(docs, replica, ("doc_id",), ("doc_id", "text"))
 
 
-QUERIES_EXT["profile_table_diff"] = _q_profile_table_diff
-ORACLES_EXT["profile_table_diff"] = """
+QUERIES["profile_table_diff"] = _q_profile_table_diff
+ORACLES["profile_table_diff"] = """
     WITH replica AS (
         SELECT doc_id,
                CASE WHEN doc_id = 42 THEN 'TAMPERED' ELSE text END AS text
@@ -387,8 +384,8 @@ def _q_profile_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     return joined
 
 
-QUERIES_EXT["profile_zscore"] = _q_profile_zscore
-ORACLES_EXT["profile_zscore"] = """
+QUERIES["profile_zscore"] = _q_profile_zscore
+ORACLES["profile_zscore"] = """
     WITH stats AS (
         SELECT event_type,
                CAST(COUNT(1) AS BIGINT) AS n,
@@ -483,8 +480,8 @@ def _q_dq_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_EXT["dq_expectations"] = _q_dq_expectations
-ORACLES_EXT["dq_expectations"] = """
+QUERIES["dq_expectations"] = _q_dq_expectations
+ORACLES["dq_expectations"] = """
     SELECT 'orders.o_orderkey unique' AS expectation,
            CAST(COALESCE(SUM(CASE WHEN c > 1 THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_violations,
            COALESCE(SUM(CASE WHEN c > 1 THEN 1 ELSE 0 END), 0) = 0 AS passed
@@ -556,8 +553,8 @@ def _q_profile_robust_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_EXT["profile_robust_outliers"] = _q_profile_robust_outliers
-ORACLES_EXT["profile_robust_outliers"] = f"""
+QUERIES["profile_robust_outliers"] = _q_profile_robust_outliers
+ORACLES["profile_robust_outliers"] = f"""
     WITH med AS (
         SELECT event_type, quantile_cont(value, 0.5) AS med
         FROM events GROUP BY event_type
@@ -571,26 +568,3 @@ ORACLES_EXT["profile_robust_outliers"] = f"""
     SELECT event_id, dev.event_type, dev.dev > {ROBUST_K} * mad.mad AS is_outlier
     FROM dev JOIN mad USING (event_type)
 """
-
-
-# --- core-window rotation (round 14, VERDICT r13 #1) -------------------
-# The driver's independent DuckDB harness had audited the same core
-# window for several rounds; rotate long-stable representatives out to
-# the extended tier (still oracle-checked locally every round) and
-# promote their strongest extended-tier siblings into the driver-facing
-# core. Family coverage is preserved — see registry.py ROTATION_R14.
-QUERIES["profile_checksum"] = QUERIES_EXT.pop("profile_checksum")
-ORACLES["profile_checksum"] = ORACLES_EXT.pop("profile_checksum")
-
-
-# ROTATION_R17 (registry.py): the profiling seat upgrades from the
-# table checksum (audited r14-r16) to the MAD robust-outlier profile,
-# and the data-quality expectations engine gets its first driver row —
-# the two together give the profiling/DQ family live coverage of both
-# its statistical and its rule-based halves.
-QUERIES["profile_robust_outliers"] = QUERIES_EXT.pop("profile_robust_outliers")
-ORACLES["profile_robust_outliers"] = ORACLES_EXT.pop("profile_robust_outliers")
-QUERIES["dq_expectations"] = QUERIES_EXT.pop("dq_expectations")
-ORACLES["dq_expectations"] = ORACLES_EXT.pop("dq_expectations")
-QUERIES_EXT["profile_checksum"] = QUERIES.pop("profile_checksum")
-ORACLES_EXT["profile_checksum"] = ORACLES.pop("profile_checksum")

@@ -102,15 +102,12 @@ def _q_arrow_map_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.mapInArrow(count_tokens, "doc_id bigint, n_tokens bigint")
 
 
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-QUERIES_EXT = {
+QUERIES = {
     "ps_groupby_stats": _q_ps_groupby_stats,
     "arrow_map_tokens": _q_arrow_map_tokens,
 }
 
-ORACLES_EXT = {
+ORACLES = {
     "ps_groupby_stats": """
         SELECT source,
                COUNT(doc_id) AS n_docs,

@@ -221,12 +221,12 @@ _SCD2_ORACLE = f"""
 """
 
 
-QUERIES_EXT = {
+QUERIES = {
     "scd2_user_tiers": _q_scd2_user_tiers,
     "pit_tier_at_purchase": _q_pit_tier_at_purchase,
 }
 
-ORACLES_EXT = {
+ORACLES = {
     "scd2_user_tiers": _SCD2_ORACLE,
     # DuckDB's native ASOF JOIN (greatest valid_from <= ts, inclusive)
     # against the same recomputed history — valid_from is unique per
@@ -241,24 +241,3 @@ ORACLES_EXT = {
           ON e.user_id = h.user_id AND e.ts >= h.valid_from
     """,
 }
-
-# ROTATION_R15 (registry.py): the SCD2 history build enters the core
-# window (first driver row for the slowly-changing-dimension family;
-# q03_top_orders vacated the slot). The point-in-time probe stays
-# extended.
-QUERIES = {"scd2_user_tiers": QUERIES_EXT.pop("scd2_user_tiers")}
-ORACLES = {"scd2_user_tiers": ORACLES_EXT.pop("scd2_user_tiers")}
-
-# ROTATION_R16 (registry.py): the point-in-time probe joins the
-# history build in core — it is the as-of-join family's new
-# representative (asof_last_purchase vacated its round-1 seat), and
-# the first driver row composing the SCD2 history with an ASOF probe.
-QUERIES["pit_tier_at_purchase"] = QUERIES_EXT.pop("pit_tier_at_purchase")
-ORACLES["pit_tier_at_purchase"] = ORACLES_EXT.pop("pit_tier_at_purchase")
-
-
-# ROTATION_R17 (registry.py): the SCD2 history build rotates out after
-# two audited rounds (r15/r16); the family's driver seat stays with
-# the point-in-time probe, which composes the same history build.
-QUERIES_EXT["scd2_user_tiers"] = QUERIES.pop("scd2_user_tiers")
-ORACLES_EXT["scd2_user_tiers"] = ORACLES.pop("scd2_user_tiers")

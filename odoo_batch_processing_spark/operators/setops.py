@@ -70,9 +70,6 @@ def _q_set_ops_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 QUERIES = {
     "set_ops_chain": _q_set_ops_chain,
-}
-
-QUERIES_EXT = {
     "set_union": _q_set_union,
     "set_intersect": _q_set_intersect,
     "set_except": _q_set_except,
@@ -104,6 +101,3 @@ ORACLES = {
         SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1997
     """,
 }
-
-ORACLES_EXT = {k: v for k, v in ORACLES.items() if k in QUERIES_EXT}
-ORACLES = {k: v for k, v in ORACLES.items() if k not in QUERIES_EXT}

@@ -842,9 +842,6 @@ QUERIES = {
     "x4_cosine_topk": _q_x4_cosine_topk,
     "x4_ivf_topk": _q_x4_ivf_topk,
     "x4_ivf_multiprobe": _q_x4_ivf_multiprobe,
-}
-
-QUERIES_EXT = {
     "x4_kmeans_cells": _q_x4_kmeans_cells,
     "x4_ivf_indexed": _q_x4_ivf_indexed,
     "x4_ivf_indexed_multiprobe": _q_x4_ivf_indexed_multiprobe,
@@ -1018,7 +1015,7 @@ def _trained_topk_oracle_sql(
     )
 
 
-ORACLES_EXT = {
+ORACLES |= {
     # same unit-normalize → quantize → integer-dot → rescale chain,
     # operation for operation: floor/least/greatest/int products are
     # engine-exact, and the one float multiply-divide is ordered
@@ -1092,11 +1089,11 @@ ORACLES_EXT = {
     """,
 }
 
-ORACLES_EXT["x4_ivf_recall"] = f"""
+ORACLES["x4_ivf_recall"] = f"""
         WITH brute AS (SELECT * FROM ({ORACLES["x4_cosine_topk"]})),
              ivf AS (SELECT * FROM ({ORACLES["x4_ivf_topk"]})),
              mp AS (SELECT * FROM ({ORACLES["x4_ivf_multiprobe"]})),
-             p4 AS (SELECT * FROM ({ORACLES_EXT["x4_ivf_probe4"]}))
+             p4 AS (SELECT * FROM ({ORACLES["x4_ivf_probe4"]}))
         SELECT b.query_id,
                CAST(SUM(CASE WHEN i.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
                    AS n_hits,
@@ -1120,7 +1117,7 @@ ORACLES_EXT["x4_ivf_recall"] = f"""
         GROUP BY b.query_id
     """
 
-ORACLES_EXT["x4_ivf_trained_recall"] = f"""
+ORACLES["x4_ivf_trained_recall"] = f"""
         WITH brute AS (SELECT * FROM ({ORACLES["x4_cosine_topk"]})),
              tr AS (SELECT * FROM ({_trained_topk_oracle_sql()}))
         SELECT b.query_id,
@@ -1134,25 +1131,12 @@ ORACLES_EXT["x4_ivf_trained_recall"] = f"""
         GROUP BY b.query_id
     """
 
-# Round 6 (VERDICT r5 #4): promote the TRAINED-IVF chain into the
-# driver gate — the core ANN rows previously certified only the
-# sign-bit stand-in (recall 0.26-0.40) while the flagship trained
-# chain (recall@10 = 0.94) sat ext-tier. The sign-bit multiprobe moves
-# to ext; its recall curve stays certified by x4_ivf_recall /
-# x4_ivf_probe4 (both reference its oracle SQL, baked in above before
-# this swap).
-QUERIES["x4_ivf_trained_recall"] = QUERIES_EXT.pop("x4_ivf_trained_recall")
-ORACLES["x4_ivf_trained_recall"] = ORACLES_EXT.pop("x4_ivf_trained_recall")
-QUERIES_EXT["x4_ivf_multiprobe"] = QUERIES.pop("x4_ivf_multiprobe")
-ORACLES_EXT["x4_ivf_multiprobe"] = ORACLES.pop("x4_ivf_multiprobe")
-
-
-QUERIES_EXT["x4_rerank_exact"] = _q_x4_rerank_exact
+QUERIES["x4_rerank_exact"] = _q_x4_rerank_exact
 
 # stage 1 verbatim from the x4_int8_topk chain at rank ≤ M, then the
 # shortlist joins back to the full-precision unit vectors for the
 # exact re-score — same operations in the same order as the Spark plan
-ORACLES_EXT["x4_rerank_exact"] = f"""
+ORACLES["x4_rerank_exact"] = f"""
     WITH unit AS ({_UNIT}),
     qz AS (
         SELECT vec_id,
@@ -1195,33 +1179,3 @@ ORACLES_EXT["x4_rerank_exact"] = f"""
         FROM refined
     ) WHERE rank <= {TOP_K}
 """
-
-
-# --- core-window rotation (round 14, VERDICT r13 #1) -------------------
-# The driver's independent DuckDB harness had audited the same core
-# window for several rounds; rotate long-stable representatives out to
-# the extended tier (still oracle-checked locally every round) and
-# promote their strongest extended-tier siblings into the driver-facing
-# core. Family coverage is preserved — see registry.py ROTATION_R14.
-QUERIES_EXT["x4_ivf_topk"] = QUERIES.pop("x4_ivf_topk")
-ORACLES_EXT["x4_ivf_topk"] = ORACLES.pop("x4_ivf_topk")
-QUERIES["x4_ivf_trained_topk"] = QUERIES_EXT.pop("x4_ivf_trained_topk")
-ORACLES["x4_ivf_trained_topk"] = ORACLES_EXT.pop("x4_ivf_trained_topk")
-
-# ROTATION_R15 (registry.py): the int8-quantized top-k (recall twin of
-# the float path, scan half the bytes) takes the brute-force slot;
-# x4_cosine_topk (driver-stable since round 1) rotates to extended.
-QUERIES["x4_int8_topk"] = QUERIES_EXT.pop("x4_int8_topk")
-ORACLES["x4_int8_topk"] = ORACLES_EXT.pop("x4_int8_topk")
-QUERIES_EXT["x4_cosine_topk"] = QUERIES.pop("x4_cosine_topk")
-ORACLES_EXT["x4_cosine_topk"] = ORACLES.pop("x4_cosine_topk")
-
-# ROTATION_R16 (registry.py): the standing-IVF-index multiprobe — the
-# ANN analogue of x3_minhash_indexed's build-once/probe-many path —
-# takes the trained-topk slot (audited r14+r15); the trained chain
-# stays certified by x4_ivf_trained_recall in core and its own
-# extended twin.
-QUERIES["x4_ivf_indexed_multiprobe"] = QUERIES_EXT.pop("x4_ivf_indexed_multiprobe")
-ORACLES["x4_ivf_indexed_multiprobe"] = ORACLES_EXT.pop("x4_ivf_indexed_multiprobe")
-QUERIES_EXT["x4_ivf_trained_topk"] = QUERIES.pop("x4_ivf_trained_topk")
-ORACLES_EXT["x4_ivf_trained_topk"] = ORACLES.pop("x4_ivf_trained_topk")

@@ -147,18 +147,9 @@ def _q_skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES = {"skew_salted_agg": _q_skew_salted_agg}
-
-QUERIES_EXT = {"skew_salted_join": _q_skew_salted_join}
-
-ORACLES_EXT = {
-    "skew_salted_join": """
-        SELECT p_brand,
-               CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-               COUNT(1) AS n_rows
-        FROM lineitem JOIN part ON l_partkey = p_partkey
-        GROUP BY p_brand
-    """,
+QUERIES = {
+    "skew_salted_agg": _q_skew_salted_agg,
+    "skew_salted_join": _q_skew_salted_join,
 }
 
 ORACLES = {
@@ -167,5 +158,12 @@ ORACLES = {
                CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(12,2)))) AS DOUBLE) AS revenue,
                COUNT(1) AS n_rows
         FROM lineitem GROUP BY l_returnflag
+    """,
+    "skew_salted_join": """
+        SELECT p_brand,
+               CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
+               COUNT(1) AS n_rows
+        FROM lineitem JOIN part ON l_partkey = p_partkey
+        GROUP BY p_brand
     """,
 }

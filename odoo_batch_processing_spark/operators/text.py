@@ -261,15 +261,12 @@ def _q_x5_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Core: the merged single-pass featurization + the tf-idf shuffle
-# query (which computes term/document frequency on the way). Extended:
-# the standalone per-feature micro-queries.
+# The merged single-pass featurization and the tf-idf shuffle query
+# (which computes term/document frequency on the way), then the
+# standalone per-feature micro-queries.
 QUERIES = {
     "x5_text_features": _q_x5_text_features,
     "x5_tfidf_top_terms": _q_x5_tfidf_top_terms,
-}
-
-QUERIES_EXT = {
     "x5_token_stats": _q_x5_token_stats,
     "x5_lang_id": _q_x5_lang_id,
     "x5_quality_score": _q_x5_quality_score,
@@ -380,9 +377,6 @@ ORACLES["x5_text_features"] = f"""
            md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))) AS fp
     FROM documents
 """
-
-ORACLES_EXT = {k: v for k, v in ORACLES.items() if k in QUERIES_EXT}
-ORACLES = {k: v for k, v in ORACLES.items() if k not in QUERIES_EXT}
 
 
 def _q_x5_udtf_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -655,11 +649,13 @@ def pruned_shingle_postings(
     exactly the aggregate's key set, so the df counts below are
     unchanged), but the hash-aggregate over the full posting stream —
     and its map-side hash tables — disappear from the plan, and the
-    cached relation is one bigint+string narrower. The pruned relation
-    is additionally materialized once here: its build is the expensive
-    tokenize+explode pass, and every graph consumer reads it at least
-    twice (df filter + both sides of the pair self-join), which
-    otherwise re-tokenized the corpus 2-3× per run."""
+    cached relation is one bigint+string narrower. The unpruned
+    distinct (doc_id, shingle) postings, not the pruned relation this
+    returns, are additionally materialized once here: their build is
+    the expensive tokenize+explode pass, and every graph run reads them
+    several times (the df count, the prune join, and through it both
+    sides of the pair self-join), which otherwise re-tokenized the
+    corpus 2-3× per run."""
     import math
 
     from odoo_batch_processing_spark.session import materialize_once
@@ -753,8 +749,8 @@ _TRIGRAMS_SQL = (
     "i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2]) ELSE CAST([] AS VARCHAR[]) END"
 )
 
-QUERIES_EXT["x5_gopher_repetition"] = _q_x5_gopher_repetition
-ORACLES_EXT["x5_gopher_repetition"] = f"""
+QUERIES["x5_gopher_repetition"] = _q_x5_gopher_repetition
+ORACLES["x5_gopher_repetition"] = f"""
     WITH base AS (
         SELECT doc_id,
                CAST(len(tk) AS BIGINT) AS n_tok,
@@ -782,8 +778,8 @@ ORACLES_EXT["x5_gopher_repetition"] = f"""
     FROM base LEFT JOIN bg USING (doc_id)
 """
 
-QUERIES_EXT["x5_boilerplate_ngrams"] = _q_x5_boilerplate_ngrams
-ORACLES_EXT["x5_boilerplate_ngrams"] = f"""
+QUERIES["x5_boilerplate_ngrams"] = _q_x5_boilerplate_ngrams
+ORACLES["x5_boilerplate_ngrams"] = f"""
     WITH sh AS (
         SELECT doc_id, unnest(list_distinct({_TRIGRAMS_SQL})) AS shingle
         FROM (SELECT doc_id, {_TOKS} AS tk FROM documents)
@@ -796,8 +792,8 @@ ORACLES_EXT["x5_boilerplate_ngrams"] = f"""
     LIMIT 100
 """
 
-QUERIES_EXT["x5_doc_sim_cosine"] = _q_x5_doc_sim_cosine
-ORACLES_EXT["x5_doc_sim_cosine"] = f"""
+QUERIES["x5_doc_sim_cosine"] = _q_x5_doc_sim_cosine
+ORACLES["x5_doc_sim_cosine"] = f"""
     WITH doc_terms AS (
         SELECT doc_id, shingle, COUNT(1) AS tf
         FROM (
@@ -871,8 +867,8 @@ def _q_x5_chunk_dedup_frac(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_EXT["x5_chunk_dedup_frac"] = _q_x5_chunk_dedup_frac
-ORACLES_EXT["x5_chunk_dedup_frac"] = f"""
+QUERIES["x5_chunk_dedup_frac"] = _q_x5_chunk_dedup_frac
+ORACLES["x5_chunk_dedup_frac"] = f"""
     WITH doc_chunks AS (
         SELECT DISTINCT doc_id,
                array_to_string(tk[i*10+1 : i*10+10], ' ') AS chunk
@@ -889,8 +885,8 @@ ORACLES_EXT["x5_chunk_dedup_frac"] = f"""
     GROUP BY doc_id
 """
 
-QUERIES_EXT["x5_udtf_chunks"] = _q_x5_udtf_chunks
-ORACLES_EXT["x5_udtf_chunks"] = """
+QUERIES["x5_udtf_chunks"] = _q_x5_udtf_chunks
+ORACLES["x5_udtf_chunks"] = """
     WITH toks AS (
       SELECT doc_id, list_filter(string_split(text, ' '), x -> trim(x) <> '') AS tk
       FROM documents WHERE doc_id < 50
@@ -968,7 +964,7 @@ def _q_x5_unigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_EXT["x5_unigram_surprisal"] = _q_x5_unigram_surprisal
+QUERIES["x5_unigram_surprisal"] = _q_x5_unigram_surprisal
 
 #: Shared oracle fragment: per-doc (doc_id, n_tokens, total_bits)
 #: unigram-LM surprisal scores as ONE parenthesized subquery. Composed
@@ -998,7 +994,7 @@ SURPRISAL_SCORES_SQL = f"""(
 
 # avg_bits = total_bits/n_tokens in double — identical to the inline
 # SUM(...)::DOUBLE / SUM(...)::DOUBLE since total_bits is the exact sum
-ORACLES_EXT["x5_unigram_surprisal"] = f"""
+ORACLES["x5_unigram_surprisal"] = f"""
     SELECT doc_id, n_tokens, total_bits,
            CAST(total_bits AS DOUBLE) / CAST(n_tokens AS DOUBLE) AS avg_bits
     FROM {SURPRISAL_SCORES_SQL} s
@@ -1076,13 +1072,13 @@ def _q_x5_bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_EXT["x5_bigram_surprisal"] = _q_x5_bigram_surprisal
+QUERIES["x5_bigram_surprisal"] = _q_x5_bigram_surprisal
 
 # DuckDB mirror: bigram list via list_zip of the two token-array
 # slices (for len<2 the slices collapse to [] in both engines — Spark
 # behind the size>=2 guard, DuckDB by slice semantics), split_part /
 # substring_index agree on "text before the first separator".
-ORACLES_EXT["x5_bigram_surprisal"] = f"""
+ORACLES["x5_bigram_surprisal"] = f"""
     WITH tf AS (
         SELECT doc_id, bigram, CAST(COUNT(1) AS BIGINT) AS tf
         FROM (
@@ -1257,7 +1253,7 @@ def _q_x5_trigram_backoff_surprisal(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
-QUERIES_EXT["x5_trigram_backoff_surprisal"] = _q_x5_trigram_backoff_surprisal
+QUERIES["x5_trigram_backoff_surprisal"] = _q_x5_trigram_backoff_surprisal
 
 _FL2 = "CAST(length(format('{:b}', %s)) - 1 AS BIGINT)"
 _TRI_BITS_SQL = f"""CASE
@@ -1274,7 +1270,7 @@ _TRI_BITS_SQL = f"""CASE
 # composes the same chr(31)-joined context/backoff keys. The level
 # CASE is evaluated once per (doc, trigram) row, exactly like the
 # Spark `when` chain.
-ORACLES_EXT["x5_trigram_backoff_surprisal"] = f"""
+ORACLES["x5_trigram_backoff_surprisal"] = f"""
     WITH toks AS (SELECT doc_id, {_TOKS} AS l FROM documents),
     tf AS (
         SELECT doc_id, trigram, CAST(COUNT(1) AS BIGINT) AS tf
@@ -1434,8 +1430,8 @@ def _q_x5_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_EXT["x5_bm25_topk"] = _q_x5_bm25_topk
-ORACLES_EXT["x5_bm25_topk"] = f"""
+QUERIES["x5_bm25_topk"] = _q_x5_bm25_topk
+ORACLES["x5_bm25_topk"] = f"""
     WITH lengths AS (
         SELECT doc_id, {_NTOK} AS dl FROM documents
     ), stats AS (
@@ -1530,8 +1526,8 @@ def _q_x5_reassemble_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_EXT["x5_reassemble_chunks"] = _q_x5_reassemble_chunks
-ORACLES_EXT["x5_reassemble_chunks"] = f"""
+QUERIES["x5_reassemble_chunks"] = _q_x5_reassemble_chunks
+ORACLES["x5_reassemble_chunks"] = f"""
     WITH toks AS (
         SELECT doc_id, {_TOKS} AS tk FROM documents WHERE doc_id < 50
     ), chunks AS (
@@ -1544,31 +1540,3 @@ ORACLES_EXT["x5_reassemble_chunks"] = f"""
     SELECT doc_id, string_agg(chunk_text, ' ' ORDER BY chunk_idx) AS reassembled
     FROM chunks GROUP BY doc_id
 """
-
-
-# --- core-window rotation (round 14, VERDICT r13 #1) -------------------
-# The driver's independent DuckDB harness had audited the same core
-# window for several rounds; rotate long-stable representatives out to
-# the extended tier (still oracle-checked locally every round) and
-# promote their strongest extended-tier siblings into the driver-facing
-# core. Family coverage is preserved — see registry.py ROTATION_R14.
-QUERIES_EXT["x5_tfidf_top_terms"] = QUERIES.pop("x5_tfidf_top_terms")
-ORACLES_EXT["x5_tfidf_top_terms"] = ORACLES.pop("x5_tfidf_top_terms")
-QUERIES["x5_bm25_topk"] = QUERIES_EXT.pop("x5_bm25_topk")
-ORACLES["x5_bm25_topk"] = ORACLES_EXT.pop("x5_bm25_topk")
-
-# ROTATION_R15 (registry.py): unigram surprisal (corpus LM + per-doc
-# mean -log p) takes the text-family slot held by x5_text_features
-# since round 2; the feature query rotates to extended.
-QUERIES["x5_unigram_surprisal"] = QUERIES_EXT.pop("x5_unigram_surprisal")
-ORACLES["x5_unigram_surprisal"] = ORACLES_EXT.pop("x5_unigram_surprisal")
-QUERIES_EXT["x5_text_features"] = QUERIES.pop("x5_text_features")
-ORACLES_EXT["x5_text_features"] = ORACLES.pop("x5_text_features")
-
-# ROTATION_R16 (registry.py): the Gopher repetition gates (dup-line /
-# dup-paragraph fractions, top-ngram share) take the text slot held by
-# bm25 since round 14; the scored retrieval query rotates to extended.
-QUERIES["x5_gopher_repetition"] = QUERIES_EXT.pop("x5_gopher_repetition")
-ORACLES["x5_gopher_repetition"] = ORACLES_EXT.pop("x5_gopher_repetition")
-QUERIES_EXT["x5_bm25_topk"] = QUERIES.pop("x5_bm25_topk")
-ORACLES_EXT["x5_bm25_topk"] = ORACLES.pop("x5_bm25_topk")

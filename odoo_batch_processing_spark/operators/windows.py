@@ -551,16 +551,12 @@ def _q_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Core: sliding windows (tumbling is its slide==size special case) +
-# sessionization. Extended: the tumbling special case, plus the
-# window-function micro-queries whose expressions the merged
-# plans.advanced.expr_breadth / x4 top-k queries already cover.
+# Sliding windows (tumbling is its slide==size special case) and
+# sessionization, then the tumbling special case and the
+# window-function micro-queries.
 QUERIES = {
     "x7_sliding_windows": _q_x7_sliding_windows,
     "x7_sessionize": _q_x7_sessionize,
-}
-
-QUERIES_EXT = {
     "x7_tumbling_hourly": _q_x7_tumbling_hourly,
     "w_topk_per_group": _q_topk_per_group,
     "w_running_total": _q_running_total,
@@ -681,9 +677,6 @@ ORACLES = {
     """,
 }
 
-ORACLES_EXT = {k: v for k, v in ORACLES.items() if k in QUERIES_EXT}
-ORACLES = {k: v for k, v in ORACLES.items() if k not in QUERIES_EXT}
-
 
 def _q_gap_fill_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-series regularization: resample each user's event stream to
@@ -782,8 +775,8 @@ def transition_matrix(pairs: DataFrame) -> DataFrame:
     )
 
 
-QUERIES_EXT["x7_event_transitions"] = _q_event_transitions
-ORACLES_EXT["x7_event_transitions"] = """
+QUERIES["x7_event_transitions"] = _q_event_transitions
+ORACLES["x7_event_transitions"] = """
     WITH steps AS (
         SELECT event_type AS from_type,
                lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS to_type
@@ -798,8 +791,8 @@ ORACLES_EXT["x7_event_transitions"] = """
     FROM counted
 """
 
-QUERIES_EXT["w_gap_fill_ffill"] = _q_gap_fill_ffill
-ORACLES_EXT["w_gap_fill_ffill"] = """
+QUERIES["w_gap_fill_ffill"] = _q_gap_fill_ffill
+ORACLES["w_gap_fill_ffill"] = """
     WITH hourly AS (
         SELECT user_id, date_trunc('hour', ts) AS hour,
                CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS hour_value
@@ -853,8 +846,8 @@ def _q_rolling_median5(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev.select("user_id", "event_id", med.alias("med5"))
 
 
-QUERIES_EXT["w_rolling_median5"] = _q_rolling_median5
-ORACLES_EXT["w_rolling_median5"] = """
+QUERIES["w_rolling_median5"] = _q_rolling_median5
+ORACLES["w_rolling_median5"] = """
     SELECT user_id, event_id,
            CASE WHEN n % 2 = 1 THEN lst[CAST(floor((n + 1) / 2) AS INT)]
                 ELSE (lst[CAST(floor(n / 2) AS INT)]
@@ -918,8 +911,8 @@ def _q_w_interval_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_EXT["w_interval_sweep"] = _q_w_interval_sweep
-ORACLES_EXT["w_interval_sweep"] = """
+QUERIES["w_interval_sweep"] = _q_w_interval_sweep
+ORACLES["w_interval_sweep"] = """
     WITH spans AS (
         SELECT o.o_orderdate, l.l_shipdate
         FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
@@ -975,8 +968,8 @@ def _q_w_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_EXT["w_twap"] = _q_w_twap
-ORACLES_EXT["w_twap"] = """
+QUERIES["w_twap"] = _q_w_twap
+ORACLES["w_twap"] = """
     WITH spans AS (
         SELECT user_id,
                CAST(lead(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) // 1000000
@@ -1002,51 +995,7 @@ def _q_x7_sessionize_chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sessionize_chunked(load_table(spark, sf_dir, "events"))
 
 
-QUERIES_EXT["x7_sessionize_chunked"] = _q_x7_sessionize_chunked
+QUERIES["x7_sessionize_chunked"] = _q_x7_sessionize_chunked
 # deliberately the SAME SQL string as the Window form — one oracle, two
 # physical strategies (the kmeans_lloyd_cells promotion pattern)
-ORACLES_EXT["x7_sessionize_chunked"] = ORACLES["x7_sessionize"]
-
-
-# --- core-window rotation (round 14, VERDICT r13 #1) -------------------
-# The driver's independent DuckDB harness had audited the same core
-# window for several rounds; rotate long-stable representatives out to
-# the extended tier (still oracle-checked locally every round) and
-# promote their strongest extended-tier siblings into the driver-facing
-# core. Family coverage is preserved — see registry.py ROTATION_R14.
-QUERIES_EXT["x7_sliding_windows"] = QUERIES.pop("x7_sliding_windows")
-ORACLES_EXT["x7_sliding_windows"] = ORACLES.pop("x7_sliding_windows")
-QUERIES["w_interval_sweep"] = QUERIES_EXT.pop("w_interval_sweep")
-ORACLES["w_interval_sweep"] = ORACLES_EXT.pop("w_interval_sweep")
-
-# ROTATION_R15 (registry.py): calendar gap-fill + forward-fill takes a
-# windows-family core slot (w_interval_sweep keeps the other);
-# x7_sessionize — driver-stable since round 1 and twinned by the
-# chunked + streaming session forms — rotates to extended.
-QUERIES["w_gap_fill_ffill"] = QUERIES_EXT.pop("w_gap_fill_ffill")
-ORACLES["w_gap_fill_ffill"] = ORACLES_EXT.pop("w_gap_fill_ffill")
-QUERIES_EXT["x7_sessionize"] = QUERIES.pop("x7_sessionize")
-ORACLES_EXT["x7_sessionize"] = ORACLES.pop("x7_sessionize")
-
-# ROTATION_R16 (registry.py): the bounded rolling median (rangeBetween
-# over a 5-row frame via percentile) replaces the interval sweep, and
-# the lead-window event-transition matrix takes a second windows slot
-# (x2_dedup_survivors vacated a dedup-family seat — exact dedup stays
-# driver-covered by s_x2_stream_dedup_wm).
-QUERIES["w_rolling_median5"] = QUERIES_EXT.pop("w_rolling_median5")
-ORACLES["w_rolling_median5"] = ORACLES_EXT.pop("w_rolling_median5")
-QUERIES_EXT["w_interval_sweep"] = QUERIES.pop("w_interval_sweep")
-ORACLES_EXT["w_interval_sweep"] = ORACLES.pop("w_interval_sweep")
-QUERIES["x7_event_transitions"] = QUERIES_EXT.pop("x7_event_transitions")
-ORACLES["x7_event_transitions"] = ORACLES_EXT.pop("x7_event_transitions")
-
-
-# ROTATION_R17 (registry.py): the funnel-step analysis (ordered
-# event-sequence matching) takes the calendar-scaffold seat; gap-fill
-# rotates out after two audited rounds (r15/r16), its forward-fill
-# mechanism still pinned by the partition-invariance and empty-corpus
-# suites.
-QUERIES["x7_funnel_steps"] = QUERIES_EXT.pop("x7_funnel_steps")
-ORACLES["x7_funnel_steps"] = ORACLES_EXT.pop("x7_funnel_steps")
-QUERIES_EXT["w_gap_fill_ffill"] = QUERIES.pop("w_gap_fill_ffill")
-ORACLES_EXT["w_gap_fill_ffill"] = ORACLES.pop("w_gap_fill_ffill")
+ORACLES["x7_sessionize_chunked"] = ORACLES["x7_sessionize"]

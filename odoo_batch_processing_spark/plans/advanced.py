@@ -435,23 +435,9 @@ def _q_sql_recursive_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Core: cross-dimension pairs, anti-join + scalar subquery, and the
-# merged scalar/window breadth projection. Extended: the outer-join
-# distribution / correlated-aggregate / disjunctive-pushdown shapes
-# (demoted to make driver-window room for the x9 curation family —
-# they stay locally oracle-checked), grouping-sets/pivot variants,
-# the EXISTS/correlated-max twins of shapes core already covers, the
-# SQL-string parity query, and the pre-merge breadth micro-queries.
-# q07 demoted round 5 (VERDICT r04 #6): the cross-dimension pair
-# shape is covered by q05/q09 plus the ext TPC-H family; the driver
-# slot went to the stream-stream LEFT OUTER join, the newest/riskiest
-# streaming semantic, which was sitting outside the hard gate.
 QUERIES = {
     "expr_breadth": _q_expr_breadth,
     "q22_inactive_customers": _q_q22_inactive_customers,
-}
-
-QUERIES_EXT = {
     "q07_nation_pairs": _q_q07_nation_pairs,
     "agg_rollup": _q_agg_rollup,
     "agg_cube": _q_agg_cube,
@@ -657,13 +643,9 @@ ORACLES = {
     """,
 }
 
-# split the oracle literals along the query-tier boundary
-ORACLES_EXT = {k: v for k, v in ORACLES.items() if k in QUERIES_EXT}
-ORACLES = {k: v for k, v in ORACLES.items() if k not in QUERIES_EXT}
-
 # DuckDB's integer division is // (DIV in Spark); otherwise the oracle
 # restates the identical recursion
-ORACLES_EXT["sql_recursive_hierarchy"] = """
+ORACLES["sql_recursive_hierarchy"] = """
     WITH RECURSIVE h AS (
         SELECT c_custkey, c_acctbal, 0 AS depth
         FROM customer WHERE c_custkey = 0
@@ -703,8 +685,8 @@ def _q_scalar_try_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_EXT["scalar_try_funcs"] = _q_scalar_try_funcs
-ORACLES_EXT["scalar_try_funcs"] = """
+QUERIES["scalar_try_funcs"] = _q_scalar_try_funcs
+ORACLES["scalar_try_funcs"] = """
     SELECT l_orderkey, l_linenumber,
            l_extendedprice / l_quantity AS unit_price,
            CAST(NULL AS DOUBLE) AS div_zero,
@@ -746,8 +728,8 @@ def _q_sql_pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_EXT["sql_pipe_syntax"] = _q_sql_pipe_syntax
-ORACLES_EXT["sql_pipe_syntax"] = """
+QUERIES["sql_pipe_syntax"] = _q_sql_pipe_syntax
+ORACLES["sql_pipe_syntax"] = """
     SELECT n_name,
            CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))
                     * (1 - CAST(l_discount AS DECIMAL(12,2)))) AS DOUBLE) AS revenue,
@@ -760,22 +742,3 @@ ORACLES_EXT["sql_pipe_syntax"] = """
     GROUP BY n_name
 """
 
-
-# --- core-window rotation (round 14, VERDICT r13 #1) -------------------
-# See registry.py ROTATION_R14: q22 moves to the locally-oracle-checked
-# extended tier; its X1 family stays driver-covered by q01/q03/q09.
-QUERIES_EXT["q22_inactive_customers"] = QUERIES.pop("q22_inactive_customers")
-ORACLES_EXT["q22_inactive_customers"] = ORACLES.pop("q22_inactive_customers")
-
-
-# ROTATION_R17 (registry.py): two never-audited SQL-surface rows —
-# GROUPING SETS rollup and the recursive-CTE hierarchy walk — face the
-# external harness; expr_breadth (driver-stable since round 2, and the
-# widest single-query expression sweep in the catalog) rotates to
-# extended, where the local oracle still runs it every round.
-QUERIES["agg_grouping_sets"] = QUERIES_EXT.pop("agg_grouping_sets")
-ORACLES["agg_grouping_sets"] = ORACLES_EXT.pop("agg_grouping_sets")
-QUERIES["sql_recursive_hierarchy"] = QUERIES_EXT.pop("sql_recursive_hierarchy")
-ORACLES["sql_recursive_hierarchy"] = ORACLES_EXT.pop("sql_recursive_hierarchy")
-QUERIES_EXT["expr_breadth"] = QUERIES.pop("expr_breadth")
-ORACLES_EXT["expr_breadth"] = ORACLES.pop("expr_breadth")

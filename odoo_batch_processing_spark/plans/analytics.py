@@ -261,21 +261,11 @@ def q14_promo_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# q06 lives in the extended tier: its scan-with-pushed-range-filters
-# shape is also pinned by tests/test_plan_hygiene.py, and the core
-# tier budget goes to distinct join/agg shapes. q14 demoted round 5
-# (VERDICT r04 #6): its broadcast-star shape is covered by q05/q09 and
-# 15 ext TPC-H siblings; the slot went to the watermark-bounded
-# streaming dedup, whose semantics were previously outside the
-# driver's hard gate.
 QUERIES = {
     "q01_pricing_summary": q01_pricing_summary,
     "q03_top_orders": q03_top_orders,
     "q05_revenue_by_nation": q05_revenue_by_nation,
     "q09_profit_by_nation_year": q09_profit_by_nation_year,
-}
-
-QUERIES_EXT = {
     "q06_forecast_revenue": q06_forecast_revenue,
     "q14_promo_effect": q14_promo_effect,
 }
@@ -308,26 +298,7 @@ ORACLES = {
     "q03_top_orders": ORACLE_Q03,
     "q05_revenue_by_nation": ORACLE_Q05,
     "q09_profit_by_nation_year": ORACLE_Q09,
-}
-
-ORACLES_EXT = {
     "q06_forecast_revenue": ORACLE_Q06,
     "q14_promo_effect": ORACLE_Q14,
 }
 
-
-# --- core-window rotation (round 14, VERDICT r13 #1) -------------------
-# The driver's independent DuckDB harness had audited the same core
-# window for several rounds; rotate long-stable representatives out to
-# the extended tier (still oracle-checked locally every round) and
-# promote their strongest extended-tier siblings into the driver-facing
-# core. Family coverage is preserved — see registry.py ROTATION_R14.
-QUERIES_EXT["q05_revenue_by_nation"] = QUERIES.pop("q05_revenue_by_nation")
-ORACLES_EXT["q05_revenue_by_nation"] = ORACLES.pop("q05_revenue_by_nation")
-
-# ROTATION_R15 (registry.py): q03 (driver-stable since round 1)
-# rotates to extended; its vacated slot goes to the SCD2 history build
-# (operators/scd.py) so type-2 dimension maintenance gets its first
-# external audit. X1 keeps q01/q09/expr_breadth in core.
-QUERIES_EXT["q03_top_orders"] = QUERIES.pop("q03_top_orders")
-ORACLES_EXT["q03_top_orders"] = ORACLES.pop("q03_top_orders")

@@ -317,10 +317,7 @@ def _q_q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-QUERIES_EXT = {
+QUERIES = {
     "q08_market_share": _q_q08_market_share,
     "q10_returned_items": _q_q10_returned_items,
     "q11_important_parts": _q_q11_important_parts,
@@ -332,7 +329,7 @@ QUERIES_EXT = {
     "q21_waiting_suppliers": _q_q21_waiting_suppliers,
 }
 
-ORACLES_EXT = {
+ORACLES = {
     "q08_market_share": """
         SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year,
                CAST(SUM(CASE WHEN n2.n_name = 'NATION_3'

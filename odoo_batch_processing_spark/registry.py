@@ -8,19 +8,23 @@ in ``QUERIES`` only and get the driver's weaker rows-only check.
 
 Two tiers:
 
-* **core** (``QUERIES``/``ORACLES``) — the driver-facing catalog,
-  capped at :data:`CORE_CAP` entries so the driver's bounded
-  correctness run (first 50 queries) covers EVERY operator family.
-  One representative query per operator; merged queries note which
-  ops they fold in.
-* **extended** (``QUERIES_EXT``/``ORACLES_EXT``) — redundant variants
-  and micro-queries kept oracle-checkable locally
+* **core** — the names in :data:`CORE`, in that order: the
+  driver-facing catalog, capped at :data:`CORE_CAP` entries so the
+  driver's bounded correctness run (first 50 queries) covers every
+  operator family. ``all_queries()``/``all_oracles()`` return it.
+* **extended** — every registered query, core included
+  (``all_queries(extended=True)``): redundant variants and
+  micro-queries kept oracle-checkable locally
   (``tools/oracle_check.py --extended``) and exercised by tests, but
   outside the driver's window by design.
 
+Which tier a query sits in is decided here alone; a module only
+registers it. A :data:`CORE` name that no module defines raises
+``ValueError``, and so does a name that two modules define.
+
 Invariants enforced by tests/test_registry.py:
 * every oracle key has a query key;
-* names are unique across modules AND across tiers;
+* names are unique across modules;
 * the core tier has at most CORE_CAP entries;
 * every query returns a DataFrame with at least one column, and
   column names match between the Spark result and the oracle result.
@@ -67,148 +71,92 @@ _MODULES = (
 #: entries; the core tier must fit inside that window.
 CORE_CAP = 50
 
-#: Round-14 core-window rotation (VERDICT r13 #1): the driver's DuckDB
-#: harness is the only verification not built by this repo, and it had
-#: audited the same 50 queries for several rounds. Eight long-stable
-#: core representatives moved to the extended tier (still DuckDB-
-#: oracle-checked locally every round via tools/oracle_check.py
-#: --extended) and their strongest extended-tier siblings took their
-#: core slots, so the independent harness now audits queries previously
-#: verified only by the repo's own tooling. Every SURVEY §2 family
-#: keeps at least one core row (X1: q01/q03/q09/expr_breadth; X3:
-#: five others + the promoted containment; X4: cosine/trained_recall/
-#: trained_topk; X5: text_features + bm25; X7: sessionize +
-#: interval_sweep; X8: hll_merge; X9: curation/pack_shards/
-#: weighted_sample), and graph + profiling gain first-ever driver rows.
-ROTATION_R14 = {
-    "q05_revenue_by_nation": "g_pagerank_simgraph",
-    "q22_inactive_customers": "profile_checksum",
-    "x3_ngram_jaccard": "x3_containment",
-    "x4_ivf_topk": "x4_ivf_trained_topk",
-    "x5_tfidf_top_terms": "x5_bm25_topk",
-    "x9_source_mix": "x9_weighted_sample",
-    "x7_sliding_windows": "w_interval_sweep",
-    "x8_approx_aggs": "x8_hll_merge",
-}
-
-#: Round-15 rotation (VERDICT r14 #4/#5), second tranche of the same
-#: discipline: nine more long-stable core representatives trade places
-#: with extended-tier siblings the external harness has never audited.
-#: Notable slots: the standing MinHash INDEX path (its hot-bucket cap
-#: is now the scan-local bucket_n filter landed this round) replaces
-#: the recompute LSH; the SCD2 history build and the exact triangle
-#: counter give the slowly-changing-dimension and graph families new
-#: external coverage; and ``s_r22_manifest_counts`` — the manifest-fed
-#: Python DataSource twin of the R22 counts — is the round's one NEW
-#: catalog entry (187 total), giving the newest subsystem (manifest
-#: ingest, zero prior driver coverage) a driver-window row. Everything
-#: rotated out stays DuckDB-checked locally per round via
-#: tools/oracle_check.py --extended.
-ROTATION_R15 = {
-    "x3_minhash_lsh": "x3_minhash_indexed",
-    "x3_simhash": "g_triangle_counts",
-    "x4_cosine_topk": "x4_int8_topk",
-    "x5_text_features": "x5_unigram_surprisal",
-    "x9_pack_shards": "x9_group_sample",
-    "x6_json_grouped": "x6_variant_shred",
-    "x7_sessionize": "w_gap_fill_ffill",
-    "q03_top_orders": "scd2_user_tiers",
-    "s_r22_change_counts": "s_r22_manifest_counts",
-}
-
-
-#: Round-16 rotation (VERDICT r15 #1/#2), third tranche: eight more
-#: long-stable core representatives trade places with never-audited
-#: extended-tier siblings. Two swaps do double duty: the exact
-#: triangle counter (14.95 s = 34% of the r15 batch headline) vacates
-#: the window — its seat goes to ``ivm_refresh``, the incremental-
-#: view-maintenance subsystem's FIRST driver row (the r15-manifest
-#: precedent), NOT to ``g_doulion_triangles``, whose catalog form
-#: embeds the exact pass for its est_ok certification and measured
-#: ~1.35× the exact counter at sf0.1 (see graph.py) — and the batch
-#: incremental near-dup hands its slot to the streaming twin
-#: ``s_x3_stream_incremental_neardup``, the X3 family's first
-#: streaming driver row. ``pit_tier_at_purchase`` gives the SCD family
-#: its point-in-time probe next to the history build;
-#: ``x4_ivf_indexed_multiprobe`` audits the standing-IVF-index probe
-#: path (the ANN analogue of x3_minhash_indexed). Everything rotated
-#: out stays DuckDB-checked locally per round via
-#: tools/oracle_check.py --extended.
-ROTATION_R16 = {
-    "g_triangle_counts": "ivm_refresh",
-    "x5_bm25_topk": "x5_gopher_repetition",
-    "w_interval_sweep": "w_rolling_median5",
-    "x4_ivf_trained_topk": "x4_ivf_indexed_multiprobe",
-    "x3_incremental_neardup": "s_x3_stream_incremental_neardup",
-    "asof_last_purchase": "pit_tier_at_purchase",
-    "x9_weighted_sample": "x9_difficulty_deciles",
-    "x2_dedup_survivors": "x7_event_transitions",
-}
+#: The core tier, in driver order: the names the driver's correctness
+#: run audits, one or more per operator family. Every other registered
+#: query is extended-only. The exact and DOULION triangle counters stay
+#: out: they are the costliest batch rows at sf0.1, and the DOULION
+#: query embeds the exact pass to certify its estimate.
+CORE = (
+    "q01_pricing_summary",
+    "q09_profit_by_nation_year",
+    "agg_grouping_sets",
+    "sql_recursive_hierarchy",
+    "range_join_follows",
+    "pit_tier_at_purchase",
+    "r02_visibility_filter",
+    "r07_broadcast_update",
+    "r09_zip_join_update",
+    "r10_limit",
+    "r16_outcome_classify",
+    "x3_neardup_survivors",
+    "x3_embedding_neardup",
+    "x3_containment",
+    "x3_minhash_indexed",
+    "x4_ivf_trained_recall",
+    "x4_int8_topk",
+    "x4_ivf_indexed_multiprobe",
+    "x5_unigram_surprisal",
+    "x5_gopher_repetition",
+    "x9_curation_pipeline",
+    "x9_difficulty_deciles",
+    "x9_crypto_shred",
+    "x6_variant_shred",
+    "w_rolling_median5",
+    "x7_event_transitions",
+    "x7_funnel_steps",
+    "x8_hll_merge",
+    "set_ops_chain",
+    "skew_salted_agg",
+    "grouped_pandas_ranks",
+    "g_pagerank_simgraph",
+    "mm_binary_meta",
+    "mm_decode_features",
+    "profile_robust_outliers",
+    "dq_expectations",
+    "ivm_refresh",
+    "r21_merge",
+    "src_jsonl_roundtrip",
+    "lake_compact_roundtrip",
+    "s_stream_stream_join",
+    "s_x7_stream_hourly",
+    "s_r18_throttled_update",
+    "s_r17_progress",
+    "s_r19_cancel",
+    "s_stateful_totals",
+    "s_stream_stream_left_join",
+    "s_x2_stream_dedup_wm",
+    "s_r22_manifest_counts",
+    "s_x3_stream_incremental_neardup",
+)
 
 
-#: Round-17 rotation (VERDICT r16 #2), fourth tranche, drawn entirely
-#: from the never-audited set the external-coverage debt accounting
-#: names: GROUPING SETS, the recursive-CTE hierarchy, the funnel-step
-#: sequence matcher, the MAD robust-outlier profile, the DQ
-#: expectations engine and the GDPR crypto-shred each face the
-#: driver's independent DuckDB harness for the first time, and the
-#: storage-layout (``lake_*``) and non-parquet-source (``src_*``)
-#: families get their first driver rows ever (the compaction rewrite
-#: — NEW this round — and the JSONL roundtrip). Seats come from
-#: long-stable representatives: three R-rows audited every round
-#: since round 1 (r06/r13_r14/r20 — the bulk family keeps five core
-#: rows), expr_breadth (stable since round 2), and the twice-audited
-#: r15 promotions w_gap_fill_ffill / x9_group_sample /
-#: scd2_user_tiers (the SCD seat stays with pit_tier_at_purchase,
-#: which composes the same history build). profile_checksum hands the
-#: profiling seat to the robust-outlier profile directly. Everything
-#: rotated out stays DuckDB-checked locally per round via
-#: tools/oracle_check.py --extended.
-ROTATION_R17 = {
-    "x9_group_sample": "x9_crypto_shred",
-    "w_gap_fill_ffill": "x7_funnel_steps",
-    "expr_breadth": "agg_grouping_sets",
-    "r06_counts": "sql_recursive_hierarchy",
-    "r13_r14_coerce_clamp": "dq_expectations",
-    "profile_checksum": "profile_robust_outliers",
-    "r20_coalesce_cascade": "lake_compact_roundtrip",
-    "scd2_user_tiers": "src_jsonl_roundtrip",
-}
-
-
-def _collect(extended: bool = False) -> tuple[dict[str, QueryFn], dict[str, str]]:
+def _collect(extended: bool) -> tuple[dict[str, QueryFn], dict[str, str]]:
     import importlib
 
-    q_attrs = ("QUERIES", "QUERIES_EXT") if extended else ("QUERIES",)
-    o_attrs = ("ORACLES", "ORACLES_EXT") if extended else ("ORACLES",)
     queries: dict[str, QueryFn] = {}
     oracles: dict[str, str] = {}
     for modname in _MODULES:
-        try:
-            mod = importlib.import_module(modname)
-        except ModuleNotFoundError as exc:
-            # Skip ONLY when the module itself is absent (not built yet
-            # in an incremental round). A ModuleNotFoundError raised by
-            # an import *inside* an existing module (missing transitive
-            # dep, typo'd import) must fail loudly — swallowing it would
-            # silently drop a whole query family from the catalog.
-            if exc.name != modname:
-                raise
-            continue
-        for attr in q_attrs:
-            for name, fn in getattr(mod, attr, {}).items():
-                if name in queries:
-                    raise ValueError(f"duplicate query name {name!r} in {modname}")
-                queries[name] = fn
-        for attr in o_attrs:
-            for name, sql in getattr(mod, attr, {}).items():
-                if name in oracles:
-                    raise ValueError(f"duplicate oracle name {name!r} in {modname}")
-                oracles[name] = sql
+        mod = importlib.import_module(modname)
+        for name, fn in mod.QUERIES.items():
+            if name in queries:
+                raise ValueError(f"duplicate query name {name!r} in {modname}")
+            queries[name] = fn
+        for name, sql in mod.ORACLES.items():
+            if name in oracles:
+                raise ValueError(f"duplicate oracle name {name!r} in {modname}")
+            oracles[name] = sql
     missing = set(oracles) - set(queries)
     if missing:
         raise ValueError(f"oracles without queries: {sorted(missing)}")
-    return queries, oracles
+    undefined = [name for name in CORE if name not in queries]
+    if undefined:
+        raise ValueError(f"core names that no module defines: {undefined}")
+    if extended:
+        return queries, oracles
+    return (
+        {name: queries[name] for name in CORE},
+        {name: oracles[name] for name in CORE if name in oracles},
+    )
 
 
 def all_queries(extended: bool = False) -> dict[str, QueryFn]:

@@ -306,17 +306,14 @@ def _q_lake_compact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-QUERIES_EXT = {
+QUERIES = {
     "lake_zorder_keys": _q_lake_zorder_keys,
     "lake_compaction_plan": _q_lake_compaction_plan,
     "lake_compact_roundtrip": _q_lake_compact_roundtrip,
 }
 
 _MASK = (1 << Z_BITS) - 1
-ORACLES_EXT = {
+ORACLES = {
     "lake_zorder_keys": f"""
         SELECT l_orderkey, l_linenumber,
                {z_value_sql(f"(l_partkey & {_MASK})", f"(l_suppkey & {_MASK})")} AS zkey
@@ -356,10 +353,3 @@ ORACLES_EXT = {
         FROM events GROUP BY event_type
     """,
 }
-
-
-# ROTATION_R17 (registry.py): the storage-layout family's first driver
-# row — the end-to-end compaction rewrite (listing -> plan -> rewrite
-# -> lossless read-back) lands in the core window the round it ships.
-QUERIES["lake_compact_roundtrip"] = QUERIES_EXT.pop("lake_compact_roundtrip")
-ORACLES["lake_compact_roundtrip"] = ORACLES_EXT.pop("lake_compact_roundtrip")

@@ -189,15 +189,12 @@ def _q_s_r22_pyds_stream(spark, sf_dir):
     return spark.table(name)
 
 
-QUERIES_EXT = {
+QUERIES = {
     "r22_pyds_listview": _q_r22_pyds_listview,
     "s_r22_pyds_stream": _q_s_r22_pyds_stream,
 }
 
-ORACLES_EXT = {
+ORACLES = {
     "r22_pyds_listview": _ORACLE,
     "s_r22_pyds_stream": _ORACLE,
 }
-
-QUERIES: dict = {}
-ORACLES: dict = {}

@@ -487,22 +487,10 @@ def _q_r21_merge_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES = {"r21_merge": _q_r21_merge}
-
-ORACLES = {
-    # upsert = CASE over the touched keys; untouched partitions intact
-    "r21_merge": """
-        SELECT o_orderkey,
-               CASE WHEN o_orderstatus = 'F' AND o_orderkey % 100 = 0
-                    THEN '9-MERGED' ELSE o_orderpriority END AS o_orderpriority,
-               o_orderstatus
-        FROM orders
-    """,
-}
-
-# plain write/read-back roundtrip: covered in spirit by r21_merge's
-# stage-then-read; kept oracle-checked in the extended tier.
-QUERIES_EXT = {
+# r21_sink_roundtrip is the plain write/read-back roundtrip, covered
+# in spirit by r21_merge's stage-then-read.
+QUERIES = {
+    "r21_merge": _q_r21_merge,
     "r21_sink_roundtrip": _q_r21_sink_roundtrip,
     "src_jsonl_roundtrip": _q_src_jsonl_roundtrip,
     "src_csv_roundtrip": _q_src_csv_roundtrip,
@@ -513,8 +501,16 @@ QUERIES_EXT = {
     **({"r21_merge_delta": _q_r21_merge_delta} if _has_delta() else {}),
 }
 
-# identical to r07: the sink must not change the relation
-ORACLES_EXT = {
+ORACLES = {
+    # upsert = CASE over the touched keys; untouched partitions intact
+    "r21_merge": """
+        SELECT o_orderkey,
+               CASE WHEN o_orderstatus = 'F' AND o_orderkey % 100 = 0
+                    THEN '9-MERGED' ELSE o_orderpriority END AS o_orderpriority,
+               o_orderstatus
+        FROM orders
+    """,
+    # identical to r07: the sink must not change the relation
     "r21_sink_roundtrip": """
         SELECT o_orderkey,
                CASE WHEN o_orderstatus = 'O' AND NOT (o_orderpriority = '1-URGENT')
@@ -549,11 +545,4 @@ ORACLES_EXT = {
 
 # the ACID path must land on byte-identical content as the emulation
 if _has_delta():
-    ORACLES_EXT["r21_merge_delta"] = ORACLES["r21_merge"]
-
-
-# ROTATION_R17 (registry.py): the non-parquet source family's first
-# driver row — the JSONL interchange roundtrip (schema-on-read over
-# free text) audits the read path the raw-crawl landing format uses.
-QUERIES["src_jsonl_roundtrip"] = QUERIES_EXT.pop("src_jsonl_roundtrip")
-ORACLES["src_jsonl_roundtrip"] = ORACLES_EXT.pop("src_jsonl_roundtrip")
+    ORACLES["r21_merge_delta"] = ORACLES["r21_merge"]

@@ -705,19 +705,6 @@ def _q_s_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.table(name)
 
 
-QUERIES = {
-    name: _with_stream_shuffle(fn)
-    for name, fn in {
-        "s_stream_stream_join": _q_s_stream_stream_join,
-        "s_r22_change_counts": _q_s_r22_change_counts,
-        "s_x7_stream_hourly": _q_s_x7_stream_hourly,
-        "s_r18_throttled_update": _q_s_r18_throttled_update,
-        "s_r17_progress": _q_s_r17_progress,
-        "s_r19_cancel": _q_s_r19_cancel,
-        "s_stateful_totals": _q_s_stateful_totals,
-    }.items()
-}
-
 def _q_s_x2_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming exact dedup (the ingest-time form of X2): the corpus
     arrives as two identical files processed in two micro-batches
@@ -1361,35 +1348,40 @@ def _q_s_x7_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     return transition_matrix(spark.table(name))
 
 
-QUERIES_EXT = {
-    **(
-        {"s_stateful_totals_tws": _with_stream_shuffle(_q_s_stateful_totals_tws)}
-        if _has_tws_deps()
-        else {}
-    ),
-    "s_x7_transitions": _with_stream_shuffle(_q_s_x7_transitions),
-    "s_session_window": _with_stream_shuffle(_q_s_session_window),
-    "s_x3_stream_incremental_neardup": _with_stream_shuffle(
-        _q_s_x3_stream_incremental_neardup
-    ),
-    "s_x4_stream_index_probe": _with_stream_shuffle(_q_s_x4_stream_index_probe),
-    "s_x2_stream_dedup": _with_stream_shuffle(_q_s_x2_stream_dedup),
-    "s_stream_static_join": _with_stream_shuffle(_q_s_stream_static_join),
-    "s_merge_upsert": _with_stream_shuffle(_q_s_merge_upsert),
-    # deterministic gate-boolean form since round 13 (VERDICT r12 #5);
-    # the measured timings land in LAST_RATE_RECEIPT / RATE_RECEIPT.json
-    "s_rate_throughput": _with_stream_shuffle(_q_s_rate_throughput),
+QUERIES = {
+    name: _with_stream_shuffle(fn)
+    for name, fn in {
+        "s_stream_stream_join": _q_s_stream_stream_join,
+        "s_r22_change_counts": _q_s_r22_change_counts,
+        "s_x7_stream_hourly": _q_s_x7_stream_hourly,
+        "s_r18_throttled_update": _q_s_r18_throttled_update,
+        "s_r17_progress": _q_s_r17_progress,
+        "s_r19_cancel": _q_s_r19_cancel,
+        "s_stateful_totals": _q_s_stateful_totals,
+        "s_stream_stream_left_join": _q_s_stream_stream_left_join,
+        "s_x2_stream_dedup_wm": _q_s_x2_stream_dedup_wm,
+        **(
+            {"s_stateful_totals_tws": _q_s_stateful_totals_tws}
+            if _has_tws_deps()
+            else {}
+        ),
+        "s_x7_transitions": _q_s_x7_transitions,
+        "s_session_window": _q_s_session_window,
+        "s_x3_stream_incremental_neardup": _q_s_x3_stream_incremental_neardup,
+        "s_x4_stream_index_probe": _q_s_x4_stream_index_probe,
+        "s_x2_stream_dedup": _q_s_x2_stream_dedup,
+        "s_stream_static_join": _q_s_stream_static_join,
+        "s_merge_upsert": _q_s_merge_upsert,
+        # deterministic gate-boolean form; the measured timings land in
+        # LAST_RATE_RECEIPT / RATE_RECEIPT.json
+        "s_rate_throughput": _q_s_rate_throughput,
+        # R22 twins of s_r22_change_counts on the manifest protocol:
+        # two on the JVM spool data plane, one on the Python DataSource
+        "s_r22_manifest_counts": _q_s_r22_manifest_counts,
+        "s_r22_spool_counts": _q_s_r22_spool_counts,
+        "s_r22_pymanifest_counts": _q_s_r22_pymanifest_counts,
+    }.items()
 }
-
-# Promoted to core round 5 (VERDICT r04 #6): the stream-stream LEFT
-# OUTER join (sentinel watermark heartbeats — the newest, riskiest
-# streaming semantic) and the watermark-bounded streaming dedup now
-# sit inside the driver's hard correctness gate; their functions are
-# defined below the first QUERIES literal, hence the post-hoc insert.
-QUERIES["s_stream_stream_left_join"] = _with_stream_shuffle(
-    _q_s_stream_stream_left_join
-)
-QUERIES["s_x2_stream_dedup_wm"] = _with_stream_shuffle(_q_s_x2_stream_dedup_wm)
 
 ORACLES = {
     # stream-stream join result == the batch range join (single batch,
@@ -1441,9 +1433,6 @@ ORACLES = {
                MAX(event_id) AS max_event_id
         FROM events GROUP BY user_id
     """,
-}
-
-ORACLES_EXT = {
     # every boolean is backed by an in-query raise, so the run either
     # throws (driver-visible err) or emits exactly this row; the
     # nondeterministic measurements live in RATE_RECEIPT.json
@@ -1544,80 +1533,28 @@ ORACLES_EXT = {
     """,
 }
 
-# oracles follow their queries' round-5 core promotion (above)
-ORACLES["s_stream_stream_left_join"] = ORACLES_EXT.pop("s_stream_stream_left_join")
-ORACLES["s_x2_stream_dedup_wm"] = ORACLES_EXT.pop("s_x2_stream_dedup_wm")
-
 # bound here (not in the dict literal) to reuse the dedup module's
 # oracle verbatim: the streamed probe's contract IS "unions to the
-# batch incremental result". Merged-tier lookup: the source query's
-# CURRENT tier is a rotation decision (x3_incremental_neardup moved
-# core→ext in ROTATION_R16) and must not break this reuse.
+# batch incremental result".
 from odoo_batch_processing_spark.operators import dedup as _dedup  # noqa: E402
 
-ORACLES_EXT["s_x3_stream_incremental_neardup"] = {
-    **_dedup.ORACLES,
-    **_dedup.ORACLES_EXT,
-}["x3_incremental_neardup"]
+ORACLES["s_x3_stream_incremental_neardup"] = _dedup.ORACLES["x3_incremental_neardup"]
 
 # order-sensitive stateful streaming under the EXACT batch oracle —
 # the time-sliced staging makes the contract "identical to the batch
 # lead-window transition matrix", so reuse that SQL verbatim
-# (merged-tier lookup for the same rotation-safety reason as above —
-# x7_event_transitions moved ext→core in ROTATION_R16)
 from odoo_batch_processing_spark.operators import windows as _win  # noqa: E402
 
-ORACLES_EXT["s_x7_transitions"] = {**_win.ORACLES, **_win.ORACLES_EXT}[
-    "x7_event_transitions"
-]
+ORACLES["s_x7_transitions"] = _win.ORACLES["x7_event_transitions"]
 
 # streamed standing-IVF probe: the contract is "unions to the batch
 # indexed-multiprobe result exactly", so reuse that SQL verbatim
-# (merged-tier lookup — x4_ivf_indexed_multiprobe is a core row since
-# ROTATION_R16, but its tier is a rotation decision)
 from odoo_batch_processing_spark.operators import similarity as _sim  # noqa: E402
 
-ORACLES_EXT["s_x4_stream_index_probe"] = {
-    **_sim.ORACLES,
-    **_sim.ORACLES_EXT,
-}["x4_ivf_indexed_multiprobe"]
+ORACLES["s_x4_stream_index_probe"] = _sim.ORACLES["x4_ivf_indexed_multiprobe"]
 
-# ROTATION_R15 (registry.py): the manifest-fed R22 twin takes the core
-# slot so the external DuckDB harness audits the newest subsystem (the
-# manifest Python DataSource had zero driver-window coverage); the
-# directory-listing form it twins stays oracle-checked in the extended
-# tier. Same SQL: both streams must reproduce the full events counts.
-QUERIES["s_r22_manifest_counts"] = _with_stream_shuffle(_q_s_r22_manifest_counts)
-ORACLES["s_r22_manifest_counts"] = ORACLES["s_r22_change_counts"]
-QUERIES_EXT["s_r22_change_counts"] = QUERIES.pop("s_r22_change_counts")
-ORACLES_EXT["s_r22_change_counts"] = ORACLES.pop("s_r22_change_counts")
-
-# ROTATION_R16 (registry.py): the streaming incremental near-dup takes
-# the core seat its batch twin vacated — the X3 family's first
-# streaming driver row, certified by the SAME DuckDB oracle (the
-# stream's union-over-micro-batches contract is "equals the batch
-# incremental result exactly").
-QUERIES["s_x3_stream_incremental_neardup"] = QUERIES_EXT.pop(
-    "s_x3_stream_incremental_neardup"
+# every R22 form must reproduce the full events counts: one oracle
+ORACLES |= dict.fromkeys(
+    ("s_r22_manifest_counts", "s_r22_spool_counts", "s_r22_pymanifest_counts"),
+    ORACLES["s_r22_change_counts"],
 )
-ORACLES["s_x3_stream_incremental_neardup"] = ORACLES_EXT.pop(
-    "s_x3_stream_incremental_neardup"
-)
-
-# VERDICT r15 #3: the spool twin — manifest protocol, JVM data plane —
-# under the SAME oracle as both other R22 forms (catalog grows by
-# exactly this one entry this round; it is a new capability, not a
-# variant: the claim "a JVM source sheds the Python data-plane tax"
-# was previously prose in SCALE.md, now it is executable and measured
-# by tools/scale_batches.py's three-way dataplane ladder).
-QUERIES_EXT["s_r22_spool_counts"] = _with_stream_shuffle(_q_s_r22_spool_counts)
-ORACLES_EXT["s_r22_spool_counts"] = ORACLES_EXT["s_r22_change_counts"]
-
-# OPTIMIZATION r17: the core manifest row moved to the JVM spool data
-# plane (guide §4 — the Python DataSource's Arrow-over-Python row path
-# was ~×2.3 of the query's wall). The PyDS-manifest form it replaced
-# keeps oracle coverage here, under the same oracle as every R22 twin.
-QUERIES_EXT["s_r22_pymanifest_counts"] = _with_stream_shuffle(
-    _q_s_r22_pymanifest_counts
-)
-ORACLES_EXT["s_r22_pymanifest_counts"] = ORACLES_EXT["s_r22_change_counts"]

@@ -39,16 +39,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from odoo_batch_processing_spark.operators.graph import (
-    ORACLES as _GRAPH_ORACLES_CORE,
-    ORACLES_EXT as _GRAPH_ORACLES_EXT,
+    ORACLES as GRAPH_ORACLES,
     _q_g_pagerank_simgraph,
     _q_g_triangle_counts,
     triangle_counts,
 )
-
-# tier-agnostic: the core-window rotation (registry.ROTATION_R14) moves
-# queries between tiers without changing their oracles
-GRAPH_ORACLES = {**_GRAPH_ORACLES_CORE, **_GRAPH_ORACLES_EXT}
 from odoo_batch_processing_spark.operators.text import (
     GRAPH_DF_CAP,
     POSTING_ABS_CAP,
@@ -212,8 +207,7 @@ def test_hot_bucket_cap_witness_minhash(spark, hot_bucket_dir, hot_bucket_duck):
     the (now QUALIFY-mirrored) oracle must sit on the capped side."""
     from odoo_batch_processing_spark.operators.dedup import (
         HOT_BUCKET_CAP,
-        ORACLES as _DEDUP_O,
-        ORACLES_EXT as _DEDUP_OE,
+        ORACLES as DEDUP_ORACLES,
         _doc_shingle_sets,
         _q_x3_minhash_lsh,
         lsh_candidate_pairs,
@@ -233,7 +227,7 @@ def test_hot_bucket_cap_witness_minhash(spark, hot_bucket_dir, hot_bucket_duck):
         "x3_minhash_lsh[planted]",
         _q_x3_minhash_lsh(spark, hot_bucket_dir),
         hot_bucket_duck,
-        {**_DEDUP_O, **_DEDUP_OE}["x3_minhash_lsh"],
+        DEDUP_ORACLES["x3_minhash_lsh"],
     )
     assert res.ok, str(res)
     assert res.spark_rows == 1  # only the genuine 2-doc bucket pairs
@@ -244,15 +238,11 @@ def test_hot_bucket_cap_witness_minhash(spark, hot_bucket_dir, hot_bucket_duck):
 
 def test_hot_bucket_cap_witness_ngram_jaccard(spark, hot_bucket_dir, hot_bucket_duck):
     from odoo_batch_processing_spark.operators.dedup import (
-        ORACLES as _DO,
-        ORACLES_EXT as _DOE,
+        ORACLES as DEDUP_ORACLES,
         _doc_shingles,
         _q_x3_ngram_jaccard,
         ngram_jaccard_pairs,
     )
-
-    # tier-agnostic (registry.ROTATION_R14 moved this query to ext)
-    DEDUP_ORACLES = {**_DO, **_DOE}
 
     res = compare(
         "x3_ngram_jaccard[planted]",
@@ -281,14 +271,10 @@ def test_hot_bucket_cap_witness_incremental_index(
     exactly the one pair."""
     from odoo_batch_processing_spark.operators.dedup import (
         HOT_BUCKET_CAP,
-        ORACLES as _DEDUP_O_CORE,
-        ORACLES_EXT as _DEDUP_O_EXT,
+        ORACLES as DEDUP_ORACLES,
         _q_x3_incremental_neardup,
         ensure_minhash_index,
     )
-
-    # tier-agnostic (registry.ROTATION_R16 moved this query to ext)
-    DEDUP_ORACLES = {**_DEDUP_O_CORE, **_DEDUP_O_EXT}
     from odoo_batch_processing_spark.sources import sinks
 
     # keep the throwaway corpus's write-time index out of the real

@@ -81,8 +81,12 @@ def test_edge_budget_raises(spark):
         [(a, b) for a in range(4) for b in range(4) if a != b],
         "src bigint, dst bigint",
     )
+    pinned = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(pinned().keys())
     with pytest.raises(ValueError, match="edge_budget"):
         pagerank(edges, iters=3, edge_budget=10)
+    # the guard releases the edge and degree pins it took before raising
+    assert set(pinned().keys()) == before
     # same graph under a sufficient budget completes
     assert pagerank(edges, iters=3, edge_budget=1000).count() == 4
 

@@ -32,10 +32,8 @@ INVARIANCE_QUERIES = (
     "x9_pack_shards",  # prefix-sum shard packing
     "x7_sessionize",  # window lag/cumsum session ids
     "x8_approx_aggs",  # sketch aggregates under the hash gate
-    # round-14 core rotation (registry.ROTATION_R14): the 8 promoted
-    # queries face the external harness — and its session/partition
-    # layout — for the first time, so each gets a direct invariance
-    # row rather than riding a mechanism cousin
+    # queries that sit or have sat in the driver window: each gets a
+    # direct invariance row rather than riding a mechanism cousin
     "g_pagerank_simgraph",  # fixed-point iterative rank over capped graph
     "x4_ivf_trained_topk",  # seeded k-means train + IVF probe top-k
     "x5_bm25_topk",  # float-scored top-k with boundary ties
@@ -44,9 +42,7 @@ INVARIANCE_QUERIES = (
     "x3_containment",  # capped shingle self-join containment pairs
     "w_interval_sweep",  # interval boundary-event cumsum
     "profile_checksum",  # order/partition-invariant table checksum
-    # round-15 core rotation (registry.ROTATION_R15): same de-risking
-    # for the 8 batch promotions. s_r22_manifest_counts is the ninth
-    # promoted query but is EXCLUDED here by design: its
+    # s_r22_manifest_counts is EXCLUDED here by design: its
     # _with_stream_shuffle wrapper pins the stream's shuffle count
     # internally, so an outer conf change never reaches it — its
     # determinism receipt is the exact-count oracle at three SFs.
@@ -58,9 +54,7 @@ INVARIANCE_QUERIES = (
     "x6_variant_shred",  # variant extraction + grouped aggregates
     "w_gap_fill_ffill",  # calendar scaffold + last-value forward fill
     "scd2_user_tiers",  # window-versioned type-2 history build
-    # round-16 core rotation (registry.ROTATION_R16): same de-risking
-    # for the seven batch promotions (s_x3_stream_incremental_neardup
-    # is the eighth but is stream-shuffle-pinned like
+    # (s_x3_stream_incremental_neardup is stream-shuffle-pinned like
     # s_r22_manifest_counts — its receipt is the exact oracle at
     # three SFs plus the end-to-end restart test)
     "ivm_refresh",  # additive-state merge vs full recompute
@@ -70,11 +64,8 @@ INVARIANCE_QUERIES = (
     "x5_gopher_repetition",  # dup-line/paragraph fractions + ngram share
     "x7_event_transitions",  # lead-window transition matrix
     "x9_difficulty_deciles",  # surprisal-ranked curriculum bucketing
-    # round-16 new op (ext tier): bigram LM, float mean per doc
+    # bigram LM, float mean per doc
     "x5_bigram_surprisal",
-    # round-17 core rotation (registry.ROTATION_R17): same de-risking
-    # for all 8 batch promotions — each faces the external harness's
-    # partition layout for the first time
     "x9_crypto_shred",  # key-join erasure + surviving-rows aggregate
     "x7_funnel_steps",  # ordered event-sequence step matching
     "agg_grouping_sets",  # multi-grain rollup with grouping ids
@@ -83,7 +74,6 @@ INVARIANCE_QUERIES = (
     "profile_robust_outliers",  # median/MAD per-type outlier counts
     "lake_compact_roundtrip",  # listing->plan->rewrite lossless agg
     "src_jsonl_roundtrip",  # schema-on-read JSONL interchange agg
-    # round-17 new ops (ext tier)
     "x5_trigram_backoff_surprisal",  # backoff LM, float mean per doc
     "x4_rerank_exact",  # int8 shortlist + exact re-rank top-k
 )

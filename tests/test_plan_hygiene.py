@@ -444,7 +444,7 @@ def test_core_positional_queries_have_no_global_data_sort(spark):
 
 
 def test_star_joins_broadcast(spark):
-    # extended lookup: q05 rotated to the ext tier (registry.ROTATION_R14)
+    # extended lookup: q05 is not in the core tier
     from odoo_batch_processing_spark.registry import all_queries
 
     plan = (

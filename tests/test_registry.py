@@ -2,7 +2,10 @@
 
 from __future__ import annotations
 
-from odoo_batch_processing_spark.registry import CORE_CAP, all_oracles, all_queries
+import pytest
+
+from odoo_batch_processing_spark import registry
+from odoo_batch_processing_spark.registry import CORE, CORE_CAP, all_oracles, all_queries
 
 
 def test_core_tier_fits_driver_window():
@@ -23,8 +26,8 @@ def test_operator_families_all_in_core():
     """One driver-visible row per operator family — the round-1 gap
     (8 families landed past the 50-entry window) must not reopen."""
     core = set(all_queries())
-    # any-of per family, so a core-window rotation (registry.py
-    # ROTATION_R14) can swap representatives without reopening the gap
+    # any-of per family, so registry.CORE can swap a family's
+    # representative without reopening the gap
     families = {
         "analytics": {"q01_pricing_summary", "q03_top_orders",
                       "q09_profit_by_nation_year", "q05_revenue_by_nation"},
@@ -44,13 +47,12 @@ def test_operator_families_all_in_core():
         "multimodal": {"mm_decode_features"},
         "sinks": {"r21_merge"},
         "streaming": {"s_r17_progress"},
-        # pit_tier_at_purchase (scd.py) is the family's ROTATION_R16
-        # representative — the same as-of-join shape over SCD2 history
+        # pit_tier_at_purchase (scd.py) is the same as-of-join shape
+        # over the SCD2 history
         "asof": {"asof_last_purchase", "pit_tier_at_purchase"},
         # first-ever driver rows for these two (round 14)
         "graph": {"g_pagerank_simgraph"},
-        # profile_robust_outliers / dq_expectations took the seat in
-        # ROTATION_R17 (checksum rotated to extended)
+        # the statistical and the rule-based halves of profiling/DQ
         "profile": {"profile_checksum", "profile_robust_outliers",
                     "dq_expectations"},
         # first-ever driver rows for these two families (round 17)
@@ -68,3 +70,21 @@ def test_extended_tier_superset_of_core():
     core, ext = all_queries(), all_queries(extended=True)
     assert set(core) <= set(ext)
     assert len(ext) > len(core)
+
+
+def test_core_tier_is_core_in_order():
+    # a name listed twice in CORE would collapse in the dict and fail here
+    assert list(all_queries()) == list(CORE)
+
+
+def test_undefined_core_name_raises(monkeypatch):
+    monkeypatch.setattr(registry, "CORE", CORE + ("no_such_query",))
+    with pytest.raises(ValueError, match="no_such_query"):
+        all_queries()
+
+
+def test_missing_module_fails_loudly(monkeypatch):
+    absent = "odoo_batch_processing_spark.operators.no_such_module"
+    monkeypatch.setattr(registry, "_MODULES", registry._MODULES + (absent,))
+    with pytest.raises(ModuleNotFoundError, match="no_such_module"):
+        all_queries(extended=True)

@@ -59,10 +59,10 @@ def test_delta_merge_twin_gated_consistently():
     from odoo_batch_processing_spark.sources import sinks
 
     has = sinks._has_delta()
-    assert ("r21_merge_delta" in sinks.QUERIES_EXT) == has
-    assert ("r21_merge_delta" in sinks.ORACLES_EXT) == has
+    assert ("r21_merge_delta" in sinks.QUERIES) == has
+    assert ("r21_merge_delta" in sinks.ORACLES) == has
     if has:
-        assert sinks.ORACLES_EXT["r21_merge_delta"] == sinks.ORACLES["r21_merge"]
+        assert sinks.ORACLES["r21_merge_delta"] == sinks.ORACLES["r21_merge"]
     else:
         with pytest.raises(NotImplementedError, match="table format"):
             sinks.require_table_format()

@@ -32,7 +32,8 @@ definition is unknown, not assumed-compatible. ``calibration_boundary``
 mismatches gate only the calibration CONTEXT line (the headline
 comparison is raw-vs-raw by rule — SCALE.md round 10); crossing a
 boundary needs the recorded two-way bridge ratio
-(``--calibration-bridge 1.4157``, tools/calibration_bridge.py).
+(``--calibration-bridge 1.4157``, measured once and recorded in
+SCALE.md's round-10 bridge note).
 
 Input formats (auto-detected): a driver ``BENCH_r{N}.json`` wrapper
 (``.parsed``), a bare bench JSON line (``BENCH_LAST.json``), or a
@@ -289,7 +290,7 @@ def compare_artifacts(
             cal = {"comparable": True, "ratio": round(nc / oc, 4)}
         elif calibration_bridge:
             # bridge maps OLD-boundary seconds onto the NEW boundary's
-            # scale (per-rep ≙ hoisted × bridge, tools/calibration_bridge)
+            # scale (per-rep ≙ hoisted × bridge, SCALE.md round 10)
             cal = {
                 "comparable": True,
                 "bridged": True,

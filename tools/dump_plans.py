@@ -61,24 +61,18 @@ HEADLINERS = [
     # sessionizer (two window passes + summary stitch, no broadcast hint)
     "g_doulion_triangles",
     "x7_sessionize_chunked",
-    # round-14 core-window rotation (registry.ROTATION_R14): the five
-    # promoted queries not already pinned above — driver-facing now,
-    # so their plan shapes are review surface
+    # queries that sit or have sat in the driver window: their plan
+    # shapes are review surface. The indexed-LSH plan is the
+    # scan-local bucket_n receipt (PushedFilters, no count/semi-join)
     "x3_containment",
     "x4_ivf_trained_topk",
     "x9_weighted_sample",
     "g_pagerank_simgraph",
     "profile_checksum",
-    # round-15 core-window rotation (registry.ROTATION_R15): the four
-    # batch promotions not already pinned above — the indexed-LSH plan
-    # is the round's scan-local bucket_n receipt (PushedFilters, no
-    # count/semi-join), the other three are first-time driver surface
     "x3_minhash_indexed",
     "x9_group_sample",
     "x6_variant_shred",
     "scd2_user_tiers",
-    # round-16 core-window rotation (registry.ROTATION_R16) promotions
-    # not already pinned above
     "ivm_refresh",
     "x4_ivf_indexed_multiprobe",
     "x5_gopher_repetition",
@@ -86,8 +80,6 @@ HEADLINERS = [
     "x7_event_transitions",
     "pit_tier_at_purchase",
     "x9_difficulty_deciles",
-    # round-17 core-window rotation (registry.ROTATION_R17): all 8
-    # promotions are first-time driver surface
     "x9_crypto_shred",
     "x7_funnel_steps",
     "agg_grouping_sets",
@@ -96,7 +88,7 @@ HEADLINERS = [
     "profile_robust_outliers",
     "lake_compact_roundtrip",
     "src_jsonl_roundtrip",
-    # round-17 new ops (ext tier): scale shape argued in SCALE.md
+    # scale shape argued in SCALE.md
     "x5_trigram_backoff_surprisal",
     "x4_rerank_exact",
 ]

@@ -20,7 +20,7 @@ def main() -> int:
     parser.add_argument(
         "--extended",
         action="store_true",
-        help="also sweep the extended tier (QUERIES_EXT) beyond the driver-facing core catalog",
+        help="sweep every registered query, not only the driver-facing core tier (registry.CORE)",
     )
     parser.add_argument("names", nargs="*")
     args = parser.parse_args()

@@ -44,14 +44,10 @@ from pyspark.sql import DataFrame, SparkSession, functions as F  # noqa: E402
 
 #: which floor twin decomposes which core streaming query
 MAPPING = {
-    # ROTATION_R15: the manifest-fed R22 twin replaced the directory-
-    # listing form in core; its cadence floor is the 4-trigger one
-    # (4 manifest entries at maxFilesPerTrigger=1), the closest twin —
-    # the complete-mode re-emit adds a few ms on 5 output rows.
-    # OPTIMIZATION r17: the row's data plane moved to the JVM spool
-    # (same 4-trigger cadence, pump-driven), so the floor mapping is
-    # unchanged; the gap the floor used to expose was the Python
-    # DataSource row path, now gone.
+    # the manifest-fed R22 twin: its cadence floor is the 4-trigger
+    # one (4 manifest entries at maxFilesPerTrigger=1, pump-driven on
+    # the JVM spool), the closest twin — the complete-mode re-emit
+    # adds a few ms on 5 output rows.
     "s_r22_manifest_counts": "floor_multi4_append",
     "s_x7_stream_hourly": "floor_single_complete",
     "s_stateful_totals": "floor_single_append",
@@ -61,7 +57,7 @@ MAPPING = {
     "s_x2_stream_dedup_wm": "floor_2file_append_ckpt",
     "s_stream_stream_join": "floor_dual_stream_append_ckpt",
     "s_stream_stream_left_join": "floor_leftjoin_2file_append_ckpt",
-    # ROTATION_R16: the streaming incremental near-dup (3 staged files
+    # the streaming incremental near-dup (3 staged files
     # at maxFilesPerTrigger=1, foreachBatch + checkpoint) — the
     # 3-trigger checkpoint-commit floor is the closest twin; the
     # foreachBatch probe work on top of it is the query's real cost.

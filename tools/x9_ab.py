@@ -89,8 +89,7 @@ def main() -> int:
     spark = get_spark("x9-ab", cpus=CPUS, shuffle_partitions=CPUS)
     spark.sparkContext.setLogLevel("ERROR")
 
-    # extended lookup: x9_source_mix rotated to the ext tier
-    # (registry.ROTATION_R14); the A/B pair itself is unchanged
+    # extended lookup: x9_source_mix is not in the core tier
     queries = all_queries(extended=True)
     targets = {
         "x9_pack_shards": queries["x9_pack_shards"],
