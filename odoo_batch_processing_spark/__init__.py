@@ -40,9 +40,10 @@ rationale in SURVEY.md §7.5):
 4. Array REDUCTIONS (array_max/min/contains/join, flatten, set ops)
    and bare HOFs over a row column are folds in everything but name —
    rules 1–3 apply to them identically (the int8-quantize Θ(d²),
-   caught by tools/scale_dim.py). ``bind`` bodies are exempt from the
-   scanners: constant-arity ``transform(array(v), λ)`` runs once per
-   row — it is the fix, not the hazard.
+   caught by the dim axis of tools/axis_ladder.py). ``bind`` bodies
+   are exempt from the scanners: constant-arity
+   ``transform(array(v), λ)`` runs once per row — it is the fix, not
+   the hazard.
 5. Never mix a DISTINCT aggregate with a buffer-heavy aggregate
    (percentile/sketch/collect) in one Aggregate — the distinct
    rewrite builds the heavy partial per (group, distinct-column)

@@ -87,7 +87,7 @@ def deterministic_dedup(df: DataFrame, keys: Sequence[str], id_col: str) -> Data
     with map-side partial min_by combining before the exchange. The
     previous min(id)+semi-join-back form scanned the input TWICE (the
     aggregate side and the join-back side) — value-identical, but the
-    file-count ladder (tools/scale_files.py, round 11) surfaced the
+    file-count ladder (SCALE.md round 11) surfaced the
     doubled per-file overhead as the family's only divergent stage at
     K=1024, and on a 100 TB relation the second scan is the cost that
     matters. A Window row_number would additionally sort within
@@ -1072,7 +1072,7 @@ def connected_components(
     wrong engine: delegate to :func:`connected_components_star` for
     its O(log n) rounds. ``None`` (the default) never escapes — the
     plain loop is the measured winner on the shallow graphs near-dup
-    actually produces (SCALE_SMOKE.json: min-label 7.8 s vs star
+    actually produces (SCALE.md corpus ladder: min-label 7.8 s vs star
     10.5 s at 8× docs). :func:`connected_components_auto` is the
     armed-probe convenience wrapper.
 

@@ -62,7 +62,7 @@ def pagerank(
     COST MODEL (inherent, not a defect): each iteration joins the full
     edge list and re-aggregates — total work is Θ(|E| · iters), which
     is why the 8× ladder shows near-linear-in-E wall growth
-    (SCALE_SMOKE 11→73 s; VERDICT r04 #8). The upstream edge
+    (11→73 s, VERDICT r04 #8; SCALE.md). The upstream edge
     generator's hot-key cap (text.POSTING_ABS_CAP on the shared
     postings index) bounds |E| growth; ``edge_budget`` is the explicit
     guard on THIS operator: when set, one count aggregate verifies

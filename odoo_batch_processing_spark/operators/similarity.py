@@ -695,7 +695,7 @@ def quantize_int8(unit_vec: F.Column) -> tuple[F.Column, F.Column]:
     functions.exprs.bind` (SURVEY.md §7.5 rule 2): referencing the
     ``array_max(transform(...))`` reduction directly inside the
     quantize lambda embeds a copy that re-evaluates per ELEMENT —
-    Θ(d²) per row. The dimension ladder (tools/scale_dim.py) caught
+    Θ(d²) per row. The dimension ladder (tools/axis_ladder.py) caught
     exactly this shape: ×2.4 on the d×16 rung pre-fix while every
     other vector stage trended flat-or-down. Array REDUCTIONS
     (array_max/min/...) are the same hazard class as aggregate/reduce

@@ -627,8 +627,8 @@ def pruned_shingle_postings(
     The df cap is min(5%·n_docs, POSTING_ABS_CAP): a PROPORTIONAL cap
     alone lets a hot shingle's posting list grow with the corpus, and
     its pair fan-out in the downstream self-join grows with the
-    SQUARE — the mild superlinearity SCALE_SMOKE flagged at the 8×
-    ladder (3.0→27.2 s, VERDICT r04 #8). The absolute ceiling bounds
+    SQUARE — the mild superlinearity the 8× corpus ladder flagged
+    (3.0→27.2 s, VERDICT r04 #8; SCALE.md). The absolute ceiling bounds
     every posting list — hence every shingle's pair count — by a
     constant at any corpus size, exactly like dedup.HOT_BUCKET_CAP.
     At fixture scales the 5% term is smaller, so results are

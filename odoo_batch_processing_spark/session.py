@@ -162,7 +162,7 @@ def materialize_once(df):
     blocks between queries — either :func:`release_materialized`
     (unpins exactly what this function pinned, in order) or the
     blunter ``spark.catalog.clearCache()``; the repo's own harnesses
-    (oracle_check / bench / scale_smoke) do both between queries.
+    (oracle_check / bench / axis_ladder) do both between queries.
     Skipping the release leaks MEMORY_AND_DISK blocks for the session
     lifetime, one per materialized intermediate per query run.
     """

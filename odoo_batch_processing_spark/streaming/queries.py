@@ -66,7 +66,7 @@ def _events_dir(sf_dir: str) -> str:
     """The streaming file source requires a DIRECTORY of data files.
     Stage a per-run scratch dir of symlinks (zero copy, fixtures
     untouched). The fixture ships as a single parquet FILE; an
-    engine-written corpus (e.g. the scale_suite clone) is a parquet
+    engine-written corpus (e.g. SCALE.md's 8× star-schema clone) is a parquet
     DIRECTORY whose member files are linked individually — a symlink
     to the directory itself would hide the files from both the file
     source's listing and the ts-unit probe. Targets are absolute so a
@@ -168,7 +168,7 @@ def _q_s_r22_manifest_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     whose file discovery is sources/manifest.py's O(new) tail-read of
     an append-only manifest instead of a directory listing (the 100 TB
     ingest shape where listing walls — measured 7.6–27 s at 512k
-    files, SCALE_FILES — are replaced by a ~1 ms cursor advance). The
+    files, SCALE.md round 13 — are replaced by a ~1 ms cursor advance). The
     full events corpus is staged once into 4 parquet files + a
     manifest naming them; one file per trigger forces 4 genuine
     micro-batches through the manifest protocol before the

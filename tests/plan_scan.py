@@ -126,7 +126,7 @@ def folds_in_lambda_bodies(plan: str) -> list[str]:
 #: round-8 shingle finding: split+trim-filter re-ran per shingle
 #: position, 85× at T=1000). Applied to a lambda VARIABLE they are
 #: per-element by design and fine. The array REDUCTION and HOF rows
-#: were added after the dimension ladder (tools/scale_dim.py) caught
+#: were added after the dimension ladder (tools/axis_ladder.py) caught
 #: ``array_max(transform(uv, abs))`` inlined into the int8 quantize
 #: lambda — a fold in everything but name, invisible to FOLD_FUNCS
 #: (Θ(d²) per row, ×2.4 on the d×16 rung). ``exprs.bind`` bodies are

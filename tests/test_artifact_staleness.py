@@ -36,14 +36,14 @@ def test_import_closure_transitive_and_function_level():
 
 
 def test_import_closure_does_not_expand_registry_catalog():
-    """scale_dim imports registry (to look up queries by name); the
+    """axis_ladder imports registry (to look up queries by name); the
     walk must include registry.py itself but must NOT fan out through
     its _MODULES string list — per-stage precision comes from the
     artifact's recorded query names instead."""
-    deps = ast_tool.import_closure("tools/scale_dim.py")
+    deps = ast_tool.import_closure("tools/axis_ladder.py")
     assert "odoo_batch_processing_spark/registry.py" in deps
     # a module only reachable via the _MODULES list, never imported
-    # statically by scale_dim's closure:
+    # statically by axis_ladder's closure:
     assert "odoo_batch_processing_spark/operators/scd.py" not in deps
 
 
@@ -67,7 +67,7 @@ def test_artifact_query_names_shapes():
 
 def test_artifact_deps_include_recorded_query_modules():
     """SCALE_DIM records x4_* stages → similarity.py must be a dep
-    even though scale_dim.py never imports it statically."""
+    even though axis_ladder.py never imports it statically."""
     if not os.path.exists(os.path.join(REPO, "SCALE_DIM.json")):
         pytest.skip("artifact absent")
     deps = ast_tool.deps_for("SCALE_DIM.json")

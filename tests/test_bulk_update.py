@@ -7,6 +7,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import settle
+
 
 @pytest.fixture(scope="module")
 def listview(spark):
@@ -306,7 +308,7 @@ def test_bulk_update_run_pin_is_released(spark):
         "row_ord bigint, visible boolean, editable boolean, readonly boolean, name string",
     )
     guards = dict(visible=F.col("visible"), editable=F.col("editable"), readonly=F.col("readonly"))
-    release_materialized()
+    settle(spark)
     before = pinned()
     for value in (["A", "B", "C"], "X"):
         bulk_update_run(df, "name", value, order_cols=["row_ord"], spark=spark, **guards)

@@ -1,5 +1,5 @@
 """Pin Spark's small-file bin-packing model — the mechanism the
-file-count ladder (tools/scale_files.py) certifies in the large.
+file-count ladder (SCALE.md round 11) certified in the large.
 
 At 100 TB a table is ~10⁵ files and scan-task count is governed by
 FilePartition's packing, not by file count: files are split into

@@ -15,7 +15,7 @@ from __future__ import annotations
 import json
 import os
 
-from tools.ladder_flags import family_divergence, flagged_stages
+from tools.ladder_flags import MAX_EXEMPT_ROWS_RATIO, family_divergence, flagged_stages
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -55,11 +55,12 @@ def test_healthy_families_stay_unflagged():
     """No false positives on the worst recorded non-hazard rows: the
     committed artifacts (incl. mm_neardup's output-bound growth and
     the falling x6 family where a flat stage must not flag) pass both
-    rules clean — with the same output-rows exemption the generating
-    tools apply (r18: the round's optimizations lowered every OTHER
-    doclen stage's top-rung ratio, so the unchanged, pair-emitting
-    mm_neardup crossed the leave-one-out median with no code change;
-    its rows grow ×29 for ×1.6 sec, exactly the output-bound case)."""
+    rules clean — with the output-rows exemption that
+    tools/axis_ladder.py applies to every axis (r18: the round's
+    optimizations lowered every OTHER doclen stage's top-rung
+    ratio, so the unchanged, pair-emitting mm_neardup crossed the
+    leave-one-out median with no code change; its rows grow ×29 for
+    ×1.6 sec, exactly the output-bound case)."""
     for fname in ("SCALE_DIM.json", "SCALE_DOCLEN.json", "SCALE_JSONSIZE.json"):
         with open(os.path.join(REPO, fname)) as fh:
             art = json.load(fh)
@@ -99,6 +100,27 @@ def test_output_bound_exemption_requires_rows_to_outgrow_time():
     # and with no rows data at all the exemption never applies
     flagged, _ = flagged_stages(fam, flag_ratio=4.0)
     assert flagged == ["pairs"]
+
+
+def test_output_bound_exemption_is_capped():
+    """A pair-count explosion grows rows and seconds together. Its rows
+    outgrow its seconds, so the uncapped exemption waived it; rows far
+    past MAX_EXEMPT_ROWS_RATIO keep the divergent rungs flagged, with
+    the top rung still under the absolute line."""
+    fam = {
+        "a": [1.0, 0.9, 0.8],
+        "b": [1.0, 0.95, 0.75],
+        "c": [1.0, 0.85, 0.7],
+        "pairs": [1.0, 2.5, 3.5],
+    }
+    rows = {"a": [10, 10, 10], "b": [10, 10, 10], "c": [10, 10, 10],
+            "pairs": [100, 10_000, 1_000_000]}
+    assert rows["pairs"][1] / rows["pairs"][0] > MAX_EXEMPT_ROWS_RATIO
+    assert fam["pairs"][-1] < 4.0
+    flagged, div = flagged_stages(fam, flag_ratio=4.0, stage_rows=rows)
+    assert flagged == ["pairs"]
+    assert div["pairs"]["divergent_rungs"] == [1, 2]
+    assert "output_bound_exempt_rungs" not in div["pairs"]
 
 
 def test_min_ratio_guards_flat_stage_in_falling_family():

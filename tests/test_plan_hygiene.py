@@ -210,7 +210,7 @@ def test_expensive_expr_scanner_flags_round8_shape():
 
 
 def test_expensive_expr_scanner_flags_int8_reduction_shape():
-    """Self-check for the dimension-ladder finding (tools/scale_dim.py):
+    """Self-check for the dimension-ladder finding (tools/axis_ladder.py):
     an array REDUCTION (``array_max(transform(col, abs))`` — a fold in
     everything but name, invisible to FOLD_FUNCS) referenced inside the
     quantize lambda re-evaluates per element, Θ(d²) per row. The

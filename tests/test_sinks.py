@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, settle
 
 
 @pytest.mark.parametrize("fmt", ["parquet", "csv", "json"])
@@ -113,7 +113,7 @@ def test_events_clone_roundtrip_never_int96(spark, tmp_path):
     writes TIMESTAMP_MICROS (never legacy INT96), and even a foreign
     INT96 file routes through the probe's physical-type branch instead
     of being misread as raw int64 nanos (the ts-unit mismatch that
-    broke the first scale_suite clone)."""
+    broke the first 8× star-schema clone, SCALE.md)."""
     import pyarrow.parquet as pq
 
     from odoo_batch_processing_spark.sources.loader import events_ts_unit, load_table
@@ -238,6 +238,7 @@ def test_staged_once_releases_the_builds_pins(spark, tmp_path):
 
     src = tmp_path / "corpus.txt"
     src.write_text("v1")
+    settle(spark)
     outer = materialize_once(spark.range(5).withColumn("outer", F.lit(1)))
     pinned = []
 

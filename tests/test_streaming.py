@@ -12,7 +12,7 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, settle
 
 EVENTS_DDL = (
     "event_id bigint, ts bigint, user_id bigint, "
@@ -177,6 +177,7 @@ def test_throttled_update_one_job_per_micro_batch(spark, tmp_path):
         [(4, None, True, False, "d"), (5, True, None, False, "e"),   # hidden, skipped,
          (6, True, True, None, "f")],                                # applied
     ]
+    settle(spark)
     pinned = _pinned_rdds(spark)
     run, q = _listview_run(spark, tmp_path, files)
     spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()

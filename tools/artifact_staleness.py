@@ -64,17 +64,13 @@ if REPO_ROOT not in sys.path:
 #: explicit so a new artifact must be registered here (the registry
 #: test asserts every committed SCALE_*/STREAM_FLOORS_* file appears).
 ARTIFACT_TOOLS: dict[str, str] = {
-    "SCALE_DIM.json": "tools/scale_dim.py",
-    "SCALE_DOCLEN.json": "tools/scale_doclen.py",
-    "SCALE_JSONSIZE.json": "tools/scale_jsonsize.py",
-    "SCALE_SMOKE.json": "tools/scale_smoke.py",
-    "SCALE_FILES.json": "tools/scale_files.py",
+    "SCALE_DIM.json": "tools/axis_ladder.py",
+    "SCALE_DOCLEN.json": "tools/axis_ladder.py",
+    "SCALE_JSONSIZE.json": "tools/axis_ladder.py",
     "SCALE_STATE.json": "tools/scale_state.py",
     "SCALE_STATE_rocksdb.json": "tools/scale_state.py",
     "SCALE_SPILL.json": "tools/scale_spill.py",
     "SCALE_BATCHES.json": "tools/scale_batches.py",
-    "SCALE_CORES.json": "tools/scale_cores.py",
-    "SCALE_SUITE.json": "tools/scale_suite.py",
     "SKEW_SESSION.json": "tools/profile_session_skew.py",
     "STREAM_FLOORS_cpus32.json": "tools/streaming_floors.py",
     "STREAM_FLOORS_cpus8.json": "tools/streaming_floors.py",

@@ -1,9 +1,9 @@
-"""Shared flagging rules for the axis scale ladders (scale_dim,
-scale_doclen, scale_jsonsize).
+"""Shared flagging rules for the data-axis scale ladders
+(tools/axis_ladder.py: dim, doclen, jsonsize).
 
 Two rules, applied together (VERDICT r8 item 3):
 
-1. **Absolute**: top-rung ratio > FLAG_RATIO (each tool's 4.0). Catches
+1. **Absolute**: top-rung ratio > FLAG_RATIO (the runner's 4.0). Catches
    an outright superlinearity — but only once it clears the stage's
    fixed floors, which a deep final rung guarantees and mid rungs do
    not.
@@ -27,6 +27,14 @@ tests/test_ladder_flags.py replays both.
 from __future__ import annotations
 
 import statistics
+
+#: the largest output growth (rows at rung i / rows at rung 0) the
+#: output-bound exemption may waive: 2x the largest legitimate growth
+#: on record, mm_neardup's near-dup pairs at x29.4 on the T x16 rung
+#: (SCALE_DOCLEN.json). Past it the output is itself the blowup: a
+#: pair-count explosion grows rows and seconds together, and that
+#: still flags.
+MAX_EXEMPT_ROWS_RATIO = 64.0
 
 
 def family_divergence(
@@ -100,8 +108,9 @@ def flagged_stages(
     leave-one-out median, and the unchanged mm_neardup crossed the
     relative line with no code change to it at all. When callers pass
     per-stage output rows, a divergent rung is exempt iff
-    ``rows_i/rows_0 >= sec_i/sec_0`` (rows_0 > 0 required; the
-    ABSOLUTE rule is untouched — a family-wide blowup still flags).
+    ``sec_i/sec_0 <= rows_i/rows_0 <= MAX_EXEMPT_ROWS_RATIO`` (rows_0
+    > 0 required; the ABSOLUTE rule is untouched — a family-wide
+    blowup still flags).
     The exemption is recorded in the divergence map
     (``output_bound_exempt_rungs``) so the receipt shows what was
     waived and why, rather than silently passing."""
@@ -115,7 +124,7 @@ def flagged_stages(
             for i in divergent:
                 sec_ratio = secs[i] / max(secs[0], floor_sec)
                 rows_ratio = rows[i] / rows[0]
-                if rows_ratio >= sec_ratio:
+                if sec_ratio <= rows_ratio <= MAX_EXEMPT_ROWS_RATIO:
                     exempt.append(i)
             if exempt:
                 div[s]["output_bound_exempt_rungs"] = exempt

@@ -1,9 +1,8 @@
 #!/usr/bin/env bash
 # Freeze sweep: regenerate every committed ladder/floor/receipt artifact
 # at the current HEAD, sequentially (concurrent Spark jobs would
-# contaminate each other's timings). Mirrors the r16 sweep commits
-# (d6374c9 / fa694da): floors x4, rate receipt, skew, spill, dim,
-# doclen, jsonsize, files, state x2, batches, smoke, suite.
+# contaminate each other's timings): floors x4, rate receipt, skew,
+# spill, the dim/doclen/jsonsize axes, state x2, batches.
 set -e
 cd "$(dirname "$0")/.."
 log() { echo "[sweep $(date +%H:%M:%S)] $*"; }
@@ -15,15 +14,9 @@ log "streaming_floors rocksdb"; python tools/streaming_floors.py --provider rock
 log "rate_receipt";            python tools/rate_receipt.py
 log "session skew";            python tools/profile_session_skew.py
 log "scale_spill";             python tools/scale_spill.py
-log "scale_dim";               python tools/scale_dim.py
-log "scale_doclen";            python tools/scale_doclen.py
-log "scale_jsonsize";          python tools/scale_jsonsize.py
-log "scale_files";             python tools/scale_files.py
+log "axis_ladder";             python tools/axis_ladder.py
 log "scale_state hdfs";        python tools/scale_state.py
 log "scale_state rocksdb";     python tools/scale_state.py --provider rocksdb
 log "scale_batches";           python tools/scale_batches.py
-log "scale_cores";             python tools/scale_cores.py
-log "scale_smoke";             python tools/scale_smoke.py
-log "scale_suite";             python tools/scale_suite.py
 log "staleness check";         python tools/artifact_staleness.py
 log "done"
