@@ -105,8 +105,8 @@ def calibration_df(spark, sf_dir: str):
 #: runs discovering the host was degraded — the gate spends ~10 s up
 #: front instead. Provenance (all sf0.1 / local[32], SCALE.md round
 #: 11): cpu = best recent calibrations (r10 driver 0.1889, r11 run 4
-#: 0.1914); io = r11 run 6 best 0.1215; floors = STREAM_FLOORS_cpus32
-#: at r11 HEAD (floor_single_append 0.5188, floor_2file_append_ckpt
+#: 0.1914); io = r11 run 6 best 0.1215; floors = SCALE.md's round-11
+#: floor table (floor_single_append 0.5188, floor_2file_append_ckpt
 #: 1.075 — the plain-cadence and checkpoint-commit cost classes).
 #: A probe exceeding ref × DEGRADED_FACTOR labels the artifact
 #: ``window: degraded`` — the artifact still records everything, but
@@ -125,11 +125,11 @@ def calibration_df(spark, sf_dir: str):
 #: d/h/d/h/d/d).
 #: Floor refs are PROTOCOL-BOUND (round 12): the pre-flight measures
 #: its twins shallow-warm (fresh session, one batch + one streaming
-#: warmup, 3 reps), while the STREAM_FLOORS artifacts measure them
+#: warmup, 3 reps), while SCALE.md's floor table measured them
 #: deep-warm (6th floor into a long floors session) — a decomposition
 #: probe localized the whole gap to processAllAvailable converging
 #: with warmup depth (0.82 → 0.57 over 7 same-session executions).
-#: The r11-artifact values (0.52/1.08) are therefore a different
+#: The round-11 table values (0.52/1.08) are therefore a different
 #: quantity; these refs are three fresh-session runs of the exact
 #: pre-flight protocol on a window with cpu ratio 1.005 / io 0.86
 #: (best-of-trials 0.862/0.866/1.029 and 1.344/1.366/1.582).
@@ -237,6 +237,59 @@ def preflight_window(
     }
 
 
+def floor_single_append(spark, sf_dir: str):
+    """One micro-batch over the single-file events source, append to a
+    memory sink, projection only — the absolute streaming floor."""
+    from odoo_batch_processing_spark.streaming.queries import (
+        _events_dir,
+        _mem_name,
+        drain_memory_sink,
+    )
+    from odoo_batch_processing_spark.streaming.sources import change_source
+
+    name = _mem_name("fl_sa")
+    q = (
+        change_source(spark, _events_dir(sf_dir))
+        .select("event_id")
+        .writeStream.outputMode("append")
+        .format("memory")
+        .queryName(name)
+        .start()
+    )
+    return drain_memory_sink(spark, q, name)
+
+
+def floor_2file_append_ckpt(spark, sf_dir: str):
+    """Two micro-batches over the SAME 2-copy staging the watermarked
+    dedup uses (shared staged_once key), checkpointed append, trivial
+    projection — the dedup run minus watermark + state store."""
+    from odoo_batch_processing_spark.sources.loader import load_table
+    from odoo_batch_processing_spark.sources.sinks import scratch_dir, staged_once
+    from odoo_batch_processing_spark.streaming.queries import _mem_name, drain_memory_sink
+
+    corpus = os.path.join(sf_dir, "events.parquet")
+    ev = load_table(spark, sf_dir, "events")
+
+    def _build(d):
+        ev.coalesce(1).write.mode("overwrite").parquet(os.path.join(d, "copy=1"))
+        ev.coalesce(1).write.mode("overwrite").parquet(os.path.join(d, "copy=2"))
+
+    src = staged_once("x2wm-stream-src", corpus, _build)
+    name = _mem_name("fl_2f")
+    q = (
+        spark.readStream.schema(ev.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src + "/*")
+        .select("event_id")
+        .writeStream.outputMode("append")
+        .format("memory")
+        .queryName(name)
+        .option("checkpointLocation", scratch_dir("fl-2f-ckpt"))
+        .start()
+    )
+    return drain_memory_sink(spark, q, name)
+
+
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -298,17 +351,12 @@ def main() -> int:
         from odoo_batch_processing_spark.streaming.queries import (
             _with_stream_shuffle,
         )
-        from tools.streaming_floors import (
-            floor_2file_append_ckpt,
-            floor_single_append,
-        )
 
         # warm the streaming machinery once unmeasured (state-store
-        # init, listener setup, sink registration) — the reference
-        # floor values come from tools/streaming_floors.py, which
-        # warms the same way before timing; without this the first
-        # twin absorbs first-streaming-query session costs and reads
-        # ×2-4 high on a healthy host
+        # init, listener setup, sink registration) — the floor table
+        # in SCALE.md was measured after the same warmup; without
+        # this the first twin absorbs first-streaming-query session
+        # costs and reads ×2-4 high on a healthy host
         drain(_with_stream_shuffle(floor_single_append)(spark, sf_dir))
         floor_checks = {}
         for fn in (floor_single_append, floor_2file_append_ckpt):
@@ -391,9 +439,9 @@ def main() -> int:
     # sub-totals (VERDICT r10 #3): the streaming family (`s_*`) is
     # ~35% of the headline and carries nearly all round-over-round
     # noise (trigger-cadence floors, not compute — see SCALE.md's
-    # floor table / tools/streaming_floors.py). Splitting the headline
-    # lets a future regression attribute mechanically to cadence vs
-    # compute before anyone stares at per-query numbers.
+    # floor table). Splitting the headline lets a future regression
+    # attribute mechanically to cadence vs compute before anyone
+    # stares at per-query numbers.
     streaming_total = round(
         sum(t for n, t in timings.items() if n.startswith("s_") and t > 0), 4
     )

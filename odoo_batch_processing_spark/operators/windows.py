@@ -216,11 +216,11 @@ def sessionize_chunked(
 #: exceeds the per-task capacity serializes a Window partition onto
 #: one core (AQE cannot split it), so the chunked decomposition wins;
 #: below it the single Window's one-shuffle plan wins (measured
-#: crossover ~2M rows/key on this box — SKEW_SESSION.json: window
-#: 3.3 s vs chunked 5.2 s at a 1M-row hot key, 13.4 s vs 4.4 s at
-#: 3.6M). The sample fraction gives a ≥~2000-row sample for any key
-#: at the threshold — far past where the estimate could mis-rank a
-#: key 2× off the threshold.
+#: crossover ~2M rows/key on a 32-core host — the last session-skew
+#: probe, recorded in SCALE.md: window 2.57 s vs chunked 4.03 s at a
+#: 1M-row hot key, 9.41 s vs 3.44 s at 3.6M). The sample fraction
+#: gives a ≥~2000-row sample for any key at the threshold — far past
+#: where the estimate could mis-rank a key 2× off the threshold.
 SESSION_TASK_CAPACITY_ROWS = 2_000_000
 SESSION_SKEW_SAMPLE = 0.001
 #: chunk width sessionize_auto dispatches with — and therefore the
@@ -348,11 +348,11 @@ def sessionize_auto(
     results, only the physical plan. ``key`` names the session key
     (VERDICT r13 #5 — no longer pinned to the fixture's ``user_id``).
     Receipt that it picks the FASTER form at every measured rung:
-    SKEW_SESSION.json ``auto_choice`` (tools/profile_session_skew.py,
-    which times the chunked form at exactly
-    ``SESSION_AUTO_CHUNK_MINUTES`` — the width dispatched here — so
-    the receipt certifies the executed plan). ``cache=False`` forces a
-    fresh skew probe — see :func:`choose_sessionize_form`."""
+    the session-skew probe recorded in SCALE.md, which timed the
+    chunked form at exactly ``SESSION_AUTO_CHUNK_MINUTES`` — the width
+    dispatched here — so the receipt certifies the executed plan.
+    ``cache=False`` forces a fresh skew probe — see
+    :func:`choose_sessionize_form`."""
     if choose_sessionize_form(ev, task_capacity_rows, key=key, cache=cache) == "chunked":
         return sessionize_chunked(
             ev, gap_min, chunk_minutes=SESSION_AUTO_CHUNK_MINUTES, key=key

@@ -33,6 +33,16 @@ def _mem_name(prefix: str) -> str:
     return f"{prefix}_{os.getpid()}_{_MEMSINK_SEQ[0]}"
 
 
+def drain_memory_sink(spark: SparkSession, q, name: str) -> DataFrame:
+    """Run memory-sink query ``q`` to exhaustion, stop it even when
+    processing fails, and return the sink's table ``name``."""
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    return spark.table(name)
+
+
 #: Stateful streaming operators materialize one state-store instance
 #: per shuffle partition per operator; the partition count should be
 #: sized to STATE volume, not inherited from the batch CPU count.
@@ -43,6 +53,21 @@ def _mem_name(prefix: str) -> str:
 #: (state_bytes / ~1 GB); results are partition-count-independent
 #: either way (exact aggregates), so this is purely a latency knob.
 STREAM_SHUFFLE_PARTITIONS = 8
+
+#: The state-store providers the streaming family runs under, by the
+#: name tools and tests pass: HDFS-backed is Spark's default, RocksDB
+#: spills state to disk and is the one ``transformWithStateInPandas``
+#: requires.
+STATE_STORE_PROVIDERS = {
+    "hdfs": (
+        "org.apache.spark.sql.execution.streaming.state."
+        "HDFSBackedStateStoreProvider"
+    ),
+    "rocksdb": (
+        "org.apache.spark.sql.execution.streaming.state."
+        "RocksDBStateStoreProvider"
+    ),
+}
 
 
 def _with_stream_shuffle(fn):
@@ -122,11 +147,7 @@ def _q_s_r22_change_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .queryName(name)
         .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return drain_memory_sink(spark, q, name)
 
 
 def _stage_r22_manifest(spark: SparkSession, sf_dir: str) -> str:
@@ -234,11 +255,7 @@ def _q_s_r22_pymanifest_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .queryName(name)
         .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return drain_memory_sink(spark, q, name)
 
 
 def _q_s_r22_spool_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -292,11 +309,7 @@ def _q_s_x7_stream_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
         .queryName(name)
         .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return drain_memory_sink(spark, q, name)
 
 
 def _q_s_r18_throttled_update(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -436,19 +449,14 @@ def _q_s_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("checkpointLocation", _scratch_dir("state-ckpt"))
         .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return drain_memory_sink(spark, q, name)
 
 
 def x3_stream_staged_src(spark: SparkSession, sf_dir: str) -> str:
     """The x3 stream's content-keyed 3-file staged source (the top
-    doc_id decile split across three files) — factored out so the
-    trigger-cadence floor probe (tools/streaming_floors.py
-    floor_3file_foreach_ckpt) measures its zero-work twin over the
-    IDENTICAL source layout, and so bench reps share one staging."""
+    doc_id decile split across three files), built once so bench reps
+    share one staging. SCALE.md's trigger-cadence floor table measured
+    a zero-work twin over this identical layout."""
     from odoo_batch_processing_spark.sources.sinks import staged_once
 
     docs = load_table(spark, sf_dir, "documents")
@@ -608,10 +616,7 @@ def _q_s_stateful_totals_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     provider_key = "spark.sql.streaming.stateStore.providerClass"
     prev = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
+    spark.conf.set(provider_key, STATE_STORE_PROVIDERS["rocksdb"])
     try:
         stream = change_source(spark, _events_dir(sf_dir))
         name = _mem_name("s_state_tws")
@@ -623,16 +628,12 @@ def _q_s_stateful_totals_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("checkpointLocation", _scratch_dir("state-tws-ckpt"))
             .start()
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        return drain_memory_sink(spark, q, name)
     finally:
         if prev is None:
             spark.conf.unset(provider_key)
         else:
             spark.conf.set(provider_key, prev)
-    return spark.table(name)
 
 
 def _q_s_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -657,11 +658,7 @@ def _q_s_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         .queryName(name)
         .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return drain_memory_sink(spark, q, name)
 
 
 def _q_s_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -698,11 +695,7 @@ def _q_s_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("checkpointLocation", _scratch_dir("ssj-ckpt"))
         .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return drain_memory_sink(spark, q, name)
 
 
 def _q_s_x2_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -747,11 +740,7 @@ def _q_s_x2_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("checkpointLocation", _scratch_dir("x2-stream-ckpt"))
         .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return drain_memory_sink(spark, q, name)
 
 
 def _q_s_x2_stream_dedup_wm(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -842,23 +831,19 @@ def _q_s_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .queryName(name)
         .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return drain_memory_sink(spark, q, name)
 
 
 #: sustained-rate run: rows/s the rate source generates, and how long
-#: the query is left running (env-tunable so CI can shorten it)
+#: the query is left running
 RATE_ROWS_PER_SEC = 1000
-RATE_RUN_SECONDS = float(os.environ.get("SPARK_GRAFT_RATE_SECONDS", "10"))
+RATE_RUN_SECONDS = 10.0
 _RATE_KEYS = 100
 
 #: measured facts from the latest _q_s_rate_throughput run (achieved
 #: rate, lag, state rows) — the query's RESULT is deterministic for
 #: the oracle hash gate, so the nondeterministic receipt rides here
-#: for tools/rate_receipt.py to persist (VERDICT r12 #5).
+#: for callers and tests to read (SCALE.md records past receipts).
 LAST_RATE_RECEIPT: dict = {}
 
 
@@ -977,8 +962,8 @@ def _q_s_rate_throughput(spark: SparkSession, sf_dir: str) -> DataFrame:
     gate booleans (each backed by an in-query raise, so a FALSE can
     never reach the sink) — and DuckDB hash-gates them as literals.
     The measured values (achieved rate, lag, state rows, batch count)
-    are stashed in :data:`LAST_RATE_RECEIPT` for
-    ``tools/rate_receipt.py`` to commit as RATE_RECEIPT.json.
+    are stashed in :data:`LAST_RATE_RECEIPT`; SCALE.md records past
+    receipts.
     ``sf_dir`` is unused (source is synthetic) — present for the
     uniform catalog signature.
     """
@@ -1068,8 +1053,8 @@ def _q_s_rate_throughput(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"only {n_batches} data micro-batches over a "
             f"{RATE_RUN_SECONDS}s run — not a sustained-ingest sample"
         )
-    # measured receipt for tools/rate_receipt.py (module-global: the
-    # DataFrame must stay deterministic for the hash gate)
+    # measured receipt (module-global: the DataFrame must stay
+    # deterministic for the hash gate)
     LAST_RATE_RECEIPT.clear()
     LAST_RATE_RECEIPT.update(
         {
@@ -1164,10 +1149,9 @@ def _events_time_sliced_dir(spark: SparkSession, sf_dir: str, n_files: int) -> s
 def left_join_staged_src(spark: SparkSession, sf_dir: str) -> str:
     """The left-join run's content-keyed 2-file staged source (full
     corpus + ONE far-future sentinel batch carrying both heartbeat
-    horizons, mtime-ordered) — factored out so the trigger-cadence
-    floor probe (tools/streaming_floors.py) measures its zero-work
-    twin over the IDENTICAL source layout, and so bench reps share one
-    staging.
+    horizons, mtime-ordered), built once so bench reps share one
+    staging. SCALE.md's trigger-cadence floor table measured a
+    zero-work twin over this identical layout.
 
     r17 trim (VERDICT r16 #4): the +10h and +20h sentinel rows used to
     arrive as two separate files → two separate eviction micro-batches
@@ -1373,7 +1357,7 @@ QUERIES = {
         "s_stream_static_join": _q_s_stream_static_join,
         "s_merge_upsert": _q_s_merge_upsert,
         # deterministic gate-boolean form; the measured timings land in
-        # LAST_RATE_RECEIPT / RATE_RECEIPT.json
+        # LAST_RATE_RECEIPT
         "s_rate_throughput": _q_s_rate_throughput,
         # R22 twins of s_r22_change_counts on the manifest protocol:
         # two on the JVM spool data plane, one on the Python DataSource
@@ -1435,7 +1419,7 @@ ORACLES = {
     """,
     # every boolean is backed by an in-query raise, so the run either
     # throws (driver-visible err) or emits exactly this row; the
-    # nondeterministic measurements live in RATE_RECEIPT.json
+    # nondeterministic measurements live in LAST_RATE_RECEIPT
     "s_rate_throughput": """
         SELECT CAST(1000 AS BIGINT) AS configured_rate,
                TRUE AS multi_batch,

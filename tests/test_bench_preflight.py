@@ -53,3 +53,17 @@ def test_unknown_probe_names_record_without_gating():
 
 def test_factor_is_material():
     assert DEGRADED_FACTOR == 1.2
+
+
+def test_preflight_twins_drain_every_row_and_stop(spark):
+    """The two floor twins the pre-flight times run the real streaming
+    path to exhaustion: one batch over the events source, then both
+    copies of the 2-copy staging, and neither leaves its query running."""
+    from bench import drain, floor_2file_append_ckpt, floor_single_append
+    from odoo_batch_processing_spark.sources.loader import load_table
+    from tests.conftest import SF_SMOKE
+
+    n = load_table(spark, SF_SMOKE, "events").count()
+    assert drain(floor_single_append(spark, SF_SMOKE)) == n
+    assert drain(floor_2file_append_ckpt(spark, SF_SMOKE)) == 2 * n
+    assert spark.streams.active == []

@@ -37,26 +37,17 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-#: both providers the engine targets: HDFS-backed is the local/test
-#: default; RocksDB is the 100 TB production provider (state spills to
-#: disk, changelog checkpointing — SCALE.md). Running every recovery
-#: scenario under BOTH certifies the streaming family is
-#: provider-portable: no query logic leans on HDFSBackedStateStore
-#: semantics, and restart recovery holds under RocksDB's
-#: snapshot+changelog reconstruction too.
-PROVIDERS = {
-    "hdfs": (
-        "org.apache.spark.sql.execution.streaming.state."
-        "HDFSBackedStateStoreProvider"
-    ),
-    "rocksdb": (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    ),
-}
+from odoo_batch_processing_spark.streaming.queries import STATE_STORE_PROVIDERS
 
 
-@pytest.fixture(params=sorted(PROVIDERS))
+# both providers the engine targets: HDFS-backed is the local/test
+# default; RocksDB is the 100 TB production provider (state spills to
+# disk, changelog checkpointing — SCALE.md). Running every recovery
+# scenario under BOTH certifies the streaming family is
+# provider-portable: no query logic leans on HDFSBackedStateStore
+# semantics, and restart recovery holds under RocksDB's
+# snapshot+changelog reconstruction too.
+@pytest.fixture(params=sorted(STATE_STORE_PROVIDERS))
 def state_provider(request, spark):
     """Pin the state-store provider for the duration of one test; the
     provider choice is baked into each query's checkpoint at start, so
@@ -66,7 +57,7 @@ def state_provider(request, spark):
         old = spark.conf.get(key)
     except Exception:
         old = None
-    spark.conf.set(key, PROVIDERS[request.param])
+    spark.conf.set(key, STATE_STORE_PROVIDERS[request.param])
     yield request.param
     if old is None:
         spark.conf.unset(key)

@@ -2,12 +2,12 @@
 """Mechanized scale-artifact staleness check (VERDICT r12 #2).
 
 "Axis X not re-run: no change touches its code paths" was prose until
-now. This tool makes the claim mechanical: every committed
-SCALE_* / STREAM_FLOORS_* / SKEW_* / RATE_* artifact is mapped to the
-exact source files its stages execute, and an artifact is STALE when
-any of those files has a commit newer than the artifact's own last
-commit (or uncommitted modifications). 0 stale = every ladder receipt
-was measured at code that is current for the paths it exercises.
+now. This tool makes the claim mechanical: every committed SCALE_*
+artifact is mapped to the exact source files its stages execute, and
+an artifact is STALE when any of those files has a commit newer than
+the artifact's own last commit (or uncommitted modifications). 0
+stale = every ladder receipt was measured at code that is current for
+the paths it exercises.
 
 Dependency mapping, per artifact:
 
@@ -62,7 +62,7 @@ if REPO_ROOT not in sys.path:
 
 #: artifact file → the tool whose run writes it. Glob-free and
 #: explicit so a new artifact must be registered here (the registry
-#: test asserts every committed SCALE_*/STREAM_FLOORS_* file appears).
+#: test asserts every committed SCALE_* file appears).
 ARTIFACT_TOOLS: dict[str, str] = {
     "SCALE_DIM.json": "tools/axis_ladder.py",
     "SCALE_DOCLEN.json": "tools/axis_ladder.py",
@@ -71,12 +71,6 @@ ARTIFACT_TOOLS: dict[str, str] = {
     "SCALE_STATE_rocksdb.json": "tools/scale_state.py",
     "SCALE_SPILL.json": "tools/scale_spill.py",
     "SCALE_BATCHES.json": "tools/scale_batches.py",
-    "SKEW_SESSION.json": "tools/profile_session_skew.py",
-    "STREAM_FLOORS_cpus32.json": "tools/streaming_floors.py",
-    "STREAM_FLOORS_cpus8.json": "tools/streaming_floors.py",
-    "STREAM_FLOORS_hdfs.json": "tools/streaming_floors.py",
-    "STREAM_FLOORS_rocksdb.json": "tools/streaming_floors.py",
-    "RATE_RECEIPT.json": "tools/rate_receipt.py",
 }
 
 #: internal top-level names the import walk follows

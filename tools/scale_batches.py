@@ -79,7 +79,6 @@ Listing flag rules (exit 1):
   measuring like-for-like batches).
 
     python tools/scale_batches.py [--sf-dir /root/testdata/sf0.1]
-                                  [--skip-history] [--skip-listing]
 
 Writes SCALE_BATCHES.json; exit 1 if flagged.
 """
@@ -529,12 +528,9 @@ def main() -> int:
     parser = argparse.ArgumentParser()
     parser.add_argument("--sf-dir", default="/root/testdata/sf0.1")
     parser.add_argument(
-        "--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        "--cpus", type=int, help="default: SPARK_GRAFT_CPUS, else the host's core count"
     )
     parser.add_argument("--reps", type=int, default=2)
-    parser.add_argument("--skip-history", action="store_true")
-    parser.add_argument("--skip-listing", action="store_true")
-    parser.add_argument("--skip-dataplane", action="store_true")
     args = parser.parse_args()
 
     from odoo_batch_processing_spark.session import get_spark
@@ -542,135 +538,116 @@ def main() -> int:
         STREAM_SHUFFLE_PARTITIONS,
     )
 
-    spark = get_spark("scale-batches", cpus=args.cpus, shuffle_partitions=args.cpus)
+    spark = get_spark("scale-batches", cpus=args.cpus)
     spark.sparkContext.setLogLevel("ERROR")
     spark.conf.set("spark.sql.shuffle.partitions", STREAM_SHUFFLE_PARTITIONS)
 
-    artifact_path = os.path.join(REPO_ROOT, "SCALE_BATCHES.json")
-    prior = {}
-    if (
-        args.skip_history or args.skip_listing or args.skip_dataplane
-    ) and os.path.exists(artifact_path):
-        with open(artifact_path) as fh:
-            prior = json.load(fh)
+    run_rung(spark, args.sf_dir, RUNGS[0])  # warm JVM + staging path
+    results = []
+    for k in RUNGS:
+        best = None
+        for _ in range(args.reps):
+            r = run_rung(spark, args.sf_dir, k)
+            if best is None or r["wall_sec"] < best["wall_sec"]:
+                best = r
+        durs = best["batch_secs"]
+        early = _mean(durs[WARM : WARM + TAIL]) if len(durs) > WARM + TAIL else None
+        late = _mean(durs[-TAIL:]) if len(durs) >= TAIL else None
+        best["early_mean_sec"] = round(early, 4) if early else None
+        best["late_mean_sec"] = round(late, 4) if late else None
+        best["mean_batch_sec"] = round(_mean(durs), 4)
+        best["batch_secs"] = [round(d, 3) for d in durs]
+        results.append(best)
+        print(
+            f"[K={k:4d}] wall={best['wall_sec']:6.2f}s rows={best['rows']} "
+            f"mean/batch={best['mean_batch_sec']:.3f}s "
+            f"early={best['early_mean_sec']} late={best['late_mean_sec']}",
+            file=sys.stderr,
+        )
 
-    results = prior.get("results", [])
-    if not args.skip_history:
-        run_rung(spark, args.sf_dir, RUNGS[0])  # warm JVM + staging path
-        results = []
-        for k in RUNGS:
-            best = None
-            for _ in range(args.reps):
-                r = run_rung(spark, args.sf_dir, k)
-                if best is None or r["wall_sec"] < best["wall_sec"]:
-                    best = r
-            durs = best["batch_secs"]
-            early = _mean(durs[WARM : WARM + TAIL]) if len(durs) > WARM + TAIL else None
-            late = _mean(durs[-TAIL:]) if len(durs) >= TAIL else None
-            best["early_mean_sec"] = round(early, 4) if early else None
-            best["late_mean_sec"] = round(late, 4) if late else None
-            best["mean_batch_sec"] = round(_mean(durs), 4)
-            best["batch_secs"] = [round(d, 3) for d in durs]
-            results.append(best)
-            print(
-                f"[K={k:4d}] wall={best['wall_sec']:6.2f}s rows={best['rows']} "
-                f"mean/batch={best['mean_batch_sec']:.3f}s "
-                f"early={best['early_mean_sec']} late={best['late_mean_sec']}",
-                file=sys.stderr,
-            )
+    run_listing_rung(spark, args.sf_dir, 100)  # warm JVM + streaming engine
+    lrungs = []
+    for n in LISTING_RUNGS:
+        r = run_listing_rung(spark, args.sf_dir, n)
+        lrungs.append(r)
+        print(
+            f"[N={n:6d}] file latestOffset first={r['file_first_offset_sec']:.3f}s "
+            f"steady={r['file_offset_mean_sec']:.4f}s | manifest "
+            f"first={r['manifest_first_offset_sec']:.3f}s "
+            f"steady={r['manifest_offset_mean_sec']:.4f}s",
+            file=sys.stderr,
+        )
+    slope, intercept = _fit_per_file(lrungs, "file", "first_offset_sec")
+    mslope, _mi = _fit_per_file(lrungs, "manifest", "first_offset_sec")
+    listing = {
+        "rungs": list(LISTING_RUNGS),
+        "triggers": LISTING_TRIGGERS,
+        "warm": LISTING_WARM,
+        "rows_per_file": LISTING_ROWS_PER_FILE,
+        "growth_threshold": LISTING_GROWTH,
+        "abs_floor_sec": LISTING_ABS_FLOOR,
+        "results": lrungs,
+        "file_full_listing_sec_per_file": round(slope, 9),
+        "manifest_full_backlog_sec_per_file": round(mslope, 9),
+        "file_full_listing_sec_at_100k": round(
+            slope * EXTRAPOLATE_FILES + intercept, 3
+        ),
+        "manifest_steady_top_rung_sec": lrungs[-1]["manifest_offset_mean_sec"],
+        "file_steady_top_rung_sec": lrungs[-1]["file_offset_mean_sec"],
+        "relist_probe": run_relist_probe(spark, args.sf_dir),
+    }
 
-    listing = prior.get("listing", {})
-    if not args.skip_listing:
-        run_listing_rung(spark, args.sf_dir, 100)  # warm JVM + streaming engine
-        lrungs = []
-        for n in LISTING_RUNGS:
-            r = run_listing_rung(spark, args.sf_dir, n)
-            lrungs.append(r)
-            print(
-                f"[N={n:6d}] file latestOffset first={r['file_first_offset_sec']:.3f}s "
-                f"steady={r['file_offset_mean_sec']:.4f}s | manifest "
-                f"first={r['manifest_first_offset_sec']:.3f}s "
-                f"steady={r['manifest_offset_mean_sec']:.4f}s",
-                file=sys.stderr,
-            )
-        slope, intercept = _fit_per_file(lrungs, "file", "first_offset_sec")
-        mslope, _mi = _fit_per_file(lrungs, "manifest", "first_offset_sec")
-        listing = {
-            "rungs": list(LISTING_RUNGS),
-            "triggers": LISTING_TRIGGERS,
-            "warm": LISTING_WARM,
-            "rows_per_file": LISTING_ROWS_PER_FILE,
-            "growth_threshold": LISTING_GROWTH,
-            "abs_floor_sec": LISTING_ABS_FLOOR,
-            "results": lrungs,
-            "file_full_listing_sec_per_file": round(slope, 9),
-            "manifest_full_backlog_sec_per_file": round(mslope, 9),
-            "file_full_listing_sec_at_100k": round(
-                slope * EXTRAPOLATE_FILES + intercept, 3
-            ),
-            "manifest_steady_top_rung_sec": lrungs[-1]["manifest_offset_mean_sec"],
-            "file_steady_top_rung_sec": lrungs[-1]["file_offset_mean_sec"],
-            "relist_probe": run_relist_probe(spark, args.sf_dir),
-        }
+    run_dataplane_rung(spark, args.sf_dir, 64)  # warm the probe path
+    drungs = []
+    for rpf in DATAPLANE_RUNGS:
+        r = run_dataplane_rung(spark, args.sf_dir, rpf)
+        drungs.append(r)
+        print(
+            f"[R={rpf:6d}/file] addBatch file={r['file_addbatch_mean_sec']:.4f}s "
+            f"manifest={r['manifest_addbatch_mean_sec']:.4f}s "
+            f"spool={r['spool_addbatch_mean_sec']:.4f}s "
+            f"ratio={r['overhead_ratio']} spool_ratio={r['spool_overhead_ratio']}",
+            file=sys.stderr,
+        )
+    top = drungs[-1]
+    dataplane = {
+        "rungs": list(DATAPLANE_RUNGS),
+        "n_files": DATAPLANE_FILES,
+        "warm": LISTING_WARM,
+        "bind_ratio": DATAPLANE_BIND_RATIO,
+        "abs_floor_sec": DATAPLANE_ABS_FLOOR,
+        "results": drungs,
+        "file_rows_per_sec_top": (
+            round(top["rows_per_file"] / top["file_addbatch_mean_sec"])
+            if top["file_addbatch_mean_sec"] > 0
+            else None
+        ),
+        "manifest_rows_per_sec_top": (
+            round(top["rows_per_file"] / top["manifest_addbatch_mean_sec"])
+            if top["manifest_addbatch_mean_sec"] > 0
+            else None
+        ),
+        "spool_rows_per_sec_top": (
+            round(top["rows_per_file"] / top["spool_addbatch_mean_sec"])
+            if top["spool_addbatch_mean_sec"] > 0
+            else None
+        ),
+        "binds_at_rows_per_trigger": dataplane_bind_point(drungs),
+        # the spool twin is the claim-closer: manifest protocol,
+        # JVM data plane — bound nowhere on the ladder means the
+        # Python-DataSource tax is shed, not just asserted
+        "spool_binds_at_rows_per_trigger": dataplane_bind_point(drungs, kind="spool"),
+    }
 
-    dataplane = prior.get("dataplane", {})
-    if not args.skip_dataplane:
-        run_dataplane_rung(spark, args.sf_dir, 64)  # warm the probe path
-        drungs = []
-        for rpf in DATAPLANE_RUNGS:
-            r = run_dataplane_rung(spark, args.sf_dir, rpf)
-            drungs.append(r)
-            print(
-                f"[R={rpf:6d}/file] addBatch file={r['file_addbatch_mean_sec']:.4f}s "
-                f"manifest={r['manifest_addbatch_mean_sec']:.4f}s "
-                f"spool={r['spool_addbatch_mean_sec']:.4f}s "
-                f"ratio={r['overhead_ratio']} spool_ratio={r['spool_overhead_ratio']}",
-                file=sys.stderr,
-            )
-        top = drungs[-1]
-        dataplane = {
-            "rungs": list(DATAPLANE_RUNGS),
-            "n_files": DATAPLANE_FILES,
-            "warm": LISTING_WARM,
-            "bind_ratio": DATAPLANE_BIND_RATIO,
-            "abs_floor_sec": DATAPLANE_ABS_FLOOR,
-            "results": drungs,
-            "file_rows_per_sec_top": (
-                round(top["rows_per_file"] / top["file_addbatch_mean_sec"])
-                if top["file_addbatch_mean_sec"] > 0
-                else None
-            ),
-            "manifest_rows_per_sec_top": (
-                round(top["rows_per_file"] / top["manifest_addbatch_mean_sec"])
-                if top["manifest_addbatch_mean_sec"] > 0
-                else None
-            ),
-            "spool_rows_per_sec_top": (
-                round(top["rows_per_file"] / top["spool_addbatch_mean_sec"])
-                if top["spool_addbatch_mean_sec"] > 0
-                else None
-            ),
-            "binds_at_rows_per_trigger": dataplane_bind_point(drungs),
-            # the spool twin is the claim-closer: manifest protocol,
-            # JVM data plane — bound nowhere on the ladder means the
-            # Python-DataSource tax is shed, not just asserted
-            "spool_binds_at_rows_per_trigger": dataplane_bind_point(
-                drungs, kind="spool"
-            ),
-        }
-
-    flags = judge(results) if results else ["missing_history_section"]
-    if listing:
-        flags += judge_listing(listing["results"])
-    else:
-        flags.append("missing_listing_section")
-    if dataplane:
-        flags += judge_dataplane(dataplane["results"])
-    else:
-        flags.append("missing_dataplane_section")
+    flags = (
+        judge(results)
+        + judge_listing(listing["results"])
+        + judge_dataplane(dataplane["results"])
+    )
     payload = {
         "metric": "scale_batches",
         "sf_dir": args.sf_dir,
+        "cpus": spark.sparkContext.defaultParallelism,
         "rungs": list(RUNGS),
         "reps": args.reps,
         "drift_factor": DRIFT_FACTOR,
@@ -682,7 +659,7 @@ def main() -> int:
         "flagged": flags,
     }
     line = json.dumps(payload, separators=(",", ":"))
-    with open(artifact_path, "w") as fh:
+    with open(os.path.join(REPO_ROOT, "SCALE_BATCHES.json"), "w") as fh:
         fh.write(line + "\n")
     print(line)
     return 1 if flags else 0

@@ -398,15 +398,21 @@ def judge(results: dict, n_rows: int) -> dict:
 
 
 def main() -> int:
+    from odoo_batch_processing_spark.session import get_spark
+    from odoo_batch_processing_spark.streaming.queries import (
+        STATE_STORE_PROVIDERS,
+        STREAM_SHUFFLE_PARTITIONS,
+    )
+
     parser = argparse.ArgumentParser()
     parser.add_argument("--sf-dir", default="/root/testdata/sf0.1")
     parser.add_argument(
-        "--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        "--cpus", type=int, help="default: SPARK_GRAFT_CPUS, else the host's core count"
     )
     parser.add_argument("--reps", type=int, default=2)
     parser.add_argument(
         "--provider",
-        choices=("hdfs", "rocksdb"),
+        choices=sorted(STATE_STORE_PROVIDERS),
         default=None,
         help="pin the state-store provider; output becomes "
         "SCALE_STATE_{provider}.json. The floors posture run measured "
@@ -416,20 +422,13 @@ def main() -> int:
     )
     args = parser.parse_args()
 
-    from odoo_batch_processing_spark.session import get_spark
-    from odoo_batch_processing_spark.streaming.queries import (
-        STREAM_SHUFFLE_PARTITIONS,
-    )
-
-    spark = get_spark("scale-state", cpus=args.cpus, shuffle_partitions=args.cpus)
+    spark = get_spark("scale-state", cpus=args.cpus)
     spark.sparkContext.setLogLevel("ERROR")
     spark.conf.set("spark.sql.shuffle.partitions", STREAM_SHUFFLE_PARTITIONS)
     if args.provider:
-        from tools.streaming_floors import PROVIDERS
-
         spark.conf.set(
             "spark.sql.streaming.stateStore.providerClass",
-            PROVIDERS[args.provider],
+            STATE_STORE_PROVIDERS[args.provider],
         )
 
     n_rows = spark.read.parquet(
@@ -474,6 +473,7 @@ def main() -> int:
     payload = {
         "metric": "scale_state",
         "sf_dir": args.sf_dir,
+        "cpus": spark.sparkContext.defaultParallelism,
         "n_input_rows": n_rows,
         "rungs": list(RUNGS),
         "reps": args.reps,
