@@ -39,7 +39,7 @@ def drain(df) -> int:
     (xxhash64 can't consume them) are forced through their JSON text.
 
     The CALIBRATION workload deliberately does NOT use this drain: its
-    count()-drained wall time is the frozen cross-round yardstick and
+    count()-drained wall time is the frozen host-speed yardstick and
     must never re-base.
     """
     from pyspark.sql import functions as F  # noqa: PLC0415
@@ -81,12 +81,11 @@ def _unhashable(dt) -> bool:
 
 
 def calibration_df(spark, sf_dir: str):
-    """The FROZEN calibration workload (VERDICT r6 item 1, pinned r8):
-    lineitem scan → groupBy(l_returnflag) count/sum. Its min-of-reps
-    wall time is recorded as ``calibration_sec`` in every BENCH_r{N}
-    artifact as the common host-speed yardstick — cross-round drift is
-    measured as calib_rN/calib_rM, and the headline is compared
-    calibration-NORMALIZED (SCALE.md). That only works if this plan
+    """The FROZEN calibration workload: lineitem scan →
+    groupBy(l_returnflag) count/sum. Its min-of-reps wall time is
+    ``calibration_sec`` in BENCH_LAST.json, the host-speed yardstick
+    that sits beside the headline and that the pre-flight judges
+    against ``HEALTHY_WINDOW``. That reference only holds if this plan
     NEVER changes: tests/test_bench_calibration.py pins the analyzed
     plan against a stored fingerprint, so any edit here (or a Spark
     upgrade changing the plan) fails loudly instead of silently
@@ -100,19 +99,18 @@ def calibration_df(spark, sf_dir: str):
     )
 
 
-#: Healthy-window reference points for the pre-flight gate (VERDICT
-#: r11 #2): the session that produced BENCH_r11 burned six full bench
-#: runs discovering the host was degraded — the gate spends ~10 s up
-#: front instead. Provenance (all sf0.1 / local[32], SCALE.md round
-#: 11): cpu = best recent calibrations (r10 driver 0.1889, r11 run 4
-#: 0.1914); io = r11 run 6 best 0.1215; floors = SCALE.md's round-11
-#: floor table (floor_single_append 0.5188, floor_2file_append_ckpt
-#: 1.075 — the plain-cadence and checkpoint-commit cost classes).
-#: A probe exceeding ref × DEGRADED_FACTOR labels the artifact
-#: ``window: degraded`` — the artifact still records everything, but
-#: cross-round conclusions must not be drawn from it (the label is
-#: what bench_compare and the ledger key on). References only apply
-#: at the driver config (sf0.1 / 32 cpus); other configs get
+#: Healthy-window reference points for the pre-flight gate, which
+#: spends ~10 s up front to tell a degraded host apart before the
+#: suite's 250 query executions are spent on it. Provenance (all
+#: sf0.1 / local[32], SCALE.md round 11): cpu = best healthy
+#: calibrations (0.1889, 0.1914); io = best 0.1215; floors =
+#: SCALE.md's round-11 floor table (floor_single_append 0.5188,
+#: floor_2file_append_ckpt 1.075 — the plain-cadence and
+#: checkpoint-commit cost classes). A probe exceeding
+#: ref × DEGRADED_FACTOR labels the artifact ``window: degraded``:
+#: the artifact still records everything, but its timings must not be
+#: compared with a healthy window's. References only apply at the
+#: driver config (sf0.1 / 32 cpus); other configs get
 #: ``window: unknown``.
 #:
 #: Factor calibration: the two known-healthy cpu yardsticks sit
@@ -145,19 +143,9 @@ DEGRADED_FACTOR = 1.2
 def cpu_calibration(spark, sf_dir: str, reps: int) -> float:
     """Min-of-reps wall of the frozen calibration workload. The
     DataFrame is built ONCE, outside the timed region, so the
-    yardstick times only .count(). HISTORY (ADVICE r9/r10): r6–r8
-    all constructed the DataFrame per rep INSIDE the timed region
-    (git 29fb26f, c4c0f7a) — the r9 comment claiming r6/r7 timed
-    only .count() was wrong, and hoisting in r9 silently re-based
-    the scale (r8 calib 0.3175 ≙ hoisted ~0.25 on the same host).
-    The boundary is self-described in the artifact
-    (calibration_boundary) and the one sanctioned per-rep ↔ hoisted
-    conversion is the round-10 same-host bridge measurement in
-    SCALE.md (bridge = 1.4157, ``bench_compare --calibration-bridge``).
-
-    Module-level (round 13) so tools that need the exact bench
-    protocol (tools/x9_ab.py, tools/preflight_refs.py) share this
-    code path instead of re-implementing it."""
+    yardstick times only .count(); the artifact names this boundary
+    (``calibration_boundary: hoisted-v2``), since timing construction
+    too reads about 1.4× higher on the same host (SCALE.md)."""
     cal = calibration_df(spark, sf_dir)
     runs = []
     for _ in range(reps):
@@ -309,17 +297,6 @@ def main() -> int:
     # Warm the JVM + parquet footers once so timings measure the queries.
     drain(next(iter(queries.values()))(spark, sf_dir))
 
-    # Fixed CALIBRATION workload (VERDICT r6 item 1): the frozen
-    # calibration_df plan, so BENCH_r{N} artifacts carry a common
-    # yardstick and cross-round host drift is measured, not argued.
-    # Runs after warmup, before the suite (the quietest point of the
-    # session); min-of-reps like every headline number.
-    def _calibration(reps: int) -> float:
-        # module-level cpu_calibration since round 13 (shared with
-        # tools/x9_ab.py / tools/preflight_refs.py); see its docstring
-        # for the measurement-boundary history
-        return cpu_calibration(spark, sf_dir, reps)
-
     # Host timing is noisy (shared 32-core box running 50 Spark jobs
     # back-to-back; round-2 n=2 runs differed by 23% total). Run each
     # query 5 times; the HEADLINE per-query number is the MIN of reps —
@@ -332,60 +309,56 @@ def main() -> int:
     # indicator, and every raw rep is in BENCH_LAST_RAW.json so a
     # regression is attributable to a plan change vs. host noise. One
     # failing query reports -1 instead of killing the bench.
-    def _io_calibration(reps: int) -> float:
-        # module-level io_calibration since round 13 (shared protocol)
-        return io_calibration(reps)
-
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "5"))
-    calibration_sec = _calibration(reps)
-    io_calibration_sec = _io_calibration(reps)
+    # The two host yardsticks run after warmup, before the suite (the
+    # quietest point of the session); min-of-reps like every headline
+    # number.
+    calibration_sec = cpu_calibration(spark, sf_dir, reps)
+    io_calibration_sec = io_calibration(reps)
 
-    # Pre-flight window gate (VERDICT r11 #2): two zero-work streaming
-    # floor twins (plain cadence + checkpoint-commit) alongside the
-    # CPU/IO yardsticks, judged against the recorded healthy-window
+    # Pre-flight window gate: two zero-work streaming floor twins
+    # (plain cadence + checkpoint-commit) alongside the CPU/IO
+    # yardsticks, judged against the recorded healthy-window
     # references. ~5 s; classifies the window BEFORE 250 query
-    # executions are spent on it. Skippable for tooling that reuses
-    # bench.main() on fixtures (SPARK_GRAFT_SKIP_PREFLIGHT=1).
-    preflight = {"window": "skipped", "degraded_probes": [], "checks": {}}
-    if os.environ.get("SPARK_GRAFT_SKIP_PREFLIGHT", "0") != "1":
-        from odoo_batch_processing_spark.streaming.queries import (
-            _with_stream_shuffle,
-        )
+    # executions are spent on it.
+    from odoo_batch_processing_spark.streaming.queries import (
+        _with_stream_shuffle,
+    )
 
-        # warm the streaming machinery once unmeasured (state-store
-        # init, listener setup, sink registration) — the floor table
-        # in SCALE.md was measured after the same warmup; without
-        # this the first twin absorbs first-streaming-query session
-        # costs and reads ×2-4 high on a healthy host
-        drain(_with_stream_shuffle(floor_single_append)(spark, sf_dir))
-        floor_checks = {}
-        for fn in (floor_single_append, floor_2file_append_ckpt):
-            wrapped = _with_stream_shuffle(fn)
-            runs = []
-            for _ in range(3):
-                release_materialized()
-                spark.catalog.clearCache()
-                t0 = time.perf_counter()
-                drain(wrapped(spark, sf_dir))
-                runs.append(time.perf_counter() - t0)
-            floor_checks[fn.__name__] = round(min(runs), 4)
-        preflight = preflight_window(
-            {
-                "cpu_calibration_sec": calibration_sec,
-                "io_calibration_sec": io_calibration_sec,
-                **floor_checks,
-            },
-            applicable=(sf_dir.rstrip("/").endswith("sf0.1") and cpus == 32),
-        )
-        print(
-            f"bench: pre-flight window = {preflight['window']}"
-            + (
-                f" (degraded probes: {preflight['degraded_probes']})"
-                if preflight["degraded_probes"]
-                else ""
-            ),
-            file=sys.stderr,
-        )
+    # warm the streaming machinery once unmeasured (state-store
+    # init, listener setup, sink registration) — the floor table
+    # in SCALE.md was measured after the same warmup; without
+    # this the first twin absorbs first-streaming-query session
+    # costs and reads ×2-4 high on a healthy host
+    drain(_with_stream_shuffle(floor_single_append)(spark, sf_dir))
+    floor_checks = {}
+    for fn in (floor_single_append, floor_2file_append_ckpt):
+        wrapped = _with_stream_shuffle(fn)
+        runs = []
+        for _ in range(3):
+            release_materialized()
+            spark.catalog.clearCache()
+            t0 = time.perf_counter()
+            drain(wrapped(spark, sf_dir))
+            runs.append(time.perf_counter() - t0)
+        floor_checks[fn.__name__] = round(min(runs), 4)
+    preflight = preflight_window(
+        {
+            "cpu_calibration_sec": calibration_sec,
+            "io_calibration_sec": io_calibration_sec,
+            **floor_checks,
+        },
+        applicable=(sf_dir.rstrip("/").endswith("sf0.1") and cpus == 32),
+    )
+    print(
+        f"bench: pre-flight window = {preflight['window']}"
+        + (
+            f" (degraded probes: {preflight['degraded_probes']})"
+            if preflight["degraded_probes"]
+            else ""
+        ),
+        file=sys.stderr,
+    )
 
     # probes-only mode (round 12): tools/preflight_refs.py re-runs THE
     # SAME protocol in fresh subprocesses to validate or re-base the
@@ -455,8 +428,8 @@ def main() -> int:
         "sf": sf,
         "reps": reps,
         "stat": "min",
-        # frozen-plan host yardstick; compare across BENCH_r{N} to
-        # quantify host drift (excluded from the headline sum)
+        # frozen-plan host yardstick, judged by the pre-flight
+        # (excluded from the headline sum)
         "calibration_sec": calibration_sec,
         # fixed small-file fsync+read probe (round 11): the I/O-side
         # companion the CPU yardstick lacks — a matched calibration_sec
@@ -464,25 +437,20 @@ def main() -> int:
         # to I/O (checkpoint/shuffle machinery) mechanically
         "io_calibration_sec": io_calibration_sec,
         "io_calibration_probe": "smallfile-fsync-v1",
-        # drain definition marker (VERDICT r8 item 2): BENCH_r01–r07
-        # used a count() drain that never executed pruned projections,
-        # unreferenced aggregate expressions, or LEFT-join-deleted
-        # subtrees; r8+ forces every output column. Artifacts without
-        # this field are count()-drained and NOT per-query comparable —
-        # the one sanctioned bridge is r8: 34.37 s old ≙ 52.57 s new on
-        # the same host/HEAD (SCALE.md).
+        # what one query's timing covers: a plain count() drain skips
+        # pruned projections, unreferenced aggregate expressions and
+        # LEFT-join-deleted subtrees, so the drain forces every output
+        # column; timings under another drain are not comparable
         "drain": "forcing-v2",
         "drain_meaning": "per-query drain = count + bit_xor(xxhash64(all cols)); forces every output column",
-        # calibration measurement boundary (ADVICE r9→r10): r6–r8
-        # artifacts constructed calibration_df per rep INSIDE the timed
-        # region ("per-rep"); r9+ hoist construction and time only
-        # .count() ("hoisted-v2"). Cross-boundary comparisons go
-        # through the round-10 same-host bridge in SCALE.md.
+        # what calibration_sec times: construction of calibration_df
+        # is hoisted out of the timed region, only .count() is timed
+        # (see cpu_calibration)
         "calibration_boundary": "hoisted-v2",
-        # pre-flight window label (round 12): healthy / degraded /
-        # unknown (non-driver config) / skipped. A degraded artifact
-        # records everything but is excluded from cross-round
-        # conclusions; details (probe secs, refs, ratios) ride along.
+        # pre-flight window label: healthy / degraded / unknown
+        # (non-driver config). A degraded artifact records everything,
+        # but its timings must not be compared with a healthy
+        # window's; details (probe secs, refs, ratios) ride along.
         "window": preflight["window"],
         "preflight": preflight,
     }
@@ -493,10 +461,9 @@ def main() -> int:
                 "loop_wall": loop_wall,
                 "runs": raw,
                 "medians": medians,
-                # self-description (round 12): archived per-run raws
-                # (BENCH_RAW_r{N}_run{k}.json) feed bench_compare
-                # --pool-*, which needs the workload definition and
-                # window label ON the raw artifact, not inferred
+                # self-description: the raw file names its own
+                # workload definition and window, so it can be read
+                # without BENCH_LAST.json
                 "drain": payload["drain"],
                 "window": preflight["window"],
                 "sf": sf,
@@ -515,14 +482,12 @@ def main() -> int:
         fh.write(line + "\n")
     sys.stdout.flush()
     print(line, flush=True)
-    # Tail-survivable summary (OPTIMIZATION r18, VERDICT r17 #2 — a
-    # measurement-robustness fix, not a methodology change): the full
-    # line above grew past the driver's 2000-char stdout-tail window
-    # (2157 chars at 50 queries), so the ROUND-OVER-ROUND comparison
-    # in PERF_r{N} silently lost its `prev` side (BENCH_r16's stored
-    # tail begins mid-line; PERF_r17: prev_bench_ok=false, n_common=0).
-    # This SECOND line is additive — the full line keeps every key at
-    # full precision and is still printed first — and carries the same
+    # Tail-survivable summary: the full line above is longer than the
+    # driver's 2000-char stdout-tail window (2157 chars at 50
+    # queries), so a reader of the tail alone would see it cut
+    # mid-line. This SECOND line is additive — the full line keeps
+    # every key at full precision and is still printed first — and
+    # carries the same
     # schema with per-query values rounded to 3 decimals (1 ms, below
     # host noise) plus only the scalar context fields, which keeps it
     # ~1.6k chars: a 2000-char tail always ends with one complete,

@@ -1,12 +1,12 @@
-"""Pin the bench calibration plan (VERDICT r7 item 3).
+"""Pin the bench calibration plan.
 
-``calibration_sec`` in BENCH_r{N}.json is the cross-round host-speed
-yardstick: round-over-round headline comparisons are normalized by
-calib_rN/calib_rM (SCALE.md). The normalization is only meaningful if
-the calibration plan NEVER changes — these tests freeze it, so an
+``calibration_sec`` in BENCH_LAST.json is the host-speed yardstick
+that the bench pre-flight judges against its recorded healthy-window
+reference (``bench.HEALTHY_WINDOW``). The reference is only meaningful
+if the calibration plan NEVER changes — these tests freeze it, so an
 accidental edit to bench.calibration_df (or a Spark upgrade that
 changes what the same code plans to) fails loudly instead of silently
-re-basing every historical comparison.
+re-basing the yardstick.
 """
 
 from __future__ import annotations
@@ -18,7 +18,8 @@ from tests.conftest import SF_SMOKE
 #: the frozen fingerprint: analyzed logical plan with expression IDs
 #: normalized. Do NOT update this constant to make the test pass — if
 #: it no longer matches, the calibration yardstick changed and every
-#: cross-round calibration_sec comparison is broken; revert the plan.
+#: calibration_sec reading against the recorded reference is broken;
+#: revert the plan.
 CALIBRATION_ANALYZED = (
     "Aggregate [l_returnflag#N], [l_returnflag#N, count(1) AS n#N, "
     "sum(l_quantity#N) AS sq#N]\n"
@@ -45,7 +46,7 @@ def test_calibration_physical_shape(spark):
     one exchange) and a column-pruned parquet scan reading ONLY
     (l_quantity, l_returnflag) — if either regressed, calibration_sec
     would measure a different machine profile (IO-bound vs CPU-bound)
-    across rounds."""
+    than the one its reference was taken on."""
     from bench import calibration_df
 
     plan = (

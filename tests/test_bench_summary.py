@@ -15,9 +15,9 @@ import bench
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-#: the driver persists only the last N chars of bench stdout
-#: (BENCH_r16.json / BENCH_r17.json: len(tail) == 2000 with the line's
-#: head cut off — the observed capture limit this line exists to beat)
+#: the driver persists only the last N chars of bench stdout (stored
+#: tails were exactly 2000 chars with the full line's head cut off —
+#: the observed capture limit this line exists to beat)
 DRIVER_TAIL_CHARS = 2000
 
 

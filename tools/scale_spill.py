@@ -9,9 +9,10 @@ working set exceeds executor memory must SPILL (ExternalSorter /
 ExternalAppendOnlyMap paths) and keep producing exact results at a
 bounded slowdown — not OOM, not silently wrong. This ladder holds the
 workload constant (an 8× replication of sf0.1 lineitem, ~4.8M rows,
-staged once) and shrinks the JVM heap across rungs (8g → 2g → 512m at
-8 cores / 8 shuffle partitions), driving per-task execution memory
-from "everything fits" to "must spill".
+staged once) and shrinks the JVM heap across rungs (8g → 2g → 512m),
+driving per-task execution memory from "everything fits" to "must
+spill". Each rung's session takes ``get_spark``'s core count
+(``SPARK_GRAFT_CPUS``, else the host's cores) and records it.
 
 Workloads — one per spill machine:
 
@@ -68,14 +69,15 @@ REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if REPO_ROOT not in sys.path:
     sys.path.insert(0, REPO_ROOT)
 
-#: heap rungs, roomy → starved. 8 cores × 8 shuffle partitions; at
-#: 512m total heap the ~0.13g execution pool shared by 8 concurrent
-#: tasks leaves ~16 MB/task against an ~85 MB/partition shuffle
-#: working set — measured to engage both spill machines, while 1g
-#: still fit everything (smoke rungs, round 12).
+#: heap rungs, roomy → starved. At 512m total heap the ~0.13g
+#: execution pool shared by the concurrent tasks leaves each far less
+#: than its shuffle partition's working set — measured to engage both
+#: spill machines at 4 and at 8 cores, while 1g still fit everything.
 RUNGS = ("8g", "2g", "512m")
-CPUS = 8
 MULT = 8
+#: the staged corpus is always this many files, whatever the core
+#: count, so its ``staged_once`` key names one layout
+CORPUS_FILES = 8
 GRACE_RATIO = 8.0
 
 
@@ -102,7 +104,7 @@ def _stage_corpus(spark, sf_dir: str) -> str:
         out = reps[0]
         for r in reps[1:]:
             out = out.unionByName(r)
-        out.repartition(CPUS).write.mode("overwrite").parquet(d)
+        out.repartition(CORPUS_FILES).write.mode("overwrite").parquet(d)
 
     return staged_once(f"spill-lineitem-{MULT}x", src, _build)
 
@@ -198,18 +200,19 @@ def _ordered_digest(df_sorted, key_cols: list[str]) -> tuple[int, str]:
 def _workloads(spark, corpus: str):
     """name → (shuffle_partitions, builder). Partition counts are per
     workload but CONSTANT across rungs, so rung-to-rung comparisons
-    hold: agg runs at 8 (spills via per-task hash-map pressure); sort
-    runs at 2 — full-width rows at 8 partitions (~85 MB/task) still
-    fit even the 512m rung's borrowable execution pool (measured,
-    round 12), so the sort ladder narrows to 2 range partitions
-    (~340 MB/task) to guarantee the ExternalSorter path engages."""
+    hold: agg runs at one partition per core (spills via per-task
+    hash-map pressure); sort runs at 2 — full-width rows at 8
+    partitions (~85 MB/task) still fit even the 512m rung's
+    borrowable execution pool (measured), so the sort ladder narrows
+    to 2 range partitions (~340 MB/task) to guarantee the
+    ExternalSorter path engages."""
     from pyspark.sql import functions as F
 
     li = spark.read.parquet(corpus)
     return {
         # mode "drain": the hash-forcing aggregate is the executor
         "agg": (
-            CPUS,
+            spark.sparkContext.defaultParallelism,
             "drain",
             lambda: li.groupBy("l_orderkey").agg(
                 F.sum("l_quantity").alias("sq"),
@@ -247,8 +250,6 @@ def run_rung(mem: str, sf_dir: str, reps: int) -> dict:
 
     spark = get_spark(
         f"scale-spill-{mem}",
-        cpus=CPUS,
-        shuffle_partitions=CPUS,
         extra_confs={
             "spark.driver.memory": mem,
             "spark.ui.enabled": "true",
@@ -260,7 +261,7 @@ def run_rung(mem: str, sf_dir: str, reps: int) -> dict:
     )
     spark.sparkContext.setLogLevel("ERROR")
     corpus = _stage_corpus(spark, sf_dir)
-    out = {"mem": mem, "workloads": {}}
+    out = {"mem": mem, "cpus": spark.sparkContext.defaultParallelism, "workloads": {}}
     for name, (parts, mode, build) in _workloads(spark, corpus).items():
         spark.conf.set("spark.sql.shuffle.partitions", str(parts))
         if mode == "noop-write":
@@ -354,7 +355,8 @@ def main() -> int:
         "metric": "scale_spill",
         "sf_dir": args.sf_dir,
         "mult": MULT,
-        "cpus": CPUS,
+        # the core count the rung sessions ran with (each rung records its own)
+        "cpus": next((r["cpus"] for r in rungs if "cpus" in r), None),
         "rungs_mem": list(RUNGS),
         "reps": args.reps,
         "grace_ratio": GRACE_RATIO,
