@@ -153,11 +153,7 @@ def _q_s_r22_change_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _stage_r22_manifest(spark: SparkSession, sf_dir: str) -> str:
     """Manifest path of the shared R22 staging: the full events corpus
     as 4 parquet files + an append-only manifest naming them,
-    content-keyed via staged_once. ONE builder for both manifest-fed
-    twins (Python DataSource + JVM spool) — staged_once keys on the
-    source fingerprint, not the builder body, so a duplicated closure
-    drifting in one consumer would silently describe a layout the
-    other one built (review r16)."""
+    content-keyed via staged_once."""
     import glob as _glob
 
     from odoo_batch_processing_spark.sources.sinks import staged_once
@@ -195,17 +191,11 @@ def _q_s_r22_manifest_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batches through the manifest protocol before the
     complete-mode counts land.
 
-    OPTIMIZATION r17 (guide §4 — eliminate the JVM↔Python data
-    boundary): the data plane is the JVM spool form
-    (``manifest_file_stream``): the manifest cursor hard-links newly
-    listed files into a spool directory (O(new) metadata, zero rows
-    through Python) watched by the built-in vectorized parquet file
-    source, with cleanSource=delete keeping the spool listing
-    O(unprocessed). Same staged corpus, same manifest discovery, same
-    result and oracle as the Python DataSource form it replaces —
-    that form stays oracle-checked as extended-tier
-    ``s_r22_pymanifest_counts``. Measured 3.73 → 1.59 s min-of-reps
-    at sf0.1/32 (the PyDS row path was the whole difference)."""
+    The data plane is the JVM spool (``manifest_file_stream``): the
+    manifest cursor hard-links newly listed files into a spool
+    directory (O(new) metadata, zero rows through Python) watched by
+    the built-in vectorized parquet file source, with
+    cleanSource=delete keeping the spool listing O(unprocessed)."""
     from odoo_batch_processing_spark.sources.manifest import manifest_file_stream
 
     stream, pump = manifest_file_stream(
@@ -222,69 +212,6 @@ def _q_s_r22_manifest_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .format("memory")
         .queryName(name)
         .option("checkpointLocation", _scratch_dir("r22-core-spool-ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()  # the pre-pumped first file
-        while pump.pump(1):  # one notification per step → one trigger each
-            q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
-
-
-def _q_s_r22_pymanifest_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The MANIFEST-fed Python DataSource form (VERDICT r14 #5): the
-    exact query `s_r22_manifest_counts` ran before its r17 data-plane
-    swap — rows flow through the Arrow-over-Python DataSource
-    (offset/cursor protocol, partitions() replan, per-unit ts
-    normalization). Kept in the extended tier so the Python
-    DataSource manifest path stays oracle-checked every round; it is
-    the measured ~×2.3 data-plane cost the swap removed."""
-    from odoo_batch_processing_spark.sources.manifest import manifest_source
-
-    stream = manifest_source(
-        spark, _stage_r22_manifest(spark, sf_dir), max_files_per_trigger=1
-    )
-    name = _mem_name("s_r22pm")
-    q = (
-        stream.groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    return drain_memory_sink(spark, q, name)
-
-
-def _q_s_r22_spool_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """R22 on the manifest protocol with a 100% JVM DATA PLANE
-    (VERDICT r15 #3 — the measured answer to the Python DataSource's
-    ~×2 Arrow-over-Python row path): the same staged corpus, manifest,
-    counts shape, and oracle as `s_r22_manifest_counts`, but rows flow
-    through the built-in vectorized parquet file source over a spool
-    directory; the manifest cursor only hard-links newly listed files
-    into the spool (O(new) metadata, zero rows through Python), and
-    cleanSource=delete keeps the spool listing O(unprocessed). The
-    pump is driven one file per step to force genuine micro-batches
-    through the notification protocol."""
-    from odoo_batch_processing_spark.sources.manifest import manifest_file_stream
-
-    stream, pump = manifest_file_stream(
-        spark,
-        _stage_r22_manifest(spark, sf_dir),
-        _scratch_dir("r22-spool"),
-        max_files_per_trigger=1,
-    )
-    name = _mem_name("s_r22sp")
-    q = (
-        stream.groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", _scratch_dir("r22-spool-ckpt"))
         .start()
     )
     try:
@@ -1359,11 +1286,8 @@ QUERIES = {
         # deterministic gate-boolean form; the measured timings land in
         # LAST_RATE_RECEIPT
         "s_rate_throughput": _q_s_rate_throughput,
-        # R22 twins of s_r22_change_counts on the manifest protocol:
-        # two on the JVM spool data plane, one on the Python DataSource
+        # R22 twin of s_r22_change_counts on the manifest protocol
         "s_r22_manifest_counts": _q_s_r22_manifest_counts,
-        "s_r22_spool_counts": _q_s_r22_spool_counts,
-        "s_r22_pymanifest_counts": _q_s_r22_pymanifest_counts,
     }.items()
 }
 
@@ -1537,8 +1461,5 @@ from odoo_batch_processing_spark.operators import similarity as _sim  # noqa: E4
 
 ORACLES["s_x4_stream_index_probe"] = _sim.ORACLES["x4_ivf_indexed_multiprobe"]
 
-# every R22 form must reproduce the full events counts: one oracle
-ORACLES |= dict.fromkeys(
-    ("s_r22_manifest_counts", "s_r22_spool_counts", "s_r22_pymanifest_counts"),
-    ORACLES["s_r22_change_counts"],
-)
+# the manifest-fed R22 form must reproduce the full events counts
+ORACLES["s_r22_manifest_counts"] = ORACLES["s_r22_change_counts"]

@@ -17,10 +17,12 @@ O(total files) per full listing — MEASURED at 14.9–54.7 µs/file
 recurring on the ~10k-file unread-cache drain cadence
 (SCALE_BATCHES.json listing ladder + relist_probe,
 tools/scale_batches.py), so beyond ~10⁵ files production fronts this
-with a notification queue. That swap is prototyped in
-sources/manifest.py (offset = byte position in an append-only
-manifest, O(new) discovery) and is plan- and value-preserving by
-test (tests/test_manifest_source.py).
+with a notification queue. That swap is the spool in
+sources/manifest.py: an append-only manifest tail-read in O(new)
+bytes hard-links each new file into a directory that this same
+source watches with ``cleanSource=delete``, so rows stay on the JVM
+scan and the listing stays O(unprocessed). It is plan- and
+value-preserving by test (tests/test_manifest_source.py).
 """
 
 from __future__ import annotations

@@ -6,9 +6,10 @@ claimed a re-dump that never landed — PLANS.md carried the stale 250
 for the rest of the round).
 
 Runs dump_plans --check in a SUBPROCESS: the dump session is pinned at
-cpus=4 and Exchange nodes print their partition counts, so rendering
-inside the shared test session (different cpus/shuffle partitions)
-would diff on configuration, not plans.
+cpus=4 and Exchange nodes print their partition counts, and at a 4g heap
+and 64 MiB Tungsten pages, which set the broadcast sizes it prints, so
+rendering inside the shared test session (different cpus/shuffle
+partitions/heap) would diff on configuration, not plans.
 """
 
 from __future__ import annotations

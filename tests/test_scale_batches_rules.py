@@ -101,40 +101,9 @@ def test_relist_spike_threshold_has_floor():
     assert relist_spikes([]) == []
 
 
-def _drung(rpf, file_mean=0.1, man_mean=0.12, rows=None):
-    rows = rpf if rows is None else rows
-    return {
-        "rows_per_file": rpf,
-        "file_addbatch_mean_sec": file_mean,
-        "manifest_addbatch_mean_sec": man_mean,
-        "file_trigger_rows": [rows] * 8,
-        "manifest_trigger_rows": [rows] * 8,
-    }
-
-
-def test_dataplane_receipt_and_bind_point():
-    from tools.scale_batches import dataplane_bind_point, judge_dataplane
-
-    ok = [_drung(64), _drung(65536, file_mean=0.2, man_mean=0.25)]
-    assert judge_dataplane(ok) == []
-    bad = [_drung(64), _drung(65536)]
-    bad[1]["manifest_trigger_rows"][-1] = 1
-    assert judge_dataplane(bad) == ["dataplane_receipt_mismatch"]
-    # bind point: first rung where manifest ≥ 1.5× file AND past floor
-    assert dataplane_bind_point(ok) is None
-    bound = [
-        _drung(64, file_mean=0.001, man_mean=0.01),  # 10× but sub-floor
-        _drung(8192, file_mean=0.1, man_mean=0.2),
-        _drung(65536, file_mean=0.5, man_mean=1.5),
-    ]
-    assert dataplane_bind_point(bound) == 8192
-
-
 def test_committed_artifact_agrees_with_judge():
     import json
     import os
-
-    from tools.scale_batches import judge_dataplane
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     path = os.path.join(repo, "SCALE_BATCHES.json")
@@ -142,9 +111,4 @@ def test_committed_artifact_agrees_with_judge():
         return
     with open(path) as fh:
         d = json.load(fh)
-    expect = (
-        judge(d["results"])
-        + judge_listing(d["listing"]["results"])
-        + judge_dataplane(d["dataplane"]["results"])
-    )
-    assert expect == d["flagged"]
+    assert judge(d["results"]) + judge_listing(d["listing"]["results"]) == d["flagged"]

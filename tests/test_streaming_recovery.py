@@ -211,11 +211,11 @@ def test_join_state_survives_checkpoint_restart(spark, tmp_path, state_provider)
 
 
 # ---------------------------------------------------------------------------
-# 1b. manifest source × stateful recovery (VERDICT r13 #2)
+# 1b. manifest spool × stateful recovery
 # ---------------------------------------------------------------------------
 def _manifest_file(spark, tmp_path, name: str, rows) -> str:
     """One parquet file (raw-int64-nanos ts staging contract — the
-    manifest reader's ns→µs normalization is exercised in-stream)."""
+    spool stream's ns→µs normalization is exercised in-stream)."""
     import glob as _glob
 
     d = str(tmp_path / name)
@@ -224,19 +224,21 @@ def _manifest_file(spark, tmp_path, name: str, rows) -> str:
     return part
 
 
-def _run_totals_over_manifest(spark, manifest: str, ckpt: str, out: str):
+def _run_totals_over_manifest(spark, manifest: str, spool: str, ckpt: str, out: str):
     """Drain running_totals (the s_stateful_totals shape) over the
-    manifest source, cursor INSIDE the query's checkpoint dir; returns
-    (max n_events per user, total source rows ingested this run).
-    Sink is foreachBatch→parquet-append: the memory sink refuses
-    checkpoint recovery, and foreachBatch is the recoverable shape for
-    update-mode stateful output."""
-    from odoo_batch_processing_spark.sources.manifest import manifest_source
+    manifest spool, one ``pump(1)`` per trigger, pump cursor INSIDE
+    the query's checkpoint dir; returns (max n_events per user, total
+    source rows ingested this run). Sink is foreachBatch→parquet-
+    append: the memory sink refuses checkpoint recovery, and
+    foreachBatch is the recoverable shape for update-mode stateful
+    output."""
+    from odoo_batch_processing_spark.sources.manifest import manifest_file_stream
     from odoo_batch_processing_spark.streaming.stateful import running_totals
 
-    src = manifest_source(
+    src, pump = manifest_file_stream(
         spark,
         manifest,
+        spool,
         max_files_per_trigger=1,
         cursor=os.path.join(ckpt, "manifest.cursor"),
     )
@@ -253,6 +255,8 @@ def _run_totals_over_manifest(spark, manifest: str, ckpt: str, out: str):
     )
     try:
         q.processAllAvailable()
+        while pump.pump(1):
+            q.processAllAvailable()
         ingested = sum(int(p.get("numInputRows", 0)) for p in q.recentProgress)
     finally:
         q.stop()
@@ -269,12 +273,13 @@ def test_manifest_source_composes_with_stateful_recovery(
     spark, tmp_path, state_provider
 ):
     """The two restart protocols TOGETHER (VERDICT r13 #2: each was
-    only certified alone): a stateful query over ``manifest_parquet``
-    with the durable cursor inside the query's checkpoint dir, killed
-    and restarted across a planted cross-restart witness. Exactly-once
-    is asserted on BOTH sides: ingest (phase 2 reads only the appended
-    file's rows — receipt: numInputRows — and the cursor lands on the
-    manifest's byte size) and state (user 1's totals span both phases:
+    only certified alone): a stateful query over the manifest spool
+    with the pump's durable cursor inside the query's checkpoint dir,
+    killed and restarted across a planted cross-restart witness.
+    Exactly-once is asserted on BOTH sides: ingest (phase 2 reads only
+    the appended file's rows — receipt: numInputRows — and the cursor
+    lands on the manifest's byte size) and state (user 1's totals span
+    both phases:
     n=5 with min_event_id=1 is reachable only via recovered store
     state, since phase 2's input never contained event 1)."""
     f1 = _manifest_file(
@@ -295,33 +300,29 @@ def test_manifest_source_composes_with_stateful_recovery(
     )
     manifest = str(tmp_path / "manifest.txt")
     ckpt = str(tmp_path / "ckpt")
+    spool = str(tmp_path / "spool")
     cursor = os.path.join(ckpt, "manifest.cursor")
     with open(manifest, "w") as fh:
         fh.write(f1 + "\n" + f2 + "\n")
 
     # phase 1: drain f1+f2, every batch committed, then stop (crash)
     totals1, ingested1 = _run_totals_over_manifest(
-        spark, manifest, ckpt, str(tmp_path / "out")
+        spark, manifest, spool, ckpt, str(tmp_path / "out")
     )
     assert ingested1 == 4
     assert totals1[1] == (3, 1, 3) and totals1[2] == (1, 10, 10)
-    # ingest receipt: the cursor is a MONOTONE FLOOR ≤ the engine's
-    # committed offset — MicroBatchExecution calls source.commit(N)
-    # when batch N+1 starts, so at stop the cursor lags the final
-    # batch. Exactly-once for that tail batch rides the engine's own
-    # offset log + the reader's idempotent partitions() replay; the
-    # cursor's job is only to keep the floor durable across crashes.
+    # ingest receipt: the pump writes its cursor as it links, so a
+    # drained run leaves it at the manifest's byte size
     size_p1 = os.path.getsize(manifest)
-    cursor_p1 = int(open(cursor).read())
-    assert 0 < cursor_p1 <= size_p1
+    assert int(open(cursor).read()) == size_p1
 
     # queue behavior: f3 appended while the query is down
     with open(manifest, "a") as fh:
         fh.write(f3 + "\n")
 
-    # phase 2: FRESH reader + engine, same checkpoint (cursor inside it)
+    # phase 2: FRESH pump + engine, same checkpoint (cursor inside it)
     totals2, ingested2 = _run_totals_over_manifest(
-        spark, manifest, ckpt, str(tmp_path / "out")
+        spark, manifest, spool, ckpt, str(tmp_path / "out")
     )
     # ingest side: only f3's rows entered the stream — no re-read
     # (state-loss + re-ingest would also produce n=5, but with
@@ -331,10 +332,8 @@ def test_manifest_source_composes_with_stateful_recovery(
     # come from the recovered state store
     assert totals2[1] == (5, 1, 5)
     assert totals2[2] == (2, 10, 11)
-    # the durable floor advanced monotonically across the restart and
-    # covers at least everything phase 1 ingested
-    cursor_p2 = int(open(cursor).read())
-    assert cursor_p1 <= size_p1 <= cursor_p2 <= os.path.getsize(manifest)
+    # the restarted pump resumed from the cursor and drained the rest
+    assert int(open(cursor).read()) == os.path.getsize(manifest)
 
     # state-loss control: fresh checkpoint + fresh cursor over a
     # manifest naming only f3 → phase-1 history absent
@@ -342,7 +341,11 @@ def test_manifest_source_composes_with_stateful_recovery(
     with open(man2, "w") as fh:
         fh.write(f3 + "\n")
     totals_c, ingested_c = _run_totals_over_manifest(
-        spark, man2, str(tmp_path / "ckpt2"), str(tmp_path / "out_ctl")
+        spark,
+        man2,
+        str(tmp_path / "spool2"),
+        str(tmp_path / "ckpt2"),
+        str(tmp_path / "out_ctl"),
     )
     assert ingested_c == 3
     assert totals_c[1] == (2, 4, 5)

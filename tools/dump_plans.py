@@ -104,7 +104,17 @@ def render() -> str:
     from odoo_batch_processing_spark.registry import all_queries
     from odoo_batch_processing_spark.session import get_spark, release_materialized
 
-    spark = get_spark("dump-plans", cpus=4)
+    # pinned like the core count: a broadcast stage prints the size of
+    # its hashed relation, which is a whole number of Tungsten pages,
+    # and the default page size follows the heap (64 MiB at the 24g
+    # default heap, 32 MiB at 4g), so an unpinned render diffs on the
+    # host's heap setting. The small heap also keeps this session from
+    # crowding the one it runs beside under the hygiene suite.
+    spark = get_spark(
+        "dump-plans",
+        cpus=4,
+        extra_confs={"spark.driver.memory": "4g", "spark.buffer.pageSize": "64m"},
+    )
     queries = all_queries(extended=True)
     out = [
         "# PLANS — physical plans of the headline queries (sf0.1, local)",

@@ -28,7 +28,7 @@ def main() -> int:
     from odoo_batch_processing_spark.oracle import check_all
     from odoo_batch_processing_spark.session import get_spark
 
-    spark = get_spark("oracle-check", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
+    spark = get_spark("oracle-check")
     results = check_all(spark, args.sf_dir, only=args.names or None, extended=args.extended)
     n_fail = 0
     for r in results:

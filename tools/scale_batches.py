@@ -55,16 +55,19 @@ Measured behavior splits in two, and the artifact records both:
 * ``*_offset_mean_sec`` — steady-state offset discovery after warmup
   (the cache-serving cost, flat by design).
 
-Alongside each rung runs the queue-fed twin — ``sources/manifest.py``
-'s ``manifest_parquet`` Python DataSource over the SAME N files,
-offset = byte position in an append-only manifest, so its offset
-discovery is an ``os.stat`` + tail-read of NEW bytes only: O(backlog)
-once at catch-up (0.45 s for a 512k-entry backlog, ~40× below the
-listing wall), O(new arrivals) forever after — it can never re-pay
-the wall, because processed entries are never re-scanned. Receipt:
-every measured trigger on BOTH twins ingests exactly
-``LISTING_ROWS_PER_FILE`` rows (same files, same batch shape), and
-the plan/value equivalence of the swap is pytest-gated
+Alongside each rung runs the queue-fed twin — the manifest spool
+(``sources/manifest.py``'s ``manifest_file_stream``) over the SAME N
+files, driven as ``s_r22_manifest_counts`` drives it: one ``pump(1)``
+per trigger, each linking the next listed file into a spool that the
+built-in file source watches with ``cleanSource=delete``. Its
+discovery cost per trigger is the pump call (an ``os.stat`` plus a
+tail-read of NEW manifest bytes, then one hard link) plus the spool
+stream's ``latestOffset`` (a listing of the unprocessed spool, not of
+all N files): O(backlog) once, when the first pump reads the whole
+manifest, and O(new arrivals) after — processed entries are never
+re-scanned. Receipt: every measured trigger on BOTH twins ingests
+exactly ``LISTING_ROWS_PER_FILE`` rows (same files, same batch
+shape), and the plan/value equivalence of the swap is pytest-gated
 (tests/test_manifest_source.py).
 
 Listing flag rules (exit 1):
@@ -107,20 +110,6 @@ LISTING_ROWS_PER_FILE = 64
 LISTING_GROWTH = 3.0  #: manifest offset top/bottom ratio flag threshold
 LISTING_ABS_FLOOR = 0.05  #: sec — jitter floor under which growth is noise
 EXTRAPOLATE_FILES = 100_000
-
-#: Data-plane ladder (round 14, VERDICT r13 #4): the listing axis
-#: certifies the manifest twin's CONTROL plane (O(new) offset
-#: discovery); this axis measures its DATA plane — the Python
-#: DataSource executes ``read`` in Python workers (Arrow-batched, no
-#: JVM scan codegen), so per-trigger processing cost vs the file
-#: source's native scan is the honest price of the prototype. Fixed
-#: file count, rows/file swept 64 → 64k; per-trigger ``addBatch``
-#: (the processing phase) recorded for both twins and the overhead
-#: ratio per rung is the posture curve.
-DATAPLANE_RUNGS = (64, 1024, 8192, 65536)
-DATAPLANE_FILES = 8
-DATAPLANE_BIND_RATIO = 1.5  #: manifest/file addBatch ratio called "bound"
-DATAPLANE_ABS_FLOOR = 0.05  #: sec — ignore ratios within trigger jitter
 
 
 def run_rung(spark, sf_dir: str, k: int) -> dict:
@@ -232,17 +221,45 @@ def _offset_secs(progress: list[dict]) -> list[float]:
     return [p["durationMs"].get("latestOffset", 0) / 1000.0 for p in progress]
 
 
+def _pumped_triggers(q, pump, want: int) -> tuple[list[dict], list[float]]:
+    """Drive the spool one timed ``pump(1)`` per trigger, draining
+    after each, until ``want`` data triggers ran; returns their
+    progress dicts and the pump seconds that fed each one."""
+    pump_secs = []
+    for _ in range(want):
+        t0 = time.perf_counter()
+        pump.pump(1)
+        pump_secs.append(time.perf_counter() - t0)
+        q.processAllAvailable()
+    prog = [p for p in q.recentProgress if p.get("numInputRows", 0) > 0]
+    if len(prog) != want:
+        raise RuntimeError(f"{want} pumps produced {len(prog)} data triggers")
+    return prog, pump_secs
+
+
 def run_listing_rung(spark, sf_dir: str, n: int) -> dict:
-    from odoo_batch_processing_spark.sources.manifest import manifest_source
+    from odoo_batch_processing_spark.schemas import events_schema
+    from odoo_batch_processing_spark.sources.loader import events_ts_unit
+    from odoo_batch_processing_spark.sources.manifest import manifest_file_stream
     from odoo_batch_processing_spark.sources.sinks import scratch_dir
     from odoo_batch_processing_spark.streaming.queries import _mem_name
     from odoo_batch_processing_spark.streaming.sources import change_source
 
     files_dir, manifest = _listing_farm(spark, sf_dir, n)
+    # every farm entry links one file: probe that, not a 512k listing
+    unit = events_ts_unit(os.path.join(files_dir, "f000000.parquet"))
+    # schema given, so no pump runs before the timed ones
+    spool_df, pump = manifest_file_stream(
+        spark,
+        manifest,
+        scratch_dir(f"lst-spool-{n}"),
+        max_files_per_trigger=1,
+        schema=events_schema(unit),
+    )
     out = {"n_files": n}
     for kind, df in (
         ("file", change_source(spark, files_dir, max_files_per_trigger=1)),
-        ("manifest", manifest_source(spark, manifest, max_files_per_trigger=1)),
+        ("manifest", spool_df),
     ):
         name = _mem_name(f"lst_{kind}_{n}")
         q = (
@@ -254,21 +271,24 @@ def run_listing_rung(spark, sf_dir: str, n: int) -> dict:
             .start()
         )
         try:
-            prog = _measured_triggers(q, LISTING_TRIGGERS)
+            if kind == "file":
+                prog = _measured_triggers(q, LISTING_TRIGGERS)
+                secs = _offset_secs(prog)
+            else:
+                prog, pump_secs = _pumped_triggers(q, pump, LISTING_TRIGGERS)
+                secs = [p + o for p, o in zip(pump_secs, _offset_secs(prog))]
         finally:
-            # inside finally (ADVICE r13): a _measured_triggers timeout
-            # must not leak the memory-sink view + its buffered rows
-            # into the rest of the ladder run
+            # a timeout must not leak the memory-sink view + its
+            # buffered rows into the rest of the ladder run
             q.stop()
             spark.catalog.dropTempView(name)
-        secs = _offset_secs(prog)
         out[f"{kind}_offset_secs"] = [round(s, 4) for s in secs]
-        # trigger 0's latestOffset contains the FULL directory listing
-        # (file source) / full-backlog tail-read (manifest); later
-        # triggers serve from the source's unread-files cache / are
-        # already caught up — so "first" is the listing wall and
+        # trigger 0's discovery contains the FULL directory listing
+        # (file source) / full-backlog tail-read (first pump); later
+        # triggers serve from the source's unread-files cache / read
+        # only new manifest bytes — so "first" is the listing wall and
         # "mean" is the steady amortized cost.
-        out[f"{kind}_first_offset_sec"] = round(secs[0], 4) if secs else None
+        out[f"{kind}_first_offset_sec"] = round(secs[0], 4)
         out[f"{kind}_offset_mean_sec"] = round(_mean(secs[LISTING_WARM:]), 4)
         out[f"{kind}_trigger_rows"] = [int(p.get("numInputRows", 0)) for p in prog]
     return out
@@ -324,149 +344,6 @@ def run_relist_probe(spark, sf_dir: str, n: int = 64000, mfpt: int = 3000) -> di
         "relist_spikes_sec": spikes,
         "n_relists_observed": len(spikes),
     }
-
-
-def _dataplane_farm(spark, sf_dir: str, rows_per_file: int) -> tuple[str, str]:
-    """(files_dir, manifest_path): DATAPLANE_FILES parquet files of
-    EXACTLY ``rows_per_file`` events rows each (row_number slicing; the
-    events corpus is replicated with re-keyed event_ids when the rung
-    needs more rows than the fixture holds — content is irrelevant to a
-    throughput probe, only bytes/rows). Content-keyed via staged_once."""
-    import glob as _glob
-
-    from pyspark.sql import Window, functions as F
-
-    from odoo_batch_processing_spark.sources.loader import load_table
-    from odoo_batch_processing_spark.sources.sinks import staged_once
-
-    src = os.path.join(sf_dir, "events.parquet")
-    total = rows_per_file * DATAPLANE_FILES
-
-    def _build(d):
-        ev = load_table(spark, sf_dir, "events")
-        n_have = ev.count()
-        k = -(-total // n_have)  # ceil replication factor
-        if k > 1:
-            reps = F.explode(F.array(*[F.lit(i) for i in range(k)])).alias("__r")
-            ev = (
-                ev.select("*", reps)
-                .withColumn("event_id", F.col("event_id") * k + F.col("__r"))
-                .drop("__r")
-            )
-        # single-partition window is fine HERE: build-time only, ≤512k
-        # rows, cached by staged_once across runs
-        sliced = ev.withColumn(
-            "__rn", F.row_number().over(Window.orderBy("event_id"))
-        ).filter(F.col("__rn") <= total)
-        files_dir = os.path.join(d, "files")
-        os.makedirs(files_dir)
-        with open(os.path.join(d, "manifest.txt"), "w") as fh:
-            for i in range(DATAPLANE_FILES):
-                sub = os.path.join(d, f"_b{i}")
-                (
-                    sliced.filter(
-                        (F.col("__rn") > i * rows_per_file)
-                        & (F.col("__rn") <= (i + 1) * rows_per_file)
-                    )
-                    .drop("__rn")
-                    .coalesce(1)
-                    .write.mode("overwrite")
-                    .parquet(sub)
-                )
-                (part,) = _glob.glob(os.path.join(sub, "part-*.parquet"))
-                name = f"f{i:02d}.parquet"
-                os.link(part, os.path.join(files_dir, name))
-                fh.write(f"files/{name}\n")
-
-    root = staged_once(f"dataplane-farm-{rows_per_file}", src, _build)
-    return os.path.join(root, "files"), os.path.join(root, "manifest.txt")
-
-
-def run_dataplane_rung(spark, sf_dir: str, rows_per_file: int) -> dict:
-    """Per-trigger processing cost of both twins over identical files
-    of ``rows_per_file`` rows; ``addBatch`` is the data-plane phase."""
-    from odoo_batch_processing_spark.sources.manifest import manifest_source
-    from odoo_batch_processing_spark.sources.sinks import scratch_dir
-    from odoo_batch_processing_spark.streaming.queries import _mem_name
-    from odoo_batch_processing_spark.streaming.sources import change_source
-
-    from odoo_batch_processing_spark.sources.manifest import manifest_file_stream
-
-    files_dir, manifest = _dataplane_farm(spark, sf_dir, rows_per_file)
-    # third twin (round 16, VERDICT r15 #3): manifest discovery with a
-    # JVM data plane — all files pumped into the spool up front so the
-    # measured triggers are pure file-source scans at 1 file/trigger,
-    # like-for-like with the other two twins
-    spool_df, pump = manifest_file_stream(
-        spark,
-        manifest,
-        scratch_dir(f"dpl-spool-{rows_per_file}"),
-        max_files_per_trigger=1,
-    )
-    pump.pump()
-    out = {"rows_per_file": rows_per_file}
-    for kind, df in (
-        ("file", change_source(spark, files_dir, max_files_per_trigger=1)),
-        ("manifest", manifest_source(spark, manifest, max_files_per_trigger=1)),
-        ("spool", spool_df),
-    ):
-        name = _mem_name(f"dpl_{kind}_{rows_per_file}")
-        q = (
-            df.select("event_id", "user_id")
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option(
-                "checkpointLocation", scratch_dir(f"dpl-{kind}-{rows_per_file}-ckpt")
-            )
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            prog = [p for p in q.recentProgress if p.get("numInputRows", 0) > 0]
-        finally:
-            q.stop()
-            spark.catalog.dropTempView(name)
-        add = [p["durationMs"].get("addBatch", 0) / 1000.0 for p in prog]
-        trig = [p["durationMs"].get("triggerExecution", 0) / 1000.0 for p in prog]
-        out[f"{kind}_addbatch_secs"] = [round(s, 4) for s in add]
-        out[f"{kind}_addbatch_mean_sec"] = round(_mean(add[LISTING_WARM:]), 4)
-        out[f"{kind}_trigger_mean_sec"] = round(_mean(trig[LISTING_WARM:]), 4)
-        out[f"{kind}_trigger_rows"] = [int(p.get("numInputRows", 0)) for p in prog]
-    f_mean, m_mean = out["file_addbatch_mean_sec"], out["manifest_addbatch_mean_sec"]
-    out["overhead_ratio"] = round(m_mean / f_mean, 3) if f_mean > 0 else None
-    s_mean = out["spool_addbatch_mean_sec"]
-    out["spool_overhead_ratio"] = round(s_mean / f_mean, 3) if f_mean > 0 else None
-    return out
-
-
-def judge_dataplane(rungs: list[dict]) -> list[str]:
-    """Receipt rule: every measured trigger on both twins must carry
-    exactly the rung's rows_per_file — otherwise the twins stopped
-    measuring like-for-like batches; pure."""
-    for r in rungs:
-        # "spool" joined in round 16; .get keeps the judge valid over
-        # two-twin artifacts from earlier rounds
-        for kind in ("file", "manifest", "spool"):
-            trig = r.get(f"{kind}_trigger_rows")
-            if trig is None:
-                continue
-            if any(rows != r["rows_per_file"] for rows in trig):
-                return ["dataplane_receipt_mismatch"]
-    return []
-
-
-def dataplane_bind_point(rungs: list[dict], kind: str = "manifest") -> int | None:
-    """Smallest rows/trigger where ``kind``'s data plane is BOUND:
-    addBatch mean ≥ BIND_RATIO × the file twin's AND past the jitter
-    floor. None = unbound at every measured rung; pure."""
-    for r in rungs:
-        f, m = r["file_addbatch_mean_sec"], r.get(f"{kind}_addbatch_mean_sec")
-        if m is None:
-            continue
-        if m > DATAPLANE_ABS_FLOOR and f > 0 and m >= DATAPLANE_BIND_RATIO * f:
-            return r["rows_per_file"]
-    return None
 
 
 def _fit_per_file(
@@ -597,53 +474,7 @@ def main() -> int:
         "relist_probe": run_relist_probe(spark, args.sf_dir),
     }
 
-    run_dataplane_rung(spark, args.sf_dir, 64)  # warm the probe path
-    drungs = []
-    for rpf in DATAPLANE_RUNGS:
-        r = run_dataplane_rung(spark, args.sf_dir, rpf)
-        drungs.append(r)
-        print(
-            f"[R={rpf:6d}/file] addBatch file={r['file_addbatch_mean_sec']:.4f}s "
-            f"manifest={r['manifest_addbatch_mean_sec']:.4f}s "
-            f"spool={r['spool_addbatch_mean_sec']:.4f}s "
-            f"ratio={r['overhead_ratio']} spool_ratio={r['spool_overhead_ratio']}",
-            file=sys.stderr,
-        )
-    top = drungs[-1]
-    dataplane = {
-        "rungs": list(DATAPLANE_RUNGS),
-        "n_files": DATAPLANE_FILES,
-        "warm": LISTING_WARM,
-        "bind_ratio": DATAPLANE_BIND_RATIO,
-        "abs_floor_sec": DATAPLANE_ABS_FLOOR,
-        "results": drungs,
-        "file_rows_per_sec_top": (
-            round(top["rows_per_file"] / top["file_addbatch_mean_sec"])
-            if top["file_addbatch_mean_sec"] > 0
-            else None
-        ),
-        "manifest_rows_per_sec_top": (
-            round(top["rows_per_file"] / top["manifest_addbatch_mean_sec"])
-            if top["manifest_addbatch_mean_sec"] > 0
-            else None
-        ),
-        "spool_rows_per_sec_top": (
-            round(top["rows_per_file"] / top["spool_addbatch_mean_sec"])
-            if top["spool_addbatch_mean_sec"] > 0
-            else None
-        ),
-        "binds_at_rows_per_trigger": dataplane_bind_point(drungs),
-        # the spool twin is the claim-closer: manifest protocol,
-        # JVM data plane — bound nowhere on the ladder means the
-        # Python-DataSource tax is shed, not just asserted
-        "spool_binds_at_rows_per_trigger": dataplane_bind_point(drungs, kind="spool"),
-    }
-
-    flags = (
-        judge(results)
-        + judge_listing(listing["results"])
-        + judge_dataplane(dataplane["results"])
-    )
+    flags = judge(results) + judge_listing(listing["results"])
     payload = {
         "metric": "scale_batches",
         "sf_dir": args.sf_dir,
@@ -655,7 +486,6 @@ def main() -> int:
         "tail": TAIL,
         "results": results,
         "listing": listing,
-        "dataplane": dataplane,
         "flagged": flags,
     }
     line = json.dumps(payload, separators=(",", ":"))
