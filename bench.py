@@ -285,11 +285,6 @@ def main() -> int:
     from odoo_batch_processing_spark.registry import all_queries
     from odoo_batch_processing_spark.session import get_spark, release_materialized
 
-    # 48g driver heap: the bench session executes ~250 queries
-    # (50 × 5 reps) including checkpoint-heavy dedup pipelines; the
-    # default 24g runs close enough to the GC ceiling that late-suite
-    # queries see multi-second GC stalls (observed 2-10× rep outliers).
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
     spark = get_spark("bench", cpus=cpus, shuffle_partitions=cpus)
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -232,13 +232,27 @@ def materialized_scope(blocking: bool = False):
                 pass  # session already stopped — nothing left to unpin
 
 
+def _default_driver_heap_gb() -> int:
+    """Driver heap when ``SPARK_GRAFT_DRIVER_MEM`` is unset: half of
+    the host's physical memory (``MemTotal``) in whole GB, at least 1,
+    so a local session cannot grow past what the machine has."""
+    with open("/proc/meminfo") as f:
+        for line in f:
+            if line.startswith("MemTotal:"):
+                return max(1, int(line.split()[1]) // (2 << 20))
+    raise RuntimeError("MemTotal missing from /proc/meminfo")
+
+
 def get_spark(
     app_name: str = "odoo-batch-processing-spark",
     cpus: int | None = None,
     shuffle_partitions: int | None = None,
     extra_confs: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or fetch) a local-mode session sized to this machine."""
+    """Build (or fetch) a local-mode session sized to this machine:
+    ``local[cpus]`` (``SPARK_GRAFT_CPUS``, else the core count) and a
+    driver heap of ``SPARK_GRAFT_DRIVER_MEM``, else
+    :func:`_default_driver_heap_gb`."""
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 4)))
     if shuffle_partitions is None:
@@ -247,7 +261,10 @@ def get_spark(
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", f"{_default_driver_heap_gb()}g"),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # GC'd RDDs drop their reliable-checkpoint files too — without

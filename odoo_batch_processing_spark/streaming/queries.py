@@ -361,9 +361,10 @@ def _q_s_r19_cancel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_s_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Custom stateful op (applyInPandasWithState) run to exhaustion.
-    Single-file source → one micro-batch → the emitted running totals
-    equal the overall per-user totals, which the oracle asserts."""
+    """Stateful per-user totals (Spark's built-in streaming aggregate,
+    state in the state store) run to exhaustion. Single-file source →
+    one micro-batch → the emitted running totals equal the overall
+    per-user totals, which the oracle asserts."""
     from odoo_batch_processing_spark.streaming.stateful import running_totals
 
     stream = change_source(spark, _events_dir(sf_dir))
@@ -534,10 +535,9 @@ def _q_s_x4_stream_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_s_stateful_totals_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     """:func:`_q_s_stateful_totals` on the Spark-4 successor API
     (``transformWithStateInPandas``), certified against the SAME
-    oracle — the migration contract off the deprecated
-    applyInPandasWithState. The new API only runs on the RocksDB
-    state store provider, so it is set for this query and restored
-    after (the legacy-API queries keep the default HDFS-backed store;
+    oracle. The new API only runs on the RocksDB state store
+    provider, so it is set for this query and restored after (the
+    other stateful queries keep the default HDFS-backed store;
     provider choice is per-query at stream start)."""
     from odoo_batch_processing_spark.streaming.stateful import running_totals_tws
 

@@ -1,5 +1,4 @@
-"""Custom stateful streaming operator: per-key running totals via
-``applyInPandasWithState``.
+"""Per-key streaming state: running totals and event transitions.
 
 The reference's only state is run-scoped (success/error counters and
 the cancel flag, Odoo-Batch-Processing.user.js:400, 443-444) — driver
@@ -7,52 +6,40 @@ state, reproduced in streaming/throttle.py. This module adds the
 genuinely distributed form: per-KEY state that lives in the state
 store, survives across micro-batches, and scales horizontally — the
 operator a 100 TB event pipeline needs for running counters/feature
-accumulation where built-in windowed aggs don't fit.
+accumulation.
 
-State is Arrow-batched per group; the state store shuffles by key, so
-the operator's scale behavior is the same hash-shuffle story as a
-groupBy — skewed keys want salting upstream (SCALE.md).
+Running totals (count, min, max) are commutative, so the core form is
+Spark's built-in streaming aggregate: the state store holds the
+partial aggregates and the whole plan stays in the JVM. The
+arbitrary-state APIs keep one operator each: ``transitions_stream``
+(order-sensitive, which a built-in aggregate cannot express, on
+``applyInPandasWithState``) and ``running_totals_tws`` (the same
+totals on the successor API ``transformWithStateInPandas``).
+
+The state store shuffles by key, so the operator's scale behavior is
+the same hash-shuffle story as a groupBy — skewed keys want salting
+upstream (SCALE.md).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 OUT_SCHEMA = "user_id bigint, n_events bigint, min_event_id bigint, max_event_id bigint"
 STATE_SCHEMA = "n bigint, mn bigint, mx bigint"
 
 
-def _update_totals(key, pdfs, state: GroupState):
-    import pandas as pd
-
-    n, mn, mx = state.get if state.exists else (0, None, None)
-    for pdf in pdfs:
-        n += len(pdf)
-        batch_mn = int(pdf["event_id"].min())
-        batch_mx = int(pdf["event_id"].max())
-        mn = batch_mn if mn is None else min(mn, batch_mn)
-        mx = batch_mx if mx is None else max(mx, batch_mx)
-    state.update((n, mn, mx))
-    yield pd.DataFrame(
-        {"user_id": [key[0]], "n_events": [n], "min_event_id": [mn], "max_event_id": [mx]}
-    )
-
-
 def running_totals(stream_df: DataFrame) -> DataFrame:
     """(user_id, running count, id range) emitted each micro-batch the
-    key appears in; integer-only outputs so results are deterministic
-    regardless of within-batch arrival order."""
-    return (
-        stream_df.select("user_id", "event_id")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _update_totals,
-            OUT_SCHEMA,
-            STATE_SCHEMA,
-            "update",
-            GroupStateTimeout.NoTimeout,
-        )
+    key appears in (update mode): a built-in stateful aggregate whose
+    partial count/min/max live in the state store; integer-only
+    outputs so results are deterministic regardless of within-batch
+    arrival order."""
+    return stream_df.groupBy("user_id").agg(
+        F.count(F.lit(1)).alias("n_events"),
+        F.min("event_id").alias("min_event_id"),
+        F.max("event_id").alias("max_event_id"),
     )
 
 
@@ -63,12 +50,10 @@ def running_totals_tws(stream_df: DataFrame) -> DataFrame:
     state TTL, and schema evolution of state between job versions.
     Requires the RocksDB state store provider (the caller sets it;
     session.RUNTIME_CONFS leaves the default provider alone so the
-    legacy-API queries keep their HDFS-backed store).
+    other stateful queries keep their HDFS-backed store).
 
-    Semantics are identical to :func:`running_totals` by construction —
-    the registry certifies BOTH against the same per-user-totals
-    oracle, which is exactly the migration contract a production
-    pipeline needs when moving off the deprecated API."""
+    Semantics are identical to :func:`running_totals` — the registry
+    certifies BOTH against the same per-user-totals oracle."""
     from pyspark.sql.streaming.stateful_processor import (
         StatefulProcessor,
         StatefulProcessorHandle,

@@ -430,7 +430,8 @@ def test_tws_gate_matches_environment():
 
 def test_tws_running_totals_if_available(spark, tmp_path):
     """Where protobuf exists, the successor-API operator must land on
-    the same per-user totals as the legacy-API core query."""
+    the same per-user totals as the core query's built-in streaming
+    aggregate."""
     import pytest as _pytest
 
     from odoo_batch_processing_spark.streaming.queries import _has_tws_deps
@@ -440,8 +441,41 @@ def test_tws_running_totals_if_available(spark, tmp_path):
 
     from odoo_batch_processing_spark.registry import all_queries
 
-    got = all_queries(extended=True)["s_stateful_totals_tws"](
-        spark, "/root/testdata/sf0.001"
-    )
-    legacy = all_queries()["s_stateful_totals"](spark, "/root/testdata/sf0.001")
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, legacy.collect()))
+    got = all_queries(extended=True)["s_stateful_totals_tws"](spark, SF_SMOKE)
+    core = all_queries()["s_stateful_totals"](spark, SF_SMOKE)
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, core.collect()))
+
+
+def test_stateful_totals_is_builtin_state_store_aggregate(spark, duck, monkeypatch):
+    """s_stateful_totals runs as Spark's built-in streaming aggregate:
+    no Python-worker node in its plan, one state operator whose store
+    holds one row per distinct user, and rows equal to its oracle."""
+    import re
+
+    from odoo_batch_processing_spark.oracle import compare
+    from odoo_batch_processing_spark.registry import all_oracles, all_queries
+    from odoo_batch_processing_spark.streaming import queries as sq
+
+    seen = []
+    drain = sq.drain_memory_sink
+
+    def _capture(spark_, q, name):
+        seen.append(q)
+        return drain(spark_, q, name)
+
+    monkeypatch.setattr(sq, "drain_memory_sink", _capture)
+    got = all_queries()["s_stateful_totals"](spark, SF_SMOKE)
+    (q,) = seen
+
+    plan = q._jsq.explainInternal(True)
+    assert "StateStoreSave" in plan, plan
+    assert not re.search(r"Python|Pandas|InArrow", plan), plan
+
+    (state_op,) = q.lastProgress["stateOperators"]
+    (n_users,) = duck.execute(
+        "SELECT COUNT(*) FROM (SELECT DISTINCT user_id FROM events)"
+    ).fetchone()
+    assert state_op["numRowsTotal"] == n_users > 0
+
+    result = compare("s_stateful_totals", got, duck, all_oracles()["s_stateful_totals"])
+    assert result.ok, result

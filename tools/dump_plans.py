@@ -106,9 +106,9 @@ def render() -> str:
 
     # pinned like the core count: a broadcast stage prints the size of
     # its hashed relation, which is a whole number of Tungsten pages,
-    # and the default page size follows the heap (64 MiB at the 24g
-    # default heap, 32 MiB at 4g), so an unpinned render diffs on the
-    # host's heap setting. The small heap also keeps this session from
+    # and the default page size follows the heap (64 MiB at a 24g
+    # heap, 32 MiB at 4g), so an unpinned render diffs on the host's
+    # heap setting. The small heap also keeps this session from
     # crowding the one it runs beside under the hygiene suite.
     spark = get_spark(
         "dump-plans",
