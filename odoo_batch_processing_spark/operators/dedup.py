@@ -990,23 +990,21 @@ def verify_candidate_pairs(
     )
 
 
-#: Edge-count ceiling for the driver-local CC fast path: 200k edges is
-#: a few MB of longs — smaller than relations Spark routinely
-#: broadcasts, and far below driver heap. Override with
-#: SPARK_GRAFT_CC_LOCAL_CAP (0 disables the fast path entirely).
+#: Edge-count ceiling for the driver-local CC path: 200k edges is a
+#: few MB of longs — smaller than relations Spark routinely
+#: broadcasts, and far below driver heap.
 CC_LOCAL_EDGE_CAP = 200_000
 
 
-def _cc_local(vertices: DataFrame, edges: DataFrame, id_col: str) -> DataFrame:
-    """Driver-side union-find for pair graphs that fit one task — the
-    CC analog of a broadcast join: below :data:`CC_LOCAL_EDGE_CAP` the
-    distributed loop is ALL fixed overhead (per round: a join, an agg,
-    a count action, a lineage cut — ~2 s on a 261-edge fixture graph
-    for work a union-find does in microseconds). Same contract as the
-    distributed engines: every vertex labeled with the min vertex id
-    of its component.
+def _cc_local(vertices: DataFrame, rows: Sequence, id_col: str) -> DataFrame:
+    """Driver-side union-find over collected ``(doc_a, doc_b)`` edge
+    rows — the CC analog of a broadcast join: at or below
+    :data:`CC_LOCAL_EDGE_CAP` a distributed round is all fixed
+    overhead (shuffles, count actions and a lineage cut per round) for
+    work a union-find does in microseconds. Every vertex is labeled
+    with the min vertex id of its component.
 
-    Only EDGE ENDPOINTS are ever collected (≤ 2·edge-cap ids) — the
+    Only EDGE ENDPOINTS are held on the driver (≤ 2·edge-cap ids) — the
     vertex relation may be corpus-scale (isolated vertices label
     themselves), so isolates stay distributed: an anti-join against
     the endpoint labels, unioned back. The edge cap therefore bounds
@@ -1022,7 +1020,7 @@ def _cc_local(vertices: DataFrame, edges: DataFrame, id_col: str) -> DataFrame:
         return root
 
     touched: set = set()
-    for a, b in edges.select("doc_a", "doc_b").collect():
+    for a, b in rows:
         touched.add(a)
         touched.add(b)
         ra, rb = find(a), find(b)
@@ -1043,150 +1041,24 @@ def _cc_local(vertices: DataFrame, edges: DataFrame, id_col: str) -> DataFrame:
 
 
 def connected_components(
-    vertices: DataFrame,
-    edges: DataFrame,
-    id_col: str = "doc_id",
-    max_iters: int = 25,
-    stall_rounds: int | None = None,
-    local_cap: int | None = None,
+    vertices: DataFrame, edges: DataFrame, id_col: str = "doc_id", max_iters: int = 25
 ) -> DataFrame:
-    """Connected components by iterative min-label propagation — pure
-    DataFrame ops, driver-side loop.
+    """Connected components of the ``(doc_a, doc_b)`` pair graph.
 
-    Each round every vertex takes the min component label among itself
-    and its neighbors; convergence in O(component diameter) rounds.
-    Near-dup clusters are small and dense (diameter ≲ 4), so a handful
-    of rounds suffice; the lineage is truncated each round so the plan
-    does not grow with the iteration count. The long-chain form IS
-    implemented: :func:`connected_components_star` converges in
-    O(log n) rounds on a path graph where this loop needs O(n)
-    (measured by tests/test_text_dedup.py).
-
-    ``stall_rounds`` arms the structure probe (decision rule in
-    SCALE.md §Dedup): the per-round changed-label count is itself a
-    diameter estimate — dense shallow components collapse
-    geometrically (changed at least halves each round), while a long
-    chain advances its label frontier ~one hop per round (changed
-    stays flat). If changed fails to halve for ``stall_rounds``
-    consecutive transitions, the graph is deep and this loop is the
-    wrong engine: delegate to :func:`connected_components_star` for
-    its O(log n) rounds. ``None`` (the default) never escapes — the
-    plain loop is the measured winner on the shallow graphs near-dup
-    actually produces (SCALE.md corpus ladder: min-label 7.8 s vs star
-    10.5 s at 8× docs). :func:`connected_components_auto` is the
-    armed-probe convenience wrapper.
-
-    ``local_cap`` (default :data:`CC_LOCAL_EDGE_CAP`, env-overridable
-    via ``SPARK_GRAFT_CC_LOCAL_CAP``): edge graphs at or below the cap
-    are solved by driver-side union-find (:func:`_cc_local`) — the
-    size-adaptive escape that makes the common case (a dup-pair graph
-    orders of magnitude smaller than the corpus) cost one collect
-    instead of rounds of shuffles. The count that gates it is cheap:
-    callers hand in an already-materialized edge relation.
+    One rule, decided by what the edge set holds: the first
+    ``CC_LOCAL_EDGE_CAP + 1`` edges are collected in one job; if that
+    is all of them, driver-side union-find (:func:`_cc_local`) labels
+    the graph from those rows. A larger graph runs
+    :func:`connected_components_star` (O(log n) rounds, at most
+    ``max_iters`` of them, failing loudly past that budget).
 
     Returns (id_col, cluster_id): every vertex labeled with the min
     vertex id of its component (isolated vertices label themselves).
     """
-    if local_cap is None:
-        local_cap = int(os.environ.get("SPARK_GRAFT_CC_LOCAL_CAP", CC_LOCAL_EDGE_CAP))
-    if local_cap and edges.count() <= local_cap:
-        return _cc_local(vertices, edges, id_col)
-    # materialize the (small) edge set ONCE: the loop re-reads it every
-    # round, and without this the entire upstream pipeline (LSH +
-    # verify) would re-execute per iteration
-    sym = (
-        edges.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .union(edges.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
-        .transform(materialize_once)
-    )
-    labels = vertices.select(F.col(id_col).alias("id"), F.col(id_col).alias("comp"))
-    labels = labels.transform(truncate_lineage)
-
-    def _propagate(cur: DataFrame) -> tuple[DataFrame, int]:
-        nbr = sym.join(cur, sym["src"] == cur["id"]).select(
-            F.col("dst").alias("id"), F.col("comp")
-        )
-        new_labels = (
-            cur.union(nbr).groupBy("id").agg(F.min("comp").alias("comp"))
-        ).transform(truncate_lineage)
-        n_changed = (
-            new_labels.alias("n")
-            .join(cur.alias("o"), "id")
-            .filter(F.col("n.comp") != F.col("o.comp"))
-            .count()
-        )
-        return new_labels, n_changed
-
-    history: list[int] = []
-    for _ in range(max_iters):
-        labels, changed = _propagate(labels)
-        if changed == 0:
-            break
-        history.append(changed)
-        if (
-            stall_rounds is not None
-            and len(history) > stall_rounds
-            and all(
-                history[-i] > 0.5 * history[-i - 1]
-                for i in range(1, stall_rounds + 1)
-            )
-        ):
-            # deep graph: the frontier is crawling, not collapsing —
-            # hand the ORIGINAL edge set to the O(log n) engine (its
-            # rounds rewrite edges, so partial labels don't transfer)
-            out, _rounds = connected_components_star(
-                vertices, edges, id_col=id_col, max_iters=max_iters
-            )
-            return out
-    else:
-        # one unbudgeted CONFIRMING round first (ADVICE r15 #1):
-        # convergence is only ever observed via a zero-change round,
-        # so a graph whose propagation finishes in EXACTLY max_iters
-        # rounds holds final, correct labels the loop never got to
-        # confirm — probe once more and return them if nothing moves.
-        labels, changed = _propagate(labels)
-        if changed:
-            # fail-loud on exhaustion (review r14 #1, the edge_budget
-            # discipline of graph.pagerank): a component deeper than
-            # max_iters hops would otherwise get PARTIAL labels — two
-            # vertices of one component reported as two clusters —
-            # with a green return. Silently-wrong dedup labels at
-            # 100 TB are the exact failure class this engine
-            # fail-louds everywhere else.
-            raise RuntimeError(
-                "connected_components: min-label propagation did not "
-                f"converge in max_iters={max_iters} rounds (the "
-                f"confirming round still changed {changed:,} labels) "
-                "— the graph is deeper than the iteration budget; "
-                "raise max_iters, or use connected_components_star / "
-                "connected_components_auto (O(log n) rounds on long "
-                "chains)"
-            )
-    return labels.select(F.col("id").alias(id_col), F.col("comp").alias("cluster_id"))
-
-
-def connected_components_auto(
-    vertices: DataFrame,
-    edges: DataFrame,
-    id_col: str = "doc_id",
-    max_iters: int = 25,
-    local_cap: int | None = None,
-) -> DataFrame:
-    """Structure-adaptive CC — the library default for callers that
-    don't know their graph shape. Three tiers: graphs at or below the
-    local cap solve by driver-side union-find (one collect, zero
-    shuffles); above it, min-label with the stall probe armed
-    (``stall_rounds=2``), escaping to large-star/small-star when the
-    changed-label trajectory says the graph is deep. Decision rule and
-    the measured crossover behind it: SCALE.md §Dedup."""
-    return connected_components(
-        vertices,
-        edges,
-        id_col=id_col,
-        max_iters=max_iters,
-        stall_rounds=2,
-        local_cap=local_cap,
-    )
+    rows = edges.select("doc_a", "doc_b").limit(CC_LOCAL_EDGE_CAP + 1).collect()
+    if len(rows) <= CC_LOCAL_EDGE_CAP:
+        return _cc_local(vertices, rows, id_col)
+    return connected_components_star(vertices, edges, id_col, max_iters)[0]
 
 
 def connected_components_star(
@@ -1194,8 +1066,8 @@ def connected_components_star(
 ) -> tuple[DataFrame, int]:
     """Connected components by alternating large-star / small-star
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14) — the long-chain upgrade over
-    :func:`connected_components`'s one-hop min-label propagation.
+    SoCC'14) — the distributed path of :func:`connected_components`
+    for pair graphs above :data:`CC_LOCAL_EDGE_CAP`.
 
     Each round rewrites the edge set with two groupBy+join passes:
 
@@ -1205,17 +1077,16 @@ def connected_components_star(
       at their minimum.
 
     Distances to the component minimum roughly halve per round, so
-    convergence is O(log n) rounds on a LONG CHAIN where min-label
-    needs O(n) (tests/test_text_dedup.py measures both on a path
-    graph). Converged state is a star per component: every non-min
-    vertex holds one edge to its component minimum. Per-round cost is
-    the same shape as min-label (shuffles on vertex ids, volume
-    bounded by the current edge set, which only shrinks toward one
-    edge per non-min vertex).
+    convergence is O(log n) rounds even on a LONG CHAIN, where a
+    one-hop label propagation needs O(n). Converged state is a star
+    per component: every non-min vertex holds one edge to its
+    component minimum. Per-round cost is shuffles on vertex ids, with
+    volume bounded by the current edge set, which only shrinks toward
+    one edge per non-min vertex.
 
-    Returns (labels, rounds): (id_col, cluster_id) for every vertex —
-    identical to :func:`connected_components` — plus the round count
-    the loop took.
+    Returns (labels, rounds): (id_col, cluster_id) for every vertex,
+    each labeled with the min vertex id of its component, plus the
+    round count the loop took.
     """
     e = (
         edges.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
@@ -1261,15 +1132,14 @@ def connected_components_star(
         if changed == 0:
             break
     else:
-        # one unbudgeted CONFIRMING round (ADVICE r15 #1, same as
-        # connected_components): a contraction that reaches the fixed
-        # point on EXACTLY round max_iters is final but unconfirmed —
-        # probe once more before refusing.
+        # one unbudgeted CONFIRMING round: a contraction that reaches
+        # the fixed point on EXACTLY round max_iters is final but
+        # unconfirmed — probe once more before refusing.
         e, changed = _star_round(e)
         if changed:
-            # same exhaustion contract as connected_components (review
-            # r14 #1): a non-fixed-point edge set means labels derived
-            # from it are not component minima — refuse to return them.
+            # a non-fixed-point edge set means labels derived from it
+            # are not component minima — refuse to return them rather
+            # than split one component into two clusters.
             raise RuntimeError(
                 "connected_components_star: star contraction did not "
                 f"reach a fixed point in max_iters={max_iters} rounds "
@@ -1305,59 +1175,17 @@ def _q_x3_neardup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     sets = _doc_shingle_sets(spark, sf_dir).transform(materialize_once)
     candidates = lsh_candidate_pairs(minhash_band_keys(sets))
     edges = verify_candidate_pairs(candidates, sets)
-    # the propagation loop runs over the PAIR GRAPH only (vertices with
-    # at least one verified edge — a tiny fraction of the corpus);
-    # isolated documents join back afterward labeling themselves. At
-    # 100 TB this keeps every CC iteration proportional to the dup
-    # graph, not the corpus.
-    edges = edges.transform(materialize_once)  # LSH + verify runs once, not per CC round
+    # CC runs over the PAIR GRAPH only (vertices with at least one
+    # verified edge — a tiny fraction of the corpus); isolated documents
+    # join back afterward labeling themselves. At 100 TB this keeps CC
+    # proportional to the dup graph, not the corpus.
+    edges = edges.transform(materialize_once)  # LSH + verify runs once, not per CC read
     edge_vertices = (
         edges.select(F.col("doc_a").alias("doc_id"))
         .union(edges.select(F.col("doc_b").alias("doc_id")))
         .distinct()
     )
     comp = connected_components(edge_vertices, edges)
-    return docs.select("doc_id").join(comp, "doc_id", "left").select(
-        "doc_id", F.coalesce(F.col("cluster_id"), F.col("doc_id")).alias("cluster_id")
-    )
-
-
-def _q_x3_neardup_survivors_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`x3_neardup_survivors` with the large-star/small-star CC
-    (`connected_components_star`) — identical clustering under the
-    same oracle; the difference is O(log n) convergence on long
-    chains, which is the form to run at corpus scale."""
-    docs = load_table(spark, sf_dir, "documents")
-    sets = _doc_shingle_sets(spark, sf_dir).transform(materialize_once)
-    candidates = lsh_candidate_pairs(minhash_band_keys(sets))
-    edges = verify_candidate_pairs(candidates, sets).transform(materialize_once)
-    edge_vertices = (
-        edges.select(F.col("doc_a").alias("doc_id"))
-        .union(edges.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-    )
-    comp, _rounds = connected_components_star(edge_vertices, edges)
-    return docs.select("doc_id").join(comp, "doc_id", "left").select(
-        "doc_id", F.coalesce(F.col("cluster_id"), F.col("doc_id")).alias("cluster_id")
-    )
-
-
-def _q_x3_neardup_survivors_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`x3_neardup_survivors` through the structure-adaptive dispatch
-    (`connected_components_auto`): min-label with the stall probe
-    armed. On the fixture's shallow dup graph the probe never fires
-    and this IS the min-label plan; on a deep graph it escapes to
-    star. Same clustering either way — same oracle."""
-    docs = load_table(spark, sf_dir, "documents")
-    sets = _doc_shingle_sets(spark, sf_dir).transform(materialize_once)
-    candidates = lsh_candidate_pairs(minhash_band_keys(sets))
-    edges = verify_candidate_pairs(candidates, sets).transform(materialize_once)
-    edge_vertices = (
-        edges.select(F.col("doc_a").alias("doc_id"))
-        .union(edges.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-    )
-    comp = connected_components_auto(edge_vertices, edges)
     return docs.select("doc_id").join(comp, "doc_id", "left").select(
         "doc_id", F.coalesce(F.col("cluster_id"), F.col("doc_id")).alias("cluster_id")
     )
@@ -1414,8 +1242,6 @@ QUERIES = {
     "x2_distinct_pairs": _q_x2_distinct_pairs,
     "x3_minhash_indexed": _q_x3_minhash_indexed,
     "x3_incremental_embedding_neardup": _q_x3_incremental_embedding_neardup,
-    "x3_neardup_survivors_star": _q_x3_neardup_survivors_star,
-    "x3_neardup_survivors_auto": _q_x3_neardup_survivors_auto,
     "x3_fuzzy_join_parts": _q_x3_fuzzy_join_parts,
 }
 
@@ -1645,12 +1471,6 @@ ORACLES["x3_neardup_survivors"] = f"""
 # identical output contract to the in-memory signature pipeline — only
 # the physical access path (persisted band-partitioned index) differs
 ORACLES["x3_minhash_indexed"] = ORACLES["x3_minhash_lsh"]
-# identical clustering — only the CC algorithm (large-star/small-star
-# vs one-hop min-label) differs
-ORACLES["x3_neardup_survivors_star"] = ORACLES["x3_neardup_survivors"]
-# identical clustering again — the structure-adaptive dispatch picks
-# one of the two oracle-identical engines at runtime
-ORACLES["x3_neardup_survivors_auto"] = ORACLES["x3_neardup_survivors"]
 
 # candidate pairs restricted to those whose larger side is in the new
 # batch (the top doc_id decile), then exact-Jaccard verified — the SQL

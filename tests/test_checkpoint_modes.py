@@ -10,6 +10,7 @@ import os
 
 from pyspark.sql import functions as F
 
+from odoo_batch_processing_spark.operators import dedup
 from odoo_batch_processing_spark.session import (
     CHECKPOINT_DIR_ENV,
     RELIABLE_CHECKPOINT_ENV,
@@ -19,20 +20,19 @@ from tests.conftest import SF_SMOKE
 
 
 def _neardup_rows(spark):
-    from odoo_batch_processing_spark.operators.dedup import _q_x3_neardup_survivors
-
     return sorted(
         (r["doc_id"], r["cluster_id"])
-        for r in _q_x3_neardup_survivors(spark, SF_SMOKE).collect()
+        for r in dedup._q_x3_neardup_survivors(spark, SF_SMOKE).collect()
     )
 
 
 def test_reliable_checkpoint_same_results(spark, tmp_path, monkeypatch):
     """x3_neardup_survivors (the heaviest checkpoint user: shingle index,
-    band keys, CC loop) must produce identical clusters on both paths.
-    The CC local fast path is disabled so the distributed loop — the
-    only lineage-cut user in this query — actually runs."""
-    monkeypatch.setenv("SPARK_GRAFT_CC_LOCAL_CAP", "0")
+    band keys, CC rounds) must produce identical clusters on both paths.
+    The CC edge cap is patched to 0 so large-star/small-star — the
+    only lineage-cut user in this query, once per round — actually
+    runs."""
+    monkeypatch.setattr(dedup, "CC_LOCAL_EDGE_CAP", 0)
     local = _neardup_rows(spark)
 
     monkeypatch.setenv(RELIABLE_CHECKPOINT_ENV, "1")

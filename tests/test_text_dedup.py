@@ -155,10 +155,11 @@ def test_hot_bucket_cap_bounds_pair_fanout(spark):
     )
 
 
-def test_connected_components_min_label(spark):
+def test_connected_components_min_label(spark, monkeypatch):
     """Chain + triangle + isolate: every vertex labels with its
-    component's min id; the isolate labels itself."""
-    from odoo_batch_processing_spark.operators.dedup import connected_components
+    component's min id; the isolate labels itself — on both sides of
+    the edge cap."""
+    from odoo_batch_processing_spark.operators import dedup
 
     vertices = spark.createDataFrame([(i,) for i in range(1, 9)], "doc_id bigint")
     # chain 1-2-3-4, triangle 5-6-7, isolate 8
@@ -168,12 +169,16 @@ def test_connected_components_min_label(spark):
     want = {1: 1, 2: 1, 3: 1, 4: 1, 5: 5, 6: 5, 7: 5, 8: 8}
     # default path: the graph is under CC_LOCAL_EDGE_CAP, so this is
     # the driver-side union-find
-    got = {r["doc_id"]: r["cluster_id"] for r in connected_components(vertices, edges).collect()}
+    got = {
+        r["doc_id"]: r["cluster_id"]
+        for r in dedup.connected_components(vertices, edges).collect()
+    }
     assert got == want
-    # distributed loop forced (local_cap=0): identical labels
+    # above the cap (patched to 0): large-star/small-star, same labels
+    monkeypatch.setattr(dedup, "CC_LOCAL_EDGE_CAP", 0)
     dist = {
         r["doc_id"]: r["cluster_id"]
-        for r in connected_components(vertices, edges, local_cap=0).collect()
+        for r in dedup.connected_components(vertices, edges).collect()
     }
     assert dist == want
 
@@ -230,7 +235,7 @@ def test_simhash_from_tokens_matches_exploded_groupby(spark):
 
 def test_star_cc_matches_minlabel_on_fixture(spark):
     """Large-star/small-star must produce the identical clustering to
-    the min-label loop on the real verified pair graph."""
+    the union-find path on the real verified pair graph."""
     from odoo_batch_processing_spark.operators import dedup as D
     from pyspark.sql import functions as F
 
@@ -255,14 +260,10 @@ def test_star_cc_matches_minlabel_on_fixture(spark):
 
 
 def test_star_cc_log_rounds_on_long_chain(spark):
-    """On a 64-vertex path graph the min-label loop needs O(n) rounds
-    (it does NOT converge within its 25-round cap) while
-    large-star/small-star converges in O(log n) — the reason it is the
-    corpus-scale form."""
-    from odoo_batch_processing_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
+    """On a 64-vertex path graph, where one-hop label propagation would
+    need O(n) rounds, large-star/small-star converges in O(log n) —
+    the reason it is the corpus-scale form."""
+    from odoo_batch_processing_spark.operators.dedup import connected_components_star
     from pyspark.sql import functions as F
 
     n = 64
@@ -275,56 +276,55 @@ def test_star_cc_log_rounds_on_long_chain(spark):
     assert labels == {i: 0 for i in range(n)}  # one component rooted at 0
     assert rounds <= 8, f"expected O(log n) rounds, took {rounds}"
 
-    # the one-hop loop capped at the same 25 rounds does NOT finish
-    # (local_cap=0: the point is the DISTRIBUTED loop's round bound —
-    # the union-find fast path would trivially solve it) — and since
-    # round 15 that exhaustion FAILS LOUD instead of returning partial
-    # labels (review r14 #1)
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(verts, edges, max_iters=25, local_cap=0)
 
+def test_cc_long_chain_above_cap_converges(spark, monkeypatch):
+    """Above the edge cap (patched to 0) the entry point labels a
+    64-vertex chain — 63 hops, deeper than the 25-round budget — as
+    one component rooted at 0, within the default budget."""
+    from odoo_batch_processing_spark.operators import dedup
 
-def test_cc_auto_picks_engine_by_structure(spark, monkeypatch):
-    """The structure-adaptive dispatch (SCALE.md §Dedup decision rule):
-    on a long chain the changed-label counts stay flat (frontier
-    crawls one hop/round), so the stall probe fires and the star
-    engine finishes the job; on a shallow dense graph the counts
-    collapse geometrically, the probe never fires, and star is never
-    invoked. Both paths must produce the exact min-id clustering."""
-    import odoo_batch_processing_spark.operators.dedup as D
-    from pyspark.sql import functions as F
-
-    calls = []
-    orig = D.connected_components_star
-
-    def spy(*a, **k):
-        calls.append("star")
-        return orig(*a, **k)
-
-    monkeypatch.setattr(D, "connected_components_star", spy)
-
-    # deep: a 40-vertex path — min-label would need ~40 rounds
-    n = 40
-    chain = spark.range(n - 1).select(
+    monkeypatch.setattr(dedup, "CC_LOCAL_EDGE_CAP", 0)
+    n = 64
+    edges = spark.range(n - 1).select(
         F.col("id").alias("doc_a"), (F.col("id") + 1).alias("doc_b")
     )
     verts = spark.range(n).select(F.col("id").alias("doc_id"))
-    out = D.connected_components_auto(verts, chain, local_cap=0)
-    assert calls == ["star"], "stall probe should escape to star on a chain"
-    assert {r["cluster_id"] for r in out.collect()} == {0}
+    labels = {
+        r["doc_id"]: r["cluster_id"]
+        for r in dedup.connected_components(verts, edges).collect()
+    }
+    assert labels == {i: 0 for i in range(n)}
 
-    # shallow: disjoint triangles {3k, 3k+1, 3k+2} — collapses in one
-    # round, the probe must NOT fire
-    calls.clear()
-    tri = spark.range(30).select(
-        F.col("id").alias("doc_a"),
-        ((F.col("id") - F.col("id") % 3) + (F.col("id") + 1) % 3).alias("doc_b"),
-    )
-    verts3 = spark.range(30).select(F.col("id").alias("doc_id"))
-    out3 = D.connected_components_auto(verts3, tri, local_cap=0)
-    assert calls == [], "shallow graph must stay on min-label"
-    got = {r["doc_id"]: r["cluster_id"] for r in out3.collect()}
-    assert got == {i: i - i % 3 for i in range(30)}
+
+def test_cc_dispatch_by_edge_count(spark, monkeypatch):
+    """The one dispatch rule: exactly CC_LOCAL_EDGE_CAP edges go to the
+    driver union-find, one more goes to large-star/small-star, and
+    both label a chain as one component rooted at its min id."""
+    import odoo_batch_processing_spark.operators.dedup as D
+
+    calls = []
+    for name in ("_cc_local", "connected_components_star"):
+        orig = getattr(D, name)
+
+        def spy(*a, _name=name, _orig=orig, **k):
+            calls.append(_name)
+            return _orig(*a, **k)
+
+        monkeypatch.setattr(D, name, spy)
+    cap = 4
+    monkeypatch.setattr(D, "CC_LOCAL_EDGE_CAP", cap)
+
+    for n_edges, engine in ((cap, "_cc_local"), (cap + 1, "connected_components_star")):
+        calls.clear()
+        edges = spark.range(n_edges).select(
+            F.col("id").alias("doc_a"), (F.col("id") + 1).alias("doc_b")
+        )
+        verts = spark.range(n_edges + 1).select(F.col("id").alias("doc_id"))
+        out = D.connected_components(verts, edges)
+        assert calls == [engine], (n_edges, calls)
+        assert {r["doc_id"]: r["cluster_id"] for r in out.collect()} == {
+            i: 0 for i in range(n_edges + 1)
+        }
 
 
 def test_cc_local_never_collects_corpus_scale_vertices(spark):
@@ -510,16 +510,12 @@ def test_deterministic_dedup_hostile_column_names(spark):
 
 
 def test_cc_exhaustion_fails_loud(spark):
-    """Review r14 #1: a component DEEPER than the iteration budget must
-    raise, never return partial labels with a green exit. Planted
-    16-vertex chain + max_iters far below its diameter, on both
-    distributed engines (local_cap=0 keeps the union-find fast path —
-    which has no iteration cap — out of the way); the same graph under
-    a sufficient budget still converges to the exact clustering."""
-    from odoo_batch_processing_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
+    """A component the star engine cannot contract within its
+    iteration budget must raise, never return partial labels with a
+    green exit. Planted 16-vertex chain + max_iters=1; the same graph
+    under a sufficient budget still converges to the exact
+    clustering."""
+    from odoo_batch_processing_spark.operators.dedup import connected_components_star
 
     n = 16
     edges = spark.range(n - 1).select(
@@ -527,30 +523,20 @@ def test_cc_exhaustion_fails_loud(spark):
     )
     verts = spark.range(n).select(F.col("id").alias("doc_id"))
 
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(verts, edges, max_iters=3, local_cap=0)
     with pytest.raises(RuntimeError, match="fixed point"):
         connected_components_star(verts, edges, max_iters=1)
 
     # sufficiency control: the raise is about the BUDGET, not the graph
-    ok = connected_components(verts, edges, max_iters=n + 1, local_cap=0)
-    assert {r["cluster_id"] for r in ok.collect()} == {0}
     star, _rounds = connected_components_star(verts, edges, max_iters=25)
     assert {r["cluster_id"] for r in star.collect()} == {0}
 
 
 def test_cc_exactly_max_iters_confirms_and_returns(spark):
-    """ADVICE r15 #1: a graph whose propagation finishes in EXACTLY
+    """A star contraction that reaches its fixed point in EXACTLY
     max_iters rounds holds final labels the loop never confirmed with
     a zero-change round — it must CONFIRM (one unbudgeted probe
-    round) and return them, not raise. An n-vertex path needs n-1
-    one-hop min-label rounds; budgeting exactly that must succeed,
-    one fewer must still raise. Same contract for the star engine at
-    its own measured round count."""
-    from odoo_batch_processing_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
+    round) and return them, not raise."""
+    from odoo_batch_processing_spark.operators.dedup import connected_components_star
 
     n = 6
     edges = spark.range(n - 1).select(
@@ -558,15 +544,9 @@ def test_cc_exactly_max_iters_confirms_and_returns(spark):
     )
     verts = spark.range(n).select(F.col("id").alias("doc_id"))
 
-    out = connected_components(verts, edges, max_iters=n - 1, local_cap=0)
-    assert {r["cluster_id"] for r in out.collect()} == {0}
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(verts, edges, max_iters=n - 2, local_cap=0)
-
-    # star: `rounds` includes the zero-change round that observed the
-    # fixed point, so rounds-1 productive rounds REACHED it — a budget
-    # of rounds-1 previously raised on exhaustion and must now succeed
-    # via the confirming probe
+    # `rounds` includes the zero-change round that observed the fixed
+    # point, so rounds-1 productive rounds REACHED it — a budget of
+    # rounds-1 must succeed via the confirming probe
     _, rounds = connected_components_star(verts, edges, max_iters=25)
     assert rounds > 1
     star, _ = connected_components_star(verts, edges, max_iters=rounds - 1)

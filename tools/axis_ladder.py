@@ -22,8 +22,10 @@ volume stays ~flat across the rungs; a per-item quadratic rises
   VARIANT paths.
 
 Protocol, every axis: build the rung's corpus, run every stage once
-to warm it (codegen, scan cache), then time every stage after a
-release of the session's pins and cache. Flags come from
+to warm it (codegen, scan cache), then time every stage REPS times,
+each after a release of the session's pins and cache, and record the
+minimum: one neighbour-load spike on a shared host must not read as
+a superlinear stage. Flags come from
 tools/ladder_flags.py: the absolute top-rung rule (> FLAG_RATIO) and
 per-rung family divergence, with each stage's output rows feeding the
 output-bound exemption.
@@ -52,6 +54,8 @@ from tools.ladder_flags import flagged_stages  # noqa: E402
 #: loose on purpose: larger items legitimately shift work between
 #: stages; the quadratic signature these ladders hunt is ≳10×
 FLAG_RATIO = 4.0
+#: timed runs per stage and rung; the artifact records the fastest
+REPS = 3
 
 
 def _dim_corpus(spark, out: str, n_vecs: int, dim: int) -> None:
@@ -222,9 +226,9 @@ AXES: dict[str, Axis] = {
 
 
 def run_axis(spark, axis: Axis) -> list[dict]:
-    """Every rung of one axis: build, warm, time. One result row per
-    rung: ``{"mult", <count key>, <size key>, "stages": {stage:
-    {"sec", "rows"}}}``."""
+    """Every rung of one axis: build, warm, time (min of REPS). One
+    result row per rung: ``{"mult", <count key>, <size key>,
+    "stages": {stage: {"sec", "rows"}}}``."""
     from bench import drain
     from odoo_batch_processing_spark.registry import all_queries
     from odoo_batch_processing_spark.session import release_materialized
@@ -240,12 +244,14 @@ def run_axis(spark, axis: Axis) -> list[dict]:
             drain(queries[stage](spark, corpus))
         row = {"mult": mult, axis.keys[2]: count, axis.keys[3]: size, "stages": {}}
         for stage in axis.stages:
-            release_materialized()
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            rows = drain(queries[stage](spark, corpus))
-            sec = round(time.perf_counter() - t0, 2)
-            row["stages"][stage] = {"sec": sec, "rows": rows}
+            times = []
+            for _ in range(REPS):
+                release_materialized()
+                spark.catalog.clearCache()
+                t0 = time.perf_counter()
+                rows = drain(queries[stage](spark, corpus))
+                times.append(time.perf_counter() - t0)
+            row["stages"][stage] = {"sec": round(min(times), 2), "rows": rows}
         results.append(row)
         print(
             f"[{axis.name} x{mult}: {count} items of {size}] "
