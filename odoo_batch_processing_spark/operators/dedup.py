@@ -1175,20 +1175,10 @@ def _q_x3_neardup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     sets = _doc_shingle_sets(spark, sf_dir).transform(materialize_once)
     candidates = lsh_candidate_pairs(minhash_band_keys(sets))
     edges = verify_candidate_pairs(candidates, sets)
-    # CC runs over the PAIR GRAPH only (vertices with at least one
-    # verified edge — a tiny fraction of the corpus); isolated documents
-    # join back afterward labeling themselves. At 100 TB this keeps CC
-    # proportional to the dup graph, not the corpus.
     edges = edges.transform(materialize_once)  # LSH + verify runs once, not per CC read
-    edge_vertices = (
-        edges.select(F.col("doc_a").alias("doc_id"))
-        .union(edges.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-    )
-    comp = connected_components(edge_vertices, edges)
-    return docs.select("doc_id").join(comp, "doc_id", "left").select(
-        "doc_id", F.coalesce(F.col("cluster_id"), F.col("doc_id")).alias("cluster_id")
-    )
+    # every document is a vertex; connected_components labels the ones
+    # with no verified edge with their own id
+    return connected_components(docs.select("doc_id"), edges)
 
 
 def _q_x3_fuzzy_join_parts(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -61,6 +61,19 @@ RUNTIME_CONFS: dict[str, str] = {
     # here (runtime-settable) so driver-provided sessions get the same
     # join-strategy envelope as get_spark() sessions.
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+    # Streaming checkpoints (offset/commit logs, the file source's
+    # seen-files log, state-store deltas) through the FileSystem API.
+    # Without the native Hadoop library, the default FileContext
+    # manager has Hadoop launch a `chmod` process per checkpoint file
+    # created and a `readlink` process per rename. Safe: every
+    # checkpoint the package writes is a local .scratch or Spark temp
+    # dir, where rename(2) is atomic, and Spark falls back to this
+    # manager itself when FileContext is unavailable. configure()
+    # applies it to every engine session, including harness-built ones.
+    "spark.sql.streaming.checkpointFileManagerClass": (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    ),
 }
 
 

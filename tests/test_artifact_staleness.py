@@ -175,6 +175,38 @@ def test_uncommitted_artifact_gets_no_doc_only_refinement(tmp_path, monkeypatch)
     assert res["details"]["ART.json"]["doc_only_deps"] == []
 
 
+def test_regenerated_artifact_measured_dirty_deps_edited_before_it(tmp_path, monkeypatch):
+    """An artifact regenerated over its committed copy after a dep's
+    uncommitted edit measured that edit: fresh. A dep edited after the
+    regeneration still flags."""
+    repo = tmp_path
+    (repo / "tools").mkdir()
+    (repo / "tools" / "mytool.py").write_text("import json\n")
+    (repo / "ART.json").write_text(json.dumps({"results": []}))
+    _git(repo, "init", "-q")
+    _git(repo, "add", "-A")
+    _git(repo, "commit", "-qm", "dep + artifact", date="2024-01-01T00:00:00")
+
+    monkeypatch.setattr(ast_tool, "REPO_ROOT", str(repo))
+    monkeypatch.setitem(ast_tool.ARTIFACT_TOOLS, "ART.json", "tools/mytool.py")
+
+    # executable dep edit, then the artifact re-run (both staged)
+    (repo / "tools" / "mytool.py").write_text("import json\nX = 1\n")
+    os.utime(repo / "tools" / "mytool.py", (1704153600, 1704153600))  # 2024-01-02
+    (repo / "ART.json").write_text(json.dumps({"results": [], "rerun": 1}))
+    os.utime(repo / "ART.json", (1704240000, 1704240000))  # 2024-01-03
+    _git(repo, "add", "-A")
+    res = ast_tool.check(["ART.json"], registry_mods={})
+    assert res["stale"] == []
+
+    # a further executable edit after the re-run flags
+    (repo / "tools" / "mytool.py").write_text("import json\nX = 2\n")
+    os.utime(repo / "tools" / "mytool.py", (1704326400, 1704326400))  # 2024-01-04
+    res = ast_tool.check(["ART.json"], registry_mods={})
+    assert res["stale"] == ["ART.json"]
+    assert res["details"]["ART.json"]["uncommitted_deps"] == ["tools/mytool.py"]
+
+
 def test_code_fingerprint_semantics():
     fp = ast_tool.code_fingerprint
     # docstrings and comments are invisible

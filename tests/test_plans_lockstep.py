@@ -48,6 +48,8 @@ def test_normalize_strips_volatile_ids_only():
     stale = "Condition : ((df#2248L >= 2) AND (df#2248L <= 250)) [plan_id=17]"
     assert normalize(a) == normalize(b)
     assert normalize(a) != normalize(stale)
+    scan = "Arguments: [doc_id#9128L], MapPartitionsRDD[{}] at applySchemaToPythonRDD"
+    assert normalize(scan.format(141)) == normalize(scan.format(7))
 
 
 _STAGE_RENDER = """\

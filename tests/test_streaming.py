@@ -479,3 +479,27 @@ def test_stateful_totals_is_builtin_state_store_aggregate(spark, duck, monkeypat
 
     result = compare("s_stateful_totals", got, duck, all_oracles()["s_stateful_totals"])
     assert result.ok, result
+
+
+def test_checkpoints_use_filesystem_manager(spark):
+    """configure() routes streaming checkpoints through the FileSystem
+    API: the FileContext manager launches a chmod or readlink process
+    per checkpoint file when the native Hadoop library is missing."""
+    import shutil
+
+    from odoo_batch_processing_spark.session import configure
+    from odoo_batch_processing_spark.sources.sinks import scratch_dir
+
+    spark.conf.unset("spark.sql.streaming.checkpointFileManagerClass")
+    configure(spark)
+    jvm = spark.sparkContext._jvm
+    checkpointing = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    ckpt = scratch_dir("ckpt-manager")
+    try:
+        manager = checkpointing.CheckpointFileManager.create(
+            jvm.org.apache.hadoop.fs.Path(ckpt),
+            spark._jsparkSession.sessionState().newHadoopConf(),
+        )
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
+    assert manager.getClass().getSimpleName() == "FileSystemBasedCheckpointFileManager"

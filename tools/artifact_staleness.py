@@ -27,9 +27,12 @@ Dependency mapping, per artifact:
 
 Staleness clock is GIT COMMIT TIME (``git log -1 --format=%ct --
 path``), not mtime: checkouts and rebases scramble mtimes, commits
-don't. An artifact not yet committed is compared by file mtime (it
-was just regenerated). A dep file with uncommitted modifications
-flags — the artifact cannot have measured unsaved code.
+don't. An artifact not yet committed, or regenerated over its
+committed copy, is compared by file mtime (it was just regenerated).
+A dep file with uncommitted modifications flags — the artifact cannot
+have measured unsaved code — unless the artifact was itself
+regenerated after that edit: then it measured the worktree as it
+stands, and committing both together keeps it fresh.
 
 Code-equivalence refinement (round 13): a newer commit (or dirty
 worktree state) on a dep does NOT stale the artifact when the dep's
@@ -269,8 +272,10 @@ def check(
         deps = deps_for(art, registry_mods)
         a_ts = _git_commit_ts(art)
         a_commit = _git_last_commit_hash(art)
-        if a_ts is None:  # regenerated but not yet committed
-            a_ts = int(os.path.getmtime(os.path.join(REPO_ROOT, art)))
+        regenerated = a_ts is None or bool(_uncommitted({art}))
+        if regenerated:  # regenerated but not yet committed
+            a_mtime = os.path.getmtime(os.path.join(REPO_ROOT, art))
+            a_ts = int(a_mtime)
             # no commit to diff against: the code at generation time is
             # unknowable, so the doc-only refinement must NOT apply (a
             # dep committed after generation would fingerprint equal to
@@ -282,6 +287,15 @@ def check(
             if (ts := _git_commit_ts(d)) is not None and ts > a_ts
         }
         dirty = _uncommitted(deps)
+        if regenerated:
+            # a dep edited before the regeneration was measured as it
+            # stands; one edited (or deleted) after it was not
+            dirty = {
+                d
+                for d in dirty
+                if not os.path.exists(os.path.join(REPO_ROOT, d))
+                or os.path.getmtime(os.path.join(REPO_ROOT, d)) > a_mtime
+            }
         # code-equivalence refinement: drop deps whose executable code
         # is unchanged since the artifact's commit (doc/comment edits)
         doc_only = {

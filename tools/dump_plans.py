@@ -65,6 +65,7 @@ HEADLINERS = [
     # shapes are review surface. The indexed-LSH plan is the
     # scan-local bucket_n receipt (PushedFilters, no count/semi-join)
     "x3_containment",
+    "x3_neardup_survivors",
     "x4_ivf_trained_topk",
     "x9_weighted_sample",
     "g_pagerank_simgraph",
@@ -148,6 +149,9 @@ def normalize(text: str) -> str:
     text = re.sub(r"#\d+", "#N", text)
     text = re.sub(r"plan_id=\d+", "plan_id=N", text)
     text = re.sub(r"\[id=\d+\]", "[id=N]", text)
+    # RDD ids of local relations (driver-side CC labels) count the
+    # RDDs the session created before this plan
+    text = re.sub(r"RDD\[\d+\]", "RDD[N]", text)
     # higher-order-function lambda variable names (`lambda x_59`) carry
     # a PROCESS-GLOBAL allocation counter: how many lambda expressions
     # were constructed before this one — which depends on module-level
