@@ -35,14 +35,17 @@ on real keys instead.
 
 The batch run (:func:`bulk_update_run`) and the streaming run
 (``streaming.throttle.ThrottledBulkUpdate``) share three policies,
-each written once here: the guard flags pinned before the update
-(:func:`pin_guards`), the run accounting (:func:`tally_columns`) and
-the outcome rule (:func:`run_outcome`).
+each written once here: the row guard read on the pre-update rows
+(:func:`row_guard`; the batch run pins it with :func:`pin_guards`), the
+run accounting (:func:`tally_columns`) and the outcome rule
+(:func:`run_outcome`).
 """
 
 from __future__ import annotations
 
+import functools
 import logging
+import operator
 import re
 import threading
 from collections.abc import Sequence
@@ -477,14 +480,14 @@ def row_guard(
     counts as False, so a row of unknown visibility or editability is
     not written, and a NULL read-only flag does not block the write."""
     false = F.lit(False)
-    pred = F.lit(True)
+    terms = []
     if visible is not None:
-        pred = pred & F.coalesce(visible, false)
+        terms.append(F.coalesce(visible, false))
     if editable is not None:
-        pred = pred & F.coalesce(editable, false)
+        terms.append(F.coalesce(editable, false))
     if readonly is not None:
-        pred = pred & ~F.coalesce(readonly, false)
-    return pred
+        terms.append(~F.coalesce(readonly, false))
+    return functools.reduce(operator.and_, terms) if terms else F.lit(True)
 
 
 def pin_guards(
@@ -727,32 +730,37 @@ def outcome_counts(df: DataFrame, ok: Column, group_cols: Sequence[str] = ()) ->
     return df.groupBy(*group_cols).agg(*agg) if group_cols else df.agg(*agg)
 
 
-def tally_columns(reached: Column | None = None) -> list[Column]:
-    """The run accounting as four aggregate Columns over a
-    :func:`pin_guards`-pinned, updated frame: ``all_rows``,
+def tally_columns(
+    visible: Column, applied: Column, reached: Column | None = None
+) -> list[Column]:
+    """The run accounting as four aggregate Columns: ``all_rows``,
     ``visible_rows``, ``success_count`` and ``skipped_count``.
+    ``visible`` and ``applied`` are the guard on the PRE-update rows:
+    the visibility guard and the full :func:`row_guard`. Over a
+    :func:`pin_guards`-pinned frame they are the pinned columns; over
+    the rows before the update, the guard Columns themselves.
 
     Success and skip count only the visible rows the loop reached; a
     skip is a guarded row (the reference's ``continue``, user.js:477-480,
     which increments neither counter). A constant update reaches every
     visible row. A value list reaches the first min(len(values),
     visible rows) (user.js:451); the caller marks those with
-    ``reached``. :func:`tally` aggregates them; the streaming run
-    observes them on its write."""
-    vis, ok = F.col(VISIBLE_COL), F.col(APPLIED_COL)
-    seen = vis if reached is None else vis & reached
+    ``reached``. :func:`tally` aggregates them over a pinned frame; the
+    streaming run observes them on its micro-batch's input rows."""
+    seen = visible if reached is None else visible & reached
     return [
         F.count(F.lit(1)).alias("all_rows"),
-        F.count_if(vis).alias("visible_rows"),
-        F.count_if(seen & ok).alias("success_count"),
-        F.count_if(seen & ~ok).alias("skipped_count"),
+        F.count_if(visible).alias("visible_rows"),
+        F.count_if(seen & applied).alias("success_count"),
+        F.count_if(seen & ~applied).alias("skipped_count"),
     ]
 
 
 def tally(updated: DataFrame, reached: Column | None = None) -> tuple[int, int, int, int]:
-    """:func:`tally_columns` as one eager aggregate:
+    """:func:`tally_columns` over a :func:`pin_guards`-pinned frame, as
+    one eager aggregate:
     ``(all_rows, visible_rows, success_count, skipped_count)``."""
-    row = updated.agg(*tally_columns(reached)).head()
+    row = updated.agg(*tally_columns(F.col(VISIBLE_COL), F.col(APPLIED_COL), reached)).head()
     return tuple(int(v) for v in row)
 
 

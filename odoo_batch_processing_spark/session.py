@@ -74,6 +74,17 @@ RUNTIME_CONFS: dict[str, str] = {
         "org.apache.spark.sql.execution.streaming.checkpointing."
         "FileSystemBasedCheckpointFileManager"
     ),
+    # No Python call-site capture per Column. At the default (true)
+    # every Column function adds about 9 py4j round trips (two active-
+    # session lookups, a PySparkCurrentOrigin class lookup, a conf
+    # read, set, clear) plus a Python stack walk: most of the driver-
+    # side cost of a change-feed micro-batch. Lost: the Python
+    # file:line in an error's DataFrame query context; the error class
+    # and message stay. PySpark reads the value once per process, at
+    # the first Column call, so configure() on a harness-built session
+    # that has already built a Column does not turn capture off;
+    # get_spark sets it at build time.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 

@@ -17,11 +17,17 @@ committed (§1.3). The Spark-native restatement:
   half-complete-on-cancel semantics, which batch Spark cannot and
   should not reproduce — SURVEY.md §7.4);
 * accounting → the batch run's guard, count and outcome rules
-  (``bulk_update.pin_guards``, ``tally_columns``, ``run_outcome``).
-  The counts are observed on the micro-batch's parquet write
-  (``DataFrame.observe``), so each micro-batch is one Spark job with
-  no cached copy, and they are summed driver-side in ``foreachBatch``
-  once the write has returned.
+  (``bulk_update.row_guard``, ``tally_columns``, ``run_outcome``).
+  The counts are observed on the micro-batch's PRE-update rows, the
+  rule ``pin_guards`` enforces for the batch run, inside the parquet
+  write (``DataFrame.observe``): each micro-batch is one Spark job
+  with no cached copy and no pinned guard columns, and the counts are
+  summed driver-side in ``foreachBatch`` once the write has returned.
+  The guard and tally Columns are built once per run, on the first
+  micro-batch; with that and the session's call-site capture off
+  (``session.RUNTIME_CONFS``), a micro-batch makes about 50 py4j round
+  trips, not about 350. They are classic-session (JVM) Columns: a
+  Spark Connect session would need them rebuilt as Connect Columns.
 """
 
 from __future__ import annotations
@@ -29,14 +35,12 @@ from __future__ import annotations
 import threading
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame, Observation, functions as F
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql.streaming import StreamingQuery
 
 from odoo_batch_processing_spark.operators.bulk_update import (
-    APPLIED_COL,
-    VISIBLE_COL,
     broadcast_update,
-    pin_guards,
+    row_guard,
     run_outcome,
     tally_columns,
 )
@@ -67,18 +71,22 @@ class ThrottledBulkUpdate:
     cancelled: bool = False
     _lock: threading.Lock = field(default_factory=threading.Lock, repr=False)
     _query: StreamingQuery | None = None
+    #: the applied guard and the tally Columns, built on the first
+    #: micro-batch (not in ``start``: a batch may be applied directly)
+    _columns: tuple[Column, list[Column]] | None = field(default=None, init=False, repr=False)
 
     def _apply_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        updated = broadcast_update(
-            pin_guards(batch_df, self.visible, self.editable, self.readonly),
-            self.column,
-            self.value,
-            visible=F.col(APPLIED_COL),
-        )
-        # one job: the write carries the outcome counts (R15)
+        if self._columns is None:
+            applied = row_guard(self.visible, self.editable, self.readonly)
+            self._columns = applied, tally_columns(row_guard(self.visible), applied)
+        applied, tally = self._columns
+        # one job: the write carries the outcome counts (R15), observed
+        # on the rows before the update rewrites them
         counts = Observation()
-        observed = updated.observe(counts, *tally_columns())
-        observed.drop(VISIBLE_COL, APPLIED_COL).write.mode("append").parquet(self.out_dir)
+        updated = broadcast_update(
+            batch_df.observe(counts, *tally), self.column, self.value, visible=applied
+        )
+        updated.write.mode("append").parquet(self.out_dir)
         # read only once the write has returned: `get` blocks until an
         # action fills the observation, and a failed write raises above
         row = counts.get

@@ -10,6 +10,7 @@ import threading
 import time
 
 import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE, settle
@@ -203,9 +204,10 @@ def test_throttled_update_empty_file_commits_zero_counts(spark, tmp_path):
 
 
 def test_throttled_update_failed_write_raises_and_counts_nothing(spark, tmp_path):
-    """A sink write that fails raises out of the micro-batch, promptly,
-    and adds nothing to the counts: the observation is read only after
-    the write returns."""
+    """A sink write that fails raises its own error out of the
+    micro-batch, promptly (Hadoop's ParentNotDirectoryException through
+    py4j, not some earlier Python error), and adds nothing to the
+    counts: the observation is read only after the write returns."""
     from odoo_batch_processing_spark.streaming.throttle import ThrottledBulkUpdate
 
     not_a_dir = tmp_path / "out"
@@ -220,15 +222,65 @@ def test_throttled_update_failed_write_raises_and_counts_nothing(spark, tmp_path
     def apply():
         try:
             run._apply_batch(batch, 0)
-        except Exception as e:  # the sink's error, surfaced by py4j
+        except Exception as e:
             raised.append(e)
 
     worker = threading.Thread(target=apply, daemon=True)
     worker.start()
     worker.join(120)
     assert not worker.is_alive(), "_apply_batch hung after a failed write"
-    assert raised
+    assert len(raised) == 1
+    assert isinstance(raised[0], Py4JJavaError), repr(raised[0])
+    assert "ParentNotDirectoryException" in str(raised[0])
     assert (run.success_count, run.skipped_count) == (0, 0)
+
+
+def test_throttled_update_py4j_round_trips_per_micro_batch(spark, tmp_path):
+    """A micro-batch makes few driver-side py4j calls: the guard and
+    tally Columns are built once per run, and the session turns off
+    PySpark's per-Column call-site capture (about 9 round trips per
+    Column function). With both, about 350 calls per micro-batch
+    become about 50, plus a one-off build on the first."""
+    from py4j.java_gateway import GatewayClient
+
+    from odoo_batch_processing_spark.session import configure
+    from odoo_batch_processing_spark.streaming.throttle import ThrottledBulkUpdate
+
+    configure(spark)
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    files = [
+        [(1, True, True, False, "a"), (2, True, True, True, "b")],
+        [(3, False, True, False, "c")],
+        [(4, None, True, False, "d"), (5, True, None, False, "e")],
+    ]
+    calls: list[int] = []
+    inside = threading.local()
+    send_command, apply_batch = GatewayClient.send_command, ThrottledBulkUpdate._apply_batch
+
+    def counted_send(self, *args, **kwargs):
+        if getattr(inside, "batch", False):
+            calls[-1] += 1
+        return send_command(self, *args, **kwargs)
+
+    def counted_apply(self, batch_df, epoch_id):
+        calls.append(0)
+        inside.batch = True
+        try:
+            return apply_batch(self, batch_df, epoch_id)
+        finally:
+            inside.batch = False
+
+    GatewayClient.send_command = counted_send
+    ThrottledBulkUpdate._apply_batch = counted_apply
+    try:
+        run, _ = _listview_run(spark, tmp_path, files)
+    finally:
+        GatewayClient.send_command = send_command
+        ThrottledBulkUpdate._apply_batch = apply_batch
+    assert len(calls) == len(files)
+    assert sum(calls) <= 80 * len(calls), calls
+    assert max(calls[1:]) <= 80, calls
+    assert (run.success_count, run.skipped_count) == (1, 2)
 
 
 def test_x7_watermark_drops_late_rows(spark, tmp_path):
