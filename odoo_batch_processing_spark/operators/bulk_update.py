@@ -18,10 +18,11 @@ pure ``(DataFrame, params) → DataFrame`` transformation:
   counts (R15/R16, :func:`tally_columns`), not hand-rolled
   accumulators, so they are exact under task retries (an accumulator
   updated in a transformation double-counts on retry — a deliberate
-  departure documented here). The batch run aggregates them
-  (:func:`tally`); the stream observes them on its write, where they
-  run in the write's result stage, whose task updates Spark merges
-  once per partition.
+  departure documented here). Both runs observe them
+  (``DataFrame.observe``) on the pre-update rows inside the job that
+  consumes the update: the batch run's pinning count, the stream's
+  parquet write. They run in that job's result stage, whose task
+  updates Spark merges once per partition.
 
 Scale notes: positional ops need a total order, but NOT a
 single-partition sort — the default ordinal everywhere is
@@ -36,9 +37,8 @@ on real keys instead.
 The batch run (:func:`bulk_update_run`) and the streaming run
 (``streaming.throttle.ThrottledBulkUpdate``) share three policies,
 each written once here: the row guard read on the pre-update rows
-(:func:`row_guard`; the batch run pins it with :func:`pin_guards`), the
-run accounting (:func:`tally_columns`) and the outcome rule
-(:func:`run_outcome`).
+(:func:`row_guard`), the run accounting (:func:`tally_columns`) and
+the outcome rule (:func:`run_outcome`).
 """
 
 from __future__ import annotations
@@ -51,15 +51,12 @@ import threading
 from collections.abc import Sequence
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window, functions as F
 
 from odoo_batch_processing_spark.session import materialize_once
 from odoo_batch_processing_spark.sources.loader import load_table
 
 ORD_COL = "row_ord"
-#: the row guard as pinned by :func:`pin_guards` before an update
-VISIBLE_COL = "__visible"
-APPLIED_COL = "__applied"
 
 #: distributed_ordinal's boundary-sketch memo: (semanticHash(analyzed
 #: plan), bucket_cols, n_parts) → collected boundary sample.
@@ -231,7 +228,7 @@ def distributed_ordinal(
     ``order_cols``). Bucketing on a prefix is always order-correct —
     the full key's order refines the prefix order, so prefix-equal
     rows are key-adjacent and land in one bucket — and lets callers
-    keep an expensive computed tiebreaker (e.g. r09's md5 row hash)
+    keep an expensive computed tiebreaker (e.g. an md5 row hash)
     out of the sample scan and the per-boundary comparisons; only
     balance degrades if the prefix is low-cardinality.
 
@@ -490,21 +487,6 @@ def row_guard(
     return functools.reduce(operator.and_, terms) if terms else F.lit(True)
 
 
-def pin_guards(
-    df: DataFrame,
-    visible: Column | None = None,
-    editable: Column | None = None,
-    readonly: Column | None = None,
-) -> DataFrame:
-    """Evaluate the row guard on the PRE-update rows and keep it as two
-    columns: :data:`VISIBLE_COL` and :data:`APPLIED_COL` (the full
-    :func:`row_guard`). Re-evaluating the guard after the rewrite would
-    be wrong whenever a flag references the updated column."""
-    return df.withColumns(
-        {VISIBLE_COL: row_guard(visible), APPLIED_COL: row_guard(visible, editable, readonly)}
-    )
-
-
 # ---------------------------------------------------------------------------
 # R7 — broadcast constant update (user.js:488-489)
 # ---------------------------------------------------------------------------
@@ -735,18 +717,17 @@ def tally_columns(
 ) -> list[Column]:
     """The run accounting as four aggregate Columns: ``all_rows``,
     ``visible_rows``, ``success_count`` and ``skipped_count``.
-    ``visible`` and ``applied`` are the guard on the PRE-update rows:
-    the visibility guard and the full :func:`row_guard`. Over a
-    :func:`pin_guards`-pinned frame they are the pinned columns; over
-    the rows before the update, the guard Columns themselves.
+    ``visible`` and ``applied`` are guard Columns: the visibility guard
+    and the full :func:`row_guard`. Observe them on the rows BEFORE the
+    update rewrites them: re-evaluated after the rewrite, a flag that
+    reads the updated column would count the wrong rows.
 
     Success and skip count only the visible rows the loop reached; a
     skip is a guarded row (the reference's ``continue``, user.js:477-480,
     which increments neither counter). A constant update reaches every
     visible row. A value list reaches the first min(len(values),
     visible rows) (user.js:451); the caller marks those with
-    ``reached``. :func:`tally` aggregates them over a pinned frame; the
-    streaming run observes them on its micro-batch's input rows."""
+    ``reached``."""
     seen = visible if reached is None else visible & reached
     return [
         F.count(F.lit(1)).alias("all_rows"),
@@ -754,14 +735,6 @@ def tally_columns(
         F.count_if(seen & applied).alias("success_count"),
         F.count_if(seen & ~applied).alias("skipped_count"),
     ]
-
-
-def tally(updated: DataFrame, reached: Column | None = None) -> tuple[int, int, int, int]:
-    """:func:`tally_columns` over a :func:`pin_guards`-pinned frame, as
-    one eager aggregate:
-    ``(all_rows, visible_rows, success_count, skipped_count)``."""
-    row = updated.agg(*tally_columns(F.col(VISIBLE_COL), F.col(APPLIED_COL), reached)).head()
-    return tuple(int(v) for v in row)
 
 
 # ---------------------------------------------------------------------------
@@ -836,19 +809,21 @@ def bulk_update_run(
 ) -> BulkUpdateResult:
     """EP1 end-to-end: one value (R7) or a value list (R9) applied to
     the visible rows of ``df``, guard semantics as the reference. The
-    update is pinned once with :func:`materialize_once`; the run
-    accounting and the caller's eventual write both read it, and
+    update is pinned once with :func:`materialize_once`; the caller's
+    eventual write reads it, and
     :func:`~odoo_batch_processing_spark.session.release_materialized`
     unpins it.
 
     Accounting matches user.js:443-513 (see :func:`tally_columns`): guarded
     rows are *skipped*, and success + skipped is the number of visible
-    rows the loop reached. A run that applied nothing reports
+    rows the loop reached. The counts are observed on the pre-update
+    rows, as the streaming run observes them, and the job that builds
+    the pinned copy fills them. A run that applied nothing reports
     'nothing-updated' (see :func:`run_outcome`).
     """
-    base = pin_guards(df, visible, editable, readonly)
-    applied = F.col(APPLIED_COL)
-    scratch, reached = "__zip_value", None
+    shown = row_guard(visible)
+    applied = row_guard(visible, editable, readonly)
+    counts = Observation()
     if isinstance(value, list):
         if spark is None:
             raise ValueError("value-list mode needs the SparkSession to build the value relation")
@@ -861,30 +836,39 @@ def bulk_update_run(
         # keeps its old value but still consumes its positional value,
         # matching the reference's `continue` (user.js:477-480).
         # zip_join_update retains the non-visible rows itself.
+        scratch = "__zip_value"
         zipped = zip_join_update(
-            base.withColumn(scratch, F.lit(None).cast("string")),
+            df.withColumn(scratch, F.lit(None).cast("string")),
             order_cols,
             scratch,
             vals,
             ["ord"],
             "v",
-            visible=F.col(VISIBLE_COL),
+            visible=shown,
             broadcast_values=True,  # dialog-pasted lists are small
         )
-        reached = F.col(scratch).isNotNull()
+        # the zip writes only the scratch column, so the guards still
+        # read the pre-update rows here
+        zipped = zipped.observe(
+            counts, *tally_columns(shown, applied, F.col(scratch).isNotNull())
+        )
         old = F.col(column)
         new = F.coalesce(F.col(scratch).cast(df.schema[column].dataType), old)
-        updated = zipped.withColumn(column, F.when(applied, new).otherwise(old))
+        updated = zipped.withColumn(column, F.when(applied, new).otherwise(old)).drop(scratch)
     else:
-        updated = broadcast_update(base, column, value, visible=applied)
+        updated = broadcast_update(
+            df.observe(counts, *tally_columns(shown, applied)), column, value, visible=applied
+        )
 
     updated = materialize_once(updated)
-    all_rows, visible_rows, success, skipped = tally(updated, reached)
+    updated.count()  # builds the pinned copy; this job fills the counts
+    row = counts.get
+    success, skipped = row["success_count"], row["skipped_count"]
     error = 0  # per-row rewrite cannot fail; sink failures raise instead
     return BulkUpdateResult(
-        updated.drop(VISIBLE_COL, APPLIED_COL, scratch),
-        all_rows,
-        visible_rows,
+        updated,
+        row["all_rows"],
+        row["visible_rows"],
         success,
         skipped,
         error,
@@ -913,19 +897,6 @@ def _q_r02_visibility_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     return visibility_filter(orders, F.col("o_orderstatus") == "O").select(
         "o_orderkey", "o_custkey", "o_orderstatus"
-    )
-
-
-def _q_r03_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    customer = load_table(spark, sf_dir, "customer")
-    idx, name = resolve_column(customer, name="c_mktsegment")
-    return project_positional(customer, [0, idx])
-
-
-def _q_r05_readonly_any(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    return li.groupBy("l_returnflag").agg(
-        F.bool_or(F.col("l_discount") > 0.08).alias("any_readonly")
     )
 
 
@@ -971,28 +942,12 @@ def _q_r08_multiline_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
 # boundary. Full rows ARE unique (verified in DuckDB at sf0.001/0.01/0.1),
 # so the deterministic total order is the declared key plus every
 # remaining payload column as tiebreakers, mirrored verbatim in the
-# oracle's ROW_NUMBER() ORDER BY. The alternative, ONE md5 full-row-hash
-# tiebreaker column (profile.portable_row_hash_hex; hex strings order
-# identically in Spark and DuckDB), costs more in the scan-side project
-# than the wider sort key saves (~1 s at sf0.1/local[32]), because with
-# bucket_cols the sort runs post-shuffle at full parallelism while md5
-# runs at scan parallelism. The hash-key form stays oracle-covered as
-# ext `r09_zip_join_hashkey`. The rows side always takes
-# distributed_ordinal; a values side under the broadcast threshold
-# takes with_ordinal (see zip_join_update).
-R09_ROW_COLS = (
-    "l_orderkey",
-    "l_partkey",
-    "l_suppkey",
-    "l_linenumber",
-    "l_quantity",
-    "l_extendedprice",
-    "l_discount",
-    "l_tax",
-    "l_returnflag",
-    "l_linestatus",
-    "l_shipdate",
-)
+# oracle's ROW_NUMBER() ORDER BY. One md5 full-row-hash tiebreaker
+# column (profile.portable_row_hash_hex) measured slower (~1 s at
+# sf0.1/local[32]): with bucket_cols the wider sort runs post-shuffle
+# at full parallelism, while md5 runs in the scan-side project. The
+# rows side always takes distributed_ordinal; a values side under the
+# broadcast threshold takes with_ordinal (see zip_join_update).
 R09_ORDER_COLS = [
     "l_orderkey",
     "l_linenumber",
@@ -1008,27 +963,6 @@ R09_ORDER_COLS = [
 ]
 #: the cheap natural-key prefix used for boundary sampling/bucketing
 R09_BUCKET_COLS = ["l_orderkey", "l_linenumber"]
-R09_TB_COL = "__r09_rowhash"
-#: order key of the ext hash-tiebreaker variant (r09_zip_join_hashkey)
-R09_HASH_ORDER_COLS = ["l_orderkey", "l_linenumber", R09_TB_COL]
-
-
-def r09_with_tiebreak(li: DataFrame) -> DataFrame:
-    """Attach the full-row md5 tiebreaker column the r09 ordinal sorts
-    on (computed map-side, zero shuffle; ~32 bytes/row of transient
-    width dropped before output)."""
-    from odoo_batch_processing_spark.operators.profile import portable_row_hash_hex
-
-    return li.withColumn(R09_TB_COL, portable_row_hash_hex(R09_ROW_COLS))
-
-
-def _r09_tb_sql() -> str:
-    """The oracle-side twin of :func:`r09_with_tiebreak`'s column —
-    generated from the same R09_ROW_COLS tuple via the shared
-    portable_row_hash_hex_sql fragment."""
-    from odoo_batch_processing_spark.operators.profile import portable_row_hash_hex_sql
-
-    return portable_row_hash_hex_sql(R09_ROW_COLS)
 
 
 def _q_r09_zip_join_update(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1059,55 +993,11 @@ def _q_r09_zip_join_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     return updated.select("l_orderkey", "l_linenumber", "l_returnflag")
 
 
-def _q_r09_zip_join_hashkey(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The round-6 verdict's prescribed tiebreaker form, kept ext-tier
-    under its own oracle: order key = (l_orderkey, l_linenumber,
-    md5-full-row-hash) where the hash column and the oracle's
-    ROW_NUMBER ORDER BY are generated from the SAME shared fragment
-    pair (profile.portable_row_hash_hex / portable_row_hash_hex_sql),
-    so Spark and DuckDB provably sort ties identically. Measured
-    slower than the raw-column key at local scan parallelism (md5 in
-    the scan-side project), so the core r09 keeps raw tiebreakers —
-    see the R09_ORDER_COLS comment for numbers."""
-    li = r09_with_tiebreak(load_table(spark, sf_dir, "lineitem"))
-    part = load_table(spark, sf_dir, "part")
-    updated = zip_join_update(
-        li,
-        R09_HASH_ORDER_COLS,
-        "l_returnflag",
-        part,
-        ["p_partkey"],
-        "p_name",
-        visible=F.col("l_linestatus") == "O",
-        broadcast_values=False,
-        validate_unique=True,
-        bucket_cols=R09_BUCKET_COLS,
-    )
-    return updated.select("l_orderkey", "l_linenumber", "l_returnflag")
-
-
 def _q_r10_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     return limit_ordered(li, 100, ["l_orderkey", "l_linenumber"]).select(
         "l_orderkey", "l_linenumber", ORD_COL
     )
-
-
-def _q_r13_bool_coercion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    # synthesize checkbox-ish input text from event_type, then coerce
-    raw = (
-        F.when(F.col("event_type") == "click", F.lit("TRUE"))
-        .when(F.col("event_type") == "view", F.lit("true"))
-        .when(F.col("event_type") == "signup", F.lit("True "))
-        .otherwise(F.col("event_type"))
-    )
-    return ev.select("event_id", coerce_checkbox_boolean(raw).alias("checked"))
-
-
-def _q_r14_numeric_clamp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    return ev.select("event_id", parse_wait_time(F.col("value") - 50.0).alias("wait_ms"))
 
 
 def _q_r13_r14_coerce_clamp(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1125,11 +1015,6 @@ def _q_r13_r14_coerce_clamp(spark: SparkSession, sf_dir: str) -> DataFrame:
         coerce_checkbox_boolean(raw).alias("checked"),
         parse_wait_time(F.col("value") - 50.0).alias("wait_ms"),
     )
-
-
-def _q_r15_outcome_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    return outcome_counts(li, F.col("l_discount") <= 0.05, ["l_returnflag"])
 
 
 def _q_r16_outcome_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1166,10 +1051,9 @@ def _q_r20_coalesce_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Merged rows fold in the reference ops they cover: r10 exercises R1's
-# ordinal, r06 folds in R5's ANY probe, r13_r14 merges the two scalar
-# rewrites, r16 includes R15's counts, r20 folds in R3/R4's positional
-# projection. The standalone micro-queries follow them.
+# One row per semantic: r10 exercises R1's ordinal, r06 folds in R5's
+# ANY probe, r13_r14 merges the two scalar rewrites, r16 includes R15's
+# counts, r20 folds in R3/R4's positional projection.
 QUERIES = {
     "r02_visibility_filter": _q_r02_visibility_filter,
     "r06_counts": _q_r06_counts,
@@ -1181,11 +1065,6 @@ QUERIES = {
     "r20_coalesce_cascade": _q_r20_coalesce_cascade,
     "r08_multiline_parse": _q_r08_multiline_parse,
     "r01_scan_ordinal": _q_r01_scan_ordinal,
-    "r03_projection": _q_r03_projection,
-    "r05_readonly_any": _q_r05_readonly_any,
-    "r13_bool_coercion": _q_r13_bool_coercion,
-    "r14_numeric_clamp": _q_r14_numeric_clamp,
-    "r15_outcome_counts": _q_r15_outcome_counts,
 }
 
 ORACLES = {
@@ -1281,53 +1160,4 @@ ORACLES = {
                CAST(ROW_NUMBER() OVER (ORDER BY l_orderkey, l_linenumber) AS INTEGER) AS row_ord
         FROM lineitem
     """,
-    "r03_projection": """
-        SELECT c_custkey, c_mktsegment FROM customer
-    """,
-    "r05_readonly_any": """
-        SELECT l_returnflag, bool_or(l_discount > 0.08) AS any_readonly
-        FROM lineitem GROUP BY l_returnflag
-    """,
-    "r13_bool_coercion": """
-        SELECT event_id,
-               COALESCE(lower(CASE WHEN event_type = 'click'  THEN 'TRUE'
-                                   WHEN event_type = 'view'   THEN 'true'
-                                   WHEN event_type = 'signup' THEN 'True '
-                                   ELSE event_type END) = 'true', FALSE) AS checked
-        FROM events
-    """,
-    "r14_numeric_clamp": """
-        SELECT event_id,
-               GREATEST(0, CAST(trunc(value - 50.0) AS INTEGER)) AS wait_ms
-        FROM events
-    """,
-    "r15_outcome_counts": """
-        SELECT l_returnflag,
-               CAST(SUM(CASE WHEN l_discount <= 0.05 THEN 1 ELSE 0 END) AS BIGINT) AS success_count,
-               CAST(SUM(CASE WHEN NOT (l_discount <= 0.05) THEN 1 ELSE 0 END) AS BIGINT) AS error_count
-        FROM lineitem GROUP BY l_returnflag
-    """,
 }
-
-QUERIES["r09_zip_join_hashkey"] = _q_r09_zip_join_hashkey
-# the md5 tiebreaker in the ORDER BY is generated from the SAME
-# R09_ROW_COLS tuple as the Spark column (shared fragment pair in
-# profile.py), so query and oracle cannot drift
-ORACLES["r09_zip_join_hashkey"] = """
-    WITH rows_ord AS (
-        SELECT l_orderkey, l_linenumber, l_returnflag,
-               ROW_NUMBER() OVER (ORDER BY
-                   l_orderkey, l_linenumber,
-                   {tb}) AS ord
-        FROM lineitem WHERE l_linestatus = 'O'
-    ), vals_ord AS (
-        SELECT p_name, ROW_NUMBER() OVER (ORDER BY p_partkey) AS ord
-        FROM part
-    )
-    SELECT r.l_orderkey, r.l_linenumber,
-           COALESCE(v.p_name, r.l_returnflag) AS l_returnflag
-    FROM rows_ord r LEFT JOIN vals_ord v USING (ord)
-    UNION ALL
-    SELECT l_orderkey, l_linenumber, l_returnflag
-    FROM lineitem WHERE NOT (l_linestatus = 'O')
-""".format(tb=_r09_tb_sql())

@@ -76,10 +76,9 @@ ORACLES = {
 def portable_row_hash_hex(cols: tuple[str, ...]) -> "F.Column":
     """Engine-portable full md5 hex digest (32 lowercase hex chars) of
     the '|'-joined stringified columns — the shared primitive under
-    :func:`_portable_row_hash` and the r09 ordinal tiebreaker
-    (bulk_update.R09_ORDER builds its sort key on it). md5 hex prints
-    identically in Spark and DuckDB (unlike xxhash64 whose seeds
-    differ across engines), and the hex STRING also *orders*
+    :func:`_portable_row_hash`, usable as a total-order tiebreaker
+    column. md5 hex prints identically in Spark and DuckDB (unlike
+    xxhash64 whose seeds differ across engines), and the hex STRING also *orders*
     identically (both lowercase, byte-wise collation), so it is safe
     both to compare and to ORDER BY cross-engine. NULLs encode as a
     NUL-byte sentinel before joining — concat_ws would silently SKIP

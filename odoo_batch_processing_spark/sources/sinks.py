@@ -13,8 +13,9 @@ Formats: parquet is the default (columnar, statistics, pushdown on
 read-back); csv/json exist for interchange. At 100 TB the knobs that
 matter are `partitionBy` (layout for later partition pruning),
 `maxRecordsPerFile` (bounded file sizes), and in real deployments a
-table format (Delta/Iceberg) for MERGE/ACID — not in this container,
-stubbed behind `require_table_format()`.
+table format (Delta/Iceberg) for MERGE/ACID. This build ships no table
+format, so MERGE is emulated over partitioned parquet
+(:func:`merge_into_partitioned`).
 """
 
 from __future__ import annotations
@@ -284,19 +285,6 @@ def write_roundtrip(
     raise ValueError(f"unsupported sink format {fmt!r}")
 
 
-def require_table_format() -> None:
-    """Delta/Iceberg/Hudi need their jars on the classpath; this build
-    ships none, so MERGE/ACID surfaces raise explicitly instead of
-    silently degrading (emulation recipe: anti-join + union — see
-    operators/bulk_update.zip_join_update for the join idiom)."""
-    try:
-        import delta  # noqa: F401  # pragma: no cover
-    except ImportError as exc:  # pragma: no cover
-        raise NotImplementedError(
-            "no table format (Delta/Iceberg) on the classpath in this build"
-        ) from exc
-
-
 def merge_into_partitioned(
     spark: SparkSession,
     target_dir: str,
@@ -326,7 +314,7 @@ def merge_into_partitioned(
     path that fed the plan (self-overwrite guard); the materialized set
     is bounded by the touched partitions. On a real deployment the same
     call maps 1:1 onto Delta/Iceberg ``MERGE INTO`` (ACID, no
-    checkpoint materialization) — see require_table_format().
+    checkpoint materialization).
     """
     target = spark.read.parquet(target_dir)
     touched = target.join(
@@ -429,64 +417,6 @@ def _q_src_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _has_delta() -> bool:
-    """Import probe for the Delta Lake classpath (same gating pattern
-    as streaming.stateful's transformWithStateInPandas probe): the
-    delta-spark Python package AND its jars must both be present for
-    ``MERGE INTO`` to plan. This build ships neither — the probe keeps
-    the ACID twin registered-but-skipped until a deployment classpath
-    has it, at which point r21_merge_delta certifies automatically
-    against the SAME oracle as the parquet emulation."""
-    try:
-        import delta  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def _q_r21_merge_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """R21 at production fidelity: the identical upsert as r21_merge
-    but through Delta Lake's ACID ``MERGE INTO`` (user.js:554-621's
-    in-place commit semantics, transactional this time) — no
-    anti-join+union rewrite, no dynamic-partition-overwrite staging,
-    no checkpoint materialization; conflict detection and atomicity
-    come from the Delta commit protocol. Registered behind
-    :func:`_has_delta`, so the day the classpath carries delta-spark
-    this runs under the same DuckDB oracle as the emulation and the
-    two MERGE paths are certified equivalent."""
-    from odoo_batch_processing_spark.sources.loader import load_table
-
-    require_table_format()
-    orders = load_table(spark, sf_dir, "orders")
-    target_dir = scratch_dir("r21-delta-target")
-    orders.write.format("delta").mode("overwrite").partitionBy(
-        "o_orderstatus"
-    ).save(target_dir)
-
-    from delta.tables import DeltaTable
-
-    updates = (
-        spark.read.format("delta")
-        .load(target_dir)
-        .filter((F.col("o_orderstatus") == "F") & (F.col("o_orderkey") % 100 == 0))
-        .withColumn("o_orderpriority", F.lit("9-MERGED"))
-    )
-    (
-        DeltaTable.forPath(spark, target_dir)
-        .alias("t")
-        .merge(updates.alias("u"), "t.o_orderkey = u.o_orderkey")
-        .whenMatchedUpdateAll()
-        .whenNotMatchedInsertAll()
-        .execute()
-    )
-    return (
-        spark.read.format("delta")
-        .load(target_dir)
-        .select("o_orderkey", "o_orderpriority", "o_orderstatus")
-    )
-
-
 # r21_sink_roundtrip is the plain write/read-back roundtrip, covered
 # in spirit by r21_merge's stage-then-read.
 QUERIES = {
@@ -495,10 +425,6 @@ QUERIES = {
     "src_jsonl_roundtrip": _q_src_jsonl_roundtrip,
     "src_csv_roundtrip": _q_src_csv_roundtrip,
     "src_orc_roundtrip": _q_src_orc_roundtrip,
-    # ACID MERGE twin: registered only when the Delta classpath exists
-    # (absent in this build — see _has_delta; tests/test_sinks.py
-    # documents the skip)
-    **({"r21_merge_delta": _q_r21_merge_delta} if _has_delta() else {}),
 }
 
 ORACLES = {
@@ -542,7 +468,3 @@ ORACLES = {
         FROM part GROUP BY p_brand
     """,
 }
-
-# the ACID path must land on byte-identical content as the emulation
-if _has_delta():
-    ORACLES["r21_merge_delta"] = ORACLES["r21_merge"]

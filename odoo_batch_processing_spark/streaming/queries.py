@@ -56,8 +56,7 @@ STREAM_SHUFFLE_PARTITIONS = 8
 
 #: The state-store providers the streaming family runs under, by the
 #: name tools and tests pass: HDFS-backed is Spark's default, RocksDB
-#: spills state to disk and is the one ``transformWithStateInPandas``
-#: requires.
+#: spills state to disk.
 STATE_STORE_PROVIDERS = {
     "hdfs": (
         "org.apache.spark.sql.execution.streaming.state."
@@ -532,37 +531,6 @@ def _q_s_x4_stream_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q_s_stateful_totals_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """:func:`_q_s_stateful_totals` on the Spark-4 successor API
-    (``transformWithStateInPandas``), certified against the SAME
-    oracle. The new API only runs on the RocksDB state store
-    provider, so it is set for this query and restored after (the
-    other stateful queries keep the default HDFS-backed store;
-    provider choice is per-query at stream start)."""
-    from odoo_batch_processing_spark.streaming.stateful import running_totals_tws
-
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(provider_key, None)
-    spark.conf.set(provider_key, STATE_STORE_PROVIDERS["rocksdb"])
-    try:
-        stream = change_source(spark, _events_dir(sf_dir))
-        name = _mem_name("s_state_tws")
-        q = (
-            running_totals_tws(stream)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", _scratch_dir("state-tws-ckpt"))
-            .start()
-        )
-        return drain_memory_sink(spark, q, name)
-    finally:
-        if prev is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prev)
-
-
 def _q_s_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming sessionization via the built-in session_window (30min
     gap) — the native form of operators/windows._q_x7_sessionize's
@@ -766,6 +734,10 @@ def _q_s_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 RATE_ROWS_PER_SEC = 1000
 RATE_RUN_SECONDS = 10.0
 _RATE_KEYS = 100
+#: how far the newest committed row may trail the stop instant: one
+#: in-flight micro-batch plus a trigger boundary. A query processing
+#: at even 0.9x the source accumulates ~1 s of new lag per 10 s run.
+RATE_LAG_MAX_SEC = 3.0
 
 #: measured facts from the latest _q_s_rate_throughput run (achieved
 #: rate, lag, state rows) — the query's RESULT is deterministic for
@@ -950,14 +922,10 @@ def _q_s_rate_throughput(spark: SparkSession, sf_dir: str) -> DataFrame:
     if rows_in <= 0:
         raise RuntimeError("rate source produced no rows")
     lag = t_stop - agg["frontier"].timestamp()
-    # slack = one in-flight micro-batch + trigger boundary; a query
-    # processing at even 0.9× the source accumulates ~1s of NEW lag per
-    # 10s run and trips this within a couple of runs
-    lag_max = float(os.environ.get("SPARK_GRAFT_RATE_LAG_MAX", "3.0"))
-    if lag > lag_max:
+    if lag > RATE_LAG_MAX_SEC:
         raise RuntimeError(
             f"backlog grew: newest committed row is {lag:.1f}s behind the "
-            f"stop instant (max {lag_max}s) — the query is not keeping up "
+            f"stop instant (max {RATE_LAG_MAX_SEC}s) — the query is not keeping up "
             f"with {RATE_ROWS_PER_SEC} rows/s"
         )
     consumed = agg["frontier"].timestamp() - agg["first_ts"].timestamp()
@@ -992,7 +960,7 @@ def _q_s_rate_throughput(spark: SparkSession, sf_dir: str) -> DataFrame:
             "achieved_rate": round(achieved, 1),
             "keep_up_ratio": round(achieved / RATE_ROWS_PER_SEC, 4),
             "frontier_lag_sec": round(lag, 3),
-            "lag_max_sec": lag_max,
+            "lag_max_sec": RATE_LAG_MAX_SEC,
             "state_rows": int(state_rows),
             "state_rows_max": _RATE_KEYS,
         }
@@ -1002,7 +970,7 @@ def _q_s_rate_throughput(spark: SparkSession, sf_dir: str) -> DataFrame:
             RATE_ROWS_PER_SEC,
             True,  # multi_batch — ≥2 data micro-batches (sustained sample)
             True,  # met_rate — achieved ≥ 1.0× over the consumed window
-            True,  # caught_up — committed frontier within lag_max of stop
+            True,  # caught_up — committed frontier within RATE_LAG_MAX_SEC of stop
             True,  # state_bounded — verified above
         )
     ]
@@ -1011,27 +979,6 @@ def _q_s_rate_throughput(spark: SparkSession, sf_dir: str) -> DataFrame:
         "configured_rate bigint, multi_batch boolean, met_rate boolean, "
         "caught_up boolean, state_bounded boolean"
     )
-
-
-# streaming sessionization: real capability, but its windowing surface
-# is already driver-covered by s_x7_stream_hourly (streaming windows) +
-# x7_sessionize (session semantics); keep it oracle-checked in the
-# extended tier to free a core slot for R19.
-def _has_tws_deps() -> bool:
-    """``transformWithStateInPandas`` talks to its Python state server
-    over protobuf; this container ships pyspark without the
-    ``google.protobuf`` extra and installs are off-limits, so the
-    successor-API query registers only where the dep exists (the
-    operator itself, streaming/stateful.py:running_totals_tws, is
-    complete and certified by the same oracle wherever it can run)."""
-    import importlib.util
-
-    try:
-        # find_spec on a dotted name imports the parent package, which
-        # raises (not returns None) when 'google' itself is absent
-        return importlib.util.find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:
-        return False
 
 
 def _events_time_sliced_dir(spark: SparkSession, sf_dir: str, n_files: int) -> str:
@@ -1271,12 +1218,11 @@ QUERIES = {
         "s_stateful_totals": _q_s_stateful_totals,
         "s_stream_stream_left_join": _q_s_stream_stream_left_join,
         "s_x2_stream_dedup_wm": _q_s_x2_stream_dedup_wm,
-        **(
-            {"s_stateful_totals_tws": _q_s_stateful_totals_tws}
-            if _has_tws_deps()
-            else {}
-        ),
         "s_x7_transitions": _q_s_x7_transitions,
+        # streaming sessionization: real capability, but its windowing
+        # surface is already driver-covered by s_x7_stream_hourly
+        # (streaming windows) + x7_sessionize (session semantics); kept
+        # oracle-checked in the extended tier
         "s_session_window": _q_s_session_window,
         "s_x3_stream_incremental_neardup": _q_s_x3_stream_incremental_neardup,
         "s_x4_stream_index_probe": _q_s_x4_stream_index_probe,
@@ -1368,20 +1314,6 @@ ORACLES = {
                CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
         FROM final GROUP BY event_type
     """,
-    # the successor-API run must land on the identical per-user totals
-    **(
-        {
-            "s_stateful_totals_tws": """
-        SELECT user_id,
-               COUNT(1) AS n_events,
-               MIN(event_id) AS min_event_id,
-               MAX(event_id) AS max_event_id
-        FROM events GROUP BY user_id
-    """
-        }
-        if _has_tws_deps()
-        else {}
-    ),
     # stream-static enrichment == the batch join (single static dim,
     # inner join — arrival order cannot change the aggregate)
     "s_stream_static_join": """

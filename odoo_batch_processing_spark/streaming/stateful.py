@@ -11,10 +11,9 @@ accumulation.
 Running totals (count, min, max) are commutative, so the core form is
 Spark's built-in streaming aggregate: the state store holds the
 partial aggregates and the whole plan stays in the JVM. The
-arbitrary-state APIs keep one operator each: ``transitions_stream``
-(order-sensitive, which a built-in aggregate cannot express, on
-``applyInPandasWithState``) and ``running_totals_tws`` (the same
-totals on the successor API ``transformWithStateInPandas``).
+arbitrary-state API keeps the one operator a built-in aggregate cannot
+express: ``transitions_stream`` (order-sensitive, on
+``applyInPandasWithState``).
 
 The state store shuffles by key, so the operator's scale behavior is
 the same hash-shuffle story as a groupBy — skewed keys want salting
@@ -25,9 +24,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-OUT_SCHEMA = "user_id bigint, n_events bigint, min_event_id bigint, max_event_id bigint"
-STATE_SCHEMA = "n bigint, mn bigint, mx bigint"
 
 
 def running_totals(stream_df: DataFrame) -> DataFrame:
@@ -40,63 +36,6 @@ def running_totals(stream_df: DataFrame) -> DataFrame:
         F.count(F.lit(1)).alias("n_events"),
         F.min("event_id").alias("min_event_id"),
         F.max("event_id").alias("max_event_id"),
-    )
-
-
-def running_totals_tws(stream_df: DataFrame) -> DataFrame:
-    """The same operator on ``transformWithStateInPandas`` — Spark 4's
-    successor arbitrary-state API (SPARK-49564): typed state handles
-    (value/list/map state) instead of one opaque tuple, per-key timers,
-    state TTL, and schema evolution of state between job versions.
-    Requires the RocksDB state store provider (the caller sets it;
-    session.RUNTIME_CONFS leaves the default provider alone so the
-    other stateful queries keep their HDFS-backed store).
-
-    Semantics are identical to :func:`running_totals` — the registry
-    certifies BOTH against the same per-user-totals oracle."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _TotalsProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState("totals", STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd
-
-            n, mn, mx = (
-                self._totals.get() if self._totals.exists() else (0, None, None)
-            )
-            for pdf in rows:
-                n += len(pdf)
-                batch_mn = int(pdf["event_id"].min())
-                batch_mx = int(pdf["event_id"].max())
-                mn = batch_mn if mn is None else min(mn, batch_mn)
-                mx = batch_mx if mx is None else max(mx, batch_mx)
-            self._totals.update((n, mn, mx))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "min_event_id": [mn],
-                    "max_event_id": [mx],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        stream_df.select("user_id", "event_id")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=_TotalsProcessor(),
-            outputStructType=OUT_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
     )
 
 

@@ -18,11 +18,11 @@ committed (§1.3). The Spark-native restatement:
   should not reproduce — SURVEY.md §7.4);
 * accounting → the batch run's guard, count and outcome rules
   (``bulk_update.row_guard``, ``tally_columns``, ``run_outcome``).
-  The counts are observed on the micro-batch's PRE-update rows, the
-  rule ``pin_guards`` enforces for the batch run, inside the parquet
-  write (``DataFrame.observe``): each micro-batch is one Spark job
-  with no cached copy and no pinned guard columns, and the counts are
-  summed driver-side in ``foreachBatch`` once the write has returned.
+  The counts are observed on the micro-batch's PRE-update rows, as
+  the batch run observes them, inside the parquet write
+  (``DataFrame.observe``): each micro-batch is one Spark job with no
+  cached copy, and the counts are summed driver-side in
+  ``foreachBatch`` once the write has returned.
   The guard and tally Columns are built once per run, on the first
   micro-batch; with that and the session's call-site capture off
   (``session.RUNTIME_CONFS``), a micro-batch makes about 50 py4j round

@@ -229,7 +229,8 @@ def test_bulk_update_run_nothing_updated(spark, listview):
 
 def test_bulk_update_run_guard_on_updated_column(spark, listview):
     """Counts stay correct when the visibility predicate references the
-    column being updated (flags are pinned PRE-update — ADVICE r01)."""
+    column being updated: the counts are observed on the pre-update
+    rows."""
     from odoo_batch_processing_spark.operators.bulk_update import bulk_update_run
 
     # every name starts with 'rec_' pre-update; post-update successes
@@ -333,18 +334,19 @@ def test_distributed_ordinal_matches_global_window(spark):
     from odoo_batch_processing_spark.operators.bulk_update import (
         R09_ORDER_COLS,
         distributed_ordinal,
-        r09_with_tiebreak,
         with_ordinal,
     )
+    from odoo_batch_processing_spark.operators.profile import portable_row_hash_hex
     from odoo_batch_processing_spark.sources.loader import load_table
 
     from tests.conftest import SF_SMOKE
 
-    li = r09_with_tiebreak(load_table(spark, SF_SMOKE, "lineitem"))
     keys = R09_ORDER_COLS  # full-row tiebreakers: provably unique (the
     # extra md5 column rides along as payload — a round-6 regression
     # fixture: a COMPUTED input column used to break exchange reuse and
     # with it the old spark_partition_id-based ordinal's determinism)
+    li = load_table(spark, SF_SMOKE, "lineitem")
+    li = li.withColumn("__rowhash", portable_row_hash_hex(keys))
     n = li.count()
     assert li.select(*keys).distinct().count() == n  # precondition, loudly
     # and the OLD key really is non-unique — the trap this test guards
@@ -438,27 +440,30 @@ def test_validate_unique_accepts_null_keys(spark):
         ).collect()
 
 
-def test_r09_row_hash_matches_duckdb_fragment(spark):
-    """The Spark tiebreaker column (portable_row_hash_hex) and the
-    oracle-side SQL fragment (portable_row_hash_hex_sql) must produce
-    byte-identical md5 hex digests over the full lineitem row — the
-    whole r09 determinism argument rests on the two ordering the same
-    way cross-engine. Also asserts the hash key is genuinely unique
-    (the precondition validate_unique enforces at query time)."""
+def test_portable_row_hash_matches_duckdb_fragment(spark):
+    """The Spark row hash (portable_row_hash_hex) and the oracle-side
+    SQL fragment (portable_row_hash_hex_sql) must produce
+    byte-identical md5 hex digests over typed lineitem columns (bigint,
+    int, double, string, timestamp), so a hash-keyed order sorts the
+    same way in both engines. Also asserts the hash is unique over the
+    full row, so it could serve as a total-order tiebreaker."""
     import duckdb
 
-    from odoo_batch_processing_spark.operators.bulk_update import (
-        R09_ROW_COLS,
-        R09_TB_COL,
-        r09_with_tiebreak,
+    from odoo_batch_processing_spark.operators.profile import (
+        portable_row_hash_hex,
+        portable_row_hash_hex_sql,
     )
-    from odoo_batch_processing_spark.operators.profile import portable_row_hash_hex_sql
     from odoo_batch_processing_spark.sources.loader import load_table
 
     from tests.conftest import SF_SMOKE
 
+    cols = (
+        "l_orderkey", "l_partkey", "l_suppkey", "l_linenumber", "l_quantity",
+        "l_extendedprice", "l_discount", "l_tax", "l_returnflag",
+        "l_linestatus", "l_shipdate",
+    )
     li = load_table(spark, SF_SMOKE, "lineitem")
-    sp = set(r[0] for r in r09_with_tiebreak(li).select(R09_TB_COL).collect())
+    sp = set(r[0] for r in li.select(portable_row_hash_hex(cols)).collect())
     con = duckdb.connect()
     con.sql(
         f"CREATE VIEW lineitem AS SELECT * FROM '{SF_SMOKE}/lineitem.parquet'"
@@ -466,7 +471,7 @@ def test_r09_row_hash_matches_duckdb_fragment(spark):
     dk = set(
         r[0]
         for r in con.sql(
-            f"SELECT {portable_row_hash_hex_sql(R09_ROW_COLS)} FROM lineitem"
+            f"SELECT {portable_row_hash_hex_sql(cols)} FROM lineitem"
         ).fetchall()
     )
     n = li.count()

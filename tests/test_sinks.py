@@ -42,32 +42,6 @@ def test_partitioned_write_prunes(spark, tmp_path):
     assert pruned.count() == n_expected
 
 
-def test_table_format_stubbed():
-    from odoo_batch_processing_spark.sources.sinks import require_table_format
-
-    with pytest.raises(NotImplementedError, match="table format"):
-        require_table_format()
-
-
-def test_delta_merge_twin_gated_consistently():
-    """The ACID MERGE twin (r21_merge_delta) registers — query AND
-    oracle, oracle identical to the emulation's — exactly when the
-    Delta classpath exists. In this build it doesn't, so the twin is
-    absent and the gate raises; on a delta-spark deployment the same
-    assertions flip and the twin certifies automatically under the
-    shared oracle (VERDICT r04 #9's wiring, documented skip)."""
-    from odoo_batch_processing_spark.sources import sinks
-
-    has = sinks._has_delta()
-    assert ("r21_merge_delta" in sinks.QUERIES) == has
-    assert ("r21_merge_delta" in sinks.ORACLES) == has
-    if has:
-        assert sinks.ORACLES["r21_merge_delta"] == sinks.ORACLES["r21_merge"]
-    else:
-        with pytest.raises(NotImplementedError, match="table format"):
-            sinks.require_table_format()
-
-
 def test_merge_into_partitioned_upsert_and_insert(spark, tmp_path):
     """MERGE emulation: updates rewrite only their keys, inserts land,
     rows in untouched partitions are not just preserved — their files

@@ -69,10 +69,12 @@ def test_r19_cancel_keeps_committed_batches(spark, tmp_path):
 LISTVIEW_DDL = "row_ord bigint, visible boolean, editable boolean, readonly boolean, name string"
 
 
-def _throttled_vs_batch(spark, tmp_path, rows):
+def _throttled_vs_batch(spark, tmp_path, rows, guards=None):
     """Run ThrottledBulkUpdate to exhaustion over ``rows`` and the batch
-    bulk_update_run over the same rows; return the stream run, its
-    committed names and the batch result."""
+    bulk_update_run over the same rows, both setting ``name`` to "X"
+    under ``guards`` (default: the visible, editable and readonly
+    flags); return the stream run, its committed names and the batch
+    result."""
     from odoo_batch_processing_spark.operators.bulk_update import bulk_update_run
     from odoo_batch_processing_spark.streaming.sources import change_source
     from odoo_batch_processing_spark.streaming.throttle import ThrottledBulkUpdate
@@ -80,9 +82,10 @@ def _throttled_vs_batch(spark, tmp_path, rows):
     src, out = str(tmp_path / "src"), str(tmp_path / "out")
     df = spark.createDataFrame(rows, LISTVIEW_DDL)
     df.coalesce(1).write.parquet(src)
-    guards = dict(
-        visible=F.col("visible"), editable=F.col("editable"), readonly=F.col("readonly")
-    )
+    if guards is None:
+        guards = dict(
+            visible=F.col("visible"), editable=F.col("editable"), readonly=F.col("readonly")
+        )
     run = ThrottledBulkUpdate(
         column="name", value="X", out_dir=out, checkpoint_dir=str(tmp_path / "ckpt"), **guards
     )
@@ -124,6 +127,32 @@ def test_throttled_update_null_guard_counts_as_false(spark, tmp_path):
     assert {r["row_ord"]: r["name"] for r in batch.updated.collect()} == committed
     assert (run.success_count, run.skipped_count) == (1, 1)
     assert (batch.success_count, batch.skipped_count) == (1, 1)
+
+
+def test_throttled_update_guard_on_updated_column(spark, tmp_path):
+    """A guard that reads the updated column is evaluated on the rows
+    before the update, in the stream as in the batch run: updated rows
+    become "X", which the visibility predicate would reject if it were
+    read after the rewrite."""
+    rows = [
+        (1, True, True, False, "r1"),   # applied
+        (2, True, True, True, "r2"),    # readonly: skipped
+        (3, True, True, False, "h3"),   # hidden by its name
+        (4, True, False, False, "r4"),  # not editable: skipped
+        (5, True, True, False, "r5"),   # applied
+        (6, True, True, False, "X"),    # hidden: already "X"
+    ]
+    guards = dict(
+        visible=F.col("name").startswith("r"),
+        editable=F.col("editable"),
+        readonly=F.col("readonly"),
+    )
+    run, committed, batch = _throttled_vs_batch(spark, tmp_path, rows, guards)
+    assert committed == {1: "X", 2: "r2", 3: "h3", 4: "r4", 5: "X", 6: "X"}
+    assert {r["row_ord"]: r["name"] for r in batch.updated.collect()} == committed
+    assert (run.success_count, run.skipped_count) == (2, 2)
+    assert (batch.visible_rows, batch.success_count, batch.skipped_count) == (4, 2, 2)
+    assert run.outcome == batch.outcome == "success"
 
 
 def test_throttled_update_nothing_applied_outcome(spark, tmp_path):
@@ -395,11 +424,11 @@ def test_s_rate_throughput_gate_fires(spark, monkeypatch):
     to a constant-true condition."""
     import pytest
 
-    from odoo_batch_processing_spark.streaming.queries import _q_s_rate_throughput
+    from odoo_batch_processing_spark.streaming import queries
 
-    monkeypatch.setenv("SPARK_GRAFT_RATE_LAG_MAX", "-1")
+    monkeypatch.setattr(queries, "RATE_LAG_MAX_SEC", -1)
     with pytest.raises(RuntimeError, match="backlog grew"):
-        _q_s_rate_throughput(spark, SF_SMOKE)
+        queries._q_s_rate_throughput(spark, SF_SMOKE)
 
 
 def test_dedup_within_watermark_expires_state(spark, tmp_path):
@@ -463,39 +492,6 @@ def test_dedup_within_watermark_expires_state(spark, tmp_path):
     assert (7, "k1") in got, got
     # nothing emits that wasn't staged as a first/expired occurrence
     assert got <= {(1, "k1"), (2, "k2"), (4, "k3"), (5, "k1"), (7, "k1"), (8, "k3")}, got
-
-
-def test_tws_gate_matches_environment():
-    """The transformWithStateInPandas catalog entry registers exactly
-    when its protobuf dependency exists; the operator module itself
-    always imports (the gate is on the CATALOG, not the code)."""
-    from odoo_batch_processing_spark.registry import all_oracles, all_queries
-    from odoo_batch_processing_spark.streaming.queries import _has_tws_deps
-    from odoo_batch_processing_spark.streaming.stateful import running_totals_tws  # noqa: F401
-
-    has_dep = _has_tws_deps()
-    q = all_queries(extended=True)
-    o = all_oracles(extended=True)
-    assert ("s_stateful_totals_tws" in q) == has_dep
-    assert ("s_stateful_totals_tws" in o) == has_dep
-
-
-def test_tws_running_totals_if_available(spark, tmp_path):
-    """Where protobuf exists, the successor-API operator must land on
-    the same per-user totals as the core query's built-in streaming
-    aggregate."""
-    import pytest as _pytest
-
-    from odoo_batch_processing_spark.streaming.queries import _has_tws_deps
-
-    if not _has_tws_deps():
-        _pytest.skip("google.protobuf not installed (transformWithState state server)")
-
-    from odoo_batch_processing_spark.registry import all_queries
-
-    got = all_queries(extended=True)["s_stateful_totals_tws"](spark, SF_SMOKE)
-    core = all_queries()["s_stateful_totals"](spark, SF_SMOKE)
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, core.collect()))
 
 
 def test_stateful_totals_is_builtin_state_store_aggregate(spark, duck, monkeypatch):
