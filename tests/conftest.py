@@ -15,12 +15,17 @@ SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECT = "/root/testdata/sf0.01"
 
 
-@pytest.fixture(scope="session")
-def spark():
+def session():
+    """The test session. Fixed cores and shuffle partitions, so plans
+    print the same partition counts on any host."""
     from odoo_batch_processing_spark.session import get_spark
 
-    spark = get_spark("tests", cpus=4, shuffle_partitions=4)
-    yield spark
+    return get_spark("tests", cpus=4, shuffle_partitions=4)
+
+
+@pytest.fixture(scope="session")
+def spark():
+    yield session()
 
 
 def settle(spark) -> None:

@@ -1,7 +1,9 @@
 """Plan hygiene over the WHOLE query catalog: no accidental
 nested-loop/cartesian joins, scans carry pushed filters where the
-query filters a scanned column. Physical plans only — nothing
-executes, so the sweep is cheap and runs on every build.
+query filters a scanned column, and every batch row keeps the plan
+shape pinned in tests/plan_shapes.json. Physical plans only: no query
+runs, though some rows pin a relation or build a keyed index while
+they are constructed, so the sweep is cheap and runs on every build.
 
 This is the codified form of the engine rule: '.explain every
 operator until it's the plan you'd want' — regressions (a join
@@ -11,15 +13,19 @@ pushdown) fail here, not in a 100 TB run.
 
 from __future__ import annotations
 
+import json
+
 import pytest
 
 from tests.conftest import SF_SMOKE
+from tools import dump_plans
 
 #: streaming queries execute on invocation (they run a bounded stream);
 #: the batch sweep below covers everything else.
 _SKIP_PREFIXES = ("s_",)
-#: sink/source roundtrip queries write on plan construction —
-#: cheap but not plan-only; keep them out of the pure-planning sweep.
+#: sink/source roundtrip queries write on plan construction: planned
+#: once, by the executed_plans fixture, and kept out of the two
+#: sweeps that re-plan the catalog.
 _SKIP = {"r21_sink_roundtrip", "r21_merge", "src_jsonl_roundtrip", "src_csv_roundtrip"}
 #: queries where a nested-loop join is the INTENDED plan:
 #: - brute-force ANN has no equi-key — a deliberate
@@ -92,12 +98,81 @@ def _batch_queries():
 def executed_plans(spark):
     """One executed-plan string per batch-catalog query, computed once
     and shared by every plan-shape sweep in this module — planning the
-    ~180-query catalog is the expensive part, so the sweeps must not
-    each redo it."""
-    return {
-        name: fn(spark, SF_SMOKE)._jdf.queryExecution().executedPlan().toString()
-        for name, fn in sorted(_batch_queries().items())
-    }
+    ~160-query catalog is the expensive part, so the sweeps must not
+    each redo it. Each row is planned as if alone, so the plans do
+    not depend on which tests ran before."""
+    prior = spark.conf.getAll.get(dump_plans.META_LEN)
+    yield dump_plans.executed_plans(spark, SF_SMOKE)
+    assert spark.conf.getAll.get(dump_plans.META_LEN) == prior
+
+
+def test_every_batch_plan_keeps_its_pinned_shape(executed_plans):
+    """Every batch row's plan shape matches tests/plan_shapes.json, and
+    the file names exactly the batch catalog. A deliberate plan change
+    reruns tools/dump_plans.py and commits the file; the failure prints
+    each differing row's shape for review."""
+    with open(dump_plans.SHAPES_PATH) as f:
+        pinned = json.load(f)
+    have = {name: dump_plans.digest(plan) for name, plan in executed_plans.items()}
+    changed = sorted(n for n in have.keys() & pinned.keys() if have[n] != pinned[n])
+    assert have.keys() == pinned.keys() and not changed, (
+        "plan shapes differ from tests/plan_shapes.json (rerun "
+        "tools/dump_plans.py if the change is meant): "
+        f"unpinned {sorted(have.keys() - pinned.keys())}, "
+        f"gone {sorted(pinned.keys() - have.keys())}, changed {changed}\n\n"
+        + "\n\n".join(f"## {n}\n{dump_plans.shape(executed_plans[n])}" for n in changed)
+    )
+
+
+def test_shape_drops_session_history_only():
+    """Two sessions plan one query with different expression, plan and
+    RDD ids, and Spark's distinct-aggregate rewrite numbers its gid
+    groups by expression id: the shapes are equal. A changed literal
+    (round 8's df <= 250 against df <= 64) is a real plan change."""
+    shape = dump_plans.shape
+    cap = (
+        "Filter ((isnotnull(df#{i}L) AND (df#{i}L >= 2)) AND (df#{i}L <= {cap}))\n"
+        "+- Exchange hashpartitioning(df#{i}L, 4), ENSURE_REQUIREMENTS, [plan_id={p}]\n"
+        "   +- Scan ExistingRDD[doc_id#{i}L,df#{i}L]"
+    )
+    a = cap.format(i=2248, p=17, cap=64)
+    assert shape(a) == shape(cap.format(i=9001, p=3, cap=64))
+    assert shape(a) != shape(cap.format(i=2248, p=17, cap=250))
+    rdd = "+- Scan ExistingRDD[doc_id#9128L]\n   +- MapPartitionsRDD[{}] at applySchemaToPythonRDD"
+    assert shape(rdd.format(141)) == shape(rdd.format(7))
+    # x8_exact_distinct in two sessions: gid 1 and 2 swap columns
+    distinct = (
+        "+- HashAggregate(keys=[l_returnflag#22071], functions=["
+        "partial_count(l_partkey#22091L) FILTER (WHERE (gid#22090 = {a})), "
+        "partial_count(l_suppkey#22092L) FILTER (WHERE (gid#22090 = {b}))])\n"
+        "   +- Expand [[l_returnflag#22071, l_partkey#22064L, null, {a}], "
+        "[l_returnflag#22071, null, l_suppkey#22065L, {b}]]"
+    )
+    assert shape(distinct.format(a=1, b=2)) == shape(distinct.format(a=2, b=1))
+
+
+_STAGE_PLAN = """\
++- *({c}) Project [shingle#9964]
+   +- BroadcastQueryStage {s}
+      +- BroadcastExchange HashedRelationBroadcastMode(List(input[0, string, true]),false), [plan_id=412]
+{extra}         +- *({c}) HashAggregate(keys=[shingle#9964], functions=[count(1)])
+            +- FileScan parquet [shingle#9964] Location: InMemoryFileIndex(1 paths)[file:{root}/.scratch/keyed-minhash-index-v3-58b008484fa9c814]
+"""
+
+
+def test_shape_equates_stage_ids_and_checkout_path():
+    """Codegen ids, query-stage ids and the checkout's location vary
+    between plans of one query (concurrently materialized sibling
+    stages swap ids; a clone lives elsewhere) and compare equal; one
+    extra Exchange is a real plan change and does not."""
+    shape = dump_plans.shape
+    base = dict(c=3, s=6, root="/srv/a/repo", extra="")
+    swapped = dict(base, c=4, s=7, root="/home/b/clone")
+    exchange = dict(
+        base, extra="         +- Exchange hashpartitioning(shingle#9964, 4), ENSURE_REQUIREMENTS\n"
+    )
+    assert shape(_STAGE_PLAN.format(**base)) == shape(_STAGE_PLAN.format(**swapped))
+    assert shape(_STAGE_PLAN.format(**base)) != shape(_STAGE_PLAN.format(**exchange))
 
 
 def test_no_nested_loop_or_cartesian_anywhere(executed_plans):

@@ -1,221 +1,117 @@
 #!/usr/bin/env python
-"""Dump formatted physical plans for the headline queries → PLANS.md.
+"""Pinned plan shapes of the batch catalog → tests/plan_shapes.json.
 
-Evidence artifact for plan review: shows pushed filters, read schemas,
-join strategies, and shuffle structure for the queries whose scale
-behavior SCALE.md argues about.
+The engine's dataflow claims rest on plan shape: the positional
+zip-join with no global sort, the broadcast constant update, the
+predicate-filtered scan, and every extended row's join strategies and
+shuffles. ``tests/test_plan_hygiene.py`` plans every batch row in its
+session at sf0.001 and compares each plan's :func:`shape` digest with
+the committed file, so a plan-affecting change that does not rewrite
+the file fails there (round 8's lockstep break: a df-cap literal went
+250→64 and the committed plan dump kept the stale 250).
 
-``--check`` (VERDICT r8 item 1): re-render the same plans to a buffer
-and diff against the committed PLANS.md after normalizing volatile IDs
-(expression ``#NNNN``, ``plan_id=``, codegen and query-stage ids) and
-the checkout's path, exiting 1 with the differing
-section names on mismatch. The hygiene suite runs this, so a
-plan-affecting commit that forgets the re-dump goes red instead of
-silently drifting (round 8's lockstep break: commit 66406af changed
-g_triangle_counts' df-cap literal 250→64 and claimed a re-dump that
-never landed).
+A shape is the executed-plan tree with what the session's history
+decides stripped: expression, plan and RDD ids, lambda-variable
+counters, file locations (checkout path, scratch suffixes, index
+keys), query-stage and codegen-stage numbers. Each line keeps its
+depth, its operator and its sorted tokens, so literals, columns,
+partition counts and join strategies stay; only within-line operand
+order is dropped (Spark's distinct-aggregate rewrite numbers its
+``gid`` groups by expression id).
+
+    python tools/dump_plans.py    # rewrite tests/plan_shapes.json
+
+It plans in a session built by ``tests/conftest.py``'s recipe.
 """
 
 from __future__ import annotations
 
+import hashlib
+import json
 import os
 import re
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
-HEADLINERS = [
-    "q05_revenue_by_nation",
-    "q01_pricing_summary",
-    "q06_forecast_revenue",
-    "q19_disjunctive",
-    "r09_zip_join_update",
-    "r10_limit",
-    "x2_dedup_survivors",
-    "x3_minhash_lsh",
-    "x3_incremental_neardup",
-    "x4_ivf_topk",
-    "x4_ivf_multiprobe",
-    "x4_int8_topk",
-    "asof_last_purchase",
-    "skew_salted_agg",
-    "q08_market_share",
-    "q21_waiting_suppliers",
-    "x9_curation_pipeline",
-    "x9_pack_shards",
-    # round-4 session additions whose scale shape SCALE.md argues about
-    "x5_doc_sim_cosine",
-    "x8_heavy_hitters",
-    "w_gap_fill_ffill",
-    "g_triangle_counts",
-    "w_interval_sweep",
-    "x5_unigram_surprisal",
-    "x5_bm25_topk",
-    "profile_zscore",
-    # round-8 re-shapes: top-tier cost under the forcing drain, their
-    # split-distinct shape is a catalog invariant worth reviewing
-    "x8_approx_aggs",
-    "x8_hll_merge",
-    # round-10 additions: the DOULION sampled-triangle twin (scan-local
-    # hash sample + three 1-row scalar cross-joins) and the chunk-stitch
-    # sessionizer (two window passes + summary stitch, no broadcast hint)
-    "g_doulion_triangles",
-    "x7_sessionize_chunked",
-    # queries that sit or have sat in the driver window: their plan
-    # shapes are review surface. The indexed-LSH plan is the
-    # scan-local bucket_n receipt (PushedFilters, no count/semi-join)
-    "x3_containment",
-    "x3_neardup_survivors",
-    "x4_ivf_trained_topk",
-    "x9_weighted_sample",
-    "g_pagerank_simgraph",
-    "profile_checksum",
-    "x3_minhash_indexed",
-    "x9_group_sample",
-    "x6_variant_shred",
-    "scd2_user_tiers",
-    "ivm_refresh",
-    "x4_ivf_indexed_multiprobe",
-    "x5_gopher_repetition",
-    "w_rolling_median5",
-    "x7_event_transitions",
-    "pit_tier_at_purchase",
-    "x9_difficulty_deciles",
-    "x9_crypto_shred",
-    "x7_funnel_steps",
-    "agg_grouping_sets",
-    "sql_recursive_hierarchy",
-    "dq_expectations",
-    "profile_robust_outliers",
-    "lake_compact_roundtrip",
-    "src_jsonl_roundtrip",
-    # scale shape argued in SCALE.md
-    "x5_trigram_backoff_surprisal",
-    "x4_rerank_exact",
+SHAPES_PATH = os.path.join(REPO, "tests", "plan_shapes.json")
+
+#: FileScan metadata (DataFilters, PushedFilters, ReadSchema) is cut at
+#: this many characters, and ``#id`` digits count toward it, so the cut
+#: moves with the session's history unless the limit is out of reach.
+META_LEN = "spark.sql.maxMetadataStringLength"
+
+_STRIP = [
+    (re.compile(p), r)
+    for p, r in (
+        (r"#\d+L?", ""),
+        (r", \[plan_id=\d+\]", ""),
+        (r"RDD\[\d+\]", "RDD"),
+        (r"\b(lambda [a-z]+)_\d+", r"\1"),
+        (r"\[file:[^\]]*\]", ""),
+        (r"QueryStage \d+", "QueryStage"),
+        (r"\*\(\d+\)", "*"),
+    )
 ]
-
-SF_DIR = "/root/testdata/sf0.1"
-PLANS_PATH = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"
-)
+_LINE = re.compile(r"([ :+-]*)(\** *\w*)(.*)")
+_TOKEN = re.compile(r"[^\s,()\[\]{}]+")
 
 
-def render() -> str:
-    """Render the PLANS.md content for the current HEAD (not normalized)."""
+def shape(plan: str) -> str:
+    """The history-independent shape of an executed-plan string: one
+    line per operator, as its depth, its name and its sorted tokens."""
+    for pattern, repl in _STRIP:
+        plan = pattern.sub(repl, plan)
+    lines = []
+    for line in plan.strip().splitlines():
+        indent, op, rest = _LINE.match(line).groups()
+        lines.append(" ".join([indent + op, *sorted(_TOKEN.findall(rest))]))
+    return "\n".join(lines)
+
+
+def digest(plan: str) -> str:
+    return hashlib.sha256(shape(plan).encode()).hexdigest()[:16]
+
+
+def executed_plans(spark, sf_dir: str) -> dict[str, str]:
+    """Executed-plan string of every batch catalog row (streaming
+    ``s_`` rows run a stream when called), each planned as if alone: no
+    relation pinned or cached by an earlier row, which Catalyst would
+    substitute into this plan. Plans without running; some rows pin a
+    relation or build a keyed index while they are constructed. Leaves
+    no pin and the metadata limit as it found them."""
     from odoo_batch_processing_spark.registry import all_queries
-    from odoo_batch_processing_spark.session import get_spark, release_materialized
+    from odoo_batch_processing_spark.session import release_materialized
 
-    # pinned like the core count: a broadcast stage prints the size of
-    # its hashed relation, which is a whole number of Tungsten pages,
-    # and the default page size follows the heap (64 MiB at a 24g
-    # heap, 32 MiB at 4g), so an unpinned render diffs on the host's
-    # heap setting. The small heap also keeps this session from
-    # crowding the one it runs beside under the hygiene suite.
-    spark = get_spark(
-        "dump-plans",
-        cpus=4,
-        extra_confs={"spark.driver.memory": "4g", "spark.buffer.pageSize": "64m"},
-    )
-    queries = all_queries(extended=True)
-    out = [
-        "# PLANS — physical plans of the headline queries (sf0.1, local)",
-        "",
-        "Generated by tools/dump_plans.py; regenerate after plan-affecting",
-        "changes (tools/dump_plans.py --check enforces this in the hygiene",
-        "suite). See SCALE.md for what each shape means at 100 TB.",
-        "",
-    ]
-    for name in HEADLINERS:
-        # each plan as the query gets it run alone, the way the harnesses
-        # run it: no relation pinned by an earlier section, whose cache
-        # entries Catalyst would otherwise substitute into this plan
+    prior = spark.conf.getAll.get(META_LEN)
+    spark.conf.set(META_LEN, str(2**31 - 1))
+    plans = {}
+    try:
+        for name, fn in sorted(all_queries(extended=True).items()):
+            if name.startswith("s_"):
+                continue
+            release_materialized()
+            spark.catalog.clearCache()
+            plans[name] = fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+    finally:
         release_materialized()
-        spark.catalog.clearCache()
-        df = queries[name](spark, SF_DIR)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
-        out.append(f"## {name}\n\n```\n{plan.strip()}\n```\n")
-    return "\n".join(out)
-
-
-def normalize(text: str) -> str:
-    """Strip the volatile bits of a formatted plan so two dumps of the
-    SAME logical plan compare equal across sessions: expression IDs
-    (``l_orderkey#1234L``), ``plan_id=`` tags, and ``[id=NN]`` exchange
-    ids all depend on how many plans the session analyzed before this
-    one — the same normalization family test_bench_calibration uses
-    for its plan fingerprint."""
-    text = re.sub(r"#\d+", "#N", text)
-    text = re.sub(r"plan_id=\d+", "plan_id=N", text)
-    text = re.sub(r"\[id=\d+\]", "[id=N]", text)
-    # RDD ids of local relations (driver-side CC labels) count the
-    # RDDs the session created before this plan
-    text = re.sub(r"RDD\[\d+\]", "RDD[N]", text)
-    # higher-order-function lambda variable names (`lambda x_59`) carry
-    # a PROCESS-GLOBAL allocation counter: how many lambda expressions
-    # were constructed before this one — which depends on module-level
-    # expression caching and import order, not on the plan (r17: the
-    # dedup expression cache shifted every later section's counters)
-    text = re.sub(r"\b(lambda [a-z]+)_\d+", r"\1_N", text)
-    # content keys of write-time indexes (keyed-<name>-<16hex>): the
-    # key is mtime-derived, so the driver regenerating testdata each
-    # round changes it without changing the plan shape (round 13)
-    text = re.sub(r"(keyed-[a-z0-9-]+-)[0-9a-f]{16}", r"\1KEY", text)
-    # fresh per-call scratch sinks (scratch_dir → mkdtemp): the random
-    # suffix changes every render; the prefix (sink-json, ivm-base,
-    # lake-compacted, ...) is the stable, reviewable part (round 17 —
-    # the lake/src/ivm promotions put sink paths in pinned plans)
-    text = re.sub(
-        r"(\.scratch/(?!keyed-)[a-zA-Z0-9_.-]+-)[a-z0-9_]{8}\b", r"\1TMP", text
-    )
-    # where the checkout lives: .scratch sits inside it, so a clone
-    # elsewhere renders the same plans under another prefix
-    text = re.sub(r"file:[^\s\],]*/\.scratch/", "file:CHECKOUT/.scratch/", text)
-    # whole-stage codegen ids and adaptive query-stage ids number stages
-    # in the order they are planned and materialized; sibling stages
-    # that materialize concurrently (g_pagerank_simgraph's two broadcast
-    # stages over one cached relation) swap them between renders of the
-    # same plan. The tree's `*` markers and node ids still show the
-    # stage structure.
-    text = re.sub(r"codegen id : \d+", "codegen id : N", text)
-    text = re.sub(r"\*\(\d+\)", "*(N)", text)
-    text = re.sub(
-        r"(QueryStage\n(?:[^\n]+\n)*?Arguments: )\d+$", r"\1N", text, flags=re.M
-    )
-    return text
-
-
-def _sections(text: str) -> dict[str, str]:
-    parts = re.split(r"^## ", text, flags=re.M)
-    return {p.split("\n", 1)[0].strip(): p for p in parts[1:]}
+        if prior is None:
+            spark.conf.unset(META_LEN)
+        else:
+            spark.conf.set(META_LEN, prior)
+    return plans
 
 
 def main() -> int:
-    check = "--check" in sys.argv[1:]
-    content = render()
-    if not check:
-        with open(PLANS_PATH, "w") as f:
-            f.write(content)
-        print(f"wrote PLANS.md ({len(HEADLINERS)} plans)")
-        return 0
+    from tests.conftest import SF_SMOKE, session
 
-    with open(PLANS_PATH) as f:
-        committed = f.read()
-    if normalize(committed) == normalize(content):
-        print(f"PLANS.md is current ({len(HEADLINERS)} plans match at HEAD)")
-        return 0
-    want, have = _sections(normalize(content)), _sections(normalize(committed))
-    stale = sorted(
-        set(want) ^ set(have)
-        | {n for n in set(want) & set(have) if want[n] != have[n]}
-    )
-    print(
-        "PLANS.md is STALE — re-run tools/dump_plans.py and commit. "
-        f"Differing sections: {stale}",
-        file=sys.stderr,
-    )
-    return 1
+    plans = executed_plans(session(), SF_SMOKE)
+    with open(SHAPES_PATH, "w") as f:
+        json.dump({n: digest(p) for n, p in plans.items()}, f, indent=0, sort_keys=True)
+        f.write("\n")
+    print(f"wrote {os.path.relpath(SHAPES_PATH, REPO)} ({len(plans)} plans)")
+    return 0
 
 
 if __name__ == "__main__":
