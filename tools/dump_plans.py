@@ -7,8 +7,10 @@ predicate-filtered scan, and every extended row's join strategies and
 shuffles. ``tests/test_plan_hygiene.py`` plans every batch row in its
 session at sf0.001 and compares each plan's :func:`shape` digest with
 the committed file, so a plan-affecting change that does not rewrite
-the file fails there (round 8's lockstep break: a df-cap literal went
-250→64 and the committed plan dump kept the stale 250).
+the file fails there. A literal shows only where it reaches an
+sf0.001 plan: the absolute df caps do not (the 5%-of-corpus term binds
+first there), so ``tests/test_cap_witness.py`` plants the corpus on
+which they bind.
 
 A shape is the executed-plan tree with what the session's history
 decides stripped: expression, plan and RDD ids, lambda-variable
