@@ -43,8 +43,8 @@ def _unit_cols(
     id_alias: str, out: str, id_col: str, vec_col: str
 ) -> tuple[F.Column, ...]:
     """The four Column trees :func:`_unit` selects, built once per
-    distinct signature (OPTIMIZATION r18, the curation/dedup
-    lru_cache'd-factory pattern): the normalize block is three nested
+    distinct signature (the curation/dedup lru_cache'd-factory
+    pattern): the normalize block is three nested
     higher-order-function trees, ~100 py4j round-trips per
     construction, and every x4 query builds it at least twice per
     invocation. Columns are immutable unresolved expressions — safe to
@@ -87,8 +87,9 @@ def _unit_cells(
 ) -> DataFrame:
     """(id, embedding, cell, uv): unit-normalized vectors with the
     sign-bit cell id, RAW embedding retained (probe-cell selection
-    reads its leading-dimension signs/magnitudes). Shared by every IVF
-    query so the normalize/quantize block has one canonical form;
+    reads its leading-dimension signs/magnitudes). Shared by the index
+    build and the probe's query side, so the normalize/quantize block
+    has one canonical form;
     Catalyst prunes the embedding column wherever a consumer drops it."""
     c_v, c_n, c_cell, c_uv = _unit_cells_cols(id_col, vec_col)
     return (
@@ -182,79 +183,11 @@ def _q_x4_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ann_topk(emb.filter(F.col("vec_id") < N_QUERIES), emb)
 
 
-def _q_x4_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same queries, search restricted to the query's IVF cell."""
-    unit = _unit_cells(fan_out(load_table(spark, sf_dir, "embeddings"), spark, "vec_id"))
-    q = unit.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("uv").alias("qv"),
-        F.col("cell").alias("pcell"),
-    )
-    c = unit.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("uv").alias("cv"),
-        F.col("cell").alias("ccell"),
-    )
-    scored = c.join(
-        F.broadcast(q),
-        (F.col("ccell") == F.col("pcell")) & (F.col("neighbor_id") != F.col("query_id")),
-    ).withColumn("cos_sim", dot(F.col("qv"), F.col("cv")))
-    return _topk(scored)
-
-
-def ivf_multiprobe_topk(unit_cells: DataFrame, nprobe: int) -> DataFrame:
-    """Cell-restricted top-k at a caller-chosen probe depth — the
-    nprobe DIAL, parameterized (round-4, VERDICT r3 #5). Each query
-    scores its own cell plus the ``nprobe − 1`` cells across its
-    least-confident quantizer boundaries (``ivf_probe_cells``). The
-    probe set explodes to nprobe rows per query BEFORE the broadcast,
-    so the candidate-side plan is the same single equi-join on the
-    cell id at every depth — at corpus scale, with the index
-    partitioned by cell, each extra probe is one more pruned partition
-    read, never a wider scan. Probe cells are distinct, so no
-    (query, neighbor) pair is scored twice and the top-k window needs
-    no dedup. Recall/cost curve: SCALE.md §ANN (x4_ivf_recall measures
-    nprobe ∈ {1, 2, 4} against brute-force ground truth)."""
-    q = unit_cells.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("uv").alias("qv"),
-        F.explode(ivf_probe_cells(F.col("embedding"), nprobe=nprobe)).alias("pcell"),
-    )
-    c = unit_cells.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("uv").alias("cv"),
-        F.col("cell").alias("ccell"),
-    )
-    scored = c.join(
-        F.broadcast(q),
-        (F.col("ccell") == F.col("pcell")) & (F.col("neighbor_id") != F.col("query_id")),
-    ).withColumn("cos_sim", dot(F.col("qv"), F.col("cv")))
-    return _topk(scored)
-
-
-def _q_x4_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``x4_ivf_topk`` at nprobe=2 — the measured knee of the
-    recall/cost curve (see SCALE.md §ANN): the second probe buys the
-    largest recall lift per extra cell scanned; nprobe=4 scans ~2×
-    more for a smaller increment (ext ``x4_ivf_probe4``)."""
-    unit = _unit_cells(fan_out(load_table(spark, sf_dir, "embeddings"), spark, "vec_id"))
-    return ivf_multiprobe_topk(unit, nprobe=2)
-
-
-def _q_x4_ivf_probe4(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The nprobe=4 point of the dial: with the 3-bit quantizer this
-    probes the base cell plus ALL single-bit-flip neighbors (half the
-    cell space) — the high-recall/high-scan end of the curve."""
-    unit = _unit_cells(fan_out(load_table(spark, sf_dir, "embeddings"), spark, "vec_id"))
-    return ivf_multiprobe_topk(unit, nprobe=4)
-
-
 def write_ivf_index(unit_cells: DataFrame, path: str) -> None:
     """Write-time IVF: persist (id, uv) PARTITIONED BY the cell id, so
-    each coarse cell is its own directory of parquet files. This is
-    the 'stored at write time' half of the IVF design the in-memory
-    queries emulate — at 100 TB the index is written once and every
-    probe prunes to its cells' files instead of scanning the corpus."""
+    each coarse cell is its own directory of parquet files: at 100 TB
+    the index is written once and every probe prunes to its cells'
+    files instead of scanning the corpus."""
     unit_cells.write.mode("overwrite").partitionBy("cell").parquet(path)
 
 
@@ -287,39 +220,6 @@ def _cached_ivf_index(sf_dir: str, name: str, build) -> str:
     return staged_once(name, os.path.join(sf_dir, "embeddings.parquet"), build)
 
 
-def _q_x4_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`x4_ivf_topk` against the WRITE-TIME partitioned index.
-
-    The probe joins the broadcast query set on the partition column,
-    so Catalyst's dynamic partition pruning turns the query cells into
-    a runtime PartitionFilter — the scan lists only the probed `cell=`
-    directories (asserted by tests/test_similarity_multimodal.py).
-    Same result as `x4_ivf_topk` (same oracle); the difference is the
-    physical access path, which is the one that matters at corpus
-    scale."""
-    unit = _unit_cells(fan_out(load_table(spark, sf_dir, "embeddings"), spark, "vec_id"))
-    path = _cached_ivf_index(
-        sf_dir,
-        "ivf-signbit-index",
-        lambda p: write_ivf_index(unit.select("vec_id", "cell", "uv"), p),
-    )
-    idx = read_ivf_index(spark, path)
-    q = unit.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("uv").alias("qv"),
-        F.col("cell").alias("pcell"),
-    )
-    scored = (
-        idx.join(
-            F.broadcast(q),
-            (idx["cell"] == F.col("pcell")) & (idx["vec_id"] != F.col("query_id")),
-        )
-        .withColumn("cos_sim", dot(F.col("qv"), idx["uv"]))
-        .withColumnRenamed("vec_id", "neighbor_id")
-    )
-    return _topk(scored)
-
-
 def ivf_index_probe_topk(
     spark: SparkSession, sf_dir: str, queries_df: DataFrame, nprobe: int = 2
 ) -> DataFrame:
@@ -331,6 +231,15 @@ def ivf_index_probe_topk(
     (``_cached_ivf_index``); each call pays only the query batch's
     normalize/quantize plus a broadcast probe join that dynamic
     partition pruning narrows to the probed ``cell=`` directories.
+
+    ``nprobe`` is the probe depth: each query scores its own cell plus
+    the ``nprobe − 1`` cells across its least-confident quantizer
+    boundaries (:func:`ivf_probe_cells`). The probe set explodes to
+    nprobe rows per query BEFORE the broadcast, so the index-side plan
+    is the same single equi-join on the cell id at every depth; probe
+    cells are distinct, so no (query, neighbor) pair is scored twice
+    and the top-k window needs no dedup. Recall per depth against brute
+    force: SCALE.md §ANN.
 
     The corpus-side plan (scan → fan_out → normalize) is constructed
     INSIDE the build closure: on the hot path (index already built —
@@ -372,16 +281,15 @@ def _q_x4_ivf_indexed_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition pruning turns the probe set into a runtime
     PartitionFilter and the scan lists exactly the probed ``cell=``
     directories — nprobe× the directories of single-probe, never a
-    wider scan. Same output contract and oracle as x4_ivf_multiprobe;
-    only the physical access path differs. Probes the SAME cached
-    sign-bit index as x4_ivf_indexed (identical content — the probe
-    set, not the index, is what differs between the two); the probe
-    core is :func:`ivf_index_probe_topk`, shared with the streaming
-    twin ``s_x4_stream_index_probe``. No ``fan_out`` on the query
-    side: the filter keeps N_QUERIES rows, and widening a 5-row scan
-    costs a partition probe plus an exchange for nothing — the heavy
-    side of the probe join is the index scan, already split by its
-    ``cell=`` directories."""
+    wider scan. nprobe=2 is the first extra probe, the one with the
+    highest marginal recall per scanned cell (SCALE.md §ANN). The
+    probe core is :func:`ivf_index_probe_topk`, shared with the
+    streaming twin ``s_x4_stream_index_probe``. The oracle scores the
+    same two cells by a full scan, so only the physical access path
+    differs. No ``fan_out`` on the query side: the filter keeps
+    N_QUERIES rows, and widening a 5-row scan costs a partition probe
+    plus an exchange for nothing — the heavy side of the probe join is
+    the index scan, already split by its ``cell=`` directories."""
     emb = load_table(spark, sf_dir, "embeddings")
     return ivf_index_probe_topk(spark, sf_dir, emb.filter(F.col("vec_id") < N_QUERIES))
 
@@ -410,11 +318,7 @@ def kmeans_medoid_cells(
     and DuckDB's sequential scan would drift in the last ulp and the
     oracle hash would be meaningless. Member-pick keeps every centroid
     an EXISTING unit vector — bit-identical across engines — while
-    exercising the identical iterate-assign-update dataflow. The
-    production swap-in IS built: :func:`kmeans_lloyd_cells` (mean
-    update + renormalize, tolerance-checked convergence, lineage cut
-    per iteration), verified by the spherical-k-means monotonicity
-    invariant instead of a cross-engine hash.
+    exercising the identical iterate-assign-update dataflow.
 
     Returns the final assignment: (vec_id, cell, uv) where cell is the
     medoid's vec_id — at write time this becomes a partition column, so
@@ -508,96 +412,6 @@ def _q_x4_ivf_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _topk(scored)
 
 
-def kmeans_lloyd_cells(
-    unit_df: DataFrame,
-    k: int = K_CELLS,
-    max_iters: int = 10,
-    tol: float = 1e-4,
-) -> tuple[DataFrame, list[float]]:
-    """Spherical k-means with the PRODUCTION Lloyd's-mean update — the
-    documented swap-in for :func:`kmeans_medoid_cells` (which stays the
-    oracle-checkable form; a float mean depends on accumulation order,
-    so this variant is verified by TOLERANCE, not cross-engine hash —
-    tests/test_similarity_multimodal.py asserts the spherical-k-means
-    monotonicity invariant instead).
-
-    Per iteration: (1) assign each vector to the argmax-dot centroid
-    (k-row broadcast, bounded nested-loop — free at any scale); (2)
-    move each centroid to the RENORMALIZED MEAN of its members —
-    elementwise mean via posexplode + (cell, pos) agg, two narrow
-    shuffles of n·d scalar rows, the scale-standard shape for wide
-    array aggregation; (3) stop when every centroid moved less than
-    ``tol`` in cosine distance. Convergence is checked driver-side on
-    the k-row centroid table (a k-row collect per iteration — the same
-    driver-side convergence pattern as the CC loop in dedup.py), and
-    ``truncate_lineage`` cuts the per-iteration plan growth.
-
-    Returns (final assignment (vec_id, cell, uv), per-iteration max
-    centroid movement). Cells are dense ids 0..k-1 from the init order;
-    an empty cell keeps its previous centroid (no member rows → no mean
-    row → left join keeps the old vector).
-    """
-    from odoo_batch_processing_spark.session import truncate_lineage
-
-    cent = unit_df.filter(F.col("vec_id") < k).select(
-        F.col("vec_id").cast("int").alias("cell"), F.col("uv").alias("cv")
-    )
-    history: list[float] = []
-    for _ in range(max_iters):
-        scored = unit_df.join(F.broadcast(cent)).withColumn(
-            "sim", dot(F.col("uv"), F.col("cv"))
-        )
-        wa = Window.partitionBy("vec_id").orderBy(F.col("sim").desc(), F.col("cell"))
-        assign = (
-            scored.withColumn("rn", F.row_number().over(wa))
-            .filter(F.col("rn") == 1)
-            .select("vec_id", "cell", "uv")
-        )
-        means = (
-            assign.select("cell", F.posexplode("uv").alias("pos", "val"))
-            .groupBy("cell", "pos")
-            .agg(F.avg("val").alias("m"))
-            .groupBy("cell")
-            .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
-            .select("cell", F.transform(F.col("pm"), lambda s: s["m"]).alias("mv"))
-        )
-        # guard degenerate means: a cell whose members sum to the zero
-        # vector would normalize to 0/0 = NaN (NOT NULL — coalesce
-        # alone can't catch it) and poison every later dot product, so
-        # the WHEN gate falls such cells back to their previous
-        # centroid just like empty cells
-        mvn = norm(F.col("mv"))
-        new_cent = (
-            cent.join(means, "cell", "left")
-            .select(
-                "cell",
-                F.coalesce(
-                    F.when(mvn > 0, normalized(F.col("mv"), mvn)), F.col("cv")
-                ).alias("cv"),
-                F.col("cv").alias("old_cv"),
-            )
-            .transform(truncate_lineage)
-        )
-        # k rows: driver-side convergence check, same as CC's loop guard
-        moved = new_cent.select(
-            F.max(F.lit(1.0) - dot(F.col("cv"), F.col("old_cv"))).alias("mx")
-        ).collect()[0]["mx"]
-        history.append(float(moved))
-        cent = new_cent.select("cell", "cv")
-        if moved < tol:
-            break
-    scored = unit_df.join(F.broadcast(cent)).withColumn(
-        "sim", dot(F.col("uv"), F.col("cv"))
-    )
-    wa = Window.partitionBy("vec_id").orderBy(F.col("sim").desc(), F.col("cell"))
-    final = (
-        scored.withColumn("rn", F.row_number().over(wa))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "cell", "uv")
-    )
-    return final, history
-
-
 def _q_x4_kmeans_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trained-cell summary: population and medoid id per final cell."""
     emb = fan_out(load_table(spark, sf_dir, "embeddings"), spark, "vec_id")
@@ -608,50 +422,11 @@ def _q_x4_kmeans_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q_x4_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@k of the IVF probe against brute-force ground truth —
-    the tuning harness for any ANN deployment (more probe cells ↔
-    higher recall ↔ more scan; this query is the measurement side of
-    that dial).
-
-    Both sides are the registered queries themselves, so the recall
-    audit exercises exactly the plans users run. The comparison join
-    is |queries|·k rows — negligible at any corpus scale; the cost is
-    the top-k runs it audits. Measures the WHOLE dial — nprobe ∈
-    {1, 2, 4} — so the recall/cost curve is a recorded number per
-    depth, not a claim (the knee, nprobe=2, is the promoted core
-    query; see SCALE.md §ANN)."""
-    brute = _q_x4_cosine_topk(spark, sf_dir).select("query_id", "neighbor_id")
-    ivf = _q_x4_ivf_topk(spark, sf_dir).select(
-        "query_id", "neighbor_id", F.lit(1).alias("__hit")
-    )
-    mp = _q_x4_ivf_multiprobe(spark, sf_dir).select(
-        "query_id", "neighbor_id", F.lit(1).alias("__hit_mp")
-    )
-    p4 = _q_x4_ivf_probe4(spark, sf_dir).select(
-        "query_id", "neighbor_id", F.lit(1).alias("__hit_p4")
-    )
-    return (
-        brute.join(ivf, ["query_id", "neighbor_id"], "left")
-        .join(mp, ["query_id", "neighbor_id"], "left")
-        .join(p4, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.sum(F.coalesce(F.col("__hit"), F.lit(0))).cast("bigint").alias("n_hits"),
-            F.sum(F.coalesce(F.col("__hit_mp"), F.lit(0))).cast("bigint").alias("n_hits_mp"),
-            F.sum(F.coalesce(F.col("__hit_p4"), F.lit(0))).cast("bigint").alias("n_hits_p4"),
-        )
-        .withColumn("recall", F.col("n_hits").cast("double") / F.lit(TOP_K))
-        .withColumn("recall_mp", F.col("n_hits_mp").cast("double") / F.lit(TOP_K))
-        .withColumn("recall_p4", F.col("n_hits_p4").cast("double") / F.lit(TOP_K))
-    )
-
-
 def _q_x4_ivf_trained_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@k of the TRAINED IVF chain (medoid k-means cells,
     nprobe=2) against brute-force ground truth — the flagship ANN
     operating point. Measured at sf0.01: recall@10 = 0.94, vs 0.26/
-    0.40/0.60 for the sign-bit quantizer at nprobe=1/2/4 (x4_ivf_recall)
+    0.40/0.60 for the sign-bit quantizer at nprobe=1/2/4 (SCALE.md §ANN)
     — data-adapted cells dominate the static sign-bit stand-in at the
     same probe budget, which is exactly why production IVF trains its
     quantizer. This query certifies that number cross-engine (the
@@ -720,7 +495,7 @@ def quantize_int8(unit_vec: F.Column) -> tuple[F.Column, F.Column]:
 @lru_cache(maxsize=None)
 def _quantized_cols(vec_name: str) -> tuple[F.Column, F.Column]:
     """:func:`quantize_int8` over a named column, built once per
-    process (r18, the _unit_cols rationale — the clamp/floor transform
+    process (the _unit_cols rationale — the clamp/floor transform
     plus the bound array_max is another ~80 py4j round-trips, and the
     int8 queries build it per invocation)."""
     return quantize_int8(F.col(vec_name))
@@ -840,14 +615,9 @@ def _q_x4_rerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 QUERIES = {
     "x4_cosine_topk": _q_x4_cosine_topk,
-    "x4_ivf_topk": _q_x4_ivf_topk,
-    "x4_ivf_multiprobe": _q_x4_ivf_multiprobe,
     "x4_kmeans_cells": _q_x4_kmeans_cells,
-    "x4_ivf_indexed": _q_x4_ivf_indexed,
     "x4_ivf_indexed_multiprobe": _q_x4_ivf_indexed_multiprobe,
     "x4_ivf_trained_topk": _q_x4_ivf_trained_topk,
-    "x4_ivf_probe4": _q_x4_ivf_probe4,
-    "x4_ivf_recall": _q_x4_ivf_recall,
     "x4_ivf_trained_recall": _q_x4_ivf_trained_recall,
     "x4_int8_topk": _q_x4_int8_topk,
 }
@@ -879,34 +649,10 @@ ORACLES = {
             FROM scored
         ) WHERE rank <= {TOP_K}
     """,
-    "x4_ivf_topk": f"""
-        WITH cells AS (
-            SELECT vec_id,
-                   list_transform(raw, x -> x / sqrt(list_dot_product(raw, raw))) AS v,
-                   (CASE WHEN embedding[1] > 0 THEN 4 ELSE 0 END
-                  + CASE WHEN embedding[2] > 0 THEN 2 ELSE 0 END
-                  + CASE WHEN embedding[3] > 0 THEN 1 ELSE 0 END) AS cell
-            FROM (SELECT vec_id, embedding, embedding::DOUBLE[] AS raw FROM embeddings)
-        ), q AS (
-            SELECT vec_id AS query_id, v AS qv, cell AS qcell
-            FROM cells WHERE vec_id < {N_QUERIES}
-        ), c AS (
-            SELECT vec_id AS neighbor_id, v AS cv, cell AS ccell FROM cells
-        ), scored AS (
-            SELECT q.query_id, c.neighbor_id, list_dot_product(q.qv, c.cv) AS cos_sim
-            FROM c JOIN q ON c.ccell = q.qcell AND c.neighbor_id <> q.query_id
-        )
-        SELECT query_id, rank, neighbor_id, cos_sim FROM (
-            SELECT query_id, neighbor_id, cos_sim,
-                   CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                        ORDER BY cos_sim DESC, neighbor_id) AS BIGINT) AS rank
-            FROM scored
-        ) WHERE rank <= {TOP_K}
-    """,
     # nprobe=2: own cell + the cell across the least-|v| sign boundary
     # (first 3 dims; list_position takes the FIRST min — same low-index
     # tie-break as the Spark comparator)
-    "x4_ivf_multiprobe": f"""
+    "x4_ivf_indexed_multiprobe": f"""
         WITH cells AS (
             SELECT vec_id, embedding,
                    list_transform(raw, x -> x / sqrt(list_dot_product(raw, raw))) AS v,
@@ -1052,71 +798,10 @@ ORACLES |= {
     """,
     "x4_kmeans_cells": _kmeans_oracle_sql(),
     "x4_ivf_trained_topk": _trained_topk_oracle_sql(),
-    # identical output contract to the in-memory cell-restricted scan —
-    # only the physical access path (partitioned index + pruning) differs
-    "x4_ivf_indexed": ORACLES["x4_ivf_topk"],
-    "x4_ivf_indexed_multiprobe": ORACLES["x4_ivf_multiprobe"],
-    # DuckDB allows a CTE inside a parenthesized subquery, so the two
-    # registered top-k oracles nest verbatim
-    # nprobe=4 with the 3-bit quantizer = base cell + every single-bit
-    # flip — no least-confident ordering needed, the probe set is
-    # closed-form
-    "x4_ivf_probe4": f"""
-        WITH cells AS (
-            SELECT vec_id, embedding,
-                   list_transform(raw, x -> x / sqrt(list_dot_product(raw, raw))) AS v,
-                   (CASE WHEN embedding[1] > 0 THEN 4 ELSE 0 END
-                  + CASE WHEN embedding[2] > 0 THEN 2 ELSE 0 END
-                  + CASE WHEN embedding[3] > 0 THEN 1 ELSE 0 END) AS cell
-            FROM (SELECT vec_id, embedding, embedding::DOUBLE[] AS raw FROM embeddings)
-        ), q AS (
-            SELECT vec_id AS query_id, v AS qv, cell AS qcell
-            FROM cells WHERE vec_id < {N_QUERIES}
-        ), c AS (
-            SELECT vec_id AS neighbor_id, v AS cv, cell AS ccell FROM cells
-        ), scored AS (
-            SELECT q.query_id, c.neighbor_id, list_dot_product(q.qv, c.cv) AS cos_sim
-            FROM c JOIN q
-              ON c.ccell IN (q.qcell, xor(q.qcell, 4), xor(q.qcell, 2), xor(q.qcell, 1))
-             AND c.neighbor_id <> q.query_id
-        )
-        SELECT query_id, rank, neighbor_id, cos_sim FROM (
-            SELECT query_id, neighbor_id, cos_sim,
-                   CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                        ORDER BY cos_sim DESC, neighbor_id) AS BIGINT) AS rank
-            FROM scored
-        ) WHERE rank <= {TOP_K}
-    """,
 }
 
-ORACLES["x4_ivf_recall"] = f"""
-        WITH brute AS (SELECT * FROM ({ORACLES["x4_cosine_topk"]})),
-             ivf AS (SELECT * FROM ({ORACLES["x4_ivf_topk"]})),
-             mp AS (SELECT * FROM ({ORACLES["x4_ivf_multiprobe"]})),
-             p4 AS (SELECT * FROM ({ORACLES["x4_ivf_probe4"]}))
-        SELECT b.query_id,
-               CAST(SUM(CASE WHEN i.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-                   AS n_hits,
-               CAST(SUM(CASE WHEN m.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-                   AS n_hits_mp,
-               CAST(SUM(CASE WHEN p.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-                   AS n_hits_p4,
-               CAST(SUM(CASE WHEN i.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE)
-                   / {TOP_K} AS recall,
-               CAST(SUM(CASE WHEN m.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE)
-                   / {TOP_K} AS recall_mp,
-               CAST(SUM(CASE WHEN p.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE)
-                   / {TOP_K} AS recall_p4
-        FROM brute b
-        LEFT JOIN ivf i
-          ON b.query_id = i.query_id AND b.neighbor_id = i.neighbor_id
-        LEFT JOIN mp m
-          ON b.query_id = m.query_id AND b.neighbor_id = m.neighbor_id
-        LEFT JOIN p4 p
-          ON b.query_id = p.query_id AND b.neighbor_id = p.neighbor_id
-        GROUP BY b.query_id
-    """
-
+# DuckDB allows a CTE inside a parenthesized subquery, so the two
+# registered top-k oracles nest verbatim
 ORACLES["x4_ivf_trained_recall"] = f"""
         WITH brute AS (SELECT * FROM ({ORACLES["x4_cosine_topk"]})),
              tr AS (SELECT * FROM ({_trained_topk_oracle_sql()}))

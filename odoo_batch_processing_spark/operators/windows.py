@@ -112,9 +112,9 @@ def sessionize_chunked(
 ) -> DataFrame:
     """Hot-key-resilient sessionization — the documented swap-in for
     ``x7_sessionize``'s single Window when one user's event count
-    exceeds a task (same contract as ``kmeans_lloyd_cells`` vs the
-    medoid form: value-identical output, production plan shape,
-    certified by equivalence test instead of a second oracle entry).
+    exceeds a task (value-identical output, production plan shape,
+    certified by equivalence tests and the Window form's oracle instead
+    of a second oracle entry).
 
     Why: a Window partitioned by ``user_id`` puts EVERY row of a key
     into one task — and unlike joins/aggregations, AQE's skew handling
@@ -988,7 +988,7 @@ ORACLES["w_twap"] = """
 def _q_x7_sessionize_chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``sessionize_chunked`` — the hot-key-resilient parallel
     prefix-sum sessionizer — registered under the SAME DuckDB oracle
-    as ``x7_sessionize`` (VERDICT r8 #5 / r9 #3): the chunk-and-stitch
+    as ``x7_sessionize``: the chunk-and-stitch
     decomposition is value-identical to the single Window by contract,
     and this entry puts that contract under the hash gate every
     extended sweep instead of only its own equivalence tests."""
@@ -997,5 +997,5 @@ def _q_x7_sessionize_chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 QUERIES["x7_sessionize_chunked"] = _q_x7_sessionize_chunked
 # deliberately the SAME SQL string as the Window form — one oracle, two
-# physical strategies (the kmeans_lloyd_cells promotion pattern)
+# physical strategies
 ORACLES["x7_sessionize_chunked"] = ORACLES["x7_sessionize"]

@@ -98,7 +98,6 @@ def test_query_survives_empty_corpus(spark, empty_sf_dir, name):
 @pytest.mark.parametrize(
     "name",
     [
-        "x4_ivf_indexed",
         "x4_ivf_indexed_multiprobe",
         "x4_ivf_trained_topk",
         "x4_ivf_trained_recall",

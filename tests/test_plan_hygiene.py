@@ -30,7 +30,7 @@ _SKIP = {"r21_sink_roundtrip", "r21_merge", "src_jsonl_roundtrip", "src_csv_roun
 #: queries where a nested-loop join is the INTENDED plan:
 #: - brute-force ANN has no equi-key — a deliberate
 #:   broadcast(query-batch) × corpus scan (similarity.py docstring);
-#:   the IVF twin (x4_ivf_topk) is the keyed, hash-joined scale path.
+#:   the IVF index probe is the keyed, hash-joined scale path.
 #: - q22/q11/q15's scalar-subquery (one-row aggregate relation)
 #:   cross-joins by construction; a BNLJ whose build side is exactly
 #:   ONE row is free at any scale.
@@ -43,9 +43,6 @@ _ALLOWED_NESTED_LOOP = {
     "q11_important_parts",
     "q15_top_supplier",
     "x4_kmeans_cells",
-    # composes x4_cosine_topk (the deliberate BNLJ above) with the IVF
-    # probe — inherits both allow-listed shapes
-    "x4_ivf_recall",
     # composes x4_cosine_topk with x4_ivf_trained_topk — inherits the
     # same two allow-listed bounded broadcasts (5-row query batch,
     # k-row centroid table)
@@ -397,14 +394,9 @@ def test_filters_reach_the_scan(spark, name, expect):
 _ALLOWED_HINTED = {
     "q22_inactive_customers",
     "x4_cosine_topk",
-    "x4_ivf_topk",
-    "x4_ivf_multiprobe",  # same bounded query batch, exploded ×nprobe
-    "x4_ivf_probe4",  # same bounded query batch, exploded ×nprobe=4
-    "x4_ivf_indexed",
-    "x4_ivf_indexed_multiprobe",
+    "x4_ivf_indexed_multiprobe",  # same bounded query batch, exploded ×nprobe
     "x4_ivf_trained_topk",
     "x4_kmeans_cells",
-    "x4_ivf_recall",
     "x4_ivf_trained_recall",  # composes the two audited chains above
     "x4_int8_topk",  # same bounded query batch, int8-quantized
     # bounded hints only: the 5-row query batch (stage 1, as
@@ -422,6 +414,23 @@ _ALLOWED_HINTED = {
 _ALLOWED_NONBROADCAST_HINTED = {
     "g_pagerank_simgraph",
 }
+
+
+def test_every_allow_listed_name_is_a_catalog_row():
+    """An exemption outlives its row only by mistake: a name left in an
+    allow-list after its row is deleted exempts nothing and reads as if
+    the catalog still held it."""
+    from odoo_batch_processing_spark.registry import all_queries
+
+    catalog = set(all_queries(extended=True))
+    lists = {
+        "_SKIP": _SKIP,
+        "_ALLOWED_NESTED_LOOP": _ALLOWED_NESTED_LOOP,
+        "_ALLOWED_HINTED": _ALLOWED_HINTED,
+        "_ALLOWED_NONBROADCAST_HINTED": _ALLOWED_NONBROADCAST_HINTED,
+    }
+    dead = {k: sorted(names - catalog) for k, names in lists.items() if names - catalog}
+    assert not dead, f"allow-listed names with no catalog row: {dead}"
 
 
 def _iter_jnodes(jnode):

@@ -33,7 +33,7 @@ def test_operator_families_all_in_core():
                       "q09_profit_by_nation_year", "q05_revenue_by_nation"},
         "bulk_update": {"r07_broadcast_update"},
         "dedup": {"x3_neardup_survivors", "x3_minhash_lsh"},
-        "similarity": {"x4_cosine_topk", "x4_ivf_topk", "x4_ivf_trained_topk",
+        "similarity": {"x4_cosine_topk", "x4_ivf_trained_topk",
                        "x4_ivf_indexed_multiprobe"},
         "text": {"x5_text_features", "x5_bm25_topk", "x5_gopher_repetition"},
         "curation": {"x9_curation_pipeline", "x9_weighted_sample",

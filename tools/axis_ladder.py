@@ -178,8 +178,7 @@ AXES: dict[str, Axis] = {
             mults=(1, 4, 16, 64),
             stages=(
                 "x4_cosine_topk",  # brute force: normalize + broadcast pair dots
-                "x4_ivf_topk",  # sign-bit cells + in-cell dots
-                "x4_ivf_multiprobe",  # probe-cell selection (|v_i| sort) + probes
+                "x4_ivf_indexed_multiprobe",  # probe-cell selection (|v_i| sort) + in-cell dots
                 "x4_int8_topk",  # quantize + integer dots
                 "x4_kmeans_cells",  # medoid training loop (k broadcast dots/iter)
                 "x3_embedding_neardup",  # in-cell all-pairs nearest neighbor
