@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_CORRECT, SF_SMOKE
 
 
 def test_ann_topk_selfmatch_excluded_and_ranked(spark):
@@ -149,7 +149,7 @@ def test_ivf_indexed_multiprobe_prunes_and_matches_oracle(spark):
     )
     from odoo_batch_processing_spark.oracle import compare, duckdb_connection
 
-    sf = "/root/testdata/sf0.01"
+    sf = SF_CORRECT
     indexed = _q_x4_ivf_indexed_multiprobe(spark, sf)
     res = compare(
         "x4_ivf_indexed_multiprobe",
@@ -217,7 +217,7 @@ def test_multiprobe_recall_at_least_single_probe(spark):
     )
     from odoo_batch_processing_spark.sources.loader import load_table
 
-    sf = "/root/testdata/sf0.01"
+    sf = SF_CORRECT
     emb = load_table(spark, sf, "embeddings")
     queries = emb.filter(F.col("vec_id") < N_QUERIES)
 
